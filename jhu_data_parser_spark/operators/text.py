@@ -180,34 +180,39 @@ def rolling_fingerprints(
     numpy sliding-window ops; per-char column expressions would be
     O(n·k) interpreted evals per row.
     """
-    weights = np.array([base ** (k - 1 - j) for j in range(k)], dtype=np.int64)
 
     @pandas_udf("array<long>")
     def _fps(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            t = t or ""
-            if len(t) < k:
-                out.append([])
-                continue
-            # codepoints via one C-level UTF-32 encode — ord(ch) per
-            # char is an interpreted per-character loop (measured the
-            # bulk of this kernel's time; same values, utf-32-le code
-            # units ARE the codepoints)
-            codes = (
-                np.frombuffer(t.encode("utf-32-le"), dtype="<u4").astype(np.int64)
-                % 256
-            )
-            grams = sliding_window_view(codes, k) @ weights
-            if len(grams) < window:
-                out.append([])
-                continue
-            fps = np.unique(sliding_window_view(grams, window).min(axis=1))
-            out.append(fps.tolist())
-        return pd.Series(out)
+        return pd.Series(_winnowed_fingerprints(texts, k, window, base))
 
     c = F.col(col) if isinstance(col, str) else col
     return _fps(c)
+
+
+def _winnowed_fingerprints(texts, k: int, window: int, base: int) -> list[list[int]]:
+    """The :func:`rolling_fingerprints` kernel over an iterable of
+    strings (None reads as '')."""
+    weights = np.array([base ** (k - 1 - j) for j in range(k)], dtype=np.int64)
+    out = []
+    for t in texts:
+        t = t or ""
+        if len(t) < k:
+            out.append([])
+            continue
+        # codepoints via one C-level UTF-32 encode — ord(ch) per
+        # char is an interpreted per-character loop (measured the
+        # bulk of this kernel's time; same values, utf-32-le code
+        # units ARE the codepoints). surrogatepass keeps a lone
+        # surrogate's code unit, as ord() would, instead of raising.
+        utf32 = t.encode("utf-32-le", "surrogatepass")
+        codes = np.frombuffer(utf32, dtype="<u4").astype(np.int64) % 256
+        grams = sliding_window_view(codes, k) @ weights
+        if len(grams) < window:
+            out.append([])
+            continue
+        fps = np.unique(sliding_window_view(grams, window).min(axis=1))
+        out.append(fps.tolist())
+    return out
 
 
 # --- language ID -----------------------------------------------------------

@@ -319,13 +319,7 @@ def stream_stream_join_attrib(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jhu_data_parser_spark.streaming.jobs import run_stream_stream_join
 
     table = f"stream_stream_join_{next(_mem_counter)}"
-    # state_partitions=4: the catalog backlog is one file per side, so
-    # the 4-state-stores-per-partition floor dominates (measured
-    # 10 s @ 32 → 4.8 s @ 4 at sf0.1, identical oracle-gated result);
-    # a 100 TB deployment sizes this UP to executors × cores instead
-    out = run_stream_stream_join(
-        spark, sf_dir, table, horizon_min=30, state_partitions=4
-    )
+    out = run_stream_stream_join(spark, sf_dir, table, horizon_min=30)
     return out.select(
         "click_id",
         F.col("c_user").alias("user_id"),

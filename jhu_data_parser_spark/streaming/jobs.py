@@ -60,9 +60,6 @@ def _rmtree_now(path: str) -> None:
 _STATE_PARTITIONS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
 
 
-_STATE_PARTITIONS_FLOOR = 8
-
-
 def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
     """Read a Spark size conf (``128m`` / ``4194304`` / ``1g``) as bytes."""
     raw = spark.conf.get(key, None)
@@ -112,28 +109,43 @@ def _input_split_count(spark: SparkSession, input_path: str, copies: int = 1) ->
 
 
 def stream_state_partitions(
-    spark: SparkSession | None = None,
-    input_path: str | None = None,
-    copies: int = 1,
+    spark: SparkSession, input_path: str, copies: int = 1
 ) -> int:
     """Shuffle/state partition count for this engine's availableNow
-    streaming runs: the micro-batch input's estimated split count,
-    clamped to ``[8, defaultParallelism]``.
+    streaming runs: the micro-batch input's estimated split count
+    (:func:`_input_split_count`), clamped to ``[1, defaultParallelism]``.
 
     Every stateful streaming operator instantiates one state store per
     shuffle partition per micro-batch (a stream-stream join: four), and
-    each store pays fixed per-batch commit work regardless of row count
-    — so on a small backlog the partition count IS the latency floor.
-    Measured at sf0.1 (min-of-2, identical oracle-gated results):
-    sessionize 10.2 s @ 32 → 6.0 s @ 8, KMV daily 5.7 → 3.5,
-    watermark dedup 2.8 → 1.9. The count is derived from the backlog
-    (more input splits → more rows per batch → more state stores pay
-    for themselves) rather than hard-coded, so a large deployment gets
-    scale-out state sizing without touching a knob; the
-    ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` env still overrides both
-    directions (the same knob ``run_stream_stream_join`` already
-    exposes per call). A malformed or non-positive env value degrades
-    to the adaptive default instead of crashing the run.
+    each store pays fixed per-batch commit work regardless of row count:
+    checkpoint files created and renamed, and on a host without the
+    native Hadoop library one forked ``chmod``/``readlink`` per local
+    file operation. On a small backlog the partition count IS the
+    latency floor, so the count follows the backlog (more input splits
+    → more rows per batch → more state stores pay for themselves) and a
+    large deployment still gets scale-out state sizing without a knob.
+    Measured on a 4-CPU host (local[4], best of six warm runs in two
+    processes; identical oracle-gated results), fixed 8 partitions vs
+    this rule (2 for the events backlog, 3 for the two-copy dedup
+    backlog):
+
+    ========================== ================ ================
+    query (wall)               sf0.01           sf0.1
+    ========================== ================ ================
+    stream_dedup_watermark     1.97 → 1.66 s    2.65 → 2.32 s
+    stream_stateful_sessions   6.62 → 3.61 s    8.07 → 4.68 s
+    ========================== ================ ================
+
+    The forks per run fell from about 1,220 to 610 (dedup) and 1,300
+    to 530 (sessions), and sessions' process CPU from 28 to 11 s at
+    sf0.1.
+
+    The split count is also the lower bound worth going to: one
+    partition made sf0.1 ``stream_dedup_watermark`` slower (about
+    2.2 → 3.2 s wall). The ``SPARK_GRAFT_STREAM_STATE_PARTITIONS``
+    env overrides the rule in both directions; a malformed or
+    non-positive value degrades to the rule instead of crashing the
+    run.
     """
     raw = os.environ.get(_STATE_PARTITIONS_ENV)
     if raw is not None:
@@ -143,29 +155,25 @@ def stream_state_partitions(
             n = 0
         if n >= 1:
             return n
-    if spark is not None and input_path is not None:
-        splits = _input_split_count(spark, input_path, copies)
-        ceiling = max(
-            _STATE_PARTITIONS_FLOOR, spark.sparkContext.defaultParallelism
-        )
-        return max(_STATE_PARTITIONS_FLOOR, min(splits, ceiling))
-    return _STATE_PARTITIONS_FLOOR
+    splits = _input_split_count(spark, input_path, copies)
+    return max(1, min(splits, spark.sparkContext.defaultParallelism))
 
 
 @contextmanager
 def scoped_state_partitions(
-    spark: SparkSession,
-    n: int | None = None,
-    *,
-    input_path: str | None = None,
-    copies: int = 1,
+    spark: SparkSession, *, input_path: str, copies: int = 1
 ):
-    """Scope ``spark.sql.shuffle.partitions`` to ``n`` (default
-    :func:`stream_state_partitions` over ``input_path``) for one
-    streaming run, restoring the prior value afterwards.
+    """Scope ``spark.sql.shuffle.partitions`` to
+    :func:`stream_state_partitions` over ``input_path`` for one
+    streaming run, restoring the prior value afterwards. This is the
+    one place under ``streaming/`` that sets the shuffle partition
+    count, so every stream is sized by the same rule.
     Placement-only: state partitioning never changes what a stateful
     query computes (grouping keys hash to SOME partition either way),
-    only how many state-store instances each micro-batch commits.
+    only how many state-store instances each micro-batch commits. On a
+    4-CPU host a stateful stream over the sf0.01/sf0.1 events backlog
+    commits 2–3 stores per operator per batch instead of 8; see
+    :func:`stream_state_partitions` for the measured walls.
 
     NOTE: this mutates the session-global ``spark.sql.shuffle.partitions``
     for the duration of the run — it assumes the single-threaded runner
@@ -173,8 +181,7 @@ def scoped_state_partitions(
     per SparkSession). A concurrent batch query on the same session
     would silently inherit the scoped value; parallel runners must use
     ``spark.newSession()`` per thread instead."""
-    if n is None:
-        n = stream_state_partitions(spark, input_path, copies)
+    n = stream_state_partitions(spark, input_path, copies)
     prior = spark.conf.get("spark.sql.shuffle.partitions", None)
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -553,7 +560,6 @@ def run_stream_stream_join(
     sf_dir: str,
     table: str,
     horizon_min: int = 30,
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Stream-stream inner join: each purchase matched to every click by
     the same user in the preceding ``horizon_min`` minutes — the classic
@@ -567,16 +573,18 @@ def run_stream_stream_join(
     processed to completion, so the result equals the batch range join
     — which is exactly what the catalog oracle checks.
 
-    ``state_partitions`` scopes ``spark.sql.shuffle.partitions`` for
-    the stream's lifetime (restored afterwards): a stream-stream join
-    instantiates FOUR state stores per shuffle partition per
-    micro-batch, so partition count IS the latency floor on small
-    backlogs — measured at sf0.1: 32 partitions → ~10 s, 8 → ~5.5 s,
-    4 → ~4.8 s for identical results (partition-count-invariant by the
-    oracle). At 100 TB the same knob goes the other way: size it to
-    executors × cores so state and throughput scale out. The result is
-    read back AFTER the query terminates, so the scoped value only
-    affects the stream's own shuffles.
+    The stream is sized by :func:`scoped_state_partitions` like every
+    other stream: a stream-stream join instantiates FOUR state stores
+    per shuffle partition per micro-batch, so on a small backlog the
+    partition count is the latency floor. Measured on a 4-CPU host
+    (local[4], best of six warm runs, identical oracle-gated results),
+    the former fixed 4 partitions vs the backlog rule (2): 2.88 →
+    2.09 s at sf0.01, 2.94 → 2.49 s at sf0.1, with forks per run down
+    from about 1,720 to 1,020. At 100 TB the same rule goes the other
+    way: more input splits size the state up to
+    ``defaultParallelism``. The result is read back AFTER the query
+    terminates, so the scoped value only affects the stream's own
+    shuffles.
     """
     clicks = (
         read_events_stream(spark, sf_dir)
@@ -613,10 +621,9 @@ def run_stream_stream_join(
     # files, the production sink shape.
     out_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_stream_join_out_"))
     ckpt = tempfile.mkdtemp(prefix="jdps_stream_join_ckpt_")
-    prior_sp = spark.conf.get("spark.sql.shuffle.partitions", None)
-    try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    with scoped_state_partitions(
+        spark, input_path=os.path.join(sf_dir, "events.parquet")
+    ):
         q = (
             joined.writeStream.format("parquet")
             .option("path", out_dir)
@@ -626,12 +633,6 @@ def run_stream_stream_join(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if state_partitions is not None:
-            if prior_sp is None:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
     _rmtree_now(ckpt)
     return spark.read.schema(joined.schema).parquet(out_dir)
 
@@ -2444,14 +2445,10 @@ def run_graph_index_append_stream(
         )
 
     schema = spark.read.parquet(stage).schema
-    # scoped shuffle-partitions: each micro-batch's window/joins move
-    # a few thousand rows — 32-partition stages are pure scheduling
-    # overhead here (same decomposition as run_stream_stream_join's
-    # state_partitions knob; measured ~11.6 → ~7 s at sf0.1). A real
-    # deployment sizes this to the batch volume instead.
-    prior_sp = spark.conf.get("spark.sql.shuffle.partitions", None)
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    # each micro-batch's window/joins move a few thousand rows: the
+    # staged chunks' split count sizes their shuffles, not the
+    # session's batch-query default
+    with scoped_state_partitions(spark, input_path=stage):
         q = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -2462,11 +2459,6 @@ def run_graph_index_append_stream(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prior_sp is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
     return _tag_read(spark, sink_root, "edges", ["src", "dst", "rank"])
 
 

@@ -9,6 +9,7 @@ lowercased keys, 'YYYY-MM-DD 00:00:00' date strings (F2), default-0
 from __future__ import annotations
 
 import glob
+import gzip
 import json
 import os
 
@@ -150,6 +151,15 @@ def test_category_pipeline_realistic_width(spark, tmp_path):
     assert elapsed < 60, f"wide build took {elapsed:.0f}s"
 
 
+_QUOTING_CSV = (
+    "Province/State,Country/Region,Lat,Long,1/22/20\n"
+    ',"Korea, South",35.9,127.7,1\n'
+    '"Bonaire, Sint Eustatius and Saba",Netherlands,12.1,-68.2,2\n'
+    ',"Quoted ""inner"" name",0,0,3\n'
+    ",,,,\n"  # fully blank row: every field '' (never null)
+)
+
+
 def test_csv_source_dictreader_parity_on_quoting(spark, tmp_path):
     """Real JHU data has quoted fields with embedded commas ("Korea,
     South") and csv-module quote doubling; the Spark scan must match
@@ -160,13 +170,7 @@ def test_csv_source_dictreader_parity_on_quoting(spark, tmp_path):
 
     from jhu_data_parser_spark.sources.csv_source import read_csv_dictreader
 
-    raw = (
-        "Province/State,Country/Region,Lat,Long,1/22/20\n"
-        ',"Korea, South",35.9,127.7,1\n'
-        '"Bonaire, Sint Eustatius and Saba",Netherlands,12.1,-68.2,2\n'
-        ',"Quoted ""inner"" name",0,0,3\n'
-        ",,,,\n"  # fully blank row: every field '' (never null)
-    )
+    raw = _QUOTING_CSV
     want = list(csv.DictReader(io.StringIO(raw)))
     p = tmp_path / "quoting.csv"
     p.write_text(raw)
@@ -175,6 +179,61 @@ def test_csv_source_dictreader_parity_on_quoting(spark, tmp_path):
     for w, g in zip(want, got):
         for k, v in w.items():
             assert g[k] == v, (k, v, g[k])
+
+
+def test_csv_header_schema_matches_spark_inference(spark, tmp_path):
+    """The scan's header-derived schema equals the one Spark's header
+    job would infer, and the rows match, on every fixture, the quoting
+    CSV, a header-only file, a BOM-prefixed header, a directory and a
+    gzip file; an empty file, a blank or duplicate header name and a
+    missing path raise naming the path."""
+    from jhu_data_parser_spark.sources.csv_source import (
+        csv_header_schema,
+        read_csv_dictreader,
+    )
+
+    inputs = sorted(glob.glob(os.path.join(FIX, "*.csv")))
+    for name, raw in (
+        ("quoting.csv", _QUOTING_CSV),
+        ("header_only.csv", "Province/State,Country/Region,1/22/20\n"),
+        ("bom.csv", "\ufeffProvince/State,Country/Region\n,Chile\n"),
+    ):
+        p = tmp_path / name
+        p.write_text(raw, encoding="utf-8")
+        inputs.append(str(p))
+    # a directory of part files and a codec-compressed file, both of
+    # which spark.read.csv accepts
+    part_dir = tmp_path / "parts"
+    part_dir.mkdir()
+    (part_dir / "part-0.csv").write_text(_QUOTING_CSV, encoding="utf-8")
+    gz = tmp_path / "quoting.csv.gz"
+    gz.write_bytes(gzip.compress(_QUOTING_CSV.encode("utf-8")))
+    inputs += [str(part_dir), str(gz)]
+    for path in inputs:
+        inferred = (
+            spark.read.option("header", True)
+            .option("inferSchema", False)
+            .option("escape", '"')
+            .csv(path)
+        )
+        assert csv_header_schema(spark, path) == inferred.schema, path
+        want = sorted(
+            tuple("" if v is None else v for v in r) for r in inferred.collect()
+        )
+        got = sorted(tuple(r) for r in read_csv_dictreader(spark, path).collect())
+        assert got == want, path
+
+    for name, raw in (
+        ("empty.csv", ""),
+        ("blank_name.csv", "Province/State,,Lat\n,a,1\n"),
+        ("dup_name.csv", "Lat,Long,Lat\n1,2,3\n"),
+    ):
+        p = tmp_path / name
+        p.write_text(raw, encoding="utf-8")
+        with pytest.raises(ValueError, match=name):
+            read_csv_dictreader(spark, str(p))
+    with pytest.raises(FileNotFoundError, match="missing.csv"):
+        read_csv_dictreader(spark, str(tmp_path / "missing.csv"))
 
 
 def test_http_source_file_url(spark):

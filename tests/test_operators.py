@@ -431,6 +431,23 @@ def test_rolling_fingerprints_winnowing_guarantee(spark):
     assert udf_out == ref
 
 
+def test_rolling_fingerprints_lone_surrogate():
+    """A lone surrogate hashes as its code unit mod 256, like ord(),
+    instead of raising in the utf-32 encode."""
+    import numpy as np
+    from numpy.lib.stride_tricks import sliding_window_view
+
+    from jhu_data_parser_spark.operators.text import _winnowed_fingerprints
+
+    text = "broken \ud800 surrogate text"
+    k, w, b = 8, 4, 131
+    weights = np.array([b ** (k - 1 - j) for j in range(k)], dtype=np.int64)
+    codes = np.fromiter((ord(ch) % 256 for ch in text), np.int64, count=len(text))
+    grams = sliding_window_view(codes, k) @ weights
+    ref = np.unique(sliding_window_view(grams, w).min(axis=1)).tolist()
+    assert _winnowed_fingerprints([text], k, w, b) == [ref]
+
+
 def test_salted_broadcast_join_matches_plain_join(spark):
     """Salting must be invisible to results: same rows as the plain
     inner join, including duplicate small-side keys (row fan-out)."""

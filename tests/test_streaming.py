@@ -650,39 +650,67 @@ def test_incremental_topology_sequence_with_crash_restart(spark, tmp_path):
 
 
 def test_stream_state_partitions_adaptive(spark, sf_dir, tmp_path, monkeypatch):
-    """The state-partition default derives from the backlog's split
-    count, clamped to [8, defaultParallelism]; the env override wins
-    when valid and degrades to the adaptive default when malformed."""
+    """The state-partition count is the backlog's estimated split
+    count, clamped to [1, defaultParallelism]; the env override wins
+    when valid and degrades to the rule when malformed."""
     from jhu_data_parser_spark.streaming.jobs import (
         _STATE_PARTITIONS_ENV,
+        _input_split_count,
         stream_state_partitions,
     )
 
     monkeypatch.delenv(_STATE_PARTITIONS_ENV, raising=False)
+    par = spark.sparkContext.defaultParallelism
+    # A backlog with no data file yet estimates one split: one partition.
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert _input_split_count(spark, str(empty)) == 1
+    assert stream_state_partitions(spark, str(empty)) == 1
+    # A small single-file backlog gives its own split count.
     events = os.path.join(sf_dir, "events.parquet")
-    # Small single-file backlog: clamps to the floor of 8.
-    assert stream_state_partitions(spark, events) == 8
-    # No spark/input: static floor.
-    assert stream_state_partitions() == 8
+    splits = _input_split_count(spark, events)
+    assert splits < par
+    assert stream_state_partitions(spark, events) == splits
     # A many-file backlog scales the count up to defaultParallelism:
-    # 64 staged copies charge openCostInBytes each, yielding more
-    # splits than the floor.
+    # 64 staged copies charge openCostInBytes each.
     many = tmp_path / "many"
     many.mkdir()
     for i in range(64):
         os.symlink(events, many / f"ev_{i}.parquet")
-    par = spark.sparkContext.defaultParallelism
-    adaptive = stream_state_partitions(spark, str(many))
-    assert adaptive == max(8, min(64, par)) or 8 <= adaptive <= max(8, par)
-    assert adaptive > 8 or par <= 8
+    many_splits = _input_split_count(spark, str(many))
+    assert many_splits > splits
+    assert stream_state_partitions(spark, str(many)) == min(many_splits, par)
     # copies multiplies the backlog the same way.
-    assert stream_state_partitions(spark, events, copies=64) == adaptive
+    assert stream_state_partitions(spark, events, copies=64) == min(many_splits, par)
     # Valid env override wins in both directions.
     monkeypatch.setenv(_STATE_PARTITIONS_ENV, "3")
     assert stream_state_partitions(spark, str(many)) == 3
     monkeypatch.setenv(_STATE_PARTITIONS_ENV, "200")
-    assert stream_state_partitions() == 200
-    # Malformed / non-positive degrade to the adaptive default.
+    assert stream_state_partitions(spark, events) == 200
+    # Malformed / non-positive degrade to the rule.
     for bad in ("zero", "", "0", "-4"):
         monkeypatch.setenv(_STATE_PARTITIONS_ENV, bad)
-        assert stream_state_partitions(spark, events) == 8
+        assert stream_state_partitions(spark, events) == splits
+
+
+def test_stream_results_invariant_to_state_partitions(spark, sf_dir, monkeypatch):
+    """State partitioning is placement only: each stateful stream
+    returns the same row multiset at one state partition and at
+    defaultParallelism."""
+    from jhu_data_parser_spark import plans
+    from jhu_data_parser_spark.streaming.jobs import _STATE_PARTITIONS_ENV
+    from tests.oracle_compare import _row_multiset
+
+    par = spark.sparkContext.defaultParallelism
+    for name in (
+        "stream_dedup_watermark",
+        "stream_availablenow_daily",
+        "stream_stateful_sessions",
+    ):
+        got = []
+        for n in (1, par):
+            monkeypatch.setenv(_STATE_PARTITIONS_ENV, str(n))
+            df = plans.QUERIES[name](spark, sf_dir)
+            got.append(_row_multiset([tuple(r) for r in df.collect()], df.columns))
+        assert got[0] == got[1], name
+        assert sum(got[0].values()) > 0, name
