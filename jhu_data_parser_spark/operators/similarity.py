@@ -1304,11 +1304,14 @@ def topk_ivfpq_indexed_multi(
     by_q: dict = {}
     for r in srows:
         by_q.setdefault(int(r["query_id"]), []).append(r)
+    index = f"IVF-PQ index cache_tag={cache_tag!r}"
     out_rows = []
     for qid in sorted(by_q):
+        rows = by_q[qid]
+        got = _lookup(vecs, [int(r["id"]) for r in rows], index)
         scored = []
-        for r in by_q[qid]:
-            d = vecs[int(r["id"])] - qvs[qid]
+        for r, v in zip(rows, got):
+            d = v - qvs[qid]
             scored.append(
                 (int(d @ d), int(r["id"]), int(r["cell"]), int(r["adc_dist"]))
             )
@@ -1480,6 +1483,7 @@ def quantize_unit_vectors(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = 1_000_000,
+    extra: list | tuple = (),
 ) -> DataFrame:
     """``(id, q)`` with ``q_i = ROUND(scale · x_i / ‖x‖)`` — quantized
     UNIT vectors, so integer squared-L2 is monotone in cosine
@@ -1489,7 +1493,9 @@ def quantize_unit_vectors(
     sequential-double dot (bit-identical to DuckDB
     ``list_dot_product`` on DOUBLE[]), the division one IEEE op, and
     ROUND is HALF_UP in both engines — bit-portable like
-    ``clustering.quantize_vectors``."""
+    ``clustering.quantize_vectors``. ``extra`` (aliased columns of
+    ``df``) ride along after ``q``, so callers that need more per-row
+    columns (bucket codes, the raw vector) pay no second join."""
     # The norm must be HOISTED behind a join barrier: HOF lambdas get
     # no loop-invariant CSE, and CollapseProject re-inlines a plain
     # alias straight back into the lambda (verified on the optimized
@@ -1502,7 +1508,9 @@ def quantize_unit_vectors(
         "(a, b) -> CAST(a AS DOUBLE) * CAST(b AS DOUBLE)), "
         "CAST(0.0 AS DOUBLE), (s, x) -> s + x))"
     )
-    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__v"))
+    vecs = df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("__v"), *extra
+    )
     # Zero/NULL-norm guard: an all-zero (or NULL) embedding has no
     # cosine direction; dividing through would emit NULL/NaN q arrays
     # whose NULL ordering DIVERGES between Spark (NULLS FIRST asc) and
@@ -1527,103 +1535,183 @@ def quantize_unit_vectors(
             f"CAST(ROUND(CAST(x AS DOUBLE) * {scale} / __n, 0) "
             "AS BIGINT))"
         ).alias("q"),
+        *vecs.columns[2:],
     )
 
 
-def _banded_buckets(
-    corpus: "DataFrame",
+def _require_integral_id(df: DataFrame, id_col: str, caller: str) -> None:
+    """Fail before any job when ``id_col`` is not an integer type: the
+    graph paths order ties by id, mask ``dst < src`` and fetch by
+    IN-list, all of which assume exact integral ids."""
+    from pyspark.sql.types import IntegralType
+
+    dt = df.schema[id_col].dataType
+    if not isinstance(dt, IntegralType):
+        raise ValueError(
+            f"{caller}: id column {id_col!r} has type {dt.simpleString()}; "
+            "graph ANN needs an integral id (tinyint/smallint/int/bigint)"
+        )
+
+
+def banded_posts(
+    corpus: DataFrame,
     dim: int,
     n_planes: int,
     bands: int,
     seed: int,
-    vec_col: str,
-    id_col: str,
-    exact_buckets: bool,
-) -> "DataFrame":
-    """``(id, b0..b{bands-1})`` — one RP-LSH bucket column per band
-    (seeds ``seed + band``). ``exact_buckets=True`` uses the
-    sequential-double column expression (cross-engine replayable, the
-    oracle-gated path); ``False`` the Arrow matmul (bulk builds, same
-    rule as :func:`topk_cosine_lsh`)."""
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    exact_buckets: bool = True,
+) -> DataFrame:
+    """``(id, q, b0..b{bands-1})`` — the quantized unit vector and one
+    bigint RP-LSH bucket code per band (seeds ``seed + band``; bigint so
+    stored posting rows read back with one type), in one pass.
+    ``exact_buckets=True`` buckets with the sequential-double column
+    expression (:func:`rp_bucket_expr`; cross-engine replayable, the
+    oracle-gated path); ``False`` with the Arrow matmul
+    (:func:`rp_lsh_bucket`; bulk builds, same rule as
+    :func:`topk_cosine_lsh`)."""
     if exact_buckets:
-        return corpus.select(
-            F.col(id_col).alias("id"),
-            *[
-                rp_bucket_expr(vec_col, n_planes, dim, seed + b).alias(
-                    f"b{b}"
-                )
-                for b in range(bands)
-            ],
-        )
-    bucketed = corpus.select(F.col(id_col).alias("id"), vec_col)
-    for b in range(bands):
-        bucketed = rp_lsh_bucket(
-            bucketed, dim, n_planes, seed + b, vec_col, f"b{b}"
-        )
-    return bucketed.drop(vec_col)
+        codes = [
+            rp_bucket_expr(vec_col, n_planes, dim, seed + b)
+            for b in range(bands)
+        ]
+    else:
+        for b in range(bands):
+            corpus = rp_lsh_bucket(
+                corpus, dim, n_planes, seed + b, vec_col, f"b{b}"
+            )
+        codes = [F.col(f"b{b}") for b in range(bands)]
+    return quantize_unit_vectors(
+        corpus,
+        id_col=id_col,
+        vec_col=vec_col,
+        extra=[c.cast("long").alias(f"b{b}") for b, c in enumerate(codes)],
+    )
 
 
-def _banded_pairs(
-    bucketed: "DataFrame", bands: int, earlier_only: bool
-) -> "DataFrame":
-    """Distinct candidate pairs ``(src, dst)`` from per-band equi
-    self-joins (never all-pairs). ``earlier_only`` keeps only
-    ``dst < src`` (the arrival-order NSW insertion rule); otherwise
-    both directions survive (``src != dst``)."""
-    pairs = None
-    for b in range(bands):
-        left = bucketed.select("id", f"b{b}")
-        right = bucketed.select(
-            F.col("id").alias("dst_id"), F.col(f"b{b}").alias(f"rb{b}")
-        )
-        pred = (
-            (F.col("dst_id") < F.col("id"))
-            if earlier_only
-            else (F.col("id") != F.col("dst_id"))
-        )
-        p = (
-            left.join(right, F.col(f"b{b}") == F.col(f"rb{b}"))
-            .filter(pred)
-            .select(F.col("id").alias("src"), F.col("dst_id").alias("dst"))
-        )
-        pairs = p if pairs is None else pairs.unionByName(p)
-    return pairs.distinct()
+# Entries of one src-chunk × dst distance block in the bucket kernel
+# (int64: 32 MB) — bounds a worker's memory for any bucket size.
+_TOPM_BLOCK = 1 << 22
+_D2_NONE = np.iinfo(np.int64).max
 
 
-def rank_pairs_by_d2(
-    cand: "DataFrame",
-    qa: "DataFrame",
-    qb: "DataFrame",
+def _bucket_topm(
+    ids: np.ndarray,
+    q: np.ndarray,
+    is_src: np.ndarray,
     m: int,
-    include_rank: bool = False,
-) -> "DataFrame":
-    """Rank candidate pairs by exact integer squared-L2 and keep each
-    src's top-``m`` (ties by dst) — the ONE ranking implementation
-    behind the batch builds and the streaming index append (a
-    tie-break or metric change here cannot silently diverge the
-    hash-gated stream ≡ batch equivalence). ``cand`` is (src, dst);
-    ``qa`` (src, qa); ``qb`` (dst, qb)."""
-    from pyspark.sql import Window
+    earlier_only: bool,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Each src row's ``m`` nearest rows of ONE bucket by exact integer
+    squared-L2, ties by dst id — the kNN-graph build's local top-m
+    (pure numpy, no Spark). ``ids`` (n,) and ``q`` (n, d) int64 are
+    the bucket's rows, all of them candidate dsts; ``is_src`` marks
+    the rows that want neighbours. A dst qualifies when
+    ``dst < src`` (``earlier_only``, the arrival-order rule) or else
+    ``dst != src``. Returns ``(src, dst, d2)`` int64 arrays.
 
-    d2 = (
-        cand.join(qa, "src")
-        .join(qb, "dst")
-        .select(
-            "src",
-            "dst",
-            F.expr(
-                "aggregate(zip_with(qa, qb, (a, b) -> (a - b) * (a - b)), "
-                "CAST(0 AS BIGINT), (s, x) -> s + x)"
-            ).alias("d2"),
+    ``‖s‖² + ‖d‖² − 2·s·d`` is the same integer as ``Σ(s_i − d_i)²``
+    (int64 matmul is exact; unit-quantized rows keep every term far
+    from overflow), and the dsts are id-sorted before a stable sort, so
+    equal distances keep dst order. Src rows are processed in chunks
+    of ≤ ``_TOPM_BLOCK`` distance entries."""
+    empty = np.empty(0, dtype=np.int64)
+    src_rows = np.flatnonzero(is_src)
+    if len(src_rows) == 0:
+        return empty, empty, empty
+    order = np.argsort(ids, kind="stable")
+    dst_ids, dst_q = ids[order], q[order]
+    dst_n = np.einsum("ij,ij->i", dst_q, dst_q)
+    k = min(m, len(dst_ids))
+    step = max(1, _TOPM_BLOCK // len(dst_ids))
+    out_s, out_d, out_k = [], [], []
+    for lo in range(0, len(src_rows), step):
+        rows = src_rows[lo : lo + step]
+        s_ids, s_q = ids[rows], q[rows]
+        d2 = (
+            np.einsum("ij,ij->i", s_q, s_q)[:, None]
+            + dst_n[None, :]
+            - 2 * (s_q @ dst_q.T)
         )
+        if earlier_only:
+            d2[dst_ids[None, :] >= s_ids[:, None]] = _D2_NONE
+        else:
+            d2[dst_ids[None, :] == s_ids[:, None]] = _D2_NONE
+        top = np.argsort(d2, axis=1, kind="stable")[:, :k]
+        top_d2 = np.take_along_axis(d2, top, axis=1)
+        keep = top_d2 != _D2_NONE
+        out_s.append(np.broadcast_to(s_ids[:, None], top.shape)[keep])
+        out_d.append(dst_ids[top][keep])
+        out_k.append(top_d2[keep])
+    return np.concatenate(out_s), np.concatenate(out_d), np.concatenate(out_k)
+
+
+def _list_matrix(col) -> np.ndarray:
+    """A non-empty Arrow list<int64> column of equal-length rows as an
+    (n, d) int64 matrix (NULL elements and ragged rows raise)."""
+    import pyarrow.compute as pc
+
+    arr = col.combine_chunks()
+    widths = pc.list_value_length(arr).to_numpy(zero_copy_only=False)
+    if (widths != widths[0]).any():
+        raise ValueError("kNN-graph build: vectors of different lengths")
+    return arr.flatten().to_numpy().reshape(len(arr), int(widths[0]))
+
+
+def banded_topm(
+    posts: DataFrame, bands: int, m: int, earlier_only: bool = False
+) -> DataFrame:
+    """Each src's top-``m`` banded neighbours by exact integer
+    squared-L2, ties by dst — the ONE ranking implementation behind the
+    batch builds and the streaming index append (a tie-break or metric
+    change here cannot silently diverge the hash-gated stream ≡ batch
+    equivalence). ``posts`` is ``(id, q, b0..b{bands-1}, is_src)``;
+    every post is a candidate dst, ``is_src`` rows get edges.
+    Returns ``(src, dst, rank)`` with 1-based ranks.
+
+    Partition, rank locally, merge bounded lists (the REPOSE shape):
+    the posts explode to one row per ``(band, bucket)`` and shuffle
+    once; a grouped Arrow kernel (:func:`_bucket_topm`) computes every
+    bucket's all-pairs int64 d2 and per-src top-m; one ``groupBy(src)``
+    merges the ≤ bands·m local winners per src (the same pair found in
+    several bands dedups, as it carries the same d2). The top-m of the
+    union of band candidates is the top-m of the union of per-bucket
+    top-m lists, since anything a bucket drops is beaten by m of its
+    own candidates."""
+    import pyarrow as pa
+
+    def kernel(table):
+        src, dst, d2 = _bucket_topm(
+            table.column("id").to_numpy().astype(np.int64, copy=False),
+            _list_matrix(table.column("q")),
+            table.column("is_src").to_numpy(zero_copy_only=False),
+            m,
+            earlier_only,
+        )
+        return pa.table({"src": src, "dst": dst, "d2": d2})
+
+    band_buckets = F.array(
+        *[
+            F.struct(F.lit(b).alias("band"), F.col(f"b{b}").alias("bucket"))
+            for b in range(bands)
+        ]
     )
-    w = Window.partitionBy("src").orderBy("d2", "dst")
-    ranked = (
-        d2.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= m)
+    per_bucket = (
+        posts.select("id", "q", "is_src", F.inline(band_buckets))
+        .groupBy("band", "bucket")
+        .applyInArrow(kernel, "src long, dst long, d2 long")
     )
-    cols = ["src", "dst", "rank"] if include_rank else ["src", "dst"]
-    return ranked.select(*cols)
+    nn = per_bucket.groupBy("src").agg(
+        F.slice(
+            F.array_sort(F.collect_set(F.struct("d2", "dst"))), 1, m
+        ).alias("nn")
+    )
+    return nn.select("src", F.posexplode("nn")).select(
+        "src",
+        F.col("col.dst").alias("dst"),
+        (F.col("pos") + 1).cast("int").alias("rank"),
+    )
 
 
 def knn_graph_banded(
@@ -1642,27 +1730,26 @@ def knn_graph_banded(
     family: HNSW/NSW), expressed Spark-first and integer-exact so the
     whole build replays in SQL.
 
-    Candidate pairs come from ``bands`` independent RP-LSH bucketings
-    (:func:`rp_bucket_expr`, seeds ``seed + band``) — a BANDED
-    EQUI-JOIN, never all-pairs: per band, vectors sharing a bucket are
-    candidates; the union across bands recovers neighbors a single
-    hyperplane cut separated (the same band-union recall argument as
-    MinHash LSH). Each node keeps its ``m`` nearest candidates by
-    SQUARED L2 over quantized UNIT vectors
-    (:func:`quantize_unit_vectors` — monotone in cosine; exact BIGINT
-    arithmetic, ties by id) — fanout is exactly ≤ m, so the edge table
-    is ≤ n·m rows.
+    Candidates come from ``bands`` independent RP-LSH bucketings
+    (:func:`rp_bucket_expr`, seeds ``seed + band``), never all-pairs:
+    per band, vectors sharing a bucket are candidates; the union across
+    bands recovers neighbors a single hyperplane cut separated (the
+    same band-union recall argument as MinHash LSH). Each node keeps
+    its ``m`` nearest candidates by SQUARED L2 over quantized UNIT
+    vectors (:func:`quantize_unit_vectors` — monotone in cosine; exact
+    BIGINT arithmetic, ties by id) — fanout is exactly ≤ m, so the edge
+    table is ≤ n·m rows. The ranking is :func:`banded_topm`: one
+    shuffle into ``(band, bucket)`` groups, a per-bucket top-m Arrow
+    kernel, one bounded merge per src.
 
-    Scale posture (100 TB): candidate volume per band is
+    Scale posture (100 TB): the kernel's work per band is
     Σ_buckets |b|² — bounded by bucket size, which the ``n_planes``
     knob holds ~constant as the corpus grows (planes ≈ log2(n/target)
     keeps |b| ≈ target; the catalog queries pin planes for their
-    fixture so the oracle's plane literals stay static). The per-src
-    top-m is a bounded window per key (WindowGroupLimit shape), and
-    the edge table partitions/broadcasts by src for the search phase.
-    Unlike sequential HNSW insertion (inherently serial, order-
-    dependent), the banded build is one shuffle round and fully
-    order-independent — the Spark-native construction.
+    fixture so the oracle's plane literals stay static) — and the merge
+    moves ≤ bands·m rows per src. Unlike sequential HNSW insertion
+    (inherently serial, order-dependent), the banded build is order-
+    independent — the Spark-native construction.
 
     ``exact_buckets=True`` bands with the sequential-double column
     expression (cross-engine replayable — the oracle-gated path);
@@ -1671,14 +1758,13 @@ def knn_graph_banded(
     determinism matters — at 13+ planes × several bands the matmul is
     the right tool (same rule as :func:`topk_cosine_lsh`).
     """
-    qz = quantize_unit_vectors(corpus, id_col=id_col, vec_col=vec_col)
-    bucketed = _banded_buckets(
+    _require_integral_id(corpus, id_col, "knn_graph_banded")
+    posts = banded_posts(
         corpus, dim, n_planes, bands, seed, vec_col, id_col, exact_buckets
     )
-    cand = _banded_pairs(bucketed, bands, earlier_only=False)
-    qa = qz.select(F.col("id").alias("src"), F.col("q").alias("qa"))
-    qb = qz.select(F.col("id").alias("dst"), F.col("q").alias("qb"))
-    return rank_pairs_by_d2(cand, qa, qb, m, include_rank=False)
+    return banded_topm(
+        posts.withColumn("is_src", F.lit(True)), bands, m
+    ).select("src", "dst")
 
 
 def knn_graph_arrival(
@@ -1701,18 +1787,16 @@ def knn_graph_arrival(
     across batches) reproduces this graph bit-for-bit — stream ≡
     batch ≡ SQL, the incremental-index discipline applied to a graph.
     Candidates and ranking are the SAME shared helpers as
-    :func:`knn_graph_banded` (banded equi self-join, integer
-    squared-L2 over quantized unit vectors, ties by id) — one
-    implementation, so a metric/tie-break change cannot silently
-    diverge the two graphs."""
-    qz = quantize_unit_vectors(corpus, id_col=id_col, vec_col=vec_col)
-    bucketed = _banded_buckets(
-        corpus, dim, n_planes, bands, seed, vec_col, id_col, True
+    :func:`knn_graph_banded` (:func:`banded_topm` over
+    :func:`banded_posts`) — one implementation, so a metric/tie-break
+    change cannot silently diverge the two graphs."""
+    _require_integral_id(corpus, id_col, "knn_graph_arrival")
+    posts = banded_posts(
+        corpus, dim, n_planes, bands, seed, vec_col, id_col
     )
-    cand = _banded_pairs(bucketed, bands, earlier_only=True)
-    qa = qz.select(F.col("id").alias("src"), F.col("q").alias("qa"))
-    qb = qz.select(F.col("id").alias("dst"), F.col("q").alias("qb"))
-    return rank_pairs_by_d2(cand, qa, qb, m, include_rank=True)
+    return banded_topm(
+        posts.withColumn("is_src", F.lit(True)), bands, m, earlier_only=True
+    )
 
 
 _KNN_GRAPH_CACHE: dict = {}
@@ -1756,6 +1840,7 @@ def knn_graph_index(
     import os
     import tempfile
 
+    _require_integral_id(corpus, id_col, "knn_graph_index")
     fp = _file_fingerprint(corpus.inputFiles())
     key = (
         fp,
@@ -1811,6 +1896,21 @@ def knn_graph_index(
             _rmtree_at_exit(_KNN_GRAPH_CACHE.pop(oldest))
         _KNN_GRAPH_CACHE[key] = path
     return path
+
+
+def read_graph_index(spark, path: str) -> DataFrame:
+    """The edge table at a :func:`knn_graph_index` path. Its schema is
+    known (``src``/``dst`` bigint, plus the ``src_pt{N}`` partition
+    column when the layout has one), so it is declared rather than
+    inferred — inference reads the footers in a Spark job of its own."""
+    import os
+
+    pt = next(
+        (d.split("=")[0] for d in os.listdir(path) if d.startswith("src_pt")),
+        None,
+    )
+    schema = "src long, dst long" + (f", {pt} int" if pt else "")
+    return spark.read.schema(schema).parquet(path)
 
 
 def _edges_hop(
@@ -1895,6 +1995,90 @@ def _fetch_id_vecs(corpus_qz: DataFrame, ids, acc: dict) -> None:
         acc[int(r["id"])] = np.asarray(r["q"], dtype=np.int64)
 
 
+class StaleIndexError(LookupError):
+    """An index artifact names ids its corpus no longer holds."""
+
+
+def _lookup(acc: dict, ids, index: str) -> list:
+    """``[acc[i] for i in ids]`` for rows fetched by id — the one lookup
+    behind every driver-side re-rank. An id the fetch did not return
+    means the index was built over a different corpus (a stale cache
+    entry, or one ``variant``/``cache_tag`` shared by two frames), so
+    this raises :class:`StaleIndexError` naming the missing ids and the
+    index rather than a bare ``KeyError``."""
+    try:
+        return [acc[i] for i in ids]
+    except KeyError:
+        missing = sorted({i for i in ids if i not in acc})
+        raise StaleIndexError(
+            f"{len(missing)} id(s) from {index} are missing from the "
+            f"corpus (first: {missing[:8]}): the index was built over a "
+            "different corpus; rebuild it or give this corpus its own "
+            "variant/cache_tag"
+        ) from None
+
+
+def _index_label(edges: DataFrame) -> str:
+    """Where an edge table came from, for error messages."""
+    import os
+
+    files = edges.inputFiles()
+    if not files:
+        return "an in-memory graph index"
+    return "graph index " + os.path.commonpath(
+        [f[len("file:"):] if f.startswith("file:") else f for f in files]
+    )
+
+
+def _seq_dot(a, b) -> float:
+    """:func:`dot`'s arithmetic on the driver: products of doubles
+    summed left to right from 0.0 (never BLAS/``np.dot``, whose
+    summation order differs in the last bits)."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+def rerank_cosine_local(
+    corpus: DataFrame,
+    shortlists: dict,
+    query_vecs: dict,
+    k: int,
+    index: str,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> list:
+    """Exact-cosine top-``k`` of each query's shortlist, on the driver:
+    ONE id-pruned fetch of the shortlisted vectors, then
+    :func:`cosine`'s arithmetic bit for bit (sequential double dots,
+    IEEE sqrt and division), ordered by (cosine desc, id). The
+    shortlists are parameter-bounded (≤ |batch|·beam ids), so this is
+    the IVF-PQ re-rank's serving posture. ``shortlists`` maps
+    query_id → candidate ids, ``query_vecs`` query_id → raw vector.
+    Returns ``[(query_id, id, rank), ...]`` with 1-based ranks."""
+    import math
+
+    ids = sorted({int(i) for c in shortlists.values() for i in c})
+    vecs = {
+        int(r[0]): [float(x) for x in r[1]]
+        for r in _id_filter(corpus, id_col, ids)
+        .select(id_col, vec_col)
+        .collect()
+    }
+    out = []
+    for qid in sorted(shortlists):
+        qv = [float(x) for x in query_vecs[qid]]
+        qn = math.sqrt(_seq_dot(qv, qv))
+        cand = sorted({int(i) for i in shortlists[qid]})
+        scored = sorted(
+            (-(_seq_dot(v, qv) / (math.sqrt(_seq_dot(v, v)) * qn)), i)
+            for i, v in zip(cand, _lookup(vecs, cand, index))
+        )
+        out += [(qid, i, r) for r, (_c, i) in enumerate(scored[:k], start=1)]
+    return out
+
+
 def _fetch_adjacency(edges: DataFrame, srcs) -> dict:
     """Out-edges of the given src ids as ``{src: [dst, ...]}`` — one
     job. When the edge layout carries ``src_pt{N}`` (see
@@ -1935,6 +2119,7 @@ def _beam_loop_local(
     sorted ascending."""
     import numpy as np
 
+    index = _index_label(edges)
     vecs: dict = {}
     _fetch_id_vecs(
         corpus_qz, set().union(*entries.values()) if entries else set(), vecs
@@ -1944,7 +2129,7 @@ def _beam_loop_local(
         if not cand_ids:
             return []
         ids = np.fromiter(sorted(cand_ids), dtype=np.int64)
-        mat = np.stack([vecs[int(i)] for i in ids])
+        mat = np.stack(_lookup(vecs, ids.tolist(), index))
         diff = mat - qvecs[qid]
         d2 = np.einsum("ij,ij->i", diff, diff)
         order = np.lexsort((ids, d2))[:beam]
@@ -2021,47 +2206,3 @@ def graph_beam_search(
         corpus_qz, edges, {0: qvec}, {0: seed_ids}, beam, hops, depth
     )
     return spark.createDataFrame(beams[0], "id long, d2 long")
-
-
-def graph_beam_search_many(
-    corpus_qz: DataFrame,
-    edges: DataFrame,
-    queries_q: DataFrame,
-    entry_ids: DataFrame,
-    beam: int = 64,
-    hops: int = 3,
-    depth: int = 2,
-) -> DataFrame:
-    """Batch graph serving: :func:`graph_beam_search` for EVERY query
-    in a request batch at once — one job sequence regardless of batch
-    size (the ANN serving shape, like :func:`topk_cosine_many`).
-
-    ``queries_q`` is the quantized query batch ``(query_id, q)``;
-    ``entry_ids`` the per-query seed list ``(query_id, id)`` (bucket
-    mates; a global min-id fallback row per query keeps empty-seed
-    queries alive). All queries advance together through the shared
-    driver-resident loop (:func:`_beam_loop_local`): each depth level
-    is ONE pruned edge fetch for the union frontier, each hop ONE
-    vector fetch for the union candidate set, the per-query re-rank
-    exact int64 numpy — job count independent of batch size (the ANN
-    serving shape, like :func:`topk_cosine_many`), beam state
-    ≤ |batch|·beam rows (parameter-bounded).
-
-    Returns the final per-query beam ``(query_id, id, d2)``."""
-    import numpy as np
-
-    spark = corpus_qz.sparkSession
-    qvecs = {
-        int(r["query_id"]): np.asarray(r["q"], dtype=np.int64)
-        for r in queries_q.select("query_id", "q").collect()
-    }
-    entries: dict = {qid: set() for qid in qvecs}
-    for r in entry_ids.select("query_id", "id").collect():
-        entries.setdefault(int(r["query_id"]), set()).add(int(r["id"]))
-    beams = _beam_loop_local(
-        corpus_qz, edges, qvecs, entries, beam, hops, depth
-    )
-    rows = [(qid, i, d) for qid in sorted(beams) for (i, d) in beams[qid]]
-    return spark.createDataFrame(rows, "query_id long, id long, d2 long")
-
-

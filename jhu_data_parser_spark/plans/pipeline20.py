@@ -8,10 +8,12 @@ a distributed engine — so the family is re-expressed Spark-first as
 two deterministic, oracle-replayable stages:
 
 - ``knn_graph_banded`` (operators/similarity.py): a fixed-fanout kNN
-  graph from BANDED RP-LSH candidates (independent bucketings;
-  per-band equi self-join, never all-pairs) ranked by exact integer
-  squared-L2 over quantized UNIT vectors (monotone in cosine) — one
-  shuffle round, order-independent, edge table ≤ n·m rows.
+  graph from BANDED RP-LSH candidates (independent bucketings; rows
+  sharing a bucket in any band, never all-pairs) ranked by exact
+  integer squared-L2 over quantized UNIT vectors (monotone in cosine)
+  — one shuffle into (band, bucket) groups, a per-bucket top-m Arrow
+  kernel and one bounded merge per src; order-independent, edge table
+  ≤ n·m rows.
 - ``graph_beam_search``: greedy best-first beam search from the
   minimum-id entry point — per hop, the ≤ beam-row id list broadcasts
   against the edge table and only the visited candidates are scored
@@ -30,17 +32,18 @@ hash certifies the measured recall number itself. Hop CTEs are
 MATERIALIZED (each is referenced twice by the next hop — the
 exponential-inlining rule).
 
-Scale posture (100 TB): build candidate volume is Σ_buckets |b|² per
-band — the ``n_planes`` knob holds bucket size ~constant as the
-corpus grows (planes ≈ log2(n/target)); the per-src top-m is a
-bounded window (WindowGroupLimit); search hops touch beam·m edge
-rows and score ≤ beam(1+m) vectors per hop via broadcast joins — a
-partitionBy(src) edge layout turns the hop join into partition
-pruning. 100× probe recorded in PLANS.md round 12.
+Scale posture (100 TB): build work is Σ_buckets |b|² per band — the
+``n_planes`` knob holds bucket size ~constant as the corpus grows
+(planes ≈ log2(n/target)); the per-src merge moves ≤ bands·m rows;
+search hops touch beam·m edge rows and score ≤ beam(1+m) vectors per
+hop via id-pruned fetches — a partitionBy(src) edge layout turns the
+hop fetch into partition pruning. 100× probe recorded in PLANS.md
+round 12.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -225,7 +228,8 @@ def _graph_beam(spark: SparkSession, sf_dir: str):
     # serving query reads the ≤ n·m-row edge parquet — a graph index
     # is prebuilt in any real deployment, and the oracle still replays
     # the full build so the hash certifies it
-    edges = spark.read.parquet(
+    edges = sim.read_graph_index(
+        spark,
         sim.knn_graph_index(
             corpus,
             dim=_G_DIM,
@@ -234,7 +238,7 @@ def _graph_beam(spark: SparkSession, sf_dir: str):
             bands=_G_BANDS,
             seed=_G_SEED,
             variant="ne0",
-        )
+        ),
     )
     # the quantized table feeds every search round (iterative consumer;
     # n×(64 ints) — at scale this materialization IS the quantized
@@ -327,7 +331,7 @@ def sim_graph_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # service actually runs: one request batch, one job sequence). Corpus
 # and query split mirror sim_cosine_topk_multi (queries vec_id < 5,
 # corpus vec_id >= 5); the per-query beam is the same bounded state,
-# re-ranked with one row_number per query (WindowGroupLimit).
+# and the final exact-cosine re-rank runs on the driver.
 # --------------------------------------------------------------------------
 
 _GM_K = 5
@@ -449,91 +453,87 @@ _GRAPH_MULTI_ORACLE = f"""
 @query("sim_graph_topk_multi", oracle=_GRAPH_MULTI_ORACLE)
 def sim_graph_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch graph-ANN serving: top-{k} for EVERY query in the request
-    batch (vec_id < 5) from one index + one job sequence — per-query
-    LSH-seeded beams advance together as a (query_id, id) state table,
-    per-query re-rank is one row_number (WindowGroupLimit), and the
-    final order is the exact-cosine re-rank of each beam (the
-    PQ-rerank discipline). The oracle replays the build and every
-    per-query hop."""
-    from jhu_data_parser_spark.operators.similarity import (
-        quantize_unit_vectors,
-    )
-    from pyspark.sql import Window
-
+    batch (vec_id < 5) from one index + one job sequence. The batch
+    (quantized vector, raw vector, band codes) is collected once; the
+    LSH seeds (bucket mates in any band) and the min-id fallback come
+    from one aggregate; the per-query beams advance together in the
+    driver-resident loop; the final order is an exact-cosine re-rank of
+    each beam on the driver over one id-pruned fetch (the PQ-rerank
+    discipline, bit-identical to ``sim.cosine``). The oracle replays
+    the build and every per-query hop."""
     e = load_table(spark, sf_dir, "embeddings")
     corpus = e.filter(F.expr(_GM_WHERE))
     queries = e.filter(F.expr(_GM_QWHERE))
-    edges = spark.read.parquet(
-        sim.knn_graph_index(
-            corpus,
-            dim=_G_DIM,
-            m=_G_M,
-            n_planes=_G_PLANES,
-            bands=_G_BANDS,
-            seed=_G_SEED,
-            variant="ge5",
-        )
+    index = sim.knn_graph_index(
+        corpus,
+        dim=_G_DIM,
+        m=_G_M,
+        n_planes=_G_PLANES,
+        bands=_G_BANDS,
+        seed=_G_SEED,
+        variant="ge5",
     )
-    qz = quantize_unit_vectors(corpus).localCheckpoint(eager=False)
-    qq = quantize_unit_vectors(queries).select(
-        F.col("id").alias("query_id"), "q"
-    )
-    bucketed = corpus.select(
-        F.col("vec_id").alias("id"),
-        *[
-            sim.rp_bucket_expr("embedding", _G_PLANES, _G_DIM, _G_SEED + b)
-            .alias(f"b{b}")
-            for b in range(_G_BANDS)
-        ],
-    )
-    qb = queries.select(
-        F.col("vec_id").alias("query_id"),
-        *[
-            sim.rp_bucket_expr("embedding", _G_PLANES, _G_DIM, _G_SEED + b)
-            .alias(f"qb{b}")
-            for b in range(_G_BANDS)
-        ],
-    )
-    pred = None
+    qz = sim.quantize_unit_vectors(corpus).localCheckpoint(eager=False)
+    codes = [
+        sim.rp_bucket_expr("embedding", _G_PLANES, _G_DIM, _G_SEED + b)
+        for b in range(_G_BANDS)
+    ]
+    batch = sim.quantize_unit_vectors(
+        queries,
+        extra=[F.col("embedding")]
+        + [c.alias(f"b{b}") for b, c in enumerate(codes)],
+    ).collect()
+    qcodes = {
+        int(r["id"]): [r[f"b{b}"] for b in range(_G_BANDS)] for r in batch
+    }
+    # bucket mates of ANY batch query in any band, plus the fallback
+    mate = None
     for b in range(_G_BANDS):
-        p = F.col(f"b{b}") == F.col(f"qb{b}")
-        pred = p if pred is None else (pred | p)
-    seeds = (
-        bucketed.crossJoin(F.broadcast(qb))
-        .filter(pred)
-        .select("query_id", "id")
+        p = F.col(f"b{b}").isin(sorted({v[b] for v in qcodes.values()}))
+        mate = p if mate is None else (mate | p)
+    agg = (
+        corpus.select(
+            F.col("vec_id").alias("id"),
+            *[c.alias(f"b{b}") for b, c in enumerate(codes)],
+        )
+        .agg(
+            F.min("id").alias("min_id"),
+            F.collect_list(
+                F.when(
+                    mate,
+                    F.array("id", *[f"b{b}" for b in range(_G_BANDS)]),
+                )
+            ).alias("mates"),
+        )
+        .head()
     )
-    fallback = (
-        qb.select("query_id")
-        .crossJoin(F.broadcast(qz.agg(F.min("id").alias("id"))))
-        .select("query_id", "id")
+    entries = {
+        qid: {agg["min_id"]}
+        | {
+            r[0]
+            for r in agg["mates"]
+            if any(r[1 + b] == v[b] for b in range(_G_BANDS))
+        }
+        for qid, v in qcodes.items()
+    }
+    beams = sim._beam_loop_local(
+        qz,
+        sim.read_graph_index(spark, index),
+        {int(r["id"]): np.asarray(r["q"], dtype=np.int64) for r in batch},
+        entries,
+        _G_BEAM,
+        _G_HOPS,
+        _G_DEPTH,
     )
-    entry = seeds.unionByName(fallback)
-    bm = sim.graph_beam_search_many(
-        qz, edges, qq, entry, beam=_G_BEAM, hops=_G_HOPS, depth=_G_DEPTH
+    ranked = sim.rerank_cosine_local(
+        corpus,
+        {qid: [i for i, _d2 in beam] for qid, beam in beams.items()},
+        {int(r["id"]): r["embedding"] for r in batch},
+        _GM_K,
+        f"graph index {index}",
     )
-    shortlist = corpus.join(
-        F.broadcast(
-            bm.select("query_id", F.col("id").alias("vec_id"))
-        ),
-        "vec_id",
-    ).join(
-        F.broadcast(
-            queries.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qvec"),
-            )
-        ),
-        "query_id",
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        sim.cosine(F.col("embedding"), F.col("qvec")).desc(),
-        F.col("vec_id").asc(),
-    )
-    return (
-        shortlist.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= _GM_K)
-        .select("query_id", "vec_id", F.col("rank").cast("int").alias("rank"))
+    return spark.createDataFrame(
+        ranked, "query_id long, vec_id long, rank int"
     )
 
 

@@ -2370,61 +2370,26 @@ def run_graph_index_append_stream(
         if os.path.exists(os.path.join(tgt, "_SUCCESS")):
             return  # committed by a prior attempt: skip recompute too
         corpus = bdf.filter(F.col("vec_id") != 0)
-        new_posts = (
-            corpus.select(
-                F.col("vec_id").alias("id"),
-                # cast long: the bucket expr is int32, but the seed
-                # dir declared b{b} long — a mixed-type parquet
-                # dataset only reads via type-widening luck
-                *[
-                    sim.rp_bucket_expr(
-                        "embedding", _G_PLANES, _G_DIM, _G_SEED + b
-                    )
-                    .cast("long")
-                    .alias(f"b{b}")
-                    for b in range(_GA_BANDS)
-                ],
-            )
-            .join(
-                sim.quantize_unit_vectors(corpus),
-                "id",
-            )
-            .localCheckpoint(eager=False)
-        )
-        all_posts = (
+        new_posts = sim.banded_posts(
+            corpus, _G_DIM, _G_PLANES, _GA_BANDS, _G_SEED
+        ).localCheckpoint(eager=False)
+        old_posts = (
             spark.read.schema(snap_schema + ", batch_id int, tag string")
             .parquet(sink_root)
             .filter(F.col("tag") == "posts")
-            .select("id", *[f"b{b}" for b in range(_GA_BANDS)], "q")
-            .unionByName(new_posts)
+            .select("id", "q", *[f"b{b}" for b in range(_GA_BANDS)])
         )
-        pairs = None
-        for b in range(_GA_BANDS):
-            p = (
-                new_posts.select("id", f"b{b}")
-                .join(
-                    all_posts.select(
-                        F.col("id").alias("dst_id"),
-                        F.col(f"b{b}").alias(f"rb{b}"),
-                    ),
-                    F.col(f"b{b}") == F.col(f"rb{b}"),
-                )
-                .filter(F.col("dst_id") < F.col("id"))
-                .select(
-                    F.col("id").alias("src"),
-                    F.col("dst_id").alias("dst"),
-                )
-            )
-            pairs = p if pairs is None else pairs.unionByName(p)
-        # the ONE shared ranking implementation (sim.rank_pairs_by_d2)
-        # — the stream cannot silently diverge from the batch graph's
-        # metric or tie-break
-        edges = sim.rank_pairs_by_d2(
-            pairs.distinct(),
-            new_posts.select(F.col("id").alias("src"), F.col("q").alias("qa")),
-            all_posts.select(F.col("id").alias("dst"), F.col("q").alias("qb")),
+        # the ONE shared ranking implementation (sim.banded_topm) — the
+        # stream cannot silently diverge from the batch graph's metric
+        # or tie-break: the new posts rank against old and new posts
+        # alike (dst < src keeps only earlier ids)
+        edges = sim.banded_topm(
+            old_posts.withColumn("is_src", F.lit(False)).unionByName(
+                new_posts.withColumn("is_src", F.lit(True))
+            ),
+            _GA_BANDS,
             _GA_M,
-            include_rank=True,
+            earlier_only=True,
         )
         # per-batch artifacts are a few thousand rows — one file each
         # (a production append would target file sizes, not task count).

@@ -5,6 +5,9 @@ over the same files must not collide)."""
 
 from __future__ import annotations
 
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from jhu_data_parser_spark.operators import similarity as sim
@@ -165,3 +168,142 @@ def test_graph_index_append_stream_equals_batch_and_idempotent(spark):
         )
     )
     assert s2 == batch
+
+
+# --- the bucket-local top-m kernel, without Spark ---------------------
+
+
+@st.composite
+def _bucketed_rows(draw):
+    """Small bucketed vector sets: few distinct values (duplicate
+    vectors, equal distances), few buckets (singletons and shared
+    buckets), and a src flag per row (dst-only rows are the stream's
+    earlier posts)."""
+    n = draw(st.integers(1, 12))
+    dim = draw(st.integers(1, 4))
+    bands = draw(st.integers(1, 3))
+    ids = draw(
+        st.lists(
+            st.integers(-50, 50), min_size=n, max_size=n, unique=True
+        )
+    )
+    vals = st.integers(-3, 3)
+    q = [draw(st.lists(vals, min_size=dim, max_size=dim)) for _ in ids]
+    codes = [
+        draw(st.lists(st.integers(0, 2), min_size=n, max_size=n))
+        for _ in range(bands)
+    ]
+    is_src = draw(st.lists(st.booleans(), min_size=n, max_size=n))
+    return ids, q, codes, is_src
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    rows=_bucketed_rows(),
+    m=st.integers(1, 5),
+    earlier_only=st.booleans(),
+    block=st.sampled_from([1, 5, 1 << 22]),
+)
+def test_bucket_topm_merge_equals_brute_force(rows, m, earlier_only, block):
+    """Per-bucket top-m (sim._bucket_topm) merged per src — union,
+    dedup, sort by (d2, dst), first m; the merge banded_topm runs in
+    SQL — equals ranking the union of band candidates directly, for
+    dst != src and dst < src, at any src chunk size."""
+    import numpy as np
+
+    ids, q, codes, is_src = rows
+    qa = np.asarray(q, dtype=np.int64)
+    ia = np.asarray(ids, dtype=np.int64)
+    sa = np.asarray(is_src, dtype=bool)
+
+    def ok(s, d):
+        return d < s if earlier_only else d != s
+
+    saved, sim._TOPM_BLOCK = sim._TOPM_BLOCK, block
+    try:
+        local: dict = {}
+        for band in codes:
+            for bucket in set(band):
+                rows_in = np.flatnonzero(np.asarray(band) == bucket)
+                for s, d, d2 in zip(
+                    *sim._bucket_topm(
+                        ia[rows_in], qa[rows_in], sa[rows_in], m, earlier_only
+                    )
+                ):
+                    assert ok(s, d)
+                    local.setdefault(int(s), set()).add((int(d2), int(d)))
+    finally:
+        sim._TOPM_BLOCK = saved
+    got = {s: sorted(c)[:m] for s, c in local.items()}
+
+    want = {}
+    for i, s in enumerate(ids):
+        if not is_src[i]:
+            continue
+        cand = {
+            (int(((qa[i] - qa[j]) ** 2).sum()), d)
+            for j, d in enumerate(ids)
+            if ok(s, d) and any(band[i] == band[j] for band in codes)
+        }
+        if cand:
+            want[s] = sorted(cand)[:m]
+    assert got == want
+
+
+def test_knn_graph_rejects_non_integral_ids(spark):
+    """A float or string id column fails before any job runs, naming the
+    column and its type."""
+    corpus = _corpus(spark)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for cast in ("double", "string"):
+        bad = corpus.withColumn("vec_id", F.col("vec_id").cast(cast))
+        for build in (
+            sim.knn_graph_banded,
+            sim.knn_graph_arrival,
+            sim.knn_graph_index,
+        ):
+            jobs = dag.numTotalJobs()
+            with pytest.raises(ValueError, match=f"'vec_id'.*{cast}"):
+                build(bad, dim=64, m=4, n_planes=4, bands=2)
+            assert dag.numTotalJobs() == jobs, build.__name__
+
+
+def test_stale_index_names_missing_ids_and_index(spark):
+    """An index built over one corpus and served against a smaller one
+    (a stale cache entry) raises StaleIndexError naming the missing ids
+    and the index — from the graph beam loop, the driver cosine re-rank
+    and the IVF-PQ re-rank alike."""
+    import re
+
+    from jhu_data_parser_spark.operators.clustering import quantize_vectors
+
+    e = load_table(spark, SF, "embeddings")
+    full = e.filter(F.col("vec_id") != 0)
+    half = e.filter((F.col("vec_id") % 2 == 0) & (F.col("vec_id") != 0))
+    path = sim.knn_graph_index(
+        full, dim=64, m=4, n_planes=4, bands=2, variant="t_stale"
+    )
+    qq = sim.quantize_unit_vectors(e.filter(F.col("vec_id") == 0))
+    with pytest.raises(sim.StaleIndexError, match=re.escape(path)):
+        sim.graph_beam_search(
+            sim.quantize_unit_vectors(half),
+            sim.read_graph_index(spark, path),
+            qq.select("q"),
+            beam=8,
+            hops=2,
+            depth=1,
+        )
+
+    qv = e.filter(F.col("vec_id") == 0).head()["embedding"]
+    with pytest.raises(sim.StaleIndexError, match=r"graph index X.*\[1, 3\]"):
+        sim.rerank_cosine_local(
+            half, {0: [1, 2, 3]}, {0: qv}, 2, "graph index X"
+        )
+
+    queries = [
+        (int(r["id"]), [int(v) for v in r["q"]])
+        for r in quantize_vectors(e.filter(F.col("vec_id") == 0)).collect()
+    ]
+    sim.topk_ivfpq_indexed_multi(full, queries, k=5, cache_tag="t_stale")
+    with pytest.raises(sim.StaleIndexError, match="cache_tag='t_stale'"):
+        sim.topk_ivfpq_indexed_multi(half, queries, k=5, cache_tag="t_stale")

@@ -5,6 +5,8 @@ hot paths stay inside WholeStageCodegen."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from jhu_data_parser_spark import plans
@@ -1153,9 +1155,10 @@ def test_graph_ann_search_is_bounded_frontier(spark):
 
 
 def test_graph_ann_build_is_banded_equi_join(spark):
-    """The kNN-graph BUILD must be banded equi self-joins on bucket
-    keys (never all-pairs NLJ) with the per-src fanout cap planning as
-    a window rank — the WindowGroupLimit/rank shape."""
+    """The kNN-graph BUILD must bucket rows by band (never all-pairs
+    NLJ/cartesian) and rank them in ONE grouped Arrow kernel keyed on
+    (band, bucket) — partition, local top-m, bounded merge — with no
+    row_number window left over from the per-band self-join shape."""
     from jhu_data_parser_spark.operators import similarity as sim
     from jhu_data_parser_spark.sources.tables import load_table
     from pyspark.sql import functions as F
@@ -1168,9 +1171,8 @@ def test_graph_ann_build_is_banded_equi_join(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert (
-        "SortMergeJoin" in plan
-        or "ShuffledHashJoin" in plan
-        or "BroadcastHashJoin" in plan
-    )
-    assert "row_number" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    kernels = re.findall(r"FlatMapGroupsInArrow \[([^\]]*)\]", final)
+    assert len(kernels) == 1, final
+    assert re.fullmatch(r"band#\d+, bucket#\d+L?", kernels[0]), kernels
+    assert "row_number" not in plan
