@@ -725,6 +725,7 @@ def ivfpq_build_index(
     import os
     import tempfile
 
+    _require_integral_id(df, id_col, "ivfpq_build_index")
     fp = _file_fingerprint(df.inputFiles())
     key = (
         "ivfpq",
@@ -1265,6 +1266,7 @@ def topk_ivfpq_indexed_multi(
     candidate sets and arithmetic identical to the former in-plan
     formulation, which the oracle replays end to end. Every fetch
     recomputes from the parquet inputs per invocation."""
+    _require_integral_id(df, id_col, "topk_ivfpq_indexed_multi")
     spark = df.sparkSession
     short = ivfpq_multi_shortlist(
         df,
@@ -1541,15 +1543,15 @@ def quantize_unit_vectors(
 
 def _require_integral_id(df: DataFrame, id_col: str, caller: str) -> None:
     """Fail before any job when ``id_col`` is not an integer type: the
-    graph paths order ties by id, mask ``dst < src`` and fetch by
-    IN-list, all of which assume exact integral ids."""
+    graph and IVF-PQ paths order ties by id, fetch by IN-list and (the
+    graph) mask ``dst < src``, all of which assume exact integral ids."""
     from pyspark.sql.types import IntegralType
 
     dt = df.schema[id_col].dataType
     if not isinstance(dt, IntegralType):
         raise ValueError(
             f"{caller}: id column {id_col!r} has type {dt.simpleString()}; "
-            "graph ANN needs an integral id (tinyint/smallint/int/bigint)"
+            "ANN indexes need an integral id (tinyint/smallint/int/bigint)"
         )
 
 

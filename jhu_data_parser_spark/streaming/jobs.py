@@ -1,4 +1,4 @@
-"""Structured Streaming jobs over the `events` table.
+"""Structured Streaming jobs over the engine's tables.
 
 The reference re-runs its whole batch daily (systemd timer,
 ``systemd/jhu-data-parser.timer:5-6``) because a column-per-day feed
@@ -6,17 +6,43 @@ can't stream. Over the long/row form, Structured Streaming gives the
 incremental version: file source → watermark → windowed agg → sink, with
 ``trigger(availableNow=True)`` reproducing the "run the timer now, then
 exit" cadence. State stays bounded by the watermark at any scale.
+
+Every stream here and in :mod:`.stateful` runs under one contract:
+
+- **Stage.** The file source wants a flat directory of files (a growing
+  landing prefix in production). :func:`_stage_symlinks` links a
+  table's part files into one; :func:`_stage_chunks` writes
+  ``n_chunks`` files with ascending mtimes, so ``maxFilesPerTrigger=1``
+  makes each chunk one micro-batch. Both return ``(stream, stage)``.
+- **Run.** :func:`_run_stream` starts a writer with an availableNow
+  trigger and a fresh checkpoint and waits for it. Shuffle and state
+  partitions follow one sizing rule, the stage dir's estimated split
+  count (:func:`scoped_state_partitions`); the stage already holds
+  every staged copy, and sizes follow symlinks. When the run ends the
+  checkpoint and the stage are deleted. Only output dirs that back a
+  returned lazy frame stay, removed at interpreter exit.
+- **Partials.** :func:`run_partials_stream` is the merge-by-addition
+  sink. Each micro-batch lands its partial frame (or several tagged
+  frames, through one write) in ``batch_id=N`` under one sink root.
+  A batch whose ``_SUCCESS`` marker exists is skipped before any
+  recompute, and a torn dir is removed and rewritten, so a
+  checkpoint-restart retry neither double-counts nor loses a batch.
+  The sink reads back by its declared DDL, so a run with no batch
+  returns a typed empty frame. Call sites keep what to compute per
+  batch and how to merge the read-back.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
+import time
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 __all__ = [
     "read_events_stream",
@@ -40,7 +66,6 @@ def _cleanup_at_exit(path: str) -> str:
     mid-process would fail pending reads), so they are reclaimed at
     exit rather than leaked one-per-call (ADVICE r6)."""
     import atexit
-    import shutil
 
     if not _ATEXIT_DIRS:
         atexit.register(
@@ -51,15 +76,17 @@ def _cleanup_at_exit(path: str) -> str:
 
 
 def _rmtree_now(path: str) -> None:
-    import shutil
-
     shutil.rmtree(path, ignore_errors=True)
     _ATEXIT_DIRS.discard(path)
 
 
+def _tmpdir(kind: str) -> str:
+    """A fresh ``jdps_<kind>_*`` scratch dir: every stage, checkpoint
+    and sink dir of the streaming package is made here."""
+    return tempfile.mkdtemp(prefix=f"jdps_{kind}_")
+
+
 _STATE_PARTITIONS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
-
-
 def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
     """Read a Spark size conf (``128m`` / ``4194304`` / ``1g``) as bytes."""
     raw = spark.conf.get(key, None)
@@ -77,10 +104,10 @@ def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
         return default
 
 
-def _input_split_count(spark: SparkSession, input_path: str, copies: int = 1) -> int:
+def _input_split_count(spark: SparkSession, input_path: str) -> int:
     """Estimate how many scan splits the file source will produce for
-    ``input_path`` (a parquet file or a directory of part files, staged
-    ``copies`` times), using the same arithmetic as Spark's
+    ``input_path`` (a parquet file or a directory of part files), using
+    the same arithmetic as Spark's
     ``FilePartition.maxSplitBytes``: each file is charged
     ``openCostInBytes``, the split size is
     ``min(maxPartitionBytes, max(openCost, totalBytes/defaultParallelism))``,
@@ -97,7 +124,6 @@ def _input_split_count(spark: SparkSession, input_path: str, copies: int = 1) ->
         sizes = [os.path.getsize(input_path)]
     else:
         return 1
-    sizes = sizes * max(1, copies)
     if not sizes:
         return 1
     open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 * 1024 * 1024)
@@ -108,9 +134,7 @@ def _input_split_count(spark: SparkSession, input_path: str, copies: int = 1) ->
     return max(1, -(-total // max_split))
 
 
-def stream_state_partitions(
-    spark: SparkSession, input_path: str, copies: int = 1
-) -> int:
+def stream_state_partitions(spark: SparkSession, input_path: str) -> int:
     """Shuffle/state partition count for this engine's availableNow
     streaming runs: the micro-batch input's estimated split count
     (:func:`_input_split_count`), clamped to ``[1, defaultParallelism]``.
@@ -155,19 +179,19 @@ def stream_state_partitions(
             n = 0
         if n >= 1:
             return n
-    splits = _input_split_count(spark, input_path, copies)
+    splits = _input_split_count(spark, input_path)
     return max(1, min(splits, spark.sparkContext.defaultParallelism))
 
 
+
 @contextmanager
-def scoped_state_partitions(
-    spark: SparkSession, *, input_path: str, copies: int = 1
-):
+def scoped_state_partitions(spark: SparkSession, *, input_path: str):
     """Scope ``spark.sql.shuffle.partitions`` to
     :func:`stream_state_partitions` over ``input_path`` for one
-    streaming run, restoring the prior value afterwards. This is the
-    one place under ``streaming/`` that sets the shuffle partition
-    count, so every stream is sized by the same rule.
+    streaming run, restoring the prior value afterwards. Only
+    :func:`_run_stream` calls it, so every stream is sized by the same
+    rule and nothing else under ``streaming/`` sets the shuffle
+    partition count.
     Placement-only: state partitioning never changes what a stateful
     query computes (grouping keys hash to SOME partition either way),
     only how many state-store instances each micro-batch commits. On a
@@ -181,7 +205,7 @@ def scoped_state_partitions(
     per SparkSession). A concurrent batch query on the same session
     would silently inherit the scoped value; parallel runners must use
     ``spark.newSession()`` per thread instead."""
-    n = stream_state_partitions(spark, input_path, copies)
+    n = stream_state_partitions(spark, input_path)
     prior = spark.conf.get("spark.sql.shuffle.partitions", None)
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -191,88 +215,6 @@ def scoped_state_partitions(
             spark.conf.unset("spark.sql.shuffle.partitions")
         else:
             spark.conf.set("spark.sql.shuffle.partitions", prior)
-
-
-def _write_batch_once(
-    df: DataFrame, target: str, partition_by: list | None = None
-) -> None:
-    """Exactly-once parquet write of one micro-batch partition dir
-    (``.../batch_id=N``) across checkpoint-restart retries. Directory
-    existence alone does NOT prove a committed write: a batch that died
-    mid-write leaves the directory present with only ``_temporary``
-    content, and a bare ``mode('ignore')`` retry would then skip it,
-    silently losing the batch's rows (ADVICE r8). The skip condition is
-    therefore the ``_SUCCESS`` marker Spark's file commit protocol
-    writes last; an uncommitted leftover is removed and rewritten. On
-    an object store this maps to the same marker under the cloud
-    committers — the local-FS form here is the same discipline."""
-    import shutil
-
-    if os.path.exists(os.path.join(target, "_SUCCESS")):
-        return
-    if os.path.isdir(target):
-        shutil.rmtree(target, ignore_errors=True)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(target)
-
-
-# Spark-DDL scalar type → pyarrow type, for the empty bootstrap sinks
-# below. Only the types those sinks actually use — extend loudly.
-_EMPTY_SINK_TYPES = {
-    "long": "int64",
-    "bigint": "int64",
-    "int": "int32",
-    "double": "float64",
-    "string": "string",
-}
-
-
-def _write_empty_sink(target: str, ddl: str) -> None:
-    """Write the empty ``batch_id=-1`` bootstrap dir of an append-only
-    sink WITHOUT a Spark job. The bootstrap sinks exist only so the
-    first union read of the dir resolves a schema; committing an empty
-    DataFrame through a full Spark write was a measured 0.3-1.5 s of
-    driver-bound job/commit overhead PER SINK (4 sinks = the spans
-    stream paid ~1.6 s before its first batch). A driver-side pyarrow
-    footer with the same schema is byte-compatible for the reader and
-    costs ~1 ms. Same ``_SUCCESS`` discipline as
-    :func:`_write_batch_once` (the marker commits the dir)."""
-    import re
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    if os.path.exists(os.path.join(target, "_SUCCESS")):
-        return
-    if os.path.isdir(target):
-        import shutil
-
-        shutil.rmtree(target, ignore_errors=True)
-    fields = []
-    for part in re.split(r",(?![^<]*>)", ddl):
-        name, typ = part.strip().split(None, 1)
-        typ = typ.strip().lower()
-        m = re.fullmatch(r"array<(\w+)>", typ)
-        if m:
-            inner = _EMPTY_SINK_TYPES.get(m.group(1))
-            if inner is None:
-                raise ValueError(f"empty-sink type unsupported: {typ}")
-            pa_type = pa.list_(getattr(pa, inner)())
-        else:
-            scalar = _EMPTY_SINK_TYPES.get(typ)
-            if scalar is None:
-                raise ValueError(f"empty-sink type unsupported: {typ}")
-            pa_type = getattr(pa, scalar)()
-        fields.append(pa.field(name, pa_type))
-    schema = pa.schema(fields)
-    os.makedirs(target, exist_ok=True)
-    pq.write_table(
-        schema.empty_table(), os.path.join(target, "part-00000-empty.parquet")
-    )
-    with open(os.path.join(target, "_SUCCESS"), "w"):
-        pass
 
 
 def _union_by_tag(frames: list) -> DataFrame:
@@ -312,16 +254,12 @@ def _union_by_tag(frames: list) -> DataFrame:
     return out
 
 
-def _tag_read(
-    spark: SparkSession, root: str, tag: str, cols: list
-) -> DataFrame:
-    """Read back ONE logical sink from a tag-partitioned per-batch
-    union dir (:func:`_union_by_tag` layout ``batch_id=N/tag=X``).
-    The tag equality is a partition filter — pruned at the file index,
-    so each sink read touches only its own files."""
-    return (
-        spark.read.parquet(root).filter(F.col("tag") == tag).select(*cols)
-    )
+def _tagged(sink: DataFrame, tag: str, *cols: str) -> DataFrame:
+    """ONE logical sink of a tag-partitioned read-back
+    (:func:`_union_by_tag` layout ``batch_id=N/tag=X``). The tag
+    equality is a partition filter — pruned at the file index, so each
+    sink read touches only its own files."""
+    return sink.filter(F.col("tag") == tag).select(*cols)
 
 
 def _rocksdb_provider_available(spark: SparkSession) -> bool:
@@ -340,47 +278,201 @@ def _rocksdb_provider_available(spark: SparkSession) -> bool:
         return False
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFrame:
-    """File-source stream over the events parquet. In production the path
-    is a landing prefix that grows; availableNow processes the backlog in
-    bounded batches and exits.
+def _parquet_parts(src: str) -> list:
+    """The part files of a parquet table path. A multi-file table (the
+    production norm) is flattened part by part: the streaming source
+    does not recurse into non-partition subdirectories and would
+    silently read ZERO rows through a directory symlink (caught on the
+    100× layout in r05)."""
+    if not os.path.isdir(src):
+        return [src]
+    parts = [
+        os.path.join(src, p)
+        for p in sorted(os.listdir(src))
+        if not p.startswith(("_", ".")) and p.endswith(".parquet")
+    ]
+    if not parts:
+        raise ValueError(f"no parquet part files under {src}")
+    return parts
 
-    ``copies > 1`` stages the same file under N names — an at-least-once
+
+def _stage_symlinks(
+    spark: SparkSession,
+    src: str,
+    copies: int = 1,
+    max_files_per_trigger: int | None = None,
+) -> tuple:
+    """Stage ``src``'s part files as symlinks in a flat stage dir
+    (testdata is read-only) and return ``(stream, stage)``.
+    ``copies > 1`` stages every file under N names — an at-least-once
     delivery simulation (checkpoint replay / upstream re-send) where
-    every record arrives N times, for exercising streaming dedup."""
+    every record arrives N times. ``max_files_per_trigger`` bounds the
+    files per micro-batch, so a multi-file layout (the 10× scale layout:
+    32 part files) exercises real multi-batch merging rather than one
+    giant batch. The stream schema is the source's own."""
+    parts = _parquet_parts(src)
+    schema = spark.read.parquet(src).schema
+    stage = _tmpdir("stage")
+    for i in range(copies):
+        for j, p in enumerate(parts):
+            os.symlink(p, os.path.join(stage, f"part_{i}_{j:05d}.parquet"))
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(stage), stage
+
+
+def _stage_chunks(spark: SparkSession, n_chunks: int, write_chunk) -> tuple:
+    """Stage ``n_chunks`` files, chunk k written by
+    ``write_chunk(k, path)``, with ascending mtimes: crawl chunk k lands
+    after chunk k−1, the ordering a dated landing prefix provides for
+    free, so ``maxFilesPerTrigger=1`` + availableNow processes exactly
+    one chunk per micro-batch, oldest first. The stream schema is the
+    staged files' own. Returns ``(stream, stage)``."""
+    stage = _tmpdir("stage")
+    now = time.time() - 1000
+    for k in range(n_chunks):
+        path = os.path.join(stage, f"chunk_{k:03d}.parquet")
+        write_chunk(k, path)
+        os.utime(path, (now + 30 * k, now + 30 * k))
+    schema = spark.read.parquet(stage).schema
+    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+    return reader.parquet(stage), stage
+
+
+def _range_bounds(lo: int, hi: int, n_chunks: int) -> list:
+    return [lo + (hi - lo + 1) * k // n_chunks for k in range(n_chunks + 1)]
+
+
+def _stage_id_chunks(
+    spark: SparkSession,
+    src: str,
+    key: str,
+    n_chunks: int,
+    columns: list | None = None,
+    transform=None,
+) -> tuple:
+    """:func:`_stage_chunks` over ``key``-contiguous ranges of ``src``.
+    Never holds the full table in driver memory: the range is bounded
+    from the single ``key`` column, then each chunk is cut with a
+    pushed-down dataset filter (one chunk resident at a time) — the
+    arrival simulator obeys the same memory posture as the stream it
+    feeds. ``transform`` maps each chunk's Arrow table before the
+    write."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    dset = pads.dataset(src, format="parquet")
+    ids = dset.to_table(columns=[key]).column(key)
+    bounds = _range_bounds(pc.min(ids).as_py(), pc.max(ids).as_py(), n_chunks)
+    del ids
+
+    def write(k: int, path: str) -> None:
+        flt = (pads.field(key) >= bounds[k]) & (pads.field(key) < bounds[k + 1])
+        t = dset.to_table(columns=columns, filter=flt)
+        pq.write_table(t if transform is None else transform(t), path)
+
+    return _stage_chunks(spark, n_chunks, write)
+
+
+def _run_stream(spark: SparkSession, writer: DataStreamWriter, stage: str) -> None:
+    """Run one stream to completion: availableNow trigger, a fresh
+    checkpoint, partitions sized over ``stage`` by
+    :func:`scoped_state_partitions`. The checkpoint and the stage are
+    deleted afterwards, also on failure: an availableNow run's
+    checkpoint is dead weight once it exits, and nothing re-reads the
+    staged input."""
+    ckpt = _tmpdir("ckpt")
+    try:
+        with scoped_state_partitions(spark, input_path=stage):
+            q = (
+                writer.option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+    finally:
+        _rmtree_now(ckpt)
+        _rmtree_now(stage)
+
+
+def run_partials_stream(
+    spark: SparkSession,
+    stream: DataFrame,
+    stage: str,
+    partials,
+    ddl: str,
+    work_dir: str | None = None,
+    partition_by: list | None = None,
+) -> DataFrame:
+    """Run ``stream`` through a foreachBatch partials sink and return
+    the sink read back with the schema ``ddl`` plus ``batch_id int``.
+
+    ``partials(bdf, batch_id, sink)`` returns the micro-batch's partial
+    frame, or ``[(tag, frame), ...]`` landed through ONE write and ONE
+    ``_SUCCESS`` commit (:func:`_union_by_tag`; declare ``tag string``
+    in ``ddl`` and pass ``partition_by=["tag"]``). ``sink()`` reads
+    every committed batch so far, for streams whose batch N carries
+    state from batch N−1. ``partition_by`` columns are declared in
+    ``ddl`` with their types. The sink root is ``work_dir/sinks`` when
+    the caller pins one across calls (a re-run with a fresh checkpoint
+    then recomputes batch ids 0..N, finds every committed batch, skips
+    it and reads back identical rows), else a scratch dir kept until
+    exit because it backs the returned lazy frame."""
+    if work_dir is None:
+        root = _cleanup_at_exit(_tmpdir("sink"))
+    else:
+        root = os.path.join(work_dir, "sinks")
+        os.makedirs(root, exist_ok=True)
+    schema = f"{ddl}, batch_id int"
+
+    def sink() -> DataFrame:
+        return spark.read.schema(schema).parquet(root)
+
+    def batch(bdf: DataFrame, batch_id: int) -> None:
+        target = os.path.join(root, f"batch_id={batch_id}")
+        # Spark's file commit writes _SUCCESS last, so only the marker
+        # proves a committed batch: a write that died mid-way leaves the
+        # dir with just _temporary/, and skipping on the dir's existence
+        # would lose its rows. Skip a committed batch before any
+        # recompute; remove a torn one and rewrite it.
+        if os.path.exists(os.path.join(target, "_SUCCESS")):
+            return
+        out = partials(bdf, batch_id, sink)
+        if isinstance(out, list):
+            out = _union_by_tag(out)
+        shutil.rmtree(target, ignore_errors=True)
+        w = out.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(target)
+
+    _run_stream(spark, stream.writeStream.foreachBatch(batch), stage)
+    return sink()
+
+
+def _events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> tuple:
+    """:func:`_stage_symlinks` over the events table with ``ts``
+    normalized (see ``sources/tables.load_table``)."""
     from jhu_data_parser_spark.sources.tables import _normalize_nanos_ts
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")  # see sources/tables.load_table
-    src = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(src).schema
-    # The file source wants a FLAT directory of files (a growing landing
-    # prefix in production); testdata is read-only, so stage symlinks.
-    # `events.parquet` may itself be a directory of part files (any
-    # multi-file layout — the production norm): flatten its parts into
-    # the staging dir, since the streaming source does not recurse into
-    # non-partition subdirectories and would silently read ZERO rows
-    # through a directory symlink (caught on the 100× layout in r05).
-    stage = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_stream_src_"))
-    if os.path.isdir(src):
-        parts = [
-            p
-            for p in sorted(os.listdir(src))
-            if not p.startswith(("_", ".")) and p.endswith(".parquet")
-        ]
-        if not parts:
-            raise ValueError(f"no parquet part files under {src}")
-        for i in range(copies):
-            for j, p in enumerate(parts):
-                os.symlink(
-                    os.path.join(src, p),
-                    os.path.join(stage, f"events_{i}_{j}.parquet"),
-                )
-    else:
-        for i in range(copies):
-            os.symlink(src, os.path.join(stage, f"events_{i}.parquet"))
-    stream = spark.readStream.schema(schema).parquet(stage)
-    return _normalize_nanos_ts(stream)
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    stream, stage = _stage_symlinks(
+        spark, os.path.join(sf_dir, "events.parquet"), copies=copies
+    )
+    return _normalize_nanos_ts(stream), stage
+
+
+def read_events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFrame:
+    """File-source stream over the events parquet. In production the path
+    is a landing prefix that grows; availableNow processes the backlog in
+    bounded batches and exits. ``copies`` as in :func:`_stage_symlinks`.
+    The caller runs the stream, so its stage dir is removed at exit."""
+    stream, stage = _events_stream(spark, sf_dir, copies)
+    _cleanup_at_exit(stage)
+    return stream
 
 
 def daily_counts(events: DataFrame, watermark: str = "2 days") -> DataFrame:
@@ -399,24 +491,22 @@ def daily_counts(events: DataFrame, watermark: str = "2 days") -> DataFrame:
     )
 
 
+def _run_to_memory(
+    spark: SparkSession, df: DataFrame, stage: str, table: str, mode: str
+) -> DataFrame:
+    """:func:`_run_stream` into the memory sink ``table``; returns it."""
+    writer = df.writeStream.format("memory").queryName(table).outputMode(mode)
+    _run_stream(spark, writer, stage)
+    return spark.table(table)
+
+
 def run_daily_counts_availablenow(
     spark: SparkSession, sf_dir: str, table: str
 ) -> DataFrame:
     """Run the daily-counts stream to completion (availableNow) into a
     memory sink; returns the result as a DataFrame."""
-    agg = daily_counts(read_events_stream(spark, sf_dir))
-    with scoped_state_partitions(
-        spark, input_path=os.path.join(sf_dir, "events.parquet")
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table)
+    ev, stage = _events_stream(spark, sf_dir)
+    return _run_to_memory(spark, daily_counts(ev), stage, table, "complete")
 
 
 def run_dedup_stream(
@@ -441,10 +531,9 @@ def run_dedup_stream(
     off-heap/on-disk instead of in the 8g executor heap. Both changes
     are invisible to results; the provider conf is restored after the
     run so the (vanilla) session is left untouched."""
-    ev = read_events_stream(spark, sf_dir, copies=copies)
+    ev, stage = _events_stream(spark, sf_dir, copies=copies)
     deduped = ev.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
-    out_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_stream_dedup_out_"))
-    ckpt = tempfile.mkdtemp(prefix="jdps_stream_dedup_ckpt_")
+    out_dir = _cleanup_at_exit(_tmpdir("sink"))
     provider_key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(provider_key, None)
     use_rocksdb = _rocksdb_provider_available(spark)
@@ -455,28 +544,18 @@ def run_dedup_stream(
                 "org.apache.spark.sql.execution.streaming.state."
                 "RocksDBStateStoreProvider",
             )
-        with scoped_state_partitions(
-            spark,
-            input_path=os.path.join(sf_dir, "events.parquet"),
-            copies=copies,
-        ):
-            q = (
-                deduped.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        writer = (
+            deduped.writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append")
+        )
+        _run_stream(spark, writer, stage)
     finally:
         if use_rocksdb:
             if prev is None:
                 spark.conf.unset(provider_key)
             else:
                 spark.conf.set(provider_key, prev)
-        # the availableNow run is over: its checkpoint is dead weight
-        _rmtree_now(ckpt)
     return spark.read.schema(deduped.schema).parquet(out_dir)
 
 
@@ -498,25 +577,14 @@ def run_stream_sample(
     map-side per micro-batch; only the keyed aggregate carries state."""
     from jhu_data_parser_spark.functions.exprs import dec_sum
 
-    ev = read_events_stream(spark, sf_dir)
+    ev, stage = _events_stream(spark, sf_dir)
     draw = F.substring(F.md5(F.col("event_id").cast("string").cast("binary")), 1, 8)
     kept = ev.filter(draw < F.lit(threshold_hex))
     agg = kept.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_kept"),
         dec_sum("value", scale=4).alias("kept_value"),
     )
-    with scoped_state_partitions(
-        spark, input_path=os.path.join(sf_dir, "events.parquet")
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table)
+    return _run_to_memory(spark, agg, stage, table, "complete")
 
 
 def run_stream_static_enrich(
@@ -534,25 +602,14 @@ def run_stream_static_enrich(
     from jhu_data_parser_spark.functions.exprs import dec_sum
     from jhu_data_parser_spark.sources.tables import load_table
 
-    ev = read_events_stream(spark, sf_dir)
+    ev, stage = _events_stream(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     enriched = ev.join(F.broadcast(cust), ev.user_id == cust.c_custkey)
     agg = enriched.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events"),
         dec_sum("value", scale=4).alias("total_value"),
     )
-    with scoped_state_partitions(
-        spark, input_path=os.path.join(sf_dir, "events.parquet")
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table)
+    return _run_to_memory(spark, agg, stage, table, "complete")
 
 
 def run_stream_stream_join(
@@ -573,22 +630,21 @@ def run_stream_stream_join(
     processed to completion, so the result equals the batch range join
     — which is exactly what the catalog oracle checks.
 
-    The stream is sized by :func:`scoped_state_partitions` like every
-    other stream: a stream-stream join instantiates FOUR state stores
-    per shuffle partition per micro-batch, so on a small backlog the
-    partition count is the latency floor. Measured on a 4-CPU host
-    (local[4], best of six warm runs, identical oracle-gated results),
-    the former fixed 4 partitions vs the backlog rule (2): 2.88 →
-    2.09 s at sf0.01, 2.94 → 2.49 s at sf0.1, with forks per run down
-    from about 1,720 to 1,020. At 100 TB the same rule goes the other
-    way: more input splits size the state up to
-    ``defaultParallelism``. The result is read back AFTER the query
-    terminates, so the scoped value only affects the stream's own
-    shuffles.
+    Sized like every other stream: a stream-stream join instantiates
+    FOUR state stores per shuffle partition per micro-batch, so on a
+    small backlog the partition count is the latency floor. Measured on
+    a 4-CPU host (local[4], best of six warm runs, identical
+    oracle-gated results), the former fixed 4 partitions vs the backlog
+    rule (2): 2.88 → 2.09 s at sf0.01, 2.94 → 2.49 s at sf0.1, with
+    forks per run down from about 1,720 to 1,020. At 100 TB the same
+    rule goes the other way: more input splits size the state up to
+    ``defaultParallelism``.
     """
+    # ONE staged source feeds both sides: each micro-batch's rows are
+    # read once and split by event type
+    ev, stage = _events_stream(spark, sf_dir)
     clicks = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
+        ev.filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
             F.col("user_id").alias("c_user"),
@@ -597,8 +653,7 @@ def run_stream_stream_join(
         .withWatermark("click_ts", "1 hour")
     )
     purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
+        ev.filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id").alias("p_user"),
@@ -619,21 +674,13 @@ def run_stream_stream_join(
     # Row-per-match output is unbounded in the data (same memory-sink
     # hazard the 100× probe caught on the dedup stream) — land it as
     # files, the production sink shape.
-    out_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_stream_join_out_"))
-    ckpt = tempfile.mkdtemp(prefix="jdps_stream_join_ckpt_")
-    with scoped_state_partitions(
-        spark, input_path=os.path.join(sf_dir, "events.parquet")
-    ):
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _rmtree_now(ckpt)
+    out_dir = _cleanup_at_exit(_tmpdir("sink"))
+    writer = (
+        joined.writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append")
+    )
+    _run_stream(spark, writer, stage)
     return spark.read.schema(joined.schema).parquet(out_dir)
 
 
@@ -643,9 +690,10 @@ def write_json_partitioned_stream(
     """foreachBatch JSON sink partitioned by event_type — the streaming
     mirror of the reference's Hive-partitioned S3 layout
     (``src/parser.py:73-75``): each micro-batch appends part files under
-    ``event_type=<v>/`` directories."""
+    ``event_type=<v>/`` directories. Returns the RUNNING query, so a
+    default checkpoint is removed at exit, not after the run."""
     if checkpoint_dir is None:
-        checkpoint_dir = tempfile.mkdtemp(prefix="jdps_ckpt_")
+        checkpoint_dir = _cleanup_at_exit(_tmpdir("ckpt"))
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").partitionBy("event_type").json(out_dir)
@@ -669,11 +717,12 @@ def write_daily_refresh_stream(
     re-lands (checkpoint replay, upstream re-delivery of a corrected
     day file), the day is rewritten, never duplicated — the streaming
     version of the reference's daily rerun with the blast radius of one
-    partition instead of the whole lake."""
+    partition instead of the whole lake. Returns the RUNNING query; a
+    default checkpoint is removed at exit."""
     from jhu_data_parser_spark.sink import overwrite_partitions
 
     if checkpoint_dir is None:
-        checkpoint_dir = tempfile.mkdtemp(prefix="jdps_ckpt_daily_")
+        checkpoint_dir = _cleanup_at_exit(_tmpdir("ckpt"))
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         withday = batch_df.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
@@ -685,37 +734,6 @@ def write_daily_refresh_stream(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def read_documents_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-source stream over the documents parquet — the landing
-    prefix of an incoming crawl batch. Same flat-staging discipline as
-    :func:`read_events_stream` (the source does not recurse into
-    directory symlinks); no timestamp normalization needed.
-    ``max_files_per_trigger`` bounds the files per micro-batch so
-    multi-file layouts (the 10× scale layout: 32 part files) exercise
-    REAL multi-batch merging rather than one giant batch."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(src).schema
-    stage = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_stream_docs_"))
-    if os.path.isdir(src):
-        parts = [
-            p
-            for p in sorted(os.listdir(src))
-            if not p.startswith(("_", ".")) and p.endswith(".parquet")
-        ]
-        if not parts:
-            raise ValueError(f"no parquet part files under {src}")
-        for j, p in enumerate(parts):
-            os.symlink(os.path.join(src, p), os.path.join(stage, f"docs_{j}.parquet"))
-    else:
-        os.symlink(src, os.path.join(stage, "docs_0.parquet"))
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(stage)
 
 
 def run_incremental_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -779,15 +797,12 @@ def run_incremental_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks_old = to.select(
         F.col("doc_id").alias("id_old"), F.col("toks").alias("toks_o")
     )
-
-    out_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_inc_dedup_out_"))
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_inc_dedup_ckpt_"))
     jac = F.expr(
         "CAST(size(array_intersect(array_distinct(toks_n), array_distinct(toks_o)))"
         " AS DOUBLE) / size(array_distinct(concat(toks_n, toks_o)))"
     )
 
-    def _probe_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def partials(batch_df: DataFrame, batch_id: int, sink) -> DataFrame:
         if collapse:
             reps_n, mem_n = dd.exact_collapse(batch_df, adaptive=False)
         else:
@@ -829,33 +844,17 @@ def run_incremental_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .drop("rep")
                 .withColumnRenamed("member", "id_old")
             )
-        # Idempotent-by-batch_id sink: a retried micro-batch (checkpoint
-        # restart after a partial write) skips only a COMMITTED
-        # directory (_SUCCESS present); a torn partial write is removed
-        # and rewritten, so rows are neither duplicated nor lost.
-        _write_batch_once(
-            ver.select("id_new", "id_old", "jaccard"),
-            os.path.join(out_dir, f"batch_id={batch_id}"),
-        )
+        return ver.select("id_new", "id_old", "jaccard")
 
-    # Seed the sink with the empty schema so a zero-match run still
-    # reads back as a typed empty frame.
-    _write_empty_sink(
-        os.path.join(out_dir, "batch_id=-1"),
+    stream, stage = _stage_symlinks(spark, os.path.join(sf_dir, "documents.parquet"))
+    out = run_partials_stream(
+        spark,
+        stream.filter(F.col("doc_id") % 5 == 0),
+        stage,
+        partials,
         "id_new long, id_old long, jaccard double",
     )
-
-    q = (
-        read_documents_stream(spark, sf_dir)
-        .filter(F.col("doc_id") % 5 == 0)
-        .writeStream.foreachBatch(_probe_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # Drop the batch_id partition column the idempotent layout adds.
-    return spark.read.parquet(out_dir).select("id_new", "id_old", "jaccard")
+    return out.select("id_new", "id_old", "jaccard")
 
 
 def run_cms_heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -867,17 +866,9 @@ def run_cms_heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back SUM of per-batch cells IS the global sketch, so the
     stream's final (exact top-20, estimate) table is bit-identical to
     the batch twin's (``agg_cms_heavy_hitters``) — stream ≡ batch ≡
-    SQL, gated by the shared oracle.
-
-    Both sinks are idempotent-by-batch_id (``_write_batch_once`` into
-    batch_id=N subdirectories, _SUCCESS-gated — the incremental-dedup
-    discipline), so a checkpoint-restart retry can neither double-count
-    a batch nor skip a torn partial write."""
+    SQL, gated by the shared oracle. Token counts (``tc``) and sketch
+    cells (``sk``) land as two tags of one per-batch commit."""
     from jhu_data_parser_spark.plans.pipeline6 import _CMS_D, _CMS_W, _hex_long
-
-    tc_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_cms_tc_"))
-    sk_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_cms_sk_"))
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_cms_ckpt_"))
 
     bucket_structs = F.array(
         *[
@@ -897,45 +888,33 @@ def run_cms_heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def _batch(bdf: DataFrame, batch_id: int) -> None:
+    def partials(bdf: DataFrame, batch_id: int, sink) -> list:
         tok = bdf.select(
             F.explode(F.split(F.lower(F.col("text")), " ")).alias("token")
         ).filter(F.col("token") != "")
         tc = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-        _write_batch_once(tc, os.path.join(tc_dir, f"batch_id={batch_id}"))
         ex = tc.select("cnt", F.explode(bucket_structs).alias("jb")).select(
             "cnt", F.col("jb.j").alias("j"), F.col("jb.bucket").alias("bucket")
         )
-        _write_batch_once(
-            ex.groupBy("j", "bucket").agg(
-                F.sum("cnt").cast("long").alias("cell")
-            ),
-            os.path.join(sk_dir, f"batch_id={batch_id}"),
-        )
+        sk = ex.groupBy("j", "bucket").agg(F.sum("cnt").cast("long").alias("cell"))
+        return [("tc", tc), ("sk", sk)]
 
-    _write_empty_sink(
-        os.path.join(tc_dir, "batch_id=-1"), "token string, cnt long"
+    stream, stage = _stage_symlinks(spark, os.path.join(sf_dir, "documents.parquet"))
+    parts = run_partials_stream(
+        spark,
+        stream,
+        stage,
+        partials,
+        "token string, cnt long, j int, bucket long, cell long, tag string",
+        partition_by=["tag"],
     )
-    _write_empty_sink(
-        os.path.join(sk_dir, "batch_id=-1"), "j int, bucket long, cell long"
-    )
-
-    q = (
-        read_documents_stream(spark, sf_dir)
-        .writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
     tc_total = (
-        spark.read.parquet(tc_dir)
+        _tagged(parts, "tc", "token", "cnt")
         .groupBy("token")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
     sk_total = (
-        spark.read.parquet(sk_dir)
+        _tagged(parts, "sk", "j", "bucket", "cell")
         .groupBy("j", "bucket")
         .agg(F.sum("cell").cast("long").alias("cell"))
     )
@@ -952,52 +931,22 @@ def run_cms_heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the embeddings parquet — the landing
-    prefix of newly-embedded vectors awaiting indexing. Same flat
-    staging as :func:`read_documents_stream`; maxFilesPerTrigger=1 so
-    multi-file layouts arrive as genuinely separate micro-batches."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    schema = spark.read.parquet(src).schema
-    stage = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_stream_emb_"))
-    if os.path.isdir(src):
-        parts = [
-            p
-            for p in sorted(os.listdir(src))
-            if not p.startswith(("_", ".")) and p.endswith(".parquet")
-        ]
-        if not parts:
-            raise ValueError(f"no parquet part files under {src}")
-        for j, p in enumerate(parts):
-            os.symlink(os.path.join(src, p), os.path.join(stage, f"emb_{j}.parquet"))
-    else:
-        os.symlink(src, os.path.join(stage, "emb_0.parquet"))
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-
-
 def _ivfpq_append_segments(spark: SparkSession, sf_dir: str):
-    """The segment-building half of the append stream: freeze codebooks
-    on the base corpus, stream the arriving vectors into idempotent
-    cell-partitioned batch_id=N segments, and return
-    ``(index_union, coarse, books, emb)`` where index_union is the
-    LSM view base ∪ appended. Shared by the append-serve query and the
-    compaction query."""
     """Incremental ANN index maintenance as a REAL stream (r8 verdict
-    item 3): the base corpus (vec_id % 5 != 0) builds the IVF-PQ index
-    and FREEZES its coarse centroids and codebooks; newly-arriving
-    vectors (vec_id % 5 == 0, query row excluded) stream in as
-    micro-batches, get coarse-assigned and PQ-encoded under the frozen
-    codebooks by the same Arrow encoder the batch build uses, and
-    append as idempotent ``batch_id=N`` cell-partitioned segments —
-    the index twin of ``run_incremental_dedup_stream``. Serving reads
-    base ∪ appended segments (the LSM shape every real ANN service
-    uses for freshness) and runs the standard pruned ADC + re-rank, so
-    the result is IDENTICAL to a batch encode of the union under the
-    same codebooks — the shared oracle replays exactly that.
+    item 3), the segment-building half shared by the append-serve and
+    compaction queries. The base corpus (vec_id % 5 != 0) builds the
+    IVF-PQ index and FREEZES its coarse centroids and codebooks;
+    newly-arriving vectors (vec_id % 5 == 0, query row excluded) stream
+    in as micro-batches (one embeddings file each), get coarse-assigned
+    and PQ-encoded under the frozen codebooks by the same Arrow encoder
+    the batch build uses, and append as ``batch_id=N`` cell-partitioned
+    segments — the index twin of ``run_incremental_dedup_stream``.
+    Returns ``(index_union, coarse, books, emb)`` where index_union is
+    the LSM view base ∪ appended: serving reads it (the shape every
+    real ANN service uses for freshness) and runs the standard pruned
+    ADC + re-rank, so the result is IDENTICAL to a batch encode of the
+    union under the same codebooks — the shared oracle replays exactly
+    that.
 
     Scale posture: per-batch work is one Arrow encode pass + one
     partitioned write, no fits, no shuffles; the frozen-codebook
@@ -1027,49 +976,29 @@ def _ivfpq_append_segments(spark: SparkSession, sf_dir: str):
         cache_tag="embeddings_ivfpq_stream_base",
     )
 
-    out_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_ivfpq_app_out_"))
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_ivfpq_app_ckpt_"))
-
-    def _batch(bdf: DataFrame, batch_id: int) -> None:
-        enc = sim._ivfpq_encode_arrow(
+    def partials(bdf: DataFrame, batch_id: int, sink) -> DataFrame:
+        return sim._ivfpq_encode_arrow(
             bdf, coarse, books, _IP_SUB, False, "embedding", "vec_id"
         )
-        _write_batch_once(
-            enc,
-            os.path.join(out_dir, f"batch_id={batch_id}"),
-            partition_by=["cell"],
-        )
 
-    # Seed with the SAME cell-partitioned layout as the real batches:
-    # a flat empty seed next to partitioned batch dirs trips Spark's
-    # CONFLICTING_PARTITION_COLUMN_NAMES check on read-back.
-    _write_batch_once(
-        spark.createDataFrame(
-            [], "id bigint, cell bigint, "
-            + ", ".join(f"code{s} bigint" for s in range(_IP_M))
-        ),
-        os.path.join(out_dir, "batch_id=-1"),
+    cols = ["id", "cell"] + [f"code{s}" for s in range(_IP_M)]
+    stream, stage = _stage_symlinks(
+        spark, os.path.join(sf_dir, "embeddings.parquet"), max_files_per_trigger=1
+    )
+    appended = run_partials_stream(
+        spark,
+        stream.filter((F.col("vec_id") % 5 == 0) & (F.col("vec_id") != 0)),
+        stage,
+        partials,
+        ", ".join(f"{c} bigint" for c in cols),
         partition_by=["cell"],
     )
 
-    q = (
-        read_embeddings_stream(spark, sf_dir)
-        .filter((F.col("vec_id") % 5 == 0) & (F.col("vec_id") != 0))
-        .writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    def as_long(df: DataFrame) -> DataFrame:
+        return df.select(*[F.col(c).cast("long").alias(c) for c in cols])
 
-    cols = ["id", "cell"] + [f"code{s}" for s in range(_IP_M)]
-    base_index = spark.read.parquet(path).select(
-        *[F.col(c).cast("long").alias(c) for c in cols]
-    )
-    appended = spark.read.parquet(out_dir).select(
-        *[F.col(c).cast("long").alias(c) for c in cols]
-    )
-    return base_index.unionByName(appended), coarse, books, emb
+    index = as_long(spark.read.parquet(path)).unionByName(as_long(appended))
+    return index, coarse, books, emb
 
 
 def _ivfpq_serve_union(spark: SparkSession, index: DataFrame, coarse, books, emb):
@@ -1119,7 +1048,7 @@ def run_ivfpq_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     union — the shared oracle gates all three. The segment-count drop
     is pinned in pytest."""
     index, coarse, books, emb = _ivfpq_append_segments(spark, sf_dir)
-    compact_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_ivfpq_compact_"))
+    compact_dir = _cleanup_at_exit(_tmpdir("sink"))
     index.write.mode("overwrite").partitionBy("cell").parquet(compact_dir)
     compacted = spark.read.parquet(compact_dir).select(
         *[F.col(c).cast("long").alias(c) for c in index.columns]
@@ -1141,23 +1070,15 @@ def run_quantile_sketch_stream(
     (the batch query's leaves split by (lang, source), the stream's by
     (lang, batch): a DIFFERENT partition of the same rows, which is
     precisely the associativity claim). Engine-private KLL/GK sketches
-    could not share this oracle.
-
-    Same ``_write_batch_once`` idempotency discipline as the
-    CMS/Gopher partial sinks: ``batch_id=N`` dirs, _SUCCESS-gated, so
-    a checkpoint-restart retry can neither double-count nor keep a
-    torn write."""
+    could not share this oracle."""
     from jhu_data_parser_spark.plans.pipeline19 import (
         _QT_QUANTS,
         _QT_WIDTH,
         _sketch_quantiles,
     )
 
-    out_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_qsk_parts_"))
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_qsk_ckpt_"))
-
-    def _batch(bdf: DataFrame, batch_id: int) -> None:
-        part = (
+    def partials(bdf: DataFrame, batch_id: int, sink) -> DataFrame:
+        return (
             bdf.filter(F.length("text") > 0)
             .select(
                 "lang",
@@ -1168,27 +1089,17 @@ def run_quantile_sketch_stream(
             .groupBy("lang", "bucket")
             .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         )
-        _write_batch_once(part, os.path.join(out_dir, f"batch_id={batch_id}"))
 
-    _write_empty_sink(
-        os.path.join(out_dir, "batch_id=-1"), "lang string, bucket long, cnt long"
+    stream, stage = _stage_symlinks(
+        spark,
+        os.path.join(sf_dir, "documents.parquet"),
+        max_files_per_trigger=max_files_per_trigger,
     )
-
-    q = (
-        read_documents_stream(
-            spark, sf_dir, max_files_per_trigger=max_files_per_trigger
-        )
-        .writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    parts = run_partials_stream(
+        spark, stream, stage, partials, "lang string, bucket long, cnt long"
     )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(out_dir)
-        .groupBy("lang", "bucket")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+    merged = parts.groupBy("lang", "bucket").agg(
+        F.sum("cnt").cast("long").alias("cnt")
     )
     return _sketch_quantiles(merged, "lang", _QT_WIDTH, _QT_QUANTS, "n_docs")
 
@@ -1203,59 +1114,32 @@ def run_gopher_quality_stream(
     no state) and sinks its OWN per-lang partial counts; counts are
     mergeable by addition, so the read-back SUM is bit-identical to the
     batch report — stream ≡ batch ≡ SQL, gated by the shared oracle.
-
-    Same idempotency discipline as the CMS/incremental-dedup sinks:
-    ``_write_batch_once`` into batch_id=N subdirectories, _SUCCESS-
-    gated, so a checkpoint-restart retry can neither double-count a
-    batch nor keep a torn partial write. maxFilesPerTrigger=8 makes the
-    32-file scale layout run 4 real merges while single-file testdata
-    stays one batch."""
+    maxFilesPerTrigger=8 makes the 32-file scale layout run 4 real
+    merges while single-file testdata stays one batch."""
     from jhu_data_parser_spark.plans.pipeline8 import _gopher_flags, _gopher_rollup
 
-    out_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_gopher_parts_"))
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_gopher_ckpt_"))
-
-    def _batch(bdf: DataFrame, batch_id: int) -> None:
-        _write_batch_once(
-            _gopher_rollup(_gopher_flags(bdf)),
-            os.path.join(out_dir, f"batch_id={batch_id}"),
-        )
-
-    _write_batch_once(
-        spark.createDataFrame(
-            [],
-            "lang string, n_docs long, fail_short long, fail_meanlen long,"
-            " fail_symbols long, fail_alpha long, fail_stopwords long,"
-            " n_pass long",
-        ),
-        os.path.join(out_dir, "batch_id=-1"),
+    counts = (
+        "n_docs",
+        "fail_short",
+        "fail_meanlen",
+        "fail_symbols",
+        "fail_alpha",
+        "fail_stopwords",
+        "n_pass",
     )
-
-    q = (
-        read_documents_stream(
-            spark, sf_dir, max_files_per_trigger=max_files_per_trigger
-        )
-        .writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    stream, stage = _stage_symlinks(
+        spark,
+        os.path.join(sf_dir, "documents.parquet"),
+        max_files_per_trigger=max_files_per_trigger,
     )
-    q.awaitTermination()
-
-    parts = spark.read.parquet(out_dir)
-    sums = [
-        F.sum(c).cast("long").alias(c)
-        for c in (
-            "n_docs",
-            "fail_short",
-            "fail_meanlen",
-            "fail_symbols",
-            "fail_alpha",
-            "fail_stopwords",
-            "n_pass",
-        )
-    ]
-    return parts.groupBy("lang").agg(*sums)
+    parts = run_partials_stream(
+        spark,
+        stream,
+        stage,
+        lambda bdf, batch_id, sink: _gopher_rollup(_gopher_flags(bdf)),
+        "lang string, " + ", ".join(f"{c} long" for c in counts),
+    )
+    return parts.groupBy("lang").agg(*[F.sum(c).cast("long").alias(c) for c in counts])
 
 
 def run_wilson_value_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1265,14 +1149,10 @@ def run_wilson_value_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts (w = high-value events, value > 100); counts merge by
     addition, and the z=2 Wilson bound is applied once at read-back,
     so the result is bit-identical to the batch computation —
-    stream ≡ batch ≡ SQL under the shared oracle. Idempotent
-    _SUCCESS-gated batch_id sinks, same as the CMS/Gopher streams."""
+    stream ≡ batch ≡ SQL under the shared oracle."""
     from jhu_data_parser_spark.plans.pipeline15 import _WILSON_SQL
 
-    out_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_wilson_parts_"))
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_wilson_ckpt_"))
-
-    def _partials(bdf: DataFrame) -> DataFrame:
+    def partials(bdf: DataFrame, batch_id: int, sink) -> DataFrame:
         return bdf.groupBy("event_type").agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum(F.when(F.col("value") > 100.0, 1).otherwise(0))
@@ -1280,25 +1160,10 @@ def run_wilson_value_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("w"),
         )
 
-    def _batch(bdf: DataFrame, batch_id: int) -> None:
-        _write_batch_once(
-            _partials(bdf), os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-
-    _write_empty_sink(
-        os.path.join(out_dir, "batch_id=-1"), "event_type string, n long, w long"
+    stream, stage = _events_stream(spark, sf_dir)
+    parts = run_partials_stream(
+        spark, stream, stage, partials, "event_type string, n long, w long"
     )
-
-    q = (
-        read_events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    parts = spark.read.parquet(out_dir)
     merged = parts.groupBy("event_type").agg(
         F.sum("n").cast("long").alias("n"),
         F.sum("w").cast("long").alias("w"),
@@ -1311,41 +1176,22 @@ def run_holt_forecast_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of events_holt_forecast: each micro-batch sinks its own
     (event_type, day, n) daily-count partials; counts merge by
     addition, and the dyadic-exact Holt fold runs ONCE at read-back
-    over the merged integers, so stream ≡ batch ≡ SQL bit-identically.
-    Idempotent _SUCCESS-gated batch_id sinks (the CMS/Gopher/Wilson
-    discipline)."""
+    over the merged integers, so stream ≡ batch ≡ SQL bit-identically."""
     from jhu_data_parser_spark.plans.pipeline16 import (
         _daily_counts_for_holt,
         holt_forecast_from_daily,
     )
 
-    out_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_holt_parts_"))
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_holt_ckpt_"))
-
-    def _batch(bdf: DataFrame, batch_id: int) -> None:
-        _write_batch_once(
-            _daily_counts_for_holt(bdf),
-            os.path.join(out_dir, f"batch_id={batch_id}"),
-        )
-
-    _write_empty_sink(
-        os.path.join(out_dir, "batch_id=-1"),
+    stream, stage = _events_stream(spark, sf_dir)
+    parts = run_partials_stream(
+        spark,
+        stream,
+        stage,
+        lambda bdf, batch_id, sink: _daily_counts_for_holt(bdf),
         "event_type string, day long, n long",
     )
-
-    q = (
-        read_events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(out_dir)
-        .groupBy("event_type", "day")
-        .agg(F.sum("n").cast("long").alias("n"))
+    merged = parts.groupBy("event_type", "day").agg(
+        F.sum("n").cast("long").alias("n")
     )
     return holt_forecast_from_daily(merged)
 
@@ -1360,7 +1206,7 @@ def run_quality_lr_serve_stream(
     and sinks its per-language partial report. All aggregates merge by
     sum/min/max, so the read-back combine is bit-identical to the
     batch serve — stream ≡ batch ≡ SQL under text_quality_lr_serve's
-    oracle. Idempotent _SUCCESS-gated batch_id sinks throughout."""
+    oracle."""
     from jhu_data_parser_spark.operators.text import lr_fit_artifacts
     from jhu_data_parser_spark.plans.pipeline13 import _LR_STEPS, lr_lang_report
     from jhu_data_parser_spark.sources.tables import load_table
@@ -1368,36 +1214,18 @@ def run_quality_lr_serve_stream(
     d = load_table(spark, sf_dir, "documents")
     w, _stats, mean1000, _n = lr_fit_artifacts(d, steps=_LR_STEPS)
 
-    out_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_lrserve_parts_"))
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_lrserve_ckpt_"))
-
-    def _batch(bdf: DataFrame, batch_id: int) -> None:
-        _write_batch_once(
-            lr_lang_report(bdf, w, mean1000),
-            os.path.join(out_dir, f"batch_id={batch_id}"),
-        )
-
-    _write_batch_once(
-        spark.createDataFrame(
-            [],
-            "lang string, n_docs long, n_keep long, m_sum long, "
-            "m_min long, m_max long",
-        ),
-        os.path.join(out_dir, "batch_id=-1"),
+    stream, stage = _stage_symlinks(
+        spark,
+        os.path.join(sf_dir, "documents.parquet"),
+        max_files_per_trigger=max_files_per_trigger,
     )
-
-    q = (
-        read_documents_stream(
-            spark, sf_dir, max_files_per_trigger=max_files_per_trigger
-        )
-        .writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    parts = run_partials_stream(
+        spark,
+        stream,
+        stage,
+        lambda bdf, batch_id, sink: lr_lang_report(bdf, w, mean1000),
+        "lang string, n_docs long, n_keep long, m_sum long, m_min long, m_max long",
     )
-    q.awaitTermination()
-
-    parts = spark.read.parquet(out_dir)
     return parts.groupBy("lang").agg(
         F.sum("n_docs").cast("long").alias("n_docs"),
         F.sum("n_keep").cast("long").alias("n_keep"),
@@ -1417,7 +1245,7 @@ def run_video_neardup_probe_stream(
     head whose trailing-trimmed copy sits in the archive) decode their
     frame signatures per micro-batch and probe the STORED frame-key
     index of the old corpus with one equi-join; containment-verified
-    pairs append to idempotent _SUCCESS-gated batch_id sinks. The old
+    pairs append to the partials sink. The old
     index and its per-video frame counts are built once and lazily
     checkpointed; per-batch work is one Arrow decode + one narrow-key
     join — payloads never shuffle, never re-decode."""
@@ -1437,15 +1265,12 @@ def run_video_neardup_probe_stream(
         .agg((F.max("frame_no") + 1).cast("int").alias("nf_old"))
         .localCheckpoint(eager=False)
     )
-
-    out_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_vidprobe_out_"))
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_vidprobe_ckpt_"))
-
     idx = old_sig.select(
         F.col("doc_id").alias("id_old"), "width", "height", "frame_no", "fkey"
     )
+    cols = ["id_new", "id_old", "n_shared", "nf_new", "nf_old"]
 
-    def _batch(bdf: DataFrame, batch_id: int) -> None:
+    def partials(bdf: DataFrame, batch_id: int, sink) -> DataFrame:
         new_sig = mp4_frame_signature(attach_mp4_mirrored(bdf.select("doc_id")))
         new_nf = new_sig.groupBy("doc_id").agg(
             (F.max("frame_no") + 1).cast("int").alias("nf_new")
@@ -1462,38 +1287,28 @@ def run_video_neardup_probe_stream(
             .groupBy("id_new", "id_old")
             .agg(F.count(F.lit(1)).cast("int").alias("n_shared"))
         )
-        pairs = (
+        return (
             cand.join(
                 new_nf.select(F.col("doc_id").alias("id_new"), "nf_new"), "id_new"
             )
             .join(old_nf.select(F.col("doc_id").alias("id_old"), "nf_old"), "id_old")
             .filter(10 * F.col("n_shared") >= 9 * F.least("nf_new", "nf_old"))
-            .select("id_new", "id_old", "n_shared", "nf_new", "nf_old")
+            .select(*cols)
         )
-        _write_batch_once(pairs, os.path.join(out_dir, f"batch_id={batch_id}"))
 
-    _write_batch_once(
-        spark.createDataFrame(
-            [], "id_new long, id_old long, n_shared int, nf_new int, nf_old int"
-        ),
-        os.path.join(out_dir, "batch_id=-1"),
+    stream, stage = _stage_symlinks(
+        spark,
+        os.path.join(sf_dir, "documents.parquet"),
+        max_files_per_trigger=max_files_per_trigger,
     )
-
-    q = (
-        read_documents_stream(
-            spark, sf_dir, max_files_per_trigger=max_files_per_trigger
-        )
-        .filter(F.col("doc_id") % 5 == 0)
-        .writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    pairs = run_partials_stream(
+        spark,
+        stream.filter(F.col("doc_id") % 5 == 0),
+        stage,
+        partials,
+        "id_new long, id_old long, n_shared int, nf_new int, nf_old int",
     )
-    q.awaitTermination()
-
-    return spark.read.parquet(out_dir).select(
-        "id_new", "id_old", "n_shared", "nf_new", "nf_old"
-    )
+    return pairs.select(*cols)
 
 
 # --------------------------------------------------------------------------
@@ -1562,6 +1377,7 @@ def _pack_gate_survivors(bdf: DataFrame, bench: DataFrame) -> DataFrame:
     )
 
 
+
 def run_pack_batches_incremental_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -1571,63 +1387,36 @@ def run_pack_batches_incremental_stream(
     """Incremental packed batches from a REAL documents stream.
 
     The landing prefix is simulated by splitting the corpus into
-    ``n_chunks`` doc_id-CONTIGUOUS chunk files with ascending mtimes
-    (crawl chunk k lands after chunk k−1 — the ordering a dated landing
-    prefix provides for free); ``maxFilesPerTrigger=1`` + availableNow
-    then processes exactly one chunk per micro-batch, oldest first.
+    ``n_chunks`` doc_id-CONTIGUOUS chunk files, one micro-batch each,
+    oldest first (:func:`_stage_id_chunks`).
 
     Each micro-batch: frozen gates (:func:`_pack_gate_survivors`) →
     in-batch per-source running token sums (a PARTITIONED window) →
     shifted by the carried per-source token offset → pack_id under the
     same ``(cum − n_tok) DIV 512`` rule as the batch funnel. Cross-batch
-    state is the ≤|sources|-row offset table, persisted per batch_id
-    with the same ``_SUCCESS``-gated idempotent discipline as the
-    segments themselves (a restart retry recomputes batch N's state
-    from state N−1 + the batch's checkpointed file set — deterministic,
-    so neither sink can double-apply). Because chunks are contiguous
+    state is the ≤|sources|-row offset table, committed with the
+    segments of its batch (a restart retry recomputes batch N from
+    state N−1 + the batch's checkpointed file set — deterministic, so
+    nothing can double-apply). Because chunks are contiguous
     per source, concatenating the per-batch sequences in batch order
     IS the global per-source doc_id order — so the read-back union is
     bit-identical to the one-shot batch packing, which is exactly what
     the shared oracle replays (stream ≡ batch, the
     stream_ivfpq_index_append discipline applied to packing)."""
-    import time as _time
-
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-    import pyarrow.parquet as pq
-
     from pyspark.sql import Window
 
     src = os.path.join(sf_dir, "documents.parquet")
-    # --- stage the landing prefix (test scaffolding: in production the
-    # upstream crawler writes these files). Never hold the full
-    # documents table in driver memory: bound the id range from the
-    # single doc_id column, then cut each crawl chunk with a
-    # pushed-down dataset filter (one chunk resident at a time) — the
-    # same memory posture as the substring-span stream's stager below.
-    stage = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_pack_src_"))
-    dset = pads.dataset(src, format="parquet")
-    ids = dset.to_table(columns=["doc_id"]).column("doc_id")
-    lo, hi = pc.min(ids).as_py(), pc.max(ids).as_py()
-    del ids
-    bounds = [lo + (hi - lo + 1) * k // n_chunks for k in range(n_chunks + 1)]
-    now = _time.time() - 1000
-    for k in range(n_chunks):
-        flt = (pads.field("doc_id") >= bounds[k]) & (
-            pads.field("doc_id") < bounds[k + 1]
-        )
-        path = os.path.join(stage, f"chunk_{k:03d}.parquet")
-        pq.write_table(dset.to_table(filter=flt), path)
-        os.utime(path, (now + 30 * k, now + 30 * k))
-
+    stream, stage = _stage_id_chunks(spark, src, "doc_id", n_chunks)
     # frozen benchmark set (decontamination reference — static,
     # bounded). Lazily checkpointed: every micro-batch broadcasts it,
     # and without the cut each batch job re-ran the scan + distinct
     # exchange (3 batches = 3 rebuilds of an identical table) — the
-    # small-derived-table checkpoint rule.
-    docs = spark.read.parquet(src)
+    # small-derived-table checkpoint rule. The chunks' schema is the
+    # source's, so the read skips schema inference.
     bench = (
-        docs.filter(F.col("doc_id") % 17 == 0)
+        spark.read.schema(stream.schema)
+        .parquet(src)
+        .filter(F.col("doc_id") % 17 == 0)
         .select(
             F.expr(
                 "array_join(slice(split(lower(text), ' '), 1, 8), ' ')"
@@ -1637,32 +1426,9 @@ def run_pack_batches_incremental_stream(
         .localCheckpoint(eager=False)
     )
 
-    # ``work_dir`` pins the segment/state roots across calls (tests use
-    # it to prove _SUCCESS-gated idempotency: a re-run with a fresh
-    # checkpoint recomputes batch ids 0..N, finds every sink committed,
-    # skips all writes, and reads back identical rows).
-    if work_dir is None:
-        work_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_pack_wd_"))
-    # ONE tag-partitioned sink root (segments + state): one write job +
-    # one _SUCCESS commit per micro-batch instead of two (guide §1.2)
-    sink_root = os.path.join(work_dir, "sinks")
-    os.makedirs(sink_root, exist_ok=True)
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_pack_ckpt_"))
-
-    snap_schema = (
-        "source string, doc_id long, n_tok long, pack_id long, off_tok long"
-    )
-    _write_empty_sink(
-        os.path.join(sink_root, "batch_id=-1", "tag=bootstrap"), snap_schema
-    )
-
-    def _batch(bdf: DataFrame, batch_id: int) -> None:
-        tgt = os.path.join(sink_root, f"batch_id={batch_id}")
-        if os.path.exists(os.path.join(tgt, "_SUCCESS")):
-            return  # committed by a prior attempt: skip recompute too
+    def partials(bdf: DataFrame, batch_id: int, sink) -> list:
         prev = (
-            spark.read.schema(snap_schema + ", batch_id int, tag string")
-            .parquet(sink_root)
+            sink()
             .filter(
                 (F.col("batch_id") == batch_id - 1)
                 & (F.col("tag") == "state")
@@ -1713,33 +1479,24 @@ def run_pack_batches_incremental_stream(
                 .alias("off_tok"),
             )
         )
-        _write_batch_once(
-            _union_by_tag([("seg", seg), ("state", new_state)]),
-            tgt,
-            partition_by=["tag"],
-        )
+        return [("seg", seg), ("state", new_state)]
 
-    schema = docs.schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    sink = run_partials_stream(
+        spark,
+        stream,
+        stage,
+        partials,
+        "source string, doc_id long, n_tok long, pack_id long, off_tok long,"
+        " tag string",
+        work_dir=work_dir,
+        partition_by=["tag"],
     )
-    q.awaitTermination()
-
-    segs = _tag_read(
-        spark, sink_root, "seg", ["source", "doc_id", "n_tok", "pack_id"]
-    )
+    segs = _tagged(sink, "seg", "source", "doc_id", "n_tok", "pack_id")
     return segs.groupBy("source", "pack_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_tok").cast("long").alias("n_tokens"),
         F.sum("doc_id").cast("long").alias("id_checksum"),
     )
-
 
 # --------------------------------------------------------------------------
 # Incremental dialogue threading: role-run turn merging as a REAL
@@ -1795,19 +1552,19 @@ def _run_dialog_threads_incremental_impl(
     row, and the in-batch prefix sums are offset by the carried
     session/turn counters — so (session_no, turn_no) are globally
     identical to the one-shot batch computation. Per-turn PARTIALS
-    (count, checksum, min/max micros) land in _SUCCESS-gated
-    ``batch_id=N`` segments; next-state = previous state full-outer
-    merged with the batch's per-user tail, written under the same
-    idempotent discipline (restart retries recompute batch N's outputs
-    from state N−1 + the checkpointed file set). Read-back merges
+    (count, checksum, min/max micros) and next-state (previous state
+    full-outer merged with the batch's per-user tail) commit together
+    per batch; a restart retry recomputes batch N from state N−1 +
+    the checkpointed file set. Read-back merges
     partials by the turn key and derives the within-session turn index
     — bit-identical to ``dialog_thread_turns``'s batch output, which
     is exactly what the shared oracle replays."""
-    import time as _time
-
     import duckdb
 
     from pyspark.sql import Window
+
+    from jhu_data_parser_spark.plans.pipeline18 import _GAP_SEC, dialog_role_expr
+    from jhu_data_parser_spark.sources.tables import _normalize_nanos_ts
 
     src = os.path.join(sf_dir, "events.parquet")
     glob_src = os.path.join(src, "*.parquet") if os.path.isdir(src) else src
@@ -1820,53 +1577,25 @@ def _run_dialog_threads_incremental_impl(
     lo, hi = con.execute(
         f"SELECT MIN(epoch_us(ts)), MAX(epoch_us(ts)) FROM read_parquet('{glob_src}')"
     ).fetchone()
-    bounds = [lo + (hi - lo + 1) * k // n_chunks for k in range(n_chunks)] + [
-        hi + 1
-    ]
-    stage = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_dlg_src_"))
-    now = _time.time() - 1000
-    for k in range(n_chunks):
-        path = os.path.join(stage, f"chunk_{k:03d}.parquet")
+    bounds = _range_bounds(lo, hi, n_chunks)
+
+    # The ts-range chunks are cut by a DuckDB COPY, not by
+    # _stage_id_chunks' pyarrow filter: COPY always writes
+    # timestamp[us], so the staged schema (which the stream reads) is
+    # uniform even when the source parquet is TIMESTAMP(NANOS).
+    def write_chunk(k: int, path: str) -> None:
         con.execute(
             f"COPY (SELECT * FROM read_parquet('{glob_src}')"
             f" WHERE epoch_us(ts) >= {bounds[k]} AND epoch_us(ts) < {bounds[k + 1]})"
             f" TO '{path}' (FORMAT PARQUET)"
         )
-        os.utime(path, (now + 30 * k, now + 30 * k))
 
-    if work_dir is None:
-        work_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_dlg_wd_"))
-    # ONE tag-partitioned sink root (segments + state): one write job +
-    # one _SUCCESS commit per micro-batch instead of two (guide §1.2),
-    # and the bootstrap is a ~1 ms driver-side pyarrow footer instead
-    # of two full Spark empty-write jobs (0.3–1.5 s each).
-    sink_root = os.path.join(work_dir, "sinks")
-    os.makedirs(sink_root, exist_ok=True)
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_dlg_ckpt_"))
-
-    snap_schema = (
-        "user_id long, session_no long, turn_no long, role string,"
-        " n_events long, evt_checksum long, min_us long, max_us long,"
-        " st_sec double, st_role string, st_sess long, st_turn long"
-    )
-    _write_empty_sink(
-        os.path.join(sink_root, "batch_id=-1", "tag=bootstrap"), snap_schema
-    )
-
-    # shared constants — the stream must never drift from the batch
-    # plan / oracle it is hash-gated against (lazy import: plans.*
-    # modules import this module's helpers inside functions only)
-    from jhu_data_parser_spark.plans.pipeline18 import _GAP_SEC, dialog_role_expr
-
+    stream, stage = _stage_chunks(spark, n_chunks, write_chunk)
     gap = _GAP_SEC
 
-    def _batch(bdf: DataFrame, batch_id: int) -> None:
-        tgt = os.path.join(sink_root, f"batch_id={batch_id}")
-        if os.path.exists(os.path.join(tgt, "_SUCCESS")):
-            return  # committed by a prior attempt: skip recompute too
+    def partials(bdf: DataFrame, batch_id: int, sink) -> list:
         prev = (
-            spark.read.schema(snap_schema + ", batch_id int, tag string")
-            .parquet(sink_root)
+            sink()
             .filter(
                 (F.col("batch_id") == batch_id - 1)
                 & (F.col("tag") == "state")
@@ -1935,51 +1664,32 @@ def _run_dialog_threads_incremental_impl(
         )
         # one union-by-tag write: seg and new_state both derive from
         # the same user_id window exchange, so the merged job shares
-        # that shuffle across both branches and commits atomically —
-        # seg and state can no longer diverge across a crash (the
-        # previous two-commit form could leave segments committed with
-        # state missing; both sinks are deterministic functions of
-        # (checkpointed batch file set, committed state N−1), so the
-        # single recompute-and-commit is restart-exact)
-        _write_batch_once(
-            _union_by_tag([("seg", seg), ("state", new_state)]),
-            tgt,
-            partition_by=["tag"],
-        )
+        # that shuffle across both branches and commits atomically
+        return [("seg", seg), ("state", new_state)]
 
-    # schema from the STAGED chunks, not the source: DuckDB's COPY
-    # always writes timestamp[us], so the chunk schema is uniform even
-    # when the source parquet was TIMESTAMP(NANOS).
-    schema = spark.read.parquet(stage).schema
-    from jhu_data_parser_spark.sources.tables import _normalize_nanos_ts
-
-    q = (
-        _normalize_nanos_ts(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        .writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    segs = _tag_read(
+    sink = run_partials_stream(
         spark,
-        sink_root,
+        _normalize_nanos_ts(stream),
+        stage,
+        partials,
+        "user_id long, session_no long, turn_no long, role string,"
+        " n_events long, evt_checksum long, min_us long, max_us long,"
+        " st_sec double, st_role string, st_sess long, st_turn long,"
+        " tag string",
+        work_dir=work_dir,
+        partition_by=["tag"],
+    )
+    segs = _tagged(
+        sink,
         "seg",
-        [
-            "user_id",
-            "session_no",
-            "turn_no",
-            "role",
-            "n_events",
-            "evt_checksum",
-            "min_us",
-            "max_us",
-        ],
+        "user_id",
+        "session_no",
+        "turn_no",
+        "role",
+        "n_events",
+        "evt_checksum",
+        "min_us",
+        "max_us",
     )
     t = segs.groupBy("user_id", "session_no", "turn_no", "role").agg(
         F.sum("n_events").cast("long").alias("n_events"),
@@ -2022,8 +1732,7 @@ def run_substring_spans_incremental_stream(
     is by construction — plus the in-batch new×new self-join).
     Everything is append-only: no carried offsets, no full-outer state
     merges — the postings/seeds/state unions across batch dirs ARE the
-    state, written with the same ``_SUCCESS``-gated idempotent
-    discipline as every incremental sink.
+    state.
 
     The read-back applies the CORPUS-GLOBAL doc-frequency gate
     (a gram's final df is unknowable mid-stream: a boilerplate gram
@@ -2042,86 +1751,25 @@ def run_substring_spans_incremental_stream(
     operator — so the batch query's oracle gates the stream
     bit-for-bit (stream ≡ batch ≡ SQL, the incremental-index
     discipline applied to positional gram postings)."""
-    import time as _time
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
     from pyspark.sql import Window
 
+    from jhu_data_parser_spark.operators.dedup import positional_gram_postings
     from jhu_data_parser_spark.plans.pipeline19 import (
         _SUB_DF_CAP,
         _SUB_K,
         _SUB_MIN_SPAN,
     )
 
-    import pyarrow.dataset as pads
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    stage = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_subs_src_"))
-    # Never hold the full documents table in driver memory: bound the
-    # id range from the single doc_id column, then cut each crawl
-    # chunk with a pushed-down dataset filter (one chunk resident at
-    # a time) — the arrival simulator obeys the same memory posture
-    # as the stream it feeds.
-    dset = pads.dataset(src, format="parquet")
-    ids = dset.to_table(columns=["doc_id"]).column("doc_id")
-    lo, hi = pc.min(ids).as_py(), pc.max(ids).as_py()
-    del ids
-    bounds = [lo + (hi - lo + 1) * k // n_chunks for k in range(n_chunks + 1)]
-    now = _time.time() - 1000
-    for k in range(n_chunks):
-        flt = (pads.field("doc_id") >= bounds[k]) & (
-            pads.field("doc_id") < bounds[k + 1]
-        )
-        path = os.path.join(stage, f"chunk_{k:03d}.parquet")
-        pq.write_table(dset.to_table(filter=flt), path)
-        os.utime(path, (now + 30 * k, now + 30 * k))
-
-    if work_dir is None:
-        work_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_subs_wd_"))
-    # ONE tag-partitioned sink root for all four logical sinks
-    # (index / seeds / state / dfs): each micro-batch commits
-    # ``batch_id=N/tag=*`` through a single write job + _SUCCESS
-    # (guide §1.2 — was 4 commits per batch; the commit protocol is
-    # sequential driver work, so 4 sinks ≈ 4× the floor).
-    sink_root = os.path.join(work_dir, "sinks")
-    os.makedirs(sink_root, exist_ok=True)
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_subs_ckpt_"))
-
-    # one superset-schema bootstrap file so the first batch's union
-    # reads resolve a schema (tag 'bootstrap' matches no sink filter)
-    _write_empty_sink(
-        os.path.join(sink_root, "batch_id=-1", "tag=bootstrap"),
-        "doc long, pos long, gh long, xh long, mh string,"
-        " df_part long, doc_a long, doc_b long, pos_a long, pos_b long",
+    stream, stage = _stage_id_chunks(
+        spark, os.path.join(sf_dir, "documents.parquet"), "doc_id", n_chunks
     )
 
-    from jhu_data_parser_spark.operators.dedup import (
-        positional_gram_postings,
-    )
-
-    # explicit read schema for the per-batch snapshot reads: at ~15
-    # driver-bound micro-jobs per sub-second micro-batch, even the
-    # one-task parquet footer probe that schema inference runs per
-    # spark.read.parquet() is a measurable slice of the batch floor
-    snap_schema = (
-        "doc long, pos long, gh long, xh long, mh string,"
-        " df_part long, doc_a long, doc_b long, pos_a long, pos_b long,"
-        " batch_id int, tag string"
-    )
-
-    def _batch(bdf: DataFrame, batch_id: int) -> None:
-        tgt = os.path.join(sink_root, f"batch_id={batch_id}")
-        if os.path.exists(os.path.join(tgt, "_SUCCESS")):
-            return  # committed by a prior attempt: skip recompute too
+    def partials(bdf: DataFrame, batch_id: int, sink) -> list:
         # ONE snapshot read serves all three state look-backs (state /
         # index / dfs) — one file listing, no schema-probe job
-        snap = spark.read.schema(snap_schema).parquet(sink_root)
-        prev_state = snap.filter(F.col("tag") == "state").select("xh", "mh")
-        old_index = snap.filter(F.col("tag") == "index").select(
-            "doc", "pos", "gh"
-        )
+        snap = sink()
+        prev_state = _tagged(snap, "state", "xh", "mh")
+        old_index = _tagged(snap, "index", "doc", "pos", "gh")
         reps = (
             bdf.filter(F.length("text") > 0)
             .groupBy(F.xxhash64("text").alias("xh"), F.md5("text").alias("mh"))
@@ -2213,31 +1861,28 @@ def run_substring_spans_incremental_stream(
         # No lazy checkpoints: every union branch sits on top of the
         # reps exchange, so the expensive stages are shared shuffle
         # reads; the narrow re-tokenization per branch is ~1.6k docs.
-        _write_batch_once(
-            _union_by_tag(
-                [
-                    ("seeds", seeds_new),
-                    ("index", postings),
-                    ("state", fresh.select("xh", "mh")),
-                    ("dfs", dfs_part),
-                ]
-            ),
-            tgt,
-            partition_by=["tag"],
-        )
+        return [
+            ("seeds", seeds_new),
+            ("index", postings),
+            ("state", fresh.select("xh", "mh")),
+            ("dfs", dfs_part),
+        ]
 
-    schema = spark.read.parquet(stage).schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    # ONE tag-partitioned sink root for all four logical sinks (index /
+    # seeds / state / dfs): one write job + _SUCCESS per micro-batch
+    # (guide §1.2 — was 4 commits per batch; the commit protocol is
+    # sequential driver work, so 4 sinks ≈ 4× the floor).
+    sink = run_partials_stream(
+        spark,
+        stream,
+        stage,
+        partials,
+        "doc long, pos long, gh long, xh long, mh string,"
+        " df_part long, doc_a long, doc_b long, pos_a long, pos_b long,"
+        " tag string",
+        work_dir=work_dir,
+        partition_by=["tag"],
     )
-    q.awaitTermination()
-
     # corpus-global df gate from the per-batch df PARTIALS: batches
     # hold disjoint collapsed docs (a rep is processed in exactly one
     # batch), so a gram's final doc frequency is exactly the SUM of
@@ -2248,7 +1893,7 @@ def run_substring_spans_incremental_stream(
     # the read-back (guide §1.2): the index only ever APPENDS at
     # scale, while the df table stays one row per (batch, gram).
     mg = (
-        _tag_read(spark, sink_root, "dfs", ["gh", "df_part"])
+        _tagged(sink, "dfs", "gh", "df_part")
         .groupBy("gh")
         .agg(F.sum("df_part").alias("df_docs"))
         .filter(
@@ -2257,12 +1902,7 @@ def run_substring_spans_incremental_stream(
         .select("gh")
     )
     seeds = (
-        _tag_read(
-            spark,
-            sink_root,
-            "seeds",
-            ["doc_a", "doc_b", "pos_a", "pos_b", "gh"],
-        )
+        _tagged(sink, "seeds", "doc_a", "doc_b", "pos_a", "pos_b", "gh")
         .join(mg, "gh")
         .select(
             "doc_a",
@@ -2306,23 +1946,15 @@ def run_graph_index_append_stream(
     are strictly smaller by construction, in-batch earlier ids come
     from the same union — for banded candidates with ``dst < src``,
     (c) ranks by exact integer squared-L2 and appends each new node's
-    top-m edges to an append-only ``batch_id=N`` dir with the
-    ``_SUCCESS``-gated idempotent discipline. A node's edge list is a
+    top-m edges to an append-only ``batch_id=N`` dir. A node's edge list is a
     function of earlier ids only (the NSW insertion rule), so the
     unioned appends reproduce the batch graph bit-for-bit — the
     incremental-index discipline applied to graph-ANN maintenance
     (how a deployment keeps an NSW index fresh without rebuilds).
-    Staging streams per-chunk with pushed-down dataset filters (never
-    the whole table in driver memory). Two chunks: the second batch's
+    Two chunks: the second batch's
     old×new probe is the cross-batch property under test; more chunks
     only repeat it while each micro-batch pays a ~3 s scheduling
     floor (same decomposition as the stream-stream join's)."""
-    import time as _time
-
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-    import pyarrow.parquet as pq
-
     from jhu_data_parser_spark.operators import similarity as sim
     from jhu_data_parser_spark.plans.pipeline20 import (
         _G_DIM,
@@ -2332,53 +1964,17 @@ def run_graph_index_append_stream(
         _GA_M,
     )
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    stage = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_gidx_src_"))
-    dset = pads.dataset(src, format="parquet")
-    ids = dset.to_table(columns=["vec_id"]).column("vec_id")
-    lo, hi = pc.min(ids).as_py(), pc.max(ids).as_py()
-    del ids
-    bounds = [lo + (hi - lo + 1) * k // n_chunks for k in range(n_chunks + 1)]
-    now = _time.time() - 1000
-    for k in range(n_chunks):
-        flt = (pads.field("vec_id") >= bounds[k]) & (
-            pads.field("vec_id") < bounds[k + 1]
-        )
-        path = os.path.join(stage, f"chunk_{k:03d}.parquet")
-        pq.write_table(dset.to_table(filter=flt), path)
-        os.utime(path, (now + 30 * k, now + 30 * k))
-
-    if work_dir is None:
-        work_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_gidx_wd_"))
-    # ONE tag-partitioned sink root (postings + edges): one write job +
-    # one _SUCCESS commit per micro-batch instead of two (guide §1.2)
-    sink_root = os.path.join(work_dir, "sinks")
-    os.makedirs(sink_root, exist_ok=True)
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_gidx_ckpt_"))
-
-    band_cols = ", ".join(f"b{b} long" for b in range(_GA_BANDS))
-    snap_schema = (
-        f"id long, {band_cols}, q array<bigint>,"
-        " src long, dst long, rank int"
-    )
-    _write_empty_sink(
-        os.path.join(sink_root, "batch_id=-1", "tag=bootstrap"), snap_schema
+    bands = [f"b{b}" for b in range(_GA_BANDS)]
+    stream, stage = _stage_id_chunks(
+        spark, os.path.join(sf_dir, "embeddings.parquet"), "vec_id", n_chunks
     )
 
-    def _batch(bdf: DataFrame, batch_id: int) -> None:
-        tgt = os.path.join(sink_root, f"batch_id={batch_id}")
-        if os.path.exists(os.path.join(tgt, "_SUCCESS")):
-            return  # committed by a prior attempt: skip recompute too
+    def partials(bdf: DataFrame, batch_id: int, sink) -> list:
         corpus = bdf.filter(F.col("vec_id") != 0)
         new_posts = sim.banded_posts(
             corpus, _G_DIM, _G_PLANES, _GA_BANDS, _G_SEED
         ).localCheckpoint(eager=False)
-        old_posts = (
-            spark.read.schema(snap_schema + ", batch_id int, tag string")
-            .parquet(sink_root)
-            .filter(F.col("tag") == "posts")
-            .select("id", "q", *[f"b{b}" for b in range(_GA_BANDS)])
-        )
+        old_posts = _tagged(sink(), "posts", "id", "q", *bands)
         # the ONE shared ranking implementation (sim.banded_topm) — the
         # stream cannot silently diverge from the batch graph's metric
         # or tie-break: the new posts rank against old and new posts
@@ -2398,33 +1994,53 @@ def run_graph_index_append_stream(
         # the posts branch both read the checkpoint cache, then both
         # sinks commit atomically through one job + one _SUCCESS.
         new_posts.write.format("noop").mode("overwrite").save()
-        _write_batch_once(
-            _union_by_tag(
-                [
-                    ("posts", new_posts.coalesce(1)),
-                    ("edges", edges.coalesce(1)),
-                ]
-            ),
-            tgt,
-            partition_by=["tag"],
-        )
+        return [("posts", new_posts.coalesce(1)), ("edges", edges.coalesce(1))]
 
-    schema = spark.read.parquet(stage).schema
-    # each micro-batch's window/joins move a few thousand rows: the
-    # staged chunks' split count sizes their shuffles, not the
-    # session's batch-query default
-    with scoped_state_partitions(spark, input_path=stage):
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _tag_read(spark, sink_root, "edges", ["src", "dst", "rank"])
+    # ONE tag-partitioned sink root (postings + edges): one write job +
+    # one _SUCCESS commit per micro-batch instead of two (guide §1.2)
+    sink = run_partials_stream(
+        spark,
+        stream,
+        stage,
+        partials,
+        ", ".join(f"{b} long" for b in ["id"] + bands)
+        + ", q array<bigint>, src long, dst long, rank int, tag string",
+        work_dir=work_dir,
+        partition_by=["tag"],
+    )
+    return _tagged(sink, "edges", "src", "dst", "rank")
+
+
+def _lake_event_chunks(spark: SparkSession, sf_dir: str, n_chunks: int) -> tuple:
+    """Event-id chunks for the lakehouse append streams. Timestamps
+    travel as epoch-micros ``ts_us`` BIGINTs (cast at staging) so no
+    engine TZ semantics are in play."""
+    import pyarrow.compute as pc
+
+    def ts_to_us(t):
+        i = t.schema.get_field_index("ts")
+        return t.set_column(i, "ts_us", pc.cast(t.column("ts"), "int64"))
+
+    return _stage_id_chunks(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        "event_id",
+        n_chunks,
+        columns=["event_id", "ts", "event_type", "value"],
+        transform=ts_to_us,
+    )
+
+
+def _lake_daily_counts(snap: DataFrame) -> DataFrame:
+    return snap.groupBy(
+        F.expr("ts_us DIV 86400000000").cast("long").alias("day"),
+        "event_type",
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n_events"),
+        F.sum(F.expr("CAST(ROUND(value * 10000) AS BIGINT)"))
+        .cast("long")
+        .alias("value_fp"),
+    )
 
 
 def run_delta_append_stream(
@@ -2447,71 +2063,22 @@ def run_delta_append_stream(
     BIGINTs (computed at staging) so no engine TZ semantics are in
     play. Idempotence is additionally pytest-pinned by re-running the
     stream over the same table."""
-    import time as _time
-
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-    import pyarrow.parquet as pq
-
     from jhu_data_parser_spark.sources.delta_lite import (
         read_delta,
         write_delta,
     )
 
-    src = os.path.join(sf_dir, "events.parquet")
-    stage = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_delta_src_"))
-    dset = pads.dataset(src, format="parquet")
-    ids = dset.to_table(columns=["event_id"]).column("event_id")
-    lo, hi = pc.min(ids).as_py(), pc.max(ids).as_py()
-    del ids
-    bounds = [lo + (hi - lo + 1) * k // n_chunks for k in range(n_chunks + 1)]
-    now = _time.time() - 1000
-    for k in range(n_chunks):
-        flt = (pads.field("event_id") >= bounds[k]) & (
-            pads.field("event_id") < bounds[k + 1]
-        )
-        t = dset.to_table(
-            columns=["event_id", "ts", "event_type", "value"], filter=flt
-        )
-        t = t.set_column(
-            t.schema.get_field_index("ts"),
-            "ts_us",
-            pc.cast(t.column("ts"), "int64"),
-        )
-        path = os.path.join(stage, f"chunk_{k:03d}.parquet")
-        pq.write_table(t, path)
-        os.utime(path, (now + 30 * k, now + 30 * k))
-
+    stream, stage = _lake_event_chunks(spark, sf_dir, n_chunks)
     if table is None:
-        table = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_delta_tbl_"))
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_delta_ckpt_"))
+        table = _cleanup_at_exit(_tmpdir("sink"))
 
     def _batch(bdf: DataFrame, batch_id: int) -> None:
         write_delta(
             bdf, table, mode="append", txn=("jdps-events-stream", batch_id)
         )
 
-    schema = spark.read.parquet(stage).schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    snap = read_delta(spark, table)
-    return snap.groupBy(
-        F.expr("ts_us DIV 86400000000").cast("long").alias("day"),
-        "event_type",
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(F.expr("CAST(ROUND(value * 10000) AS BIGINT)"))
-        .cast("long")
-        .alias("value_fp"),
-    )
+    _run_stream(spark, stream.writeStream.foreachBatch(_batch), stage)
+    return _lake_daily_counts(read_delta(spark, table))
 
 
 def run_delta_cdf_merge_stream(
@@ -2546,9 +2113,9 @@ def run_delta_cdf_merge_stream(
     )
     from jhu_data_parser_spark.sources.tables import load_table
 
-    src_table = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_cdfsrc_"))
+    src_table = _cleanup_at_exit(_tmpdir("sink"))
     if results is None:
-        results = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_cdfres_"))
+        results = _cleanup_at_exit(_tmpdir("sink"))
     base = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice", "l_quantity"
     )
@@ -2612,7 +2179,6 @@ def run_delta_cdf_merge_stream(
         consume(v)
     return read_delta(spark, results)
 
-
 def run_iceberg_append_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -2633,12 +2199,6 @@ def run_iceberg_append_stream(
     double-committed. Idempotence additionally pytest-pinned by
     re-running the stream over the same table (snapshot count must
     not grow)."""
-    import time as _time
-
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-    import pyarrow.parquet as pq
-
     from jhu_data_parser_spark.sources.iceberg_lite import (
         iceberg_snapshots,
         read_iceberg,
@@ -2646,34 +2206,10 @@ def run_iceberg_append_stream(
         write_iceberg,
     )
 
-    src = os.path.join(sf_dir, "events.parquet")
-    stage = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_ice_src_"))
-    dset = pads.dataset(src, format="parquet")
-    ids = dset.to_table(columns=["event_id"]).column("event_id")
-    lo, hi = pc.min(ids).as_py(), pc.max(ids).as_py()
-    del ids
-    bounds = [lo + (hi - lo + 1) * k // n_chunks for k in range(n_chunks + 1)]
-    now = _time.time() - 1000
-    for k in range(n_chunks):
-        flt = (pads.field("event_id") >= bounds[k]) & (
-            pads.field("event_id") < bounds[k + 1]
-        )
-        t = dset.to_table(
-            columns=["event_id", "ts", "event_type", "value"], filter=flt
-        )
-        t = t.set_column(
-            t.schema.get_field_index("ts"),
-            "ts_us",
-            pc.cast(t.column("ts"), "int64"),
-        )
-        path = os.path.join(stage, f"chunk_{k:03d}.parquet")
-        pq.write_table(t, path)
-        os.utime(path, (now + 30 * k, now + 30 * k))
-
+    stream, stage = _lake_event_chunks(spark, sf_dir, n_chunks)
     if table is None:
-        table = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_ice_tbl_"))
+        table = _cleanup_at_exit(_tmpdir("sink"))
         os.rmdir(table)  # write_iceberg creates the tree itself
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_ice_ckpt_"))
 
     def _batch(bdf: DataFrame, batch_id: int) -> None:
         try:
@@ -2703,27 +2239,8 @@ def run_iceberg_append_stream(
             table_props={"jdps-batch-high-water": str(batch_id)},
         )
 
-    schema = spark.read.parquet(stage).schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    snap = read_iceberg(spark, table)
-    return snap.groupBy(
-        F.expr("ts_us DIV 86400000000").cast("long").alias("day"),
-        "event_type",
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(F.expr("CAST(ROUND(value * 10000) AS BIGINT)"))
-        .cast("long")
-        .alias("value_fp"),
-    )
+    _run_stream(spark, stream.writeStream.foreachBatch(_batch), stage)
+    return _lake_daily_counts(read_iceberg(spark, table))
 
 
 def run_cusum_drift_stream(
@@ -2738,15 +2255,11 @@ def run_cusum_drift_stream(
     carrying the chart state; merging the mergeable HALF (the counts)
     and folding at read time is exactly how a monitoring service
     recomputes its charts each tick — and makes N micro-batches ≡ one
-    batch pass, gated by the shared oracle. Same ``_write_batch_once``
-    idempotency discipline as the CMS/Gopher/quantile partial sinks."""
+    batch pass, gated by the shared oracle."""
     from jhu_data_parser_spark.plans.pipeline19 import _cusum_finish
 
-    out_dir = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_cusum_parts_"))
-    ckpt = _cleanup_at_exit(tempfile.mkdtemp(prefix="jdps_cusum_ckpt_"))
-
-    def _batch(bdf: DataFrame, batch_id: int) -> None:
-        part = (
+    def partials(bdf: DataFrame, batch_id: int, sink) -> DataFrame:
+        return (
             bdf.select(
                 "event_type",
                 F.expr("unix_micros(ts) DIV 86400000000").alias("day"),
@@ -2754,25 +2267,12 @@ def run_cusum_drift_stream(
             .groupBy("event_type", "day")
             .agg(F.count(F.lit(1)).cast("long").alias("x"))
         )
-        _write_batch_once(part, os.path.join(out_dir, f"batch_id={batch_id}"))
 
-    _write_empty_sink(
-        os.path.join(out_dir, "batch_id=-1"),
-        "event_type string, day long, x long",
+    stream, stage = _events_stream(spark, sf_dir)
+    parts = run_partials_stream(
+        spark, stream, stage, partials, "event_type string, day long, x long"
     )
-
-    q = (
-        read_events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(out_dir)
-        .groupBy("event_type", "day")
-        .agg(F.sum("x").cast("long").alias("x"))
+    merged = parts.groupBy("event_type", "day").agg(
+        F.sum("x").cast("long").alias("x")
     )
     return _cusum_finish(merged)

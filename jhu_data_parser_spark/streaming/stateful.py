@@ -23,7 +23,6 @@ small row per active user, independent of history length.
 from __future__ import annotations
 
 import os
-import tempfile
 from typing import Any, Iterator
 
 import pandas as pd
@@ -39,6 +38,13 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from jhu_data_parser_spark.streaming.jobs import (
+    _parquet_parts,
+    _run_to_memory,
+    _stage_symlinks,
+    _tmpdir,
+)
+
 __all__ = [
     "sessionize_stateful",
     "run_sessionize_stateful",
@@ -46,7 +52,6 @@ __all__ = [
     "run_sessionize_tws",
     "make_session_processor",
     "has_tws_runtime",
-    "read_events_stream_with_sentinel",
     "run_builtin_session_windows",
 ]
 
@@ -228,52 +233,43 @@ def sessionize_stateful(
     )
 
 
-def read_events_stream_with_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _sentinel_events_stream(spark: SparkSession, sf_dir: str) -> tuple:
     """File stream over the events table plus a far-future sentinel
-    micro-batch — the finite-stream flush.
+    micro-batch — the finite-stream flush. Returns ``(stream, stage)``.
 
     A finite file stream ends with event-time state (open sessions,
     unfinalized windows) still held — the watermark never passes its
     horizon. Production streams flush with a punctuation record; this
     staging does the same: a sentinel event (reserved ``user_id`` −1,
-    ts 2100-01-01) lands in a second file, ``maxFilesPerTrigger=1``
-    makes it a second micro-batch, the watermark jumps past every open
-    horizon, and the engine's final no-data batch finalizes the state.
-    Consumers drop ``user_id < 0`` rows from results."""
+    ts 2100-01-01) lands in its own file after the data files, the
+    watermark jumps past every open horizon, and the engine's final
+    no-data batch finalizes the state. Consumers drop ``user_id < 0``
+    rows from results."""
     import glob
     import shutil
 
-    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
 
     from jhu_data_parser_spark.sources.tables import _normalize_nanos_ts
-
-    from pyspark.sql.types import LongType
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")  # see sources/tables.load_table
     src = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(src)  # ts arrives un-normalized (nanos long or NTZ)
-    schema = raw.schema
 
-    # Flatten multi-file layouts (events.parquet may be a DIRECTORY of
-    # part files): the streaming source does not recurse into
-    # non-partition subdirectories and would silently read zero rows
-    # through a directory symlink (same fix as jobs.read_events_stream).
-    # The sentinel still lands LAST: the file source orders micro-
-    # batches by target mtime, and the sentinel is written now.
-    stage = tempfile.mkdtemp(prefix="jdps_sessionize_src_")
-    if os.path.isdir(src):
-        parts = [
-            p
-            for p in sorted(os.listdir(src))
-            if not p.startswith(("_", ".")) and p.endswith(".parquet")
-        ]
-        if not parts:
-            raise ValueError(f"no parquet part files under {src}")
-        for j, p in enumerate(parts):
-            os.symlink(os.path.join(src, p), os.path.join(stage, f"batch-0-{j}.parquet"))
-    else:
-        os.symlink(src, os.path.join(stage, "batch-0.parquet"))
+    # All DATA files land in the first micro-batch, the sentinel in the
+    # second (file-source batches follow target mtime; the sentinel is
+    # written after the data files are staged). A 1-file-per-trigger
+    # split would be WRONG on multi-file layouts: the staged parts
+    # overlap in event time, so after the first batch the watermark
+    # would discard every later file's rows as late data — correct
+    # streaming semantics, wrong harness (a real landing prefix arrives
+    # in time order).
+    stream, stage = _stage_symlinks(
+        spark, src, max_files_per_trigger=len(_parquet_parts(src))
+    )
+    # ts arrives un-normalized (nanos long or NTZ) in both frames.
+    schema = stream.schema
+    raw = spark.read.schema(schema).parquet(src)
 
     # The sentinel file must match the RAW schema byte-for-byte (the
     # stream reads both files with one schema), so build 2100-01-01 in
@@ -293,27 +289,16 @@ def read_events_stream_with_sentinel(spark: SparkSession, sf_dir: str) -> DataFr
             for c in raw.columns
         ]
     )
-    tmp_out = tempfile.mkdtemp(prefix="jdps_sessionize_sentinel_")
+    tmp_out = _tmpdir("sentinel")
     sentinel.coalesce(1).write.mode("overwrite").parquet(tmp_out)
     part = glob.glob(os.path.join(tmp_out, "part-*.parquet"))[0]
-    shutil.move(part, os.path.join(stage, "batch-1.parquet"))
-
-    # All DATA files land in the first micro-batch, the sentinel in the
-    # second (file-source batches follow target mtime; the sentinel was
-    # written just now). A 1-file-per-trigger split would be WRONG on
-    # multi-file layouts: the staged parts overlap in event time, so
-    # after the first batch the watermark would discard every later
-    # file's rows as late data — correct streaming semantics, wrong
-    # harness (a real landing prefix arrives in time order).
-    n_data_files = len(
-        [p for p in os.listdir(stage) if not p.startswith("batch-1")]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max(n_data_files, 1)))
-        .parquet(stage)
-    )
-    return _normalize_nanos_ts(stream)
+    # No ``.parquet`` suffix: the file source still reads it, but the
+    # backlog estimate that sizes the run (jobs._input_split_count,
+    # which counts ``*.parquet`` parts) leaves the punctuation record
+    # out — one more file would add a state partition per operator.
+    shutil.move(part, os.path.join(stage, "sentinel"))
+    shutil.rmtree(tmp_out, ignore_errors=True)
+    return _normalize_nanos_ts(stream), stage
 
 
 def run_sessionize_stateful(
@@ -324,28 +309,16 @@ def run_sessionize_stateful(
 ) -> DataFrame:
     """Run the stateful sessionizer over the events table to completion
     and return every session (tail sessions flushed by the sentinel —
-    see :func:`read_events_stream_with_sentinel`)."""
-    from jhu_data_parser_spark.streaming.jobs import scoped_state_partitions
-
-    sessions = sessionize_stateful(
-        read_events_stream_with_sentinel(spark, sf_dir), gap_minutes
-    )
+    see :func:`_sentinel_events_stream`)."""
+    ev, stage = _sentinel_events_stream(spark, sf_dir)
     # The sentinel filter goes AFTER the sink: inside the streaming plan
     # Catalyst would push it below the watermark node, the sentinel row
     # would never reach the event-time tracker, and the tail state would
     # never flush.
-    with scoped_state_partitions(
-        spark, input_path=os.path.join(sf_dir, "events.parquet")
-    ):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table).filter("user_id >= 0")
+    sessions = sessionize_stateful(ev, gap_minutes)
+    return _run_to_memory(spark, sessions, stage, table, "append").filter(
+        "user_id >= 0"
+    )
 
 
 def run_builtin_session_windows(
@@ -359,11 +332,7 @@ def run_builtin_session_windows(
     batch finalizes the tail). The declarative twin of
     :func:`sessionize_stateful`; both must agree with the batch
     lag/cumsum sessionization."""
-    from pyspark.sql import functions as F
-
-    from jhu_data_parser_spark.streaming.jobs import scoped_state_partitions
-
-    ev = read_events_stream_with_sentinel(spark, sf_dir)
+    ev, stage = _sentinel_events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "0 seconds")
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
@@ -371,18 +340,9 @@ def run_builtin_session_windows(
         .select("user_id", F.col("w.start").alias("session_start"), "n_events")
     )
     # Sentinel filter after the sink — see run_sessionize_stateful.
-    with scoped_state_partitions(
-        spark, input_path=os.path.join(sf_dir, "events.parquet")
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table).filter("user_id >= 0")
+    return _run_to_memory(spark, agg, stage, table, "append").filter(
+        "user_id >= 0"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -541,19 +501,12 @@ def run_sessionize_tws(
 ) -> DataFrame:
     """Run the transformWithState sessionizer to completion over the
     events table (sentinel-flushed — see
-    :func:`read_events_stream_with_sentinel`)."""
-    sessions = sessionize_tws(
-        read_events_stream_with_sentinel(spark, sf_dir), gap_minutes
+    :func:`_sentinel_events_stream`)."""
+    ev, stage = _sentinel_events_stream(spark, sf_dir)
+    sessions = sessionize_tws(ev, gap_minutes)
+    return _run_to_memory(spark, sessions, stage, table, "append").filter(
+        "user_id >= 0"
     )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table).filter("user_id >= 0")
 
 
 # ---------------------------------------------------------------------------
@@ -668,29 +621,15 @@ def run_kmv_daily_stream(
 ) -> DataFrame:
     """Run the streaming KMV sketch over the events table to completion
     (sentinel flush closes every day) and return the per-day estimates."""
-    from pyspark.sql import functions as F
-
-    ev = read_events_stream_with_sentinel(spark, sf_dir).select(
+    src, stage = _sentinel_events_stream(spark, sf_dir)
+    ev = src.select(
         "ts",
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
         F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 12), 16, 10)
         .cast("long")
         .alias("h"),
     )
-    from jhu_data_parser_spark.streaming.jobs import scoped_state_partitions
-
-    out = kmv_daily_stateful(ev, k)
-    with scoped_state_partitions(
-        spark, input_path=os.path.join(sf_dir, "events.parquet")
-    ):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # Sentinel filter after the sink (see run_sessionize_stateful): the
     # sentinel's 2100-01-01 day key must reach the event-time tracker.
-    return spark.table(table).filter("day < '2100-01-01'")
+    out = _run_to_memory(spark, kmv_daily_stateful(ev, k), stage, table, "append")
+    return out.filter("day < '2100-01-01'")

@@ -252,19 +252,22 @@ def test_bucket_topm_merge_equals_brute_force(rows, m, earlier_only, block):
 
 def test_knn_graph_rejects_non_integral_ids(spark):
     """A float or string id column fails before any job runs, naming the
-    column and its type."""
+    column and its type — in the graph builds and the IVF-PQ paths."""
     corpus = _corpus(spark)
     dag = spark.sparkContext._jsc.sc().dagScheduler()
+    graph = dict(dim=64, m=4, n_planes=4, bands=2)
     for cast in ("double", "string"):
         bad = corpus.withColumn("vec_id", F.col("vec_id").cast(cast))
-        for build in (
-            sim.knn_graph_banded,
-            sim.knn_graph_arrival,
-            sim.knn_graph_index,
+        for build, kwargs in (
+            (sim.knn_graph_banded, graph),
+            (sim.knn_graph_arrival, graph),
+            (sim.knn_graph_index, graph),
+            (sim.ivfpq_build_index, {}),
+            (sim.topk_ivfpq_indexed_multi, {"queries": [(0, [0] * 64)]}),
         ):
             jobs = dag.numTotalJobs()
             with pytest.raises(ValueError, match=f"'vec_id'.*{cast}"):
-                build(bad, dim=64, m=4, n_planes=4, bands=2)
+                build(bad, **kwargs)
             assert dag.numTotalJobs() == jobs, build.__name__
 
 

@@ -9,6 +9,7 @@ import itertools
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 _ids = itertools.count()
@@ -468,26 +469,34 @@ def test_stream_dedup_falls_back_without_rocksdb(spark, sf_dir, monkeypatch):
     assert "RocksDB" not in (spark.conf.get(key, "") or "")
 
 
-def test_ivfpq_index_append_stream_segments(spark):
+def test_ivfpq_index_append_stream_segments(spark, sf_dir):
     """The streamed index-append job writes committed (_SUCCESS-gated)
     batch_id segments partitioned by cell and serves the standard
     top-10 from base ∪ appended (oracle parity proves the equivalence
-    to a batch-encoded union; this pins the segment layout)."""
+    to a batch-encoded union; this pins the segment layout). The
+    segment dirs come from the returned index frame's own input files,
+    so dirs left by other calls or processes never count."""
     import glob
     import os
+    import re
+    from urllib.parse import urlparse
 
     from jhu_data_parser_spark.streaming import jobs
 
-    out = jobs.run_ivfpq_index_append_stream(spark, "/root/testdata/sf0.001")
-    rows = out.collect()
+    index, coarse, books, emb = jobs._ivfpq_append_segments(spark, sf_dir)
+    rows = jobs._ivfpq_serve_union(spark, index, coarse, books, emb).collect()
     assert len(rows) == 10
-    seg_dirs = sorted(glob.glob("/tmp/jdps_ivfpq_app_out_*/batch_id=*"))
+    seg_dirs = sorted(
+        {
+            re.sub(r"/cell=[^/]*/[^/]*$", "", urlparse(f).path)
+            for f in index.inputFiles()
+            if "/batch_id=" in f
+        }
+    )
     assert seg_dirs, "no appended segments written"
     for d in seg_dirs:
         assert os.path.exists(os.path.join(d, "_SUCCESS")), d
-    # real (non-seed) segments carry cell partitions
-    real = [d for d in seg_dirs if not d.endswith("batch_id=-1")]
-    assert real and any(glob.glob(os.path.join(real[0], "cell=*")))
+        assert glob.glob(os.path.join(d, "cell=*")), d
 
 
 def test_gopher_stream_multibatch_equals_batch(spark, tmp_path):
@@ -680,8 +689,6 @@ def test_stream_state_partitions_adaptive(spark, sf_dir, tmp_path, monkeypatch):
     many_splits = _input_split_count(spark, str(many))
     assert many_splits > splits
     assert stream_state_partitions(spark, str(many)) == min(many_splits, par)
-    # copies multiplies the backlog the same way.
-    assert stream_state_partitions(spark, events, copies=64) == min(many_splits, par)
     # Valid env override wins in both directions.
     monkeypatch.setenv(_STATE_PARTITIONS_ENV, "3")
     assert stream_state_partitions(spark, str(many)) == 3
@@ -714,3 +721,153 @@ def test_stream_results_invariant_to_state_partitions(spark, sf_dir, monkeypatch
             got.append(_row_multiset([tuple(r) for r in df.collect()], df.columns))
         assert got[0] == got[1], name
         assert sum(got[0].values()) > 0, name
+
+
+def _stage_tiny_source(spark, stage_dir, n_files):
+    """``n_files`` parquet files of four ``(id, key)`` rows each, with
+    ascending mtimes, read one file per micro-batch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(stage_dir)
+    for k in range(n_files):
+        ids = list(range(4 * k, 4 * k + 4))
+        path = os.path.join(stage_dir, f"chunk_{k}.parquet")
+        pq.write_table(
+            pa.table({"id": ids, "key": [f"k{i % 2}" for i in ids]}), path
+        )
+        os.utime(path, (1_700_000_000 + k, 1_700_000_000 + k))
+    stream = (
+        spark.readStream.schema("id long, key string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage_dir)
+    )
+    return stream, stage_dir
+
+
+def _plain_partials(bdf, batch_id, sink):
+    return bdf.groupBy("key").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("id").cast("long").alias("s"),
+    )
+
+
+def _carried_partials(bdf, batch_id, sink):
+    """Tagged partials with state carried from batch N−1: each batch's
+    per-key count plus the running total it brings the key to."""
+    prev = (
+        sink()
+        .filter((F.col("batch_id") == batch_id - 1) & (F.col("tag") == "state"))
+        .select("key", F.col("total").alias("prev"))
+    )
+    seg = (
+        bdf.groupBy("key")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        .join(prev, "key", "full")
+        .select(
+            "key",
+            F.coalesce("n", F.lit(0)).cast("long").alias("n"),
+            (F.coalesce("n", F.lit(0)) + F.coalesce("prev", F.lit(0)))
+            .cast("long")
+            .alias("total"),
+        )
+    )
+    return [("seg", seg.select("key", "n")), ("state", seg.select("key", "total"))]
+
+
+_PARTIALS_LAYOUTS = {
+    "plain": (_plain_partials, "key string, n long, s long", None),
+    "tagged": (
+        _carried_partials,
+        "key string, n long, total long, tag string",
+        ["tag"],
+    ),
+}
+
+
+@pytest.mark.parametrize("crash", ["delete_last", "torn_last", "zero_batches"])
+@pytest.mark.parametrize("layout", sorted(_PARTIALS_LAYOUTS))
+def test_partials_stream_crash_restart(spark, tmp_path, layout, crash):
+    """``run_partials_stream`` restarts exactly once per batch. After a
+    crash that lost the last committed ``batch_id=N`` (deleted, or torn
+    to a ``_temporary/`` leftover with no ``_SUCCESS``), a re-run over
+    the same work dir with a fresh checkpoint recomputes only batch N:
+    same rows, earlier ``_SUCCESS`` markers untouched. A run that sees
+    no batch at all reads back a typed empty frame."""
+    import shutil
+
+    from jhu_data_parser_spark.streaming.jobs import run_partials_stream
+
+    partials, ddl, partition_by = _PARTIALS_LAYOUTS[layout]
+    n_files = 0 if crash == "zero_batches" else 3
+    wd = str(tmp_path / "wd")
+    sinks = os.path.join(wd, "sinks")
+
+    def run(i):
+        stream, stage = _stage_tiny_source(
+            spark, str(tmp_path / f"stage{i}"), n_files
+        )
+        out = run_partials_stream(
+            spark, stream, stage, partials, ddl, work_dir=wd,
+            partition_by=partition_by,
+        )
+        assert not os.path.exists(stage)  # the runner removed its stage
+        return out, sorted((tuple(r) for r in out.collect()), key=repr)
+
+    first, rows = run(0)
+    if crash == "zero_batches":
+        assert rows == []
+        assert first.schema.simpleString() == spark.createDataFrame(
+            [], f"{ddl}, batch_id int"
+        ).schema.simpleString()
+        assert run(1)[1] == []
+        return
+
+    assert sorted(os.listdir(sinks)) == [f"batch_id={b}" for b in range(3)]
+    markers = [os.path.join(sinks, f"batch_id={b}", "_SUCCESS") for b in range(3)]
+    if layout == "plain":
+        merged = first.groupBy("key").agg(F.sum("n"), F.sum("s"))
+        assert sorted(tuple(r) for r in merged.collect()) == [
+            ("k0", 6, 30),
+            ("k1", 6, 36),
+        ]
+    else:
+        final = first.filter("tag = 'state' AND batch_id = 2")
+        assert {r.key: r.total for r in final.collect()} == {"k0": 6, "k1": 6}
+    last = os.path.join(sinks, "batch_id=2")
+    shutil.rmtree(last)
+    if crash == "torn_last":
+        os.makedirs(os.path.join(last, "_temporary", "0"))
+        with open(os.path.join(last, "_temporary", "0", "part-0.parquet"), "w") as f:
+            f.write("torn")
+    mtimes = [os.path.getmtime(m) for m in markers[:2]]
+
+    assert run(1)[1] == rows
+    assert [os.path.getmtime(m) for m in markers[:2]] == mtimes
+    assert os.path.exists(markers[2])
+    assert not os.path.exists(os.path.join(last, "_temporary"))
+
+
+def test_stream_runs_leave_no_stage_or_checkpoint_dirs(spark, sf_dir):
+    """Three consecutive stream calls — a partials sink, a file sink
+    with state and a sentinel-flushed memory sink — leave no
+    checkpoint, stage or sentinel dir behind."""
+    import tempfile
+
+    from jhu_data_parser_spark import plans
+
+    def scratch():
+        return set(
+            glob.glob(os.path.join(tempfile.gettempdir(), "*_ckpt_*"))
+            + glob.glob(os.path.join(tempfile.gettempdir(), "jdps_stage_*"))
+            + glob.glob(os.path.join(tempfile.gettempdir(), "jdps_sentinel_*"))
+        )
+
+    before = scratch()
+    for name in (
+        "stream_wilson_value_rate",
+        "stream_dedup_watermark",
+        "stream_stateful_sessions",
+    ):
+        assert plans.QUERIES[name](spark, sf_dir).count() > 0, name
+    assert scratch() - before == set()
