@@ -92,17 +92,17 @@ def main() -> None:
     for name in HEADLINE:
         materialize(queries[name](spark, warm_dir))
     # Cold-cache funnel samples (r12 verdict item 5): the two funnel
-    # flagships serve steady state from the per-(session, fingerprint)
-    # frames cache, so min-of-N alone no longer measures the funnel
-    # BUILD. Take one timed sample per flagship with the cache cleared
-    # (sf0.001 warm-up above already JIT-warmed the plan shapes, so
+    # flagships serve steady state from the artifact cache
+    # (jhu_data_parser_spark/cache.py), so min-of-N alone no longer
+    # measures the funnel BUILD. Take one timed sample per flagship with
+    # every kind cleared, loaded tables included (sf0.001 warm-up above already JIT-warmed the plan shapes, so
     # this reads build cost, not JVM cold start) and report it as
     # "cold" so the build cost stays machine-readable round-over-round.
-    from jhu_data_parser_spark.plans import pipeline13
+    from jhu_data_parser_spark import cache
 
     cold: dict[str, float] = {}
     for name in ("pipeline_curation_funnel_v3", "pipeline_pack_batches"):
-        pipeline13._V3_FRAMES_CACHE.clear()
+        cache.clear()
         t0 = time.perf_counter()
         materialize(queries[name](spark, sf_dir))
         cold[name] = round(time.perf_counter() - t0, 3)

@@ -37,6 +37,7 @@ extension surface, not reference parity.
 
 from __future__ import annotations
 
+import functools
 import struct
 
 __all__ = [
@@ -814,22 +815,16 @@ def _jpeg_canonical_codes(bits, vals):
     return out
 
 
-_JPEG_DECODE_MAP_CACHE: dict = {}
-
-
-def _jpeg_decode_map(bits, vals):
+@functools.lru_cache(maxsize=64)
+def _jpeg_decode_map(bits: tuple, vals: tuple):
     """``(dict, lut)`` decoder pair: the (length, code) → symbol dict
     for the tail-of-stream bit walk, plus a 65536-entry lookup table
     mapping any 16-bit peek window to (symbol, code_length) — one list
     index instead of up to 16 dict probes per symbol (the entropy
     decode is the Python codec's hot loop: measured ~3× end-to-end on
-    the decode queries). Cached per (bits, vals) — real streams reuse
-    the four Annex K tables, so the 64Ki build cost is paid once per
-    process, not per image."""
-    key = (tuple(bits), tuple(vals))
-    hit = _JPEG_DECODE_MAP_CACHE.get(key)
-    if hit is not None:
-        return hit
+    the decode queries). Memoized per (bits, vals) tuples — real
+    streams reuse the four Annex K tables, so the 64Ki build cost is
+    paid once per process, not per image."""
     enc = _jpeg_canonical_codes(bits, vals)
     dmap = {(length, code): sym for sym, (code, length) in enc.items()}
     lut = [(0, 0)] * 65536
@@ -837,10 +832,7 @@ def _jpeg_decode_map(bits, vals):
         base = code << (16 - length)
         for suffix in range(1 << (16 - length)):
             lut[base + suffix] = (sym, length)
-    out = (dmap, lut)
-    if len(_JPEG_DECODE_MAP_CACHE) < 64:
-        _JPEG_DECODE_MAP_CACHE[key] = out
-    return out
+    return dmap, lut
 
 
 def _dct_matrix():

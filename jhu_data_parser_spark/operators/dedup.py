@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from jhu_data_parser_spark import cache
 from jhu_data_parser_spark.operators.text import fingerprint
 
 __all__ = [
@@ -302,51 +303,12 @@ def jaccard_tokens(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
 
 
-def _scan_fingerprint(df: DataFrame) -> "tuple | None":
-    """(file, mtime_ns, size) fingerprint of a BARE-scan frame, or
-    None when the lineage is more than a scan (see
-    :func:`_is_plain_scan`) or any input file is unresolvable — the
-    shared cache-key builder for the probe and rep-analysis caches."""
-    import os
-
-    if not _is_plain_scan(df):
-        return None
-    out = []
-    for f in sorted(df.inputFiles()):
-        path = f[len("file:"):] if f.startswith("file:") else f
-        try:
-            st = os.stat(path)
-        except OSError:
-            return None
-        out.append((f, st.st_mtime_ns, st.st_size))
-    return tuple(out) or None
-
-
-# Rep-analysis caches: the Jaccard and span family cores are shared by
-# their pairs/groups/survivors/coverage heads, and every head used to
-# re-run the whole multi-shuffle chain. The verified rep-level pair
-# set is an INDEX-like artifact (tiny — pairs of distinct-text reps),
-# so it is lazily checkpointed and cached per (session, corpus
-# fingerprint, params) exactly like the PQ codebook. Keyed via
-# _scan_fingerprint, so filtered/projected frames never hit the cache.
-_REP_ANALYSIS_CACHE: dict[tuple, tuple] = {}
-_REP_ANALYSIS_CACHE_MAX = 32
-
-
-def _rep_cache_get(df: DataFrame, params: tuple):
-    fp = _scan_fingerprint(df)
-    if not fp:
-        return None, None
-    key = (df.sparkSession.sparkContext.applicationId, fp) + params
-    return key, _REP_ANALYSIS_CACHE.get(key)
-
-
-def _rep_cache_put(key, value) -> None:
-    if key is None:
-        return
-    while len(_REP_ANALYSIS_CACHE) >= _REP_ANALYSIS_CACHE_MAX:
-        _REP_ANALYSIS_CACHE.pop(next(iter(_REP_ANALYSIS_CACHE)))
-    _REP_ANALYSIS_CACHE[key] = value
+# Rep-analysis artifacts: the Jaccard and span family cores are shared
+# by their pairs/groups/survivors/coverage heads, and every head used to
+# re-run the whole multi-shuffle chain. The verified rep-level pair set
+# is an INDEX-like artifact (tiny — pairs of distinct-text reps), so it
+# is lazily checkpointed and kept as a ``rep_analysis`` kind of
+# jhu_data_parser_spark.cache, like the PQ codebook.
 
 
 def _jaccard_rep_analysis(
@@ -361,12 +323,17 @@ def _jaccard_rep_analysis(
     level. Returns ``(rep_pairs, members)``; ``members`` is None when
     the adaptive collapse found no duplicates (then ``rep_pairs`` IS
     the final pair set). See :func:`jaccard_prefix_pairs` for the
-    algorithm story. The result is cached per (session, corpus
-    fingerprint, params) — groups/survivors/pairs heads share one run
-    of the chain per corpus."""
-    key, hit = _rep_cache_get(df, ("jac", id_col, text_col, threshold, shingle_k))
-    if hit is not None:
-        return hit
+    algorithm story. A ``rep_analysis`` artifact of
+    :mod:`jhu_data_parser_spark.cache`: groups/survivors/pairs heads
+    share one run of the chain per corpus."""
+    params = (id_col, text_col, threshold, shingle_k)
+    return cache.get_or_build(
+        "rep_analysis", df, ("jac",) + params, lambda: _jaccard_rep_build(df, *params)
+    )
+
+
+def _jaccard_rep_build(df, id_col, text_col, threshold, shingle_k):
+    """:func:`_jaccard_rep_analysis`'s build."""
     reps, members = exact_collapse(df, id_col, text_col)
     t = reps.select(
         F.col(id_col), F.split(F.lower(F.col(text_col)), " ").alias("toks")
@@ -465,10 +432,7 @@ def _jaccard_rep_analysis(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    if key is not None:
-        rep_pairs = rep_pairs.localCheckpoint(eager=False)
-        _rep_cache_put(key, (rep_pairs, members))
-    return rep_pairs, members
+    return rep_pairs.localCheckpoint(eager=False), members
 
 
 def jaccard_prefix_pairs(
@@ -690,12 +654,17 @@ def _span_rep_analysis(
     members, rep_metrics)``; ``members`` is None when the adaptive
     collapse found no duplicates (then ``rep_pairs`` is the final
     single-orientation pair set and ``rep_metrics`` covers all docs).
-    See :func:`shared_span_pairs` for the algorithm story. Cached per
-    (session, corpus fingerprint, params) like the Jaccard core —
+    See :func:`shared_span_pairs` for the algorithm story. A
+    ``rep_analysis`` artifact like the Jaccard core:
     pairs/groups/survivors/coverage heads share one run per corpus."""
-    key, hit = _rep_cache_get(df, ("span", id_col, text_col, k))
-    if hit is not None:
-        return hit
+    params = (id_col, text_col, k)
+    return cache.get_or_build(
+        "rep_analysis", df, ("span",) + params, lambda: _span_rep_build(df, *params)
+    )
+
+
+def _span_rep_build(df, id_col, text_col, k):
+    """:func:`_span_rep_analysis`'s build."""
     reps, members = exact_collapse(df, id_col, text_col)
     t = reps.select(
         F.col(id_col), F.split(F.lower(F.col(text_col)), " ").alias("toks")
@@ -755,10 +724,7 @@ def _span_rep_analysis(
             F.size("psa").cast("long").alias("n_dup_grams"),
             (F.expr(run_a) + F.lit(k - 1)).cast("long").alias("max_span_tokens"),
         )
-        if key is not None:
-            pairs = pairs.localCheckpoint(eager=False)
-            _rep_cache_put(key, (pairs, None, rep_metrics))
-        return pairs, None, rep_metrics
+        return pairs.localCheckpoint(eager=False), None, rep_metrics
     cand_b = anchors.select(
         F.explode(F.expr("slice(docs, 1, i)")).alias("id_a"),
         F.col("da").alias("id_b"),
@@ -783,10 +749,7 @@ def _span_rep_analysis(
         F.size("psb").cast("long").alias("n_dup_grams_b"),
         (F.expr(run_b) + F.lit(k - 1)).cast("long").alias("max_span_tokens_b"),
     )
-    if key is not None:
-        rep_pairs = rep_pairs.localCheckpoint(eager=False)
-        _rep_cache_put(key, (rep_pairs, members, rep_metrics))
-    return rep_pairs, members, rep_metrics
+    return rep_pairs.localCheckpoint(eager=False), members, rep_metrics
 
 
 def shared_span_pairs(
@@ -984,61 +947,25 @@ def shared_span_groups(
     return connected_components(edges, "x", "y")
 
 
-# Adaptive-collapse probe cache: corpus file fingerprint → "is the
-# text column (approximately) duplicate-free". Keyed on (path, mtime,
-# size) per input file so an in-place overwrite re-probes; frames with
-# no file backing (in-memory test data) or unresolvable entries are
-# never cached. Bounded FIFO — entries are two booleans, the bound just
-# caps pathological many-corpora processes.
-_DISTINCT_PROBE_CACHE: dict[tuple, bool] = {}
-_DISTINCT_PROBE_CACHE_MAX = 64
-
-
-def _is_plain_scan(df: DataFrame) -> bool:
-    """True when the frame is a BARE file scan (Relation, possibly
-    under a SubqueryAlias/View) — the only lineage under which a
-    file-level fingerprint identifies the frame's CONTENT. Guards the
-    probe cache (ADVICE r6): a filtered/sampled/joined subset over
-    the same files must not inherit the full-corpus verdict, and a
-    Project could rewrite the text column in place, so ANY other node
-    in the analyzed plan disables caching (the probe then just runs —
-    correctness never depended on the cache)."""
-    import re
-
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return False
-    for line in plan.splitlines():
-        node = re.sub(r"^[\s+:|-]*", "", line).split(" ", 1)[0]
-        if node and node not in {"Relation", "SubqueryAlias", "View"}:
-            return False
-    return True
-
-
 def _corpus_is_distinct(df: DataFrame, text_col: str) -> bool:
     """True when ≥95% of rows carry a distinct ``text_col`` value —
     the signal that exact-collapse machinery would be pure overhead.
     One map-side-combinable aggregate over the RAW frame (projection
-    pushdown reads only the text column; no repartition)."""
-    fp = _scan_fingerprint(df)
-    key = (fp, text_col) if fp else None
-    if key and key in _DISTINCT_PROBE_CACHE:
-        return _DISTINCT_PROBE_CACHE[key]
-    probe = (
-        df.select(F.xxhash64(F.col(text_col)).alias("h"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct("h", rsd=0.02).alias("nd"),
+    pushdown reads only the text column; no repartition), kept as a
+    ``distinct_probe`` artifact of :mod:`jhu_data_parser_spark.cache`."""
+
+    def build() -> bool:
+        probe = (
+            df.select(F.xxhash64(F.col(text_col)).alias("h"))
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.approx_count_distinct("h", rsd=0.02).alias("nd"),
+            )
+            .first()
         )
-        .first()
-    )
-    distinct = probe["n"] == 0 or probe["nd"] >= 0.95 * probe["n"]
-    if key:
-        while len(_DISTINCT_PROBE_CACHE) >= _DISTINCT_PROBE_CACHE_MAX:
-            _DISTINCT_PROBE_CACHE.pop(next(iter(_DISTINCT_PROBE_CACHE)))
-        _DISTINCT_PROBE_CACHE[key] = distinct
-    return distinct
+        return probe["n"] == 0 or probe["nd"] >= 0.95 * probe["n"]
+
+    return cache.get_or_build("distinct_probe", df, (text_col,), build)
 
 
 def exact_collapse(
@@ -1071,10 +998,9 @@ def exact_collapse(
     frame (no repartition: partial aggregation means only tiny HLL
     buffers cross the exchange) — decides: when ≥95% of rows are
     distinct the function returns the original frame as ``reps`` and
-    ``members = None``. The decision is cached per corpus file
-    fingerprint (mtime+size keyed, like the IVF index registry;
-    in-memory frames are never cached) so repeated queries over one
-    corpus pay the probe once. The probe only ever affects
+    ``members = None``. The decision is a ``distinct_probe`` artifact
+    of :mod:`jhu_data_parser_spark.cache`, so repeated queries over
+    one corpus pay the probe once. The probe only ever affects
     PERFORMANCE, never results: both branches produce the identical
     pair set (expansion of singleton groups is the identity), so HLL
     error at the boundary merely picks the slower plan."""

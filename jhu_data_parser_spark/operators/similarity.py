@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from jhu_data_parser_spark import cache
+
 __all__ = [
     "dot",
     "l2_norm",
@@ -288,35 +290,6 @@ def _normalize_rows(mat: np.ndarray) -> np.ndarray:
     return mat / norms
 
 
-# Trained centroid cache — an IVF index is built once and probed by many
-# queries; repeated calls with the same corpus+params reuse the (K, D)
-# matrix instead of re-sampling and re-fitting. Keyed by the input's
-# file listing PLUS each file's mtime/size, so neither a different
-# corpus nor an in-place overwrite with identical file names reuses
-# stale centroids. (Row-level filters over the same files share
-# centroids — centroid placement only affects partial-probe recall,
-# never result correctness; exhaustive probe is exact under any
-# centroids.)
-_IVF_CACHE: dict[tuple, np.ndarray] = {}
-
-
-def _file_fingerprint(files: list[str]) -> tuple:
-    """(path, mtime_ns, size) per input file; files that aren't local
-    paths (or vanished) degrade to (path, None, None) — still a valid
-    cache key, just listing-only for that entry."""
-    import os
-
-    out = []
-    for f in sorted(files):
-        path = f[len("file:"):] if f.startswith("file:") else f
-        try:
-            st = os.stat(path)
-            out.append((f, st.st_mtime_ns, st.st_size))
-        except OSError:
-            out.append((f, None, None))
-    return tuple(out)
-
-
 def ivf_fit_centroids(
     df: DataFrame,
     n_centroids: int = 16,
@@ -334,16 +307,6 @@ def ivf_fit_centroids(
     is a few numpy matmuls; the returned (K, D) matrix ships to executors
     by closure (tiny) for assignment.
     """
-    cache_key = (
-        _file_fingerprint(df.inputFiles()),
-        n_centroids,
-        sample_size,
-        n_iter,
-        seed,
-        vec_col,
-    )
-    if cache_key[0] and cache_key in _IVF_CACHE:
-        return _IVF_CACHE[cache_key]
     sample = (
         df.select(vec_col).limit(sample_size).toPandas()[vec_col].to_numpy()
     )
@@ -358,10 +321,7 @@ def ivf_fit_centroids(
             members = mat[assign == j]
             if len(members):
                 cent[j] = members.mean(axis=0)
-    cent = _normalize_rows(cent)
-    if cache_key[0]:
-        _IVF_CACHE[cache_key] = cent
-    return cent
+    return _normalize_rows(cent)
 
 
 def ivf_assign(
@@ -454,47 +414,6 @@ def topk_cosine_ivf(
     return topk_cosine(candidates, query_vec, k, vec_col, id_col).drop("cell")
 
 
-# Built-index registry: corpus fingerprint + params → (index path,
-# centroids). An IVF deployment assigns cells ONCE at index-build time
-# and writes partitionBy(cell); every serving query then probes the
-# layout with an IN-list the scanner turns into partition pruning
-# (plan-pinned in tests/test_plans_physical.py). The registry makes the
-# build a once-per-process step so repeated queries measure the probe,
-# not the build — the 100 TB shape, where the index outlives millions
-# of queries.
-_IVF_INDEX_CACHE: dict[tuple, tuple[str, np.ndarray]] = {}
-_IVF_INDEX_CACHE_MAX = 8
-
-
-def _fingerprint_cacheable(fp: tuple) -> bool:
-    """A fingerprint is a safe cache key only when every entry resolved
-    to a real (mtime, size): a (path, None, None) entry means a remote
-    or vanished file whose content changes we cannot observe, so caching
-    would risk serving a stale index."""
-    return bool(fp) and all(m is not None and s is not None for (_, m, s) in fp)
-
-
-def _rmtree_quiet(path: str) -> None:
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-
-
-_ATEXIT_RMTREE: set = set()
-
-
-def _rmtree_at_exit(path: str) -> None:
-    """Defer directory removal to interpreter exit — for index dirs
-    evicted from the registry for CAPACITY (not supersession): a lazy
-    DataFrame returned to an earlier caller may still read them, so
-    immediate deletion could fail a pending query."""
-    import atexit
-
-    if not _ATEXIT_RMTREE:
-        atexit.register(lambda: [_rmtree_quiet(p) for p in _ATEXIT_RMTREE])
-    _ATEXIT_RMTREE.add(path)
-
-
 def ivf_build_index(
     df: DataFrame,
     n_centroids: int = 16,
@@ -504,60 +423,23 @@ def ivf_build_index(
 ) -> tuple[str, np.ndarray]:
     """Fit centroids, assign every vector its cell (Arrow matmul), and
     write the corpus ``partitionBy(cell)``; returns (path, centroids).
-    Cached per (corpus file fingerprint, params) so the build runs once
-    per process per corpus — exactly the index lifecycle of a real
-    deployment. The fingerprint includes mtimes, so an in-place
-    overwrite refits and rewrites; the superseded index directory is
-    deleted, the registry is bounded (LRU-by-insertion), and
-    fingerprints with unresolvable entries are never cached.
+    An ``ivf_index`` artifact of :mod:`jhu_data_parser_spark.cache`, so
+    the build runs once per session per corpus — the index lifecycle
+    of a real deployment, where every serving query probes the layout
+    with an IN-list the scanner turns into partition pruning."""
 
-    Same cache-key INVARIANT as :func:`ivfpq_build_index`: the
-    fingerprint covers input files only — differently-filtered frames
-    over the same parquet need distinct frame definitions per key (all
-    current callers pass the bare corpus scan)."""
-    import tempfile
+    def build(path: str) -> tuple[str, np.ndarray]:
+        cent = ivf_fit_centroids(
+            df, n_centroids, sample_size, seed=seed, vec_col=vec_col
+        )
+        ivf_assign(df, cent, vec_col).write.partitionBy("cell").parquet(
+            path, mode="overwrite"
+        )
+        return path, cent
 
-    fp = _file_fingerprint(df.inputFiles())
-    key = (fp, n_centroids, sample_size, seed, vec_col)
-    cacheable = _fingerprint_cacheable(fp)
-    if cacheable and key in _IVF_INDEX_CACHE:
-        return _IVF_INDEX_CACHE[key]
-    cent = ivf_fit_centroids(
-        df, n_centroids, sample_size, seed=seed, vec_col=vec_col
+    return cache.get_or_build(
+        "ivf_index", df, (n_centroids, sample_size, seed, vec_col), build
     )
-    path = tempfile.mkdtemp(prefix="jdps_ivf_index_")
-    ivf_assign(df, cent, vec_col).write.partitionBy("cell").parquet(
-        path, mode="overwrite"
-    )
-    if cacheable:
-        # An in-place overwrite of the same corpus produces a new
-        # fingerprint (part-file names may change too): identify "same
-        # corpus" by the parent dataset directories and drop (and
-        # delete) the superseded index dirs so a long-lived process
-        # doesn't leak one directory per rebuild.
-        import os
-
-        def corpus_dirs(f_tuple):
-            return tuple(sorted({os.path.dirname(f) for (f, _, _) in f_tuple}))
-
-        dirs = corpus_dirs(fp)
-        stale = [
-            k
-            for k in _IVF_INDEX_CACHE
-            if k[1:] == key[1:] and corpus_dirs(k[0]) == dirs
-        ]
-        for k in stale:
-            _rmtree_quiet(_IVF_INDEX_CACHE.pop(k)[0])
-        # Capacity eviction must NOT rmtree: an earlier caller may still
-        # hold a lazy DataFrame over the evicted index (parquet reads
-        # are deferred), so deleting here could break a pending query
-        # (ADVICE r6). Drop the registry entry to bound memory and
-        # defer the directory removal to process exit.
-        while len(_IVF_INDEX_CACHE) >= _IVF_INDEX_CACHE_MAX:
-            oldest = next(iter(_IVF_INDEX_CACHE))
-            _rmtree_at_exit(_IVF_INDEX_CACHE.pop(oldest)[0])
-        _IVF_INDEX_CACHE[key] = (path, cent)
-    return path, cent
 
 
 def topk_cosine_ivf_indexed(
@@ -669,9 +551,6 @@ def topk_quantized(
 # and keeps the oracle a pure composition of the two verified fits.
 # ---------------------------------------------------------------------------
 
-_IVFPQ_INDEX_CACHE: dict[tuple, tuple] = {}
-_IVFPQ_INDEX_CACHE_MAX = 8
-
 
 def ivfpq_build_index(
     df: DataFrame,
@@ -702,48 +581,28 @@ def ivfpq_build_index(
     bounded-collect model builds (centroid tables are KBs by params,
     not data), the encode pass is ONE scan computing cell + all M codes
     as codegen/HOF projections, and the write is the partitioned layout
-    a 100 TB deployment serves from. Cached per (cache_tag, corpus
-    fingerprint, params) with the same supersession / deferred-capacity
-    eviction discipline; ``cache_tag`` namespaces derived frames that
-    share input files (e.g. synthesized corpora).
+    a 100 TB deployment serves from. An ``ivfpq_index`` artifact of
+    :mod:`jhu_data_parser_spark.cache`; a derived (filtered or
+    synthesized) frame is cached only under a ``cache_tag``."""
+    _require_integral_id(df, id_col, "ivfpq_build_index")
+    params = (
+        n_cells, coarse_iters, m, sub, pq_k, pq_iters, vec_col, id_col, residual
+    )
+    return cache.get_or_build(
+        "ivfpq_index", df, params, lambda path: _ivfpq_build(df, path, *params), cache_tag
+    )
 
-    Cache-key INVARIANT (ADVICE r8): the fingerprint covers input
-    FILES, not the logical plan — filters/projections applied on top of
-    the same files are invisible to it. One ``cache_tag`` therefore
-    means one exact frame definition: callers that derive differently-
-    filtered frames from the same parquet MUST use distinct tags, or
-    the second build silently serves the first's index. (A logical-plan
-    digest is not mixed in because Spark's expression IDs are globally
-    incrementing — the same frame built twice digests differently,
-    which would defeat the cache entirely.)"""
+
+def _ivfpq_build(
+    df, path, n_cells, coarse_iters, m, sub, pq_k, pq_iters, vec_col, id_col, residual
+) -> tuple[str, list, list]:
+    """:func:`ivfpq_build_index`'s build: fits, encode pass, write."""
     from jhu_data_parser_spark.operators.clustering import (
         KM_SCALE,
         kmeans_fit,
         kmeans_fit_multi,
         quantize_vectors,
     )
-    import os
-    import tempfile
-
-    _require_integral_id(df, id_col, "ivfpq_build_index")
-    fp = _file_fingerprint(df.inputFiles())
-    key = (
-        "ivfpq",
-        cache_tag,
-        fp,
-        n_cells,
-        coarse_iters,
-        m,
-        sub,
-        pq_k,
-        pq_iters,
-        vec_col,
-        id_col,
-        residual,
-    )
-    cacheable = _fingerprint_cacheable(fp)
-    if cacheable and key in _IVFPQ_INDEX_CACHE:
-        return _IVFPQ_INDEX_CACHE[key]
 
     pts = quantize_vectors(df, id_col=id_col, vec_col=vec_col)
     # collapse_duplicates: replicated corpora fit over distinct vectors
@@ -833,29 +692,8 @@ def ivfpq_build_index(
     enc = _ivfpq_encode_arrow(
         df, coarse, books, sub, residual, vec_col, id_col
     )
-    path = tempfile.mkdtemp(prefix="jdps_ivfpq_index_")
     enc.write.partitionBy("cell").parquet(path, mode="overwrite")
-
-    result = (path, coarse, books)
-    if cacheable:
-        def corpus_dirs(f_tuple):
-            return tuple(sorted({os.path.dirname(f) for (f, _, _) in f_tuple}))
-
-        dirs = corpus_dirs(fp)
-        stale = [
-            k
-            for k in _IVFPQ_INDEX_CACHE
-            if k[1] == cache_tag
-            and k[3:] == key[3:]
-            and corpus_dirs(k[2]) == dirs
-        ]
-        for k in stale:
-            _rmtree_quiet(_IVFPQ_INDEX_CACHE.pop(k)[0])
-        while len(_IVFPQ_INDEX_CACHE) >= _IVFPQ_INDEX_CACHE_MAX:
-            oldest = next(iter(_IVFPQ_INDEX_CACHE))
-            _rmtree_at_exit(_IVFPQ_INDEX_CACHE.pop(oldest)[0])
-        _IVFPQ_INDEX_CACHE[key] = result
-    return result
+    return path, coarse, books
 
 
 def topk_ivfpq_indexed(
@@ -1801,10 +1639,6 @@ def knn_graph_arrival(
     )
 
 
-_KNN_GRAPH_CACHE: dict = {}
-_KNN_GRAPH_CACHE_MAX = 8
-
-
 def knn_graph_index(
     corpus: DataFrame,
     dim: int,
@@ -1815,14 +1649,14 @@ def knn_graph_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     exact_buckets: bool = True,
-    variant: str = "",
+    cache_tag: str = "",
     src_buckets: int = 16,
 ) -> str:
     """Build-once graph index: :func:`knn_graph_banded` written to a
-    parquet dir, cached per (corpus file fingerprint, params) — the
-    same index lifecycle as :func:`ivf_build_index` (a graph index is
-    prebuilt in any real ANN deployment; serving never pays the build).
-    Returns the index path.
+    parquet dir, a ``knng_index`` artifact of
+    :mod:`jhu_data_parser_spark.cache` (a graph index is prebuilt in
+    any real ANN deployment; serving never pays the build); a derived
+    frame is cached only under a ``cache_tag``. Returns the index path.
 
     The edge table is written ``partitionBy(src_pt{N})`` with
     ``src_pt{N} = pmod(src, src_buckets)`` (the bucket count rides in
@@ -1834,70 +1668,30 @@ def knn_graph_index(
     pruning turns the frontier into a planning-time ``PartitionFilters``
     entry on the edge scan (plan-pinned in tests). At 100 TB the hop
     then reads O(beam) partitions of an n·m-row table instead of the
-    whole table. ``src_buckets=0`` writes the flat layout. Same
-    cache-key invariant as the IVF indexes: the fingerprint covers
-    input files only — callers indexing DIFFERENTLY-FILTERED frames
-    over the same parquet MUST pass a distinct ``variant`` string (it
-    is part of the key)."""
-    import os
-    import tempfile
-
+    whole table. ``src_buckets=0`` writes the flat layout."""
     _require_integral_id(corpus, id_col, "knn_graph_index")
-    fp = _file_fingerprint(corpus.inputFiles())
-    key = (
-        fp,
-        dim,
-        m,
-        n_planes,
-        bands,
-        seed,
-        vec_col,
-        id_col,
-        exact_buckets,
-        variant,
-        src_buckets,
-    )
-    cacheable = _fingerprint_cacheable(fp)
-    if cacheable and key in _KNN_GRAPH_CACHE:
-        return _KNN_GRAPH_CACHE[key]
-    path = tempfile.mkdtemp(prefix="jdps_knng_index_")
-    edges = knn_graph_banded(
-        corpus, dim, m, n_planes, bands, seed, vec_col, id_col, exact_buckets
-    )
-    if src_buckets > 0:
-        # the bucket count rides IN the column name (src_pt16): the
-        # hop join derives it from the read-back schema, so a caller
-        # can never tag the frontier with a mismatched modulus (which
-        # would silently drop edges from every hop)
-        pt = f"src_pt{src_buckets}"
-        edges.withColumn(
-            pt, F.pmod(F.col("src"), F.lit(src_buckets)).cast("int")
-        ).write.partitionBy(pt).parquet(path, mode="overwrite")
-    else:
-        edges.write.parquet(path, mode="overwrite")
-    if cacheable:
 
-        def corpus_dirs(f_tuple):
-            return tuple(sorted({os.path.dirname(f) for (f, _, _) in f_tuple}))
+    def build(path: str) -> str:
+        edges = knn_graph_banded(
+            corpus, dim, m, n_planes, bands, seed, vec_col, id_col, exact_buckets
+        )
+        if src_buckets > 0:
+            # the bucket count rides IN the column name (src_pt16): the
+            # hop join derives it from the read-back schema, so a caller
+            # can never tag the frontier with a mismatched modulus (which
+            # would silently drop edges from every hop)
+            pt = f"src_pt{src_buckets}"
+            edges.withColumn(
+                pt, F.pmod(F.col("src"), F.lit(src_buckets)).cast("int")
+            ).write.partitionBy(pt).parquet(path, mode="overwrite")
+        else:
+            edges.write.parquet(path, mode="overwrite")
+        return path
 
-        dirs = corpus_dirs(fp)
-        stale = [
-            k
-            for k in _KNN_GRAPH_CACHE
-            if k[1:] == key[1:] and corpus_dirs(k[0]) == dirs
-        ]
-        # at-exit, not immediate: a lazy DataFrame returned from an
-        # earlier knn_graph_index call over the same (now rewritten)
-        # corpus may still hold the superseded path — same rationale
-        # as the capacity-eviction path below (bounded disk held
-        # until exit beats a mid-query FileNotFound)
-        for k in stale:
-            _rmtree_at_exit(_KNN_GRAPH_CACHE.pop(k))
-        while len(_KNN_GRAPH_CACHE) >= _KNN_GRAPH_CACHE_MAX:
-            oldest = next(iter(_KNN_GRAPH_CACHE))
-            _rmtree_at_exit(_KNN_GRAPH_CACHE.pop(oldest))
-        _KNN_GRAPH_CACHE[key] = path
-    return path
+    params = (
+        dim, m, n_planes, bands, seed, vec_col, id_col, exact_buckets, src_buckets
+    )
+    return cache.get_or_build("knng_index", corpus, params, build, cache_tag)
 
 
 def read_graph_index(spark, path: str) -> DataFrame:
@@ -2005,7 +1799,7 @@ def _lookup(acc: dict, ids, index: str) -> list:
     """``[acc[i] for i in ids]`` for rows fetched by id — the one lookup
     behind every driver-side re-rank. An id the fetch did not return
     means the index was built over a different corpus (a stale cache
-    entry, or one ``variant``/``cache_tag`` shared by two frames), so
+    entry, or one ``cache_tag`` shared by two frames), so
     this raises :class:`StaleIndexError` naming the missing ids and the
     index rather than a bare ``KeyError``."""
     try:
@@ -2016,7 +1810,7 @@ def _lookup(acc: dict, ids, index: str) -> list:
             f"{len(missing)} id(s) from {index} are missing from the "
             f"corpus (first: {missing[:8]}): the index was built over a "
             "different corpus; rebuild it or give this corpus its own "
-            "variant/cache_tag"
+            "cache_tag"
         ) from None
 
 

@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from jhu_data_parser_spark import cache
+
 __all__ = [
     "tokens",
     "token_count",
@@ -579,10 +581,6 @@ def unigram_viterbi_expr(word_col: str, cost: dict, max_piece_len: int = 4) -> s
     )
 
 
-_UNIGRAM_FIT_CACHE: dict = {}
-_UNIGRAM_FIT_CACHE_MAX = 16
-
-
 def unigram_fit(
     df: DataFrame,
     text_col: str = "text",
@@ -614,16 +612,11 @@ def unigram_fit(
     ``word_len_cap`` are excluded from fit AND encode on both engines
     (the oracle's DP unroll is bounded by it).
 
-    The fit is an index-build artifact (like the PQ codebook): cached
-    per (bare-scan corpus fingerprint, params) so train + encode over
-    the same corpus fit once. Derived frames (filters/projections)
-    never hit the cache — ``_scan_fingerprint`` returns None for
-    non-bare-scan lineage."""
-    from jhu_data_parser_spark.operators.dedup import _scan_fingerprint
+    The fit is an index-build artifact (like the PQ codebook), a
+    ``unigram_fit`` kind of :mod:`jhu_data_parser_spark.cache`, so
+    train + encode over the same corpus fit once."""
 
-    fp = _scan_fingerprint(df)
-    cache_key = (
-        fp,
+    params = (
         text_col,
         vocab_multi,
         max_piece_len,
@@ -632,8 +625,16 @@ def unigram_fit(
         word_len_cap,
         local_vocab_bound,
     )
-    if fp is not None and cache_key in _UNIGRAM_FIT_CACHE:
-        return _UNIGRAM_FIT_CACHE[cache_key]
+    return cache.get_or_build(
+        "unigram_fit", df, params, lambda: _unigram_fit_build(df, *params)
+    )
+
+
+def _unigram_fit_build(
+    df, text_col, vocab_multi, max_piece_len, min_count, em_iters, word_len_cap,
+    local_vocab_bound,
+) -> tuple[list, dict]:
+    """:func:`unigram_fit`'s build."""
     words = (
         df.select(F.explode(F.split(F.lower(text_col), r"\s+")).alias("w"))
         .filter((F.col("w") != "") & (F.length("w") <= word_len_cap))
@@ -641,21 +642,12 @@ def unigram_fit(
         .agg(F.count(F.lit(1)).alias("wc"))
     )
 
-    def _remember(result):
-        if fp is not None:
-            while len(_UNIGRAM_FIT_CACHE) >= _UNIGRAM_FIT_CACHE_MAX:
-                _UNIGRAM_FIT_CACHE.pop(next(iter(_UNIGRAM_FIT_CACHE)))
-            _UNIGRAM_FIT_CACHE[cache_key] = result
-        return result
-
     if local_vocab_bound:
         probe = words.limit(local_vocab_bound + 1).toPandas()
         if len(probe) <= local_vocab_bound:
             wc_pairs = list(zip(probe["w"].tolist(), probe["wc"].tolist()))
-            return _remember(
-                _unigram_fit_local(
-                    wc_pairs, vocab_multi, max_piece_len, min_count, em_iters
-                )
+            return _unigram_fit_local(
+                wc_pairs, vocab_multi, max_piece_len, min_count, em_iters
             )
 
     # Distributed path: seed counts via two explode passes, then EM
@@ -714,7 +706,7 @@ def unigram_fit(
     rows = [
         (p, counts[p], final_costs[p]) for p in sorted(counts)
     ]
-    return _remember((rows, final_costs))
+    return rows, final_costs
 
 
 def _unigram_fit_local(
@@ -896,9 +888,6 @@ def lr_quality_raw_frame(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-_LR_FIT_CACHE: dict = {}
-
-
 def lr_train_quality(
     df: DataFrame, text_col: str = "text", steps: int = 6
 ) -> tuple[list, list]:
@@ -913,9 +902,9 @@ def lr_fit_artifacts(
     """Distributed full-batch logistic-regression training: returns
     (weights, per-step stats rows, feature means ×1000, n_docs) — the
     means are part of the model (serving must center inputs the same
-    way). Cached per (corpus file fingerprint, text_col, steps) — the
-    same fit-once lifecycle as unigram_fit — so the serve query reuses
-    the training query's fit. Per step, ONE aggregation job runs
+    way). An ``lr_fit`` artifact of :mod:`jhu_data_parser_spark.cache`
+    — the same fit-once lifecycle as unigram_fit — so the serve query
+    reuses the training query's fit. Per step, ONE aggregation job runs
     over the centered feature frame — the margin/sigmoid/error are
     in-row codegen+HOF expressions against the current weight LITERAL,
     posexplode routes the gradient to a 70-row (feature-dim) result,
@@ -925,18 +914,14 @@ def lr_fit_artifacts(
     Update rule: w_j ← w_j − floor(g_j / (1e6 · n_docs)) with g_j the
     exact int64 error-weighted feature sum; the int64→double conversion
     and the single division round identically in every engine."""
-    import math
-
-    from jhu_data_parser_spark.operators.similarity import (
-        _file_fingerprint,
-        _fingerprint_cacheable,
+    return cache.get_or_build(
+        "lr_fit", df, (text_col, steps), lambda: _lr_fit_build(df, text_col, steps)
     )
 
-    fp = _file_fingerprint(df.inputFiles())
-    key = (fp, text_col, steps)
-    cacheable = _fingerprint_cacheable(fp)
-    if cacheable and key in _LR_FIT_CACHE:
-        return _LR_FIT_CACHE[key]
+
+def _lr_fit_build(df, text_col, steps) -> tuple[list, list, list, int]:
+    """:func:`lr_fit_artifacts`'s build."""
+    import math
 
     # Checkpoint the RAW frame (not the centered one): the means collect
     # below materializes it, and the per-step centering is then a cheap
@@ -1019,10 +1004,7 @@ def lr_fit_artifacts(
                 "w_abs_sum": sum(abs(v) for v in w),
             }
         )
-    result = (w, out, mean1000, n_docs)
-    if cacheable:
-        _LR_FIT_CACHE[key] = result
-    return result
+    return w, out, mean1000, n_docs
 
 
 def _lr_train_quality_local(texts_with_ids: list, steps: int = 6) -> tuple[list, list]:

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from jhu_data_parser_spark import cache
 from jhu_data_parser_spark.plans.catalog import query
 from jhu_data_parser_spark.plans.llm import _PORTABLE_MH_ORACLE
 from jhu_data_parser_spark.plans.pipeline4 import _URL_CANON_CTES
@@ -416,12 +417,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Exercises Spark's built-in ORC writer/reader (the
     vectorized columnar path, same class as the parquet scan) and
     proves row/type fidelity against the parquet-sourced oracle."""
-    import tempfile
-
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
-
-    out = tempfile.mkdtemp(prefix="jdps_orc_rt_")
-    _rmtree_at_exit(out)
+    out = cache.scratch_dir("orc_rt")
     # NOT _spread: the JVM-native ORC write of the 600k-row projection
     # is faster single-task than the round-robin shuffle it would take
     # to spread it (measured r14: 1.11 s plain vs 1.83 s spread).
@@ -444,16 +440,13 @@ def source_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec module). Closes the format matrix:
     parquet/ORC/CSV/JSON/XML/binaryFile/Avro."""
     import json
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.avro_container import (
         read_avro,
         write_avro,
     )
 
-    out = tempfile.mkdtemp(prefix="jdps_avro_rt_")
-    _rmtree_at_exit(out)
+    out = cache.scratch_dir("avro_rt")
     schema_json = json.dumps(
         {
             "type": "record",
@@ -491,17 +484,14 @@ def source_avro_split_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     block exactly once."""
     import json
     import os
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.avro_container import (
         plan_avro_splits,
         read_avro,
         write_avro,
     )
 
-    out = tempfile.mkdtemp(prefix="jdps_avro_split_")
-    _rmtree_at_exit(out)
+    out = cache.scratch_dir("avro_split")
     schema_json = json.dumps(
         {
             "type": "record",
@@ -537,12 +527,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema (never inferSchema — one pass, deterministic types; the
     all-string DictReader semantics of S2 are the etl_* queries' job,
     this one proves the typed round trip) → cents-exact aggregate."""
-    import tempfile
-
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
-
-    out = tempfile.mkdtemp(prefix="jdps_csv_rt_")
-    _rmtree_at_exit(out)
+    out = cache.scratch_dir("csv_rt")
     # NOT _spread: JVM-native CSV write — measured faster single-task
     # than paying the spread shuffle (r14: 1.89 s plain vs 1.66 s is
     # within noise; kept plain to match the ORC/JSON twins).
@@ -594,12 +579,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the parquet-sourced oracle. Part of the format-breadth
     matrix (parquet/ORC/CSV/JSON/XML/Avro — Avro via the vendored
     container codec, ``source_avro_roundtrip``)."""
-    import tempfile
-
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
-
-    out = tempfile.mkdtemp(prefix="jdps_xml_rt_")
-    _rmtree_at_exit(out)
+    out = cache.scratch_dir("xml_rt")
     _spread(_roundtrip_cols(spark, sf_dir)).write.mode("overwrite").format(
         "xml"
     ).option("rootTag", "lineitems").option("rowTag", "lineitem").save(out)
@@ -642,23 +622,12 @@ def source_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     and prove byte fidelity (length + 16-hex prefix per file) against
     the table-derived oracle. doc_id rides the file name."""
     import os
-    import tempfile
 
     import duckdb
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
-
-    # Per-PROCESS staging only (a module dict keyed by the resolved
-    # sf_dir): a shared /tmp cache would need the IVF registry's full
-    # per-file (path, mtime, size) fingerprint to catch in-place part
-    # overwrites, and its atexit cleanup would race any concurrent
-    # session reusing it — at ≤256 tiny files, re-staging per process
-    # is cheaper than getting cross-process caching right.
-    cache = source_binaryfile_ingest.__dict__.setdefault("_stages", {})
-    stage = cache.get(os.path.abspath(sf_dir))
-    if stage is None:
-        stage = tempfile.mkdtemp(prefix="jdps_binsrc_")
-        _rmtree_at_exit(stage)
+    # The staged prefix is a ``binsrc`` artifact of
+    # jhu_data_parser_spark.cache, keyed on the documents files.
+    def build(stage: str) -> str:
         src = os.path.join(sf_dir, "documents.parquet")
         glob = os.path.join(src, "*.parquet") if os.path.isdir(src) else src
         rows = duckdb.connect().execute(
@@ -668,7 +637,10 @@ def source_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         for doc_id, text in rows:
             with open(os.path.join(stage, f"doc_{doc_id}.txt"), "wb") as fh:
                 fh.write(text.encode("utf-8"))
-        cache[os.path.abspath(sf_dir)] = stage
+        return stage
+
+    docs = load_table(spark, sf_dir, "documents")
+    stage = cache.get_or_build("binsrc", docs, (), build)
     files = spark.read.format("binaryFile").load(os.path.join(stage, "*.txt"))
     return files.select(
         F.regexp_extract(F.col("path"), r"doc_(\d+)\.txt$", 1)
@@ -709,16 +681,13 @@ def source_avro_embeddings_roundtrip(
     (scalars): a hash match here proves the ARRAY encoding carried
     every element bit-for-bit through both distributed directions."""
     import json
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.avro_container import (
         read_avro,
         write_avro,
     )
 
-    out = tempfile.mkdtemp(prefix="jdps_avro_emb_")
-    _rmtree_at_exit(out)
+    out = cache.scratch_dir("avro_emb")
     schema_json = json.dumps(
         {
             "type": "record",
@@ -788,16 +757,13 @@ def source_avro_orders_logical(spark: SparkSession, sf_dir: str) -> DataFrame:
     not just raw base encodings — through both distributed
     directions."""
     import json
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.avro_container import (
         read_avro,
         write_avro,
     )
 
-    out = tempfile.mkdtemp(prefix="jdps_avro_lt_")
-    _rmtree_at_exit(out)
+    out = cache.scratch_dir("avro_lt")
     schema_json = json.dumps(
         {
             "type": "record",
@@ -869,13 +835,10 @@ _DELTA_SLICE = "l_quantity >= 45"
 
 
 def _delta_demo_table(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.delta_lite import write_delta
 
-    table = tempfile.mkdtemp(prefix="jdps_delta_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("delta")
     base = _roundtrip_cols(spark, sf_dir)
     write_delta(base, table, mode="overwrite")  # v0
     write_delta(
@@ -967,15 +930,12 @@ def source_delta_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried into the table layer; pruning is plan-pinned in
     tests/test_delta_lite.py). Aggregate over two flags of the
     overwrite+append snapshot vs the parquet-recomputed oracle."""
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.delta_lite import (
         read_delta,
         write_delta,
     )
-    import tempfile
 
-    table = tempfile.mkdtemp(prefix="jdps_delta_part_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("delta_part")
     base = _roundtrip_cols(spark, sf_dir)
     write_delta(
         base, table, mode="overwrite", partition_by=["l_returnflag"]
@@ -1009,16 +969,13 @@ def source_delta_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nothing resurrected), and the schema. Oracle recomputes the
     surviving bands (quantity ≥ 21) from parquet."""
     import os
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.delta_lite import (
         read_delta,
         write_delta,
     )
 
-    table = tempfile.mkdtemp(prefix="jdps_delta_cp_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("delta_cp")
     base = _roundtrip_cols(spark, sf_dir)
 
     def band(k: int) -> DataFrame:
@@ -1052,16 +1009,13 @@ def source_delta_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipping never over-pruned — a file wrongly dropped would lose
     rows the oracle counts. File-count pruning is additionally pinned
     in tests/test_delta_lite.py."""
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.delta_lite import (
         read_delta,
         write_delta,
     )
 
-    table = tempfile.mkdtemp(prefix="jdps_delta_skip_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("delta_skip")
     base = _roundtrip_cols(spark, sf_dir)
     write_delta(
         base.repartitionByRange(8, "l_quantity"), table, mode="overwrite"
@@ -1101,17 +1055,14 @@ def source_delta_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merged state relationally from parquet: a hash match proves
     updates landed, inserts landed, untouched rows survived, and
     nothing duplicated across the rewrite boundary."""
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.delta_lite import (
         merge_delta,
         read_delta,
         write_delta,
     )
 
-    table = tempfile.mkdtemp(prefix="jdps_delta_merge_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("delta_merge")
     base = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
@@ -1166,17 +1117,14 @@ def source_delta_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     changed the layout and nothing else (and that post-Z-order
     skipping never over-prunes); the file-pruning counts on BOTH
     Z-order columns are pinned in tests/test_delta_lite.py."""
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.delta_lite import (
         optimize_delta,
         read_delta,
         write_delta,
     )
 
-    table = tempfile.mkdtemp(prefix="jdps_delta_zorder_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("delta_zorder")
     base = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
@@ -1223,17 +1171,14 @@ def source_delta_cdf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the dataChange flag is load-bearing), and (c) no row was lost or
     double-delivered. At 100 TB this is the daily-delta read — the
     consumer never rescans the table."""
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.delta_lite import (
         optimize_delta,
         read_delta_changes,
         write_delta,
     )
 
-    table = tempfile.mkdtemp(prefix="jdps_delta_cdf_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("delta_cdf")
     base = _roundtrip_cols(spark, sf_dir)
 
     def band(k: int) -> DataFrame:
@@ -1293,16 +1238,13 @@ def source_delta_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     not errors) and new rows carry their values — the add-a-feature-
     column migration every long-lived 100 TB table eventually needs,
     executed without rewriting a byte of existing data."""
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.delta_lite import (
         read_delta,
         write_delta,
     )
 
-    table = tempfile.mkdtemp(prefix="jdps_delta_evo_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("delta_evo")
     orders = load_table(spark, sf_dir, "orders")
     base = orders.select(
         F.col("o_orderkey").alias("k"),
@@ -1353,17 +1295,14 @@ def source_delta_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the complement from parquet: a hash match proves
     exactly the predicate's rows vanished — no survivor lost at the
     rewrite boundary, no row outside the stripe touched."""
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.delta_lite import (
         delete_delta,
         read_delta,
         write_delta,
     )
 
-    table = tempfile.mkdtemp(prefix="jdps_delta_del_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("delta_del")
     base = _roundtrip_cols(spark, sf_dir)
     write_delta(
         base.repartitionByRange(8, "l_quantity"), table, mode="overwrite"
@@ -1388,13 +1327,10 @@ def source_delta_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _iceberg_demo_table(spark: SparkSession, sf_dir: str) -> tuple:
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.iceberg_lite import write_iceberg
 
-    table = tempfile.mkdtemp(prefix="jdps_ice_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("ice")
     base = _roundtrip_cols(spark, sf_dir)
     write_iceberg(base, table, mode="overwrite")  # s0
     s1 = write_iceberg(
@@ -1446,16 +1382,13 @@ def source_iceberg_partition_prune(
     partition-filtered reads (flags A and R) of the overwrite+append
     snapshot, unioned and aggregated vs the parquet-recomputed oracle;
     file-count pruning is pytest-pinned."""
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.iceberg_lite import (
         read_iceberg,
         write_iceberg,
     )
 
-    table = tempfile.mkdtemp(prefix="jdps_ice_part_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("ice_part")
     base = _roundtrip_cols(spark, sf_dir)
     write_iceberg(base, table, mode="overwrite", partition_by="l_returnflag")
     write_iceberg(base.filter(F.expr(_DELTA_SLICE)), table, mode="append")
@@ -1481,16 +1414,13 @@ def source_iceberg_bounds_skipping(
     holding a matching row (the Delta data-skipping certificate,
     replayed through the SECOND table format's metadata tree —
     pruned file counts pytest-pinned)."""
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.iceberg_lite import (
         read_iceberg,
         write_iceberg,
     )
 
-    table = tempfile.mkdtemp(prefix="jdps_ice_bounds_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("ice_bounds")
     base = _roundtrip_cols(spark, sf_dir)
     write_iceberg(
         base.repartitionByRange(8, "l_quantity"), table, mode="overwrite"
@@ -1532,16 +1462,13 @@ def source_iceberg_hidden_partition(
     proves transform pruning never dropped a matching row. The bucket
     transform's murmur3 is pinned to the spec's own Appendix-B test
     vectors in tests/test_iceberg_lite.py."""
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.iceberg_lite import (
         read_iceberg,
         write_iceberg,
     )
 
-    table = tempfile.mkdtemp(prefix="jdps_ice_hidden_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("ice_hidden")
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
@@ -1583,16 +1510,13 @@ def source_iceberg_schema_evolution(
     with the old schema (both pytest-pinned). Same oracle as the
     Delta twin — the two table formats must agree bit-for-bit on
     the add-a-feature-column migration."""
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.iceberg_lite import (
         read_iceberg,
         write_iceberg,
     )
 
-    table = tempfile.mkdtemp(prefix="jdps_ice_evo_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("ice_evo")
     orders = load_table(spark, sf_dir, "orders")
     base = orders.select(
         F.col("o_orderkey").alias("k"),
@@ -1635,17 +1559,14 @@ def source_iceberg_delete_where(
     concurrent commit during the rewrite job aborts loudly instead of
     committing against a stale snapshot. Same oracle as the Delta
     twin: the two formats must agree on the complement."""
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.iceberg_lite import (
         delete_iceberg,
         read_iceberg,
         write_iceberg,
     )
 
-    table = tempfile.mkdtemp(prefix="jdps_ice_del_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("ice_del")
     base = _roundtrip_cols(spark, sf_dir)
     write_iceberg(
         base.repartitionByRange(8, "l_quantity"), table, mode="overwrite"
@@ -1671,17 +1592,14 @@ def source_iceberg_merge_upsert(
     landed, untouched rows survived, nothing duplicated across the
     rewrite boundary — the DML matrix now holds for BOTH vendored
     table formats."""
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.iceberg_lite import (
         merge_iceberg,
         read_iceberg,
         write_iceberg,
     )
 
-    table = tempfile.mkdtemp(prefix="jdps_ice_merge_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("ice_merge")
     base = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
@@ -1734,17 +1652,14 @@ def source_delta_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CASE transform relationally: a hash match proves exactly the
     predicate's rows changed, by exactly the SET expression, and the
     rewrite boundary lost nothing."""
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.sources.delta_lite import (
         read_delta,
         update_delta,
         write_delta,
     )
 
-    table = tempfile.mkdtemp(prefix="jdps_delta_upd_")
-    _rmtree_at_exit(table)
+    table = cache.scratch_dir("delta_upd")
     base = _roundtrip_cols(spark, sf_dir).withColumn(
         "cents",
         F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long"),

@@ -53,6 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from jhu_data_parser_spark import cache
 from jhu_data_parser_spark.plans.catalog import query
 from jhu_data_parser_spark.plans.llm import _PORTABLE_MH_ORACLE
 from jhu_data_parser_spark.plans.pipeline4 import (
@@ -269,10 +270,6 @@ def _v3_yield_oracle() -> str:
     """
 
 
-_V3_FRAMES_CACHE: dict = {}
-_V3_FRAMES_CACHE_MAX = 4
-
-
 def _v3_frames(spark: SparkSession, sf_dir: str) -> dict:
     """Build the funnel v3 chain once; returns the per-doc frames each
     query aggregates. ``flags``, ``clean`` and ``final`` are lazily
@@ -281,26 +278,19 @@ def _v3_frames(spark: SparkSession, sf_dir: str) -> dict:
     storage between pipeline stages; lineage-truncation here keeps the
     heavy MinHash/boilerplate subtrees single-evaluation).
 
-    The frames dict is ALSO cached per (session, corpus fingerprint) —
-    the two flagship queries (yield table, packed batches) are reads
-    of the SAME stage artifacts, and a real pipeline materializes the
-    funnel once and serves every downstream deliverable from it (the
-    ivf_build_index artifact discipline). Keyed on the session id so
-    checkpointed frames never cross SparkContexts; unresolvable
-    fingerprints are never cached."""
-    from jhu_data_parser_spark.operators.similarity import (
-        _file_fingerprint,
-        _fingerprint_cacheable,
-    )
+    The frames dict is ALSO a ``v3_frames`` artifact of
+    :mod:`jhu_data_parser_spark.cache` — the two flagship queries
+    (yield table, packed batches) are reads of the SAME stage
+    artifacts, and a real pipeline materializes the funnel once and
+    serves every downstream deliverable from it."""
+    d = load_table(spark, sf_dir, "documents")
+    return cache.get_or_build("v3_frames", d, (), lambda: _v3_build(spark, sf_dir, d))
+
+
+def _v3_build(spark: SparkSession, sf_dir: str, d: DataFrame) -> dict:
+    """:func:`_v3_frames`'s build over the documents frame ``d``."""
     from jhu_data_parser_spark.plans.llm import dedup_minhash_portable_pairs
 
-    d = load_table(spark, sf_dir, "documents")
-    fp = _file_fingerprint(d.inputFiles())
-    # applicationId, not id(sc): a recycled CPython id after a context
-    # teardown would serve checkpointed RDDs from a dead context
-    key = (spark.sparkContext.applicationId, fp)
-    if _fingerprint_cacheable(fp) and key in _V3_FRAMES_CACHE:
-        return _V3_FRAMES_CACHE[key]
     rawu = d.select("doc_id", F.expr(_url_raw_spark(_V3_UID)).alias("url"))
     w = Window.partitionBy("canonical_url").orderBy("doc_id")
     uk = canonicalize_urls(rawu).select(
@@ -489,18 +479,13 @@ def _v3_frames(spark: SparkSession, sf_dir: str) -> dict:
             / F.lit(_V3_PACK_BUDGET)
         ).cast("long"),
     )
-    frames = {
+    return {
         "flags": flags,
         "cw": cw,
         "final": final,
         "sel": sel,
         "packed": packed,
     }
-    if _fingerprint_cacheable(fp):
-        while len(_V3_FRAMES_CACHE) >= _V3_FRAMES_CACHE_MAX:
-            _V3_FRAMES_CACHE.pop(next(iter(_V3_FRAMES_CACHE)))
-        _V3_FRAMES_CACHE[key] = frames
-    return frames
 
 
 @query("pipeline_pack_batches", oracle=_PACK_ORACLE)

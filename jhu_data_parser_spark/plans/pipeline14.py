@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from jhu_data_parser_spark import cache
 from jhu_data_parser_spark.operators import similarity as sim
 from jhu_data_parser_spark.plans.catalog import query
 from jhu_data_parser_spark.plans.llm import _query_vec
@@ -315,13 +316,10 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem projection → JSON-lines files → read back with an
     explicit schema → cents-exact aggregate, hash-gated against the
     parquet-sourced oracle shared with the ORC/CSV twins."""
-    import tempfile
 
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
     from jhu_data_parser_spark.plans.pipeline12 import _roundtrip_agg, _roundtrip_cols
 
-    out = tempfile.mkdtemp(prefix="jdps_json_rt_")
-    _rmtree_at_exit(out)
+    out = cache.scratch_dir("json_rt")
     # NOT _spread (see pipeline12._spread): JVM-native JSON write is
     # faster single-task than paying the spread shuffle (measured r14:
     # 1.09 s plain vs 1.79 s spread).
@@ -2573,10 +2571,6 @@ def source_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     the routing: corrupt counts and the exact aggregate over clean
     rows. At 100 TB this is the difference between one bad crawl
     record poisoning a job and a quarantine table to triage."""
-    import tempfile
-
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     line = F.concat(
         F.lit('{"doc_id": '),
@@ -2595,8 +2589,7 @@ def source_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(', "n_chars": oops}'),
         ),
     ).otherwise(F.col("line"))
-    out = tempfile.mkdtemp(prefix="jdps_json_corrupt_")
-    _rmtree_at_exit(out)
+    out = cache.scratch_dir("json_corrupt")
     d.withColumn("line", line).select(corrupted.alias("value")).write.mode(
         "overwrite"
     ).text(out)

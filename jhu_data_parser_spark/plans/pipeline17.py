@@ -15,6 +15,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jhu_data_parser_spark import cache
 from jhu_data_parser_spark.plans.catalog import query
 from jhu_data_parser_spark.sources.tables import load_table
 
@@ -307,13 +308,8 @@ def source_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame
     """Write two schema-divergent parquet snapshots, read them back in
     one mergeSchema scan, and report the unified-schema null
     accounting per snapshot version."""
-    import tempfile
-
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
-
     o = load_table(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="jdps_evolve_")
-    _rmtree_at_exit(out)
+    out = cache.scratch_dir("evolve")
     o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey", F.lit(1).alias("v")
     ).write.mode("overwrite").parquet(f"{out}/v=1")

@@ -237,7 +237,7 @@ def _graph_beam(spark: SparkSession, sf_dir: str):
             n_planes=_G_PLANES,
             bands=_G_BANDS,
             seed=_G_SEED,
-            variant="ne0",
+            cache_tag="ne0",
         ),
     )
     # the quantized table feeds every search round (iterative consumer;
@@ -471,7 +471,7 @@ def sim_graph_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_planes=_G_PLANES,
         bands=_G_BANDS,
         seed=_G_SEED,
-        variant="ge5",
+        cache_tag="ge5",
     )
     qz = sim.quantize_unit_vectors(corpus).localCheckpoint(eager=False)
     codes = [

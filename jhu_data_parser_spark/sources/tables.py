@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from jhu_data_parser_spark import cache
+
 __all__ = ["TABLE_NAMES", "load_table", "load_tables", "register_views", "default_sf_dir"]
 
 TABLE_NAMES = (
@@ -65,36 +67,30 @@ def _normalize_nanos_ts(df: DataFrame, cols: tuple[str, ...] = ("ts",)) -> DataF
     return df
 
 
-# Session-scoped DataFrame cache: `spark.read.parquet` costs 60-85 ms
-# of driver-side listing + footer schema resolution PER CALL (measured
-# warm); queries that load a table twice pay it twice. The test tables
-# are immutable, so the analyzed (lazy) DataFrame is reusable — this is
-# the catalog-metadata cache any real engine keeps. Keyed by session id
-# so a restarted SparkSession re-resolves.
-_TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The analyzed (lazy) frame of table ``name`` under ``sf_dir``.
+    ``spark.read.parquet`` costs 60-85 ms of driver-side listing and
+    footer schema resolution per call (measured warm), and the tables
+    are immutable, so the frame is a ``table`` artifact of
+    :mod:`jhu_data_parser_spark.cache` keyed on ``(sf_dir, name)`` —
+    the catalog-metadata cache any real engine keeps."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    key = (id(spark), sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Deterministic timestamp semantics even under a HARNESS-OWNED
-    # session (the driver builds its own SparkSession without our
-    # engine config): the NTZ→timestamp normalization and every
-    # epoch-based output (unix_micros, epoch-second frames) are exact
-    # only when the session interprets wall-clock as UTC — the same
-    # convention the DuckDB oracle's naive timestamps use. Pinning it
-    # at the load choke point makes correctness independent of host TZ.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        df = _normalize_nanos_ts(df)
-    _TABLE_CACHE[key] = df
-    return df
+
+    def build() -> DataFrame:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Deterministic timestamp semantics even under a HARNESS-OWNED
+        # session (the driver builds its own SparkSession without our
+        # engine config): the NTZ→timestamp normalization and every
+        # epoch-based output (unix_micros, epoch-second frames) are exact
+        # only when the session interprets wall-clock as UTC — the same
+        # convention the DuckDB oracle's naive timestamps use. Pinning it
+        # at the load choke point makes correctness independent of host TZ.
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        return _normalize_nanos_ts(df) if name == "events" else df
+
+    return cache.get_or_build("table", spark, (sf_dir, name), build)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -36,13 +36,14 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import time
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from jhu_data_parser_spark import cache
 
 __all__ = [
     "read_events_stream",
@@ -55,35 +56,6 @@ __all__ = [
     "write_json_partitioned_stream",
     "write_daily_refresh_stream",
 ]
-
-
-_ATEXIT_DIRS: set = set()
-
-
-def _cleanup_at_exit(path: str) -> str:
-    """Register a scratch directory for removal at interpreter exit.
-    Output dirs back LAZY DataFrames returned to callers (deleting them
-    mid-process would fail pending reads), so they are reclaimed at
-    exit rather than leaked one-per-call (ADVICE r6)."""
-    import atexit
-
-    if not _ATEXIT_DIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _ATEXIT_DIRS]
-        )
-    _ATEXIT_DIRS.add(path)
-    return path
-
-
-def _rmtree_now(path: str) -> None:
-    shutil.rmtree(path, ignore_errors=True)
-    _ATEXIT_DIRS.discard(path)
-
-
-def _tmpdir(kind: str) -> str:
-    """A fresh ``jdps_<kind>_*`` scratch dir: every stage, checkpoint
-    and sink dir of the streaming package is made here."""
-    return tempfile.mkdtemp(prefix=f"jdps_{kind}_")
 
 
 _STATE_PARTITIONS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
@@ -312,7 +284,7 @@ def _stage_symlinks(
     giant batch. The stream schema is the source's own."""
     parts = _parquet_parts(src)
     schema = spark.read.parquet(src).schema
-    stage = _tmpdir("stage")
+    stage = cache.scratch_dir("stage")
     for i in range(copies):
         for j, p in enumerate(parts):
             os.symlink(p, os.path.join(stage, f"part_{i}_{j:05d}.parquet"))
@@ -329,7 +301,7 @@ def _stage_chunks(spark: SparkSession, n_chunks: int, write_chunk) -> tuple:
     free, so ``maxFilesPerTrigger=1`` + availableNow processes exactly
     one chunk per micro-batch, oldest first. The stream schema is the
     staged files' own. Returns ``(stream, stage)``."""
-    stage = _tmpdir("stage")
+    stage = cache.scratch_dir("stage")
     now = time.time() - 1000
     for k in range(n_chunks):
         path = os.path.join(stage, f"chunk_{k:03d}.parquet")
@@ -383,7 +355,7 @@ def _run_stream(spark: SparkSession, writer: DataStreamWriter, stage: str) -> No
     deleted afterwards, also on failure: an availableNow run's
     checkpoint is dead weight once it exits, and nothing re-reads the
     staged input."""
-    ckpt = _tmpdir("ckpt")
+    ckpt = cache.scratch_dir("ckpt")
     try:
         with scoped_state_partitions(spark, input_path=stage):
             q = (
@@ -393,8 +365,8 @@ def _run_stream(spark: SparkSession, writer: DataStreamWriter, stage: str) -> No
             )
             q.awaitTermination()
     finally:
-        _rmtree_now(ckpt)
-        _rmtree_now(stage)
+        cache.remove_now(ckpt)
+        cache.remove_now(stage)
 
 
 def run_partials_stream(
@@ -421,7 +393,7 @@ def run_partials_stream(
     it and reads back identical rows), else a scratch dir kept until
     exit because it backs the returned lazy frame."""
     if work_dir is None:
-        root = _cleanup_at_exit(_tmpdir("sink"))
+        root = cache.scratch_dir("sink")
     else:
         root = os.path.join(work_dir, "sinks")
         os.makedirs(root, exist_ok=True)
@@ -470,9 +442,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> Dat
     is a landing prefix that grows; availableNow processes the backlog in
     bounded batches and exits. ``copies`` as in :func:`_stage_symlinks`.
     The caller runs the stream, so its stage dir is removed at exit."""
-    stream, stage = _events_stream(spark, sf_dir, copies)
-    _cleanup_at_exit(stage)
-    return stream
+    return _events_stream(spark, sf_dir, copies)[0]
 
 
 def daily_counts(events: DataFrame, watermark: str = "2 days") -> DataFrame:
@@ -533,7 +503,7 @@ def run_dedup_stream(
     run so the (vanilla) session is left untouched."""
     ev, stage = _events_stream(spark, sf_dir, copies=copies)
     deduped = ev.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
-    out_dir = _cleanup_at_exit(_tmpdir("sink"))
+    out_dir = cache.scratch_dir("sink")
     provider_key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(provider_key, None)
     use_rocksdb = _rocksdb_provider_available(spark)
@@ -674,7 +644,7 @@ def run_stream_stream_join(
     # Row-per-match output is unbounded in the data (same memory-sink
     # hazard the 100× probe caught on the dedup stream) — land it as
     # files, the production sink shape.
-    out_dir = _cleanup_at_exit(_tmpdir("sink"))
+    out_dir = cache.scratch_dir("sink")
     writer = (
         joined.writeStream.format("parquet")
         .option("path", out_dir)
@@ -693,7 +663,7 @@ def write_json_partitioned_stream(
     ``event_type=<v>/`` directories. Returns the RUNNING query, so a
     default checkpoint is removed at exit, not after the run."""
     if checkpoint_dir is None:
-        checkpoint_dir = _cleanup_at_exit(_tmpdir("ckpt"))
+        checkpoint_dir = cache.scratch_dir("ckpt")
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").partitionBy("event_type").json(out_dir)
@@ -722,7 +692,7 @@ def write_daily_refresh_stream(
     from jhu_data_parser_spark.sink import overwrite_partitions
 
     if checkpoint_dir is None:
-        checkpoint_dir = _cleanup_at_exit(_tmpdir("ckpt"))
+        checkpoint_dir = cache.scratch_dir("ckpt")
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         withday = batch_df.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
@@ -1048,7 +1018,7 @@ def run_ivfpq_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     union — the shared oracle gates all three. The segment-count drop
     is pinned in pytest."""
     index, coarse, books, emb = _ivfpq_append_segments(spark, sf_dir)
-    compact_dir = _cleanup_at_exit(_tmpdir("sink"))
+    compact_dir = cache.scratch_dir("sink")
     index.write.mode("overwrite").partitionBy("cell").parquet(compact_dir)
     compacted = spark.read.parquet(compact_dir).select(
         *[F.col(c).cast("long").alias(c) for c in index.columns]
@@ -2070,7 +2040,7 @@ def run_delta_append_stream(
 
     stream, stage = _lake_event_chunks(spark, sf_dir, n_chunks)
     if table is None:
-        table = _cleanup_at_exit(_tmpdir("sink"))
+        table = cache.scratch_dir("sink")
 
     def _batch(bdf: DataFrame, batch_id: int) -> None:
         write_delta(
@@ -2113,9 +2083,9 @@ def run_delta_cdf_merge_stream(
     )
     from jhu_data_parser_spark.sources.tables import load_table
 
-    src_table = _cleanup_at_exit(_tmpdir("sink"))
+    src_table = cache.scratch_dir("sink")
     if results is None:
-        results = _cleanup_at_exit(_tmpdir("sink"))
+        results = cache.scratch_dir("sink")
     base = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice", "l_quantity"
     )
@@ -2208,7 +2178,7 @@ def run_iceberg_append_stream(
 
     stream, stage = _lake_event_chunks(spark, sf_dir, n_chunks)
     if table is None:
-        table = _cleanup_at_exit(_tmpdir("sink"))
+        table = cache.scratch_dir("sink")
         os.rmdir(table)  # write_iceberg creates the tree itself
 
     def _batch(bdf: DataFrame, batch_id: int) -> None:

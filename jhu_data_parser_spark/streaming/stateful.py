@@ -38,11 +38,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from jhu_data_parser_spark import cache
 from jhu_data_parser_spark.streaming.jobs import (
     _parquet_parts,
     _run_to_memory,
     _stage_symlinks,
-    _tmpdir,
 )
 
 __all__ = [
@@ -289,7 +289,7 @@ def _sentinel_events_stream(spark: SparkSession, sf_dir: str) -> tuple:
             for c in raw.columns
         ]
     )
-    tmp_out = _tmpdir("sentinel")
+    tmp_out = cache.scratch_dir("sentinel")
     sentinel.coalesce(1).write.mode("overwrite").parquet(tmp_out)
     part = glob.glob(os.path.join(tmp_out, "part-*.parquet"))[0]
     # No ``.parquet`` suffix: the file source still reads it, but the
@@ -297,7 +297,7 @@ def _sentinel_events_stream(spark: SparkSession, sf_dir: str) -> tuple:
     # which counts ``*.parquet`` parts) leaves the punctuation record
     # out — one more file would add a state partition per operator.
     shutil.move(part, os.path.join(stage, "sentinel"))
-    shutil.rmtree(tmp_out, ignore_errors=True)
+    cache.remove_now(tmp_out)
     return _normalize_nanos_ts(stream), stage
 
 

@@ -79,7 +79,7 @@ def main() -> None:
             n_planes=_G_PLANES,
             bands=_G_BANDS,
             seed=_G_SEED,
-            variant=f"m100x_{label}",
+            cache_tag=f"m100x_{label}",
             src_buckets=sb,
         )
         build = time.perf_counter() - t0

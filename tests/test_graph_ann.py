@@ -1,6 +1,6 @@
 """Graph-ANN operator properties: unit-quantization monotonicity,
 build determinism and fanout contract, LSH-seeded beam behavior, and
-the index cache's variant separation (differently-filtered corpora
+the index cache's cache_tag separation (differently-filtered corpora
 over the same files must not collide)."""
 
 from __future__ import annotations
@@ -98,7 +98,7 @@ def test_beam_search_monotone_and_bounded(spark):
 def test_graph_index_variant_keys_do_not_collide(spark):
     """Two differently-filtered corpora over the SAME parquet files
     with the same params must yield different cached indexes when
-    distinguished by variant — the documented cache-key invariant."""
+    distinguished by cache_tag — the cache's key rule."""
     e = load_table(spark, SF, "embeddings")
     p1 = sim.knn_graph_index(
         e.filter(F.col("vec_id") != 0),
@@ -106,7 +106,7 @@ def test_graph_index_variant_keys_do_not_collide(spark):
         m=4,
         n_planes=4,
         bands=2,
-        variant="t_ne0",
+        cache_tag="t_ne0",
     )
     p2 = sim.knn_graph_index(
         e.filter(F.col("vec_id") >= 5),
@@ -114,7 +114,7 @@ def test_graph_index_variant_keys_do_not_collide(spark):
         m=4,
         n_planes=4,
         bands=2,
-        variant="t_ge5",
+        cache_tag="t_ge5",
     )
     assert p1 != p2
     n1 = spark.read.parquet(p1).count()
@@ -122,7 +122,7 @@ def test_graph_index_variant_keys_do_not_collide(spark):
     assert n1 != n2 or set(
         r.src for r in spark.read.parquet(p1).collect()
     ) != set(r.src for r in spark.read.parquet(p2).collect())
-    # cache hit: same variant returns the same path without a rebuild
+    # cache hit: same cache_tag returns the same path without a rebuild
     assert (
         sim.knn_graph_index(
             e.filter(F.col("vec_id") != 0),
@@ -130,7 +130,7 @@ def test_graph_index_variant_keys_do_not_collide(spark):
             m=4,
             n_planes=4,
             bands=2,
-            variant="t_ne0",
+            cache_tag="t_ne0",
         )
         == p1
     )
@@ -141,9 +141,7 @@ def test_graph_index_append_stream_equals_batch_and_idempotent(spark):
     graph exactly (the NSW insertion rule makes node edges a function
     of earlier ids), and re-running over the same work dir must not
     duplicate appends (_SUCCESS-gated idempotence)."""
-    import tempfile
-
-    from jhu_data_parser_spark.operators.similarity import _rmtree_at_exit
+    from jhu_data_parser_spark import cache
     from jhu_data_parser_spark.plans.pipeline20 import (
         sim_graph_arrival_edges,
     )
@@ -152,8 +150,7 @@ def test_graph_index_append_stream_equals_batch_and_idempotent(spark):
     )
 
     batch = sorted(map(tuple, sim_graph_arrival_edges(spark, SF).collect()))
-    wd = tempfile.mkdtemp(prefix="jdps_test_gidx_")
-    _rmtree_at_exit(wd)
+    wd = cache.scratch_dir("test_gidx")
     s1 = sorted(
         map(
             tuple,
@@ -284,7 +281,7 @@ def test_stale_index_names_missing_ids_and_index(spark):
     full = e.filter(F.col("vec_id") != 0)
     half = e.filter((F.col("vec_id") % 2 == 0) & (F.col("vec_id") != 0))
     path = sim.knn_graph_index(
-        full, dim=64, m=4, n_planes=4, bands=2, variant="t_stale"
+        full, dim=64, m=4, n_planes=4, bands=2, cache_tag="t_stale"
     )
     qq = sim.quantize_unit_vectors(e.filter(F.col("vec_id") == 0))
     with pytest.raises(sim.StaleIndexError, match=re.escape(path)):

@@ -1814,9 +1814,11 @@ def test_ivf_index_cache_cleans_replaced_dirs(spark, tmp_path):
     superseded index directory (no per-rebuild disk leak), and
     fingerprints with unresolvable entries must never be cached."""
     import os
+    import shutil
 
     import numpy as np
 
+    from jhu_data_parser_spark import cache
     from jhu_data_parser_spark.operators import similarity as sim
 
     def write(seed):
@@ -1842,9 +1844,16 @@ def test_ivf_index_cache_cleans_replaced_dirs(spark, tmp_path):
     assert not os.path.exists(path1)  # superseded dir reclaimed
     assert os.path.isdir(path2)
 
-    assert sim._fingerprint_cacheable((("f", 1, 2),))
-    assert not sim._fingerprint_cacheable((("f", None, None),))
-    assert not sim._fingerprint_cacheable(())
+    # the key rule: every file stats -> a (uri, mtime, size) key; a
+    # vanished file or a frame with no files -> None (never cached)
+    fp = cache.fingerprint(df2)
+    assert fp and all(m is not None and sz is not None for (_, m, sz) in fp)
+    gone = str(tmp_path / "gone.parquet")
+    spark.range(3).write.parquet(gone)
+    df_gone = spark.read.parquet(gone)
+    shutil.rmtree(gone)
+    assert cache.fingerprint(df_gone) is None
+    assert cache.fingerprint(spark.range(3), tag="t") is None
 
 
 def test_scd2_incremental_matches_rebuild_and_prunes(spark, tmp_path):
@@ -2123,7 +2132,7 @@ def test_probe_cache_plain_scan_guard(spark, tmp_path):
     must refuse to cache any frame whose lineage is more than a bare
     scan (a filtered subset over the same files must not inherit the
     full-corpus verdict — ADVICE r6)."""
-    from jhu_data_parser_spark.operators.dedup import _is_plain_scan
+    from jhu_data_parser_spark.cache import _is_plain_scan
 
     p = str(tmp_path / "docs.parquet")
     spark.createDataFrame(
@@ -2168,10 +2177,11 @@ def test_ivf_capacity_eviction_defers_rmtree(spark, tmp_path, monkeypatch):
 
     import numpy as np
 
+    from jhu_data_parser_spark import cache
     from jhu_data_parser_spark.operators import similarity as sim
 
-    monkeypatch.setattr(sim, "_IVF_INDEX_CACHE_MAX", 1)
-    monkeypatch.setattr(sim, "_IVF_INDEX_CACHE", {})
+    monkeypatch.setitem(cache._BOUNDS, "ivf_index", 1)
+    monkeypatch.setitem(cache._ENTRIES, "ivf_index", {})
 
     def write(name, seed):
         rng = np.random.RandomState(seed)
@@ -2189,7 +2199,7 @@ def test_ivf_capacity_eviction_defers_rmtree(spark, tmp_path, monkeypatch):
     path2, _ = sim.ivf_build_index(df2, n_centroids=4)  # evicts index 1
     assert path2 != path1
     assert os.path.isdir(path1)            # NOT deleted mid-process
-    assert path1 in sim._ATEXIT_RMTREE     # reclaimed at exit instead
+    assert path1 in cache._AT_EXIT         # reclaimed at exit instead
     assert pending.count() == 40           # pending query still works
 
 

@@ -126,7 +126,7 @@ def test_graph_hop_join_prunes_edge_partitions(spark):
         m=4,
         n_planes=4,
         bands=2,
-        variant="t_dpp",
+        cache_tag="t_dpp",
         src_buckets=8,
     )
     # the layout on disk IS the src-keyed one the docstring promises
