@@ -32,8 +32,6 @@ __all__ = [
     "exact_dedup_groups",
     "connected_components",
     "connected_components_contraction",
-    "token_shingles",
-    "minhash_signature",
     "minhash_signature_fast",
     "minhash_candidates",
     "exact_collapse",
@@ -96,58 +94,14 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def token_shingles(col: Column | str, k: int = 3) -> Column:
-    """k-token shingles as strings: contiguous token windows joined by a
-    separator. Built with sequence + transform + slice — native, no UDF,
-    no explode (the array stays inside the row)."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks = F.split(F.lower(c), r"\s+")
-    n = F.size(toks)
-    # positions 1..n-k+1 (1-based for slice); short docs get the whole doc
-    # as a single shingle.
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - F.lit(k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature, K hashes in one pass.
-
-    Each shingle string is hashed ONCE (xxhash64 of the bytes); the K
-    permutation hashes derive from that long via per-slot salted 8-byte
-    re-hashes (xxhash64(h ⊕ salt_j)) — the standard one-hash-many-mixes
-    MinHash construction. Versus hashing the string K times this cuts
-    byte-hashing work by ~K× (measured 4.9s → sub-second on 5k docs for
-    K=64). Single ``aggregate`` + ``zip_with`` keeps it one expression
-    pass: no intermediate array per hash function, no shuffle, no UDF.
-    Deterministic across runs and partitionings."""
-    # Distinct odd salts (golden-ratio multiples, truncated to long range).
-    salts = F.array(
-        *[F.lit((j * 0x9E3779B97F4A7C15 + 1) & 0x7FFFFFFFFFFFFFFF) for j in range(num_hashes)]
-    )
-    hashes = F.transform(shingles, lambda s: F.xxhash64(s))
-    init = F.array_repeat(F.lit(2**63 - 1), num_hashes)
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc, salts, lambda a, c: F.least(a, F.xxhash64(h.bitwiseXOR(c)))
-        ),
-    )
-
-
 def minhash_signature_fast(
     text_col: str, num_hashes: int = 64, shingle_k: int = 3
 ) -> Column:
     """Arrow-vectorized MinHash signature (pandas UDF + numpy).
 
-    Same construction as :func:`minhash_signature` (one 64-bit hash per
-    shingle, K splitmix64 mixes, column-wise min) but computed in numpy,
-    with two measured hot-loop savings over the naive form:
+    One 64-bit hash per k-token shingle, K splitmix64 mixes,
+    column-wise min — computed in numpy, with two measured hot-loop
+    savings over the naive form:
 
     - shingle hashes come from ONE crc32 per token (zlib, C speed)
       combined positionally in numpy — no k-token shingle strings are
@@ -227,7 +181,6 @@ def minhash_candidates(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_k: int = 3,
-    use_arrow_udf: bool = True,
     spread: bool = True,
 ) -> DataFrame:
     """LSH candidate pairs: equal band-hash in any band, each pair
@@ -255,10 +208,7 @@ def minhash_candidates(
     membership and no ``distinct()`` exchange over pair ids exists.
     """
     rows_per_band = num_hashes // bands
-    if use_arrow_udf:
-        sig = minhash_signature_fast(text_col, num_hashes, shingle_k)
-    else:
-        sig = minhash_signature(token_shingles(text_col, shingle_k), num_hashes)
+    sig = minhash_signature_fast(text_col, num_hashes, shingle_k)
     # spread=False: callers whose input is ALREADY cores-spread (the
     # exact_collapse output) opt out — the probe here would otherwise
     # stack a second round-robin exchange on top of the first
@@ -1173,7 +1123,6 @@ def near_dup_pairs_minhash(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_k: int = 3,
-    use_arrow_udf: bool = True,
     max_intra_pairs: "int | None" = None,
 ) -> DataFrame:
     """Near-duplicate pairs: exact-duplicate COLLAPSE, then LSH
@@ -1207,7 +1156,6 @@ def near_dup_pairs_minhash(
         num_hashes,
         bands,
         shingle_k,
-        use_arrow_udf,
         spread=False,  # exact_collapse output is already cores-spread
     )
     # toks source: on the no-duplicates branch reps ≡ df row-for-row but

@@ -1660,12 +1660,11 @@ def knn_graph_index(
 
     The edge table is written ``partitionBy(src_pt{N})`` with
     ``src_pt{N} = pmod(src, src_buckets)`` (the bucket count rides in
-    the COLUMN NAME so the hop join can never tag the frontier with a
+    the COLUMN NAME so a fetch can never bucket the frontier with a
     mismatched modulus) — the src-keyed layout that lets every
-    per-hop frontier join prune file groups: the beam's ≤ beam-row id
-    list is broadcast, the hop join is equi on
-    ``(src_pt{N}, src)``, and Spark's broadcast-reuse dynamic partition
-    pruning turns the frontier into a planning-time ``PartitionFilters``
+    per-hop adjacency fetch prune file groups: :func:`_fetch_adjacency`
+    knows the frontier's buckets driver-side and filters the partition
+    column with a literal ``isin``, a planning-time ``PartitionFilters``
     entry on the edge scan (plan-pinned in tests). At 100 TB the hop
     then reads O(beam) partitions of an n·m-row table instead of the
     whole table. ``src_buckets=0`` writes the flat layout."""
@@ -1677,9 +1676,9 @@ def knn_graph_index(
         )
         if src_buckets > 0:
             # the bucket count rides IN the column name (src_pt16): the
-            # hop join derives it from the read-back schema, so a caller
-            # can never tag the frontier with a mismatched modulus (which
-            # would silently drop edges from every hop)
+            # adjacency fetch derives it from the read-back schema, so a
+            # caller can never bucket the frontier with a mismatched
+            # modulus (which would silently drop edges from every hop)
             pt = f"src_pt{src_buckets}"
             edges.withColumn(
                 pt, F.pmod(F.col("src"), F.lit(src_buckets)).cast("int")
@@ -1707,41 +1706,6 @@ def read_graph_index(spark, path: str) -> DataFrame:
     )
     schema = "src long, dst long" + (f", {pt} int" if pt else "")
     return spark.read.schema(schema).parquet(path)
-
-
-def _edges_hop(
-    edges: DataFrame,
-    frontier: DataFrame,
-    keep: tuple = (),
-) -> DataFrame:
-    """One graph hop: join the (broadcast) frontier's ``src`` ids
-    against the edge table, returning the reached ``dst`` ids (plus
-    ``keep`` passthrough columns, e.g. ``query_id`` in batch serving).
-    When the edge table carries a ``src_pt{N}`` partition column
-    (:func:`knn_graph_index`'s src-keyed layout; the bucket count N is
-    read from the COLUMN NAME, so the frontier's modulus can never
-    silently mismatch the layout's) the join is equi on
-    ``(src_pt{N}, src)`` — the partition-column key lets
-    broadcast-reuse dynamic partition pruning rewrite the edge scan's
-    ``PartitionFilters`` from the frontier, so each hop reads O(beam)
-    file groups instead of the whole edge table. Shared by the single-
-    and batch-query searches so the pruned shape cannot diverge."""
-    import re
-
-    pt = next(
-        (c for c in edges.columns if re.fullmatch(r"src_pt\d+", c)), None
-    )
-    if pt is not None:
-        nb = int(pt[len("src_pt") :])
-        f = frontier.withColumn(
-            pt, F.pmod(F.col("src"), F.lit(nb)).cast("int")
-        )
-        keys = [pt, "src"]
-    else:
-        f, keys = frontier, ["src"]
-    return edges.join(F.broadcast(f), keys).select(
-        *keep, F.col("dst").alias("id")
-    )
 
 
 # ---------------------------------------------------------------------------

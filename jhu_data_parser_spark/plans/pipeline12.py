@@ -641,7 +641,11 @@ def source_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     stage = cache.get_or_build("binsrc", docs, (), build)
-    files = spark.read.format("binaryFile").load(os.path.join(stage, "*.txt"))
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.txt")
+        .load(stage)
+    )
     return files.select(
         F.regexp_extract(F.col("path"), r"doc_(\d+)\.txt$", 1)
         .cast("long")

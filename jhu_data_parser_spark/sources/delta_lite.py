@@ -10,7 +10,10 @@ Avro codec:
 - data files are ordinary parquet written by a DISTRIBUTED Spark job
   into a staging dir, then moved into the table dir by the driver —
   exactly Delta's execution model (executors write data, the driver
-  commits metadata);
+  commits metadata). Staging, footer stats, range skipping, the
+  touched-file DML scan and the commit claim are the copy-on-write
+  core shared with Iceberg-lite (``table_files.py``); this module owns
+  the log encoding and the conflict rules;
 - ``_delta_log/{version:020d}.json`` holds one action per line:
   ``protocol`` / ``metaData`` (with Spark's own schemaString) on the
   first commit, ``add`` entries per data file, ``remove`` entries on
@@ -58,16 +61,28 @@ per-row change types.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from jhu_data_parser_spark.sources.table_files import (
+    claim,
+    delete_rewrite,
+    evolve_schema,
+    footer_stats,
+    merge_rewrite,
+    range_may_match,
+    stage_files,
+    touched_files,
+)
 
 _LOG_DIR = "_delta_log"
 _CHECKPOINT_INTERVAL = 10
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 class ConcurrentWriteConflict(RuntimeError):
@@ -339,55 +354,15 @@ def _stats_value(v):
     return None
 
 
-def _file_stats(path: str) -> str | None:
+def _stats_json(footer) -> str:
     """Per-file stats for the ``add`` action (the protocol's ``stats``
     JSON string): numRecords + min/max/nullCount per top-level column,
-    AGGREGATED FROM THE PARQUET FOOTER row-group statistics — a
-    metadata-only read at commit time, never a second data pass.
-    String/binary columns are skipped (parquet writers may truncate
-    their statistics; a possibly-inexact bound must never skip a
-    file), as are columns whose footer lacks min/max."""
-    import pyarrow.parquet as pq
-
-    try:
-        md = pq.ParquetFile(path).metadata
-    except Exception:
-        return None
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    skip: set = set()
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if "." in name or name in skip:
-                continue  # nested leaves: file-level stats are top-level
-            st = col.statistics
-            if (
-                st is None
-                or not st.has_min_max
-                or st.physical_type == "BYTE_ARRAY"
-                or st.physical_type == "FIXED_LEN_BYTE_ARRAY"
-            ):
-                skip.add(name)
-                continue
-            lo, hi = _stats_value(st.min), _stats_value(st.max)
-            if lo is None or hi is None:
-                skip.add(name)
-                continue
-            mins[name] = lo if name not in mins else min(mins[name], lo)
-            maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-            if st.has_null_count:
-                nulls[name] = nulls.get(name, 0) + st.null_count
-    for name in skip:
-        mins.pop(name, None)
-        maxs.pop(name, None)
-        nulls.pop(name, None)
+    aggregated from the parquet FOOTER at commit time (metadata-only,
+    never a second data pass). String/binary columns get none."""
+    mins, maxs, nulls = footer_stats(footer, lambda _col, v: _stats_value(v))
     return json.dumps(
         {
-            "numRecords": md.num_rows,
+            "numRecords": footer.num_rows,
             "minValues": mins,
             "maxValues": maxs,
             "nullCount": nulls,
@@ -443,74 +418,45 @@ def _file_may_match(add: dict, conjuncts: list[tuple]) -> bool:
         v = _stats_value(value)
         if v is None or col not in mins or col not in maxs:
             continue
-        lo, hi = mins[col], maxs[col]
-        if op in (">", ">="):
-            if (hi < v) or (op == ">" and hi == v):
-                return False
-        elif op in ("<", "<="):
-            if (lo > v) or (op == "<" and lo == v):
-                return False
-        elif op in ("=", "=="):
-            if v < lo or v > hi:
-                return False
-        else:
-            raise ValueError(f"delta-lite: unsupported skip op {op!r}")
+        if not range_may_match(mins[col], maxs[col], op, v):
+            return False
     return True
 
 
-def _partition_values_from_rel(rel: str) -> dict[str, str | None]:
-    """Parse Hive-style ``col=value/`` components of a relative data
-    file path into the add action's ``partitionValues`` (unescaped;
-    the Hive null sentinel maps to JSON null per the protocol)."""
-    from urllib.parse import unquote
-
-    values: dict[str, str | None] = {}
-    for comp in rel.split(os.sep)[:-1]:
-        if "=" not in comp:
-            raise ValueError(
-                f"delta-lite: non-partition dir {comp!r} in staged layout"
-            )
-        k, _, v = comp.partition("=")
-        values[unquote(k)] = None if v == _HIVE_NULL else unquote(v)
-    return values
+def _schema(state: _Snapshot) -> StructType:
+    return StructType.fromJson(json.loads(state.schema_string))
 
 
-def _evolve_schema(
-    committed: StructType, incoming: StructType, allow: bool
-) -> StructType | None:
-    """Schema check/evolution for a commit against the committed
-    schema. Same fields → None (no metaData re-emit). New TRAILING
-    fields with ``allow`` (mergeSchema) → the widened schema (old
-    files read the new columns as null — the parquet missing-column
-    semantics Delta itself relies on). Anything else — a type change,
-    a dropped column, new columns without ``allow`` — raises: schema
-    drift must never be silent."""
-    have = {f.name: f for f in committed.fields}
-    new_fields = []
-    for f in incoming.fields:
-        if f.name in have:
-            if f.dataType != have[f.name].dataType:
-                raise ValueError(
-                    f"delta-lite: column {f.name!r} type "
-                    f"{f.dataType.simpleString()} != committed "
-                    f"{have[f.name].dataType.simpleString()}"
-                )
-        else:
-            new_fields.append(f)
-    missing = [n for n in have if n not in {f.name for f in incoming.fields}]
-    if missing:
-        raise ValueError(
-            f"delta-lite: commit missing committed columns {missing}"
-        )
-    if not new_fields:
-        return None
-    if not allow:
-        raise ValueError(
-            "delta-lite: new columns "
-            f"{[f.name for f in new_fields]} require merge_schema=True"
-        )
-    out = StructType(list(committed.fields) + new_fields)
-    return out
+def _metadata_action(schema: StructType, parts: list, config: dict) -> dict:
+    return {
+        "metaData": {
+            "id": uuid.uuid4().hex,
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": schema.json(),
+            "partitionColumns": parts,
+            "configuration": config,
+        }
+    }
+
+
+def _read_files(
+    spark: SparkSession, table: str, state: _Snapshot, rels: list[str]
+) -> DataFrame:
+    """The given data files under the committed schema; partitioned
+    tables read with ``basePath`` so the Hive layout reconstructs the
+    partition columns."""
+    reader = spark.read.schema(_schema(state))
+    if state.partition_columns:
+        reader = reader.option("basePath", table)
+    return reader.parquet(*[os.path.join(table, p) for p in rels])
+
+
+def _record_counts(state: _Snapshot) -> dict[str, int]:
+    return {
+        p: json.loads(a["stats"]).get("numRecords")
+        for p, a in state.active.items()
+        if a.get("stats")
+    }
 
 
 def write_delta(
@@ -568,9 +514,6 @@ def write_delta(
     Every ``_CHECKPOINT_INTERVAL`` versions the commit also writes the
     checkpoint parquet + ``_last_checkpoint`` pointer, bounding every
     later replay to the log tail."""
-    import shutil
-    import tempfile
-
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode {mode!r}")
     if remove_paths and mode != "append":
@@ -589,10 +532,8 @@ def write_delta(
     evolved: StructType | None = None
     if current is not None:
         prev_state = _replay(table, current)
-        evolved = _evolve_schema(
-            StructType.fromJson(json.loads(prev_state.schema_string)),
-            spark_df.schema,
-            merge_schema,
+        evolved = evolve_schema(
+            _schema(prev_state), spark_df.schema, merge_schema
         )
         committed_parts = prev_state.partition_columns
         if partition_by is not None and list(partition_by) != committed_parts:
@@ -620,8 +561,6 @@ def write_delta(
     # every commit validates the incoming rows — one limit(1) probe per
     # constraint over the input frame (Delta folds this into the write
     # job; the lite layer pays a probe scan and stays loud)
-    from pyspark.sql import functions as F
-
     for key in sorted(config):
         if not key.startswith("delta.constraints."):
             continue
@@ -653,57 +592,36 @@ def write_delta(
             "against the current snapshot and retry"
         )
 
-    stage = tempfile.mkdtemp(prefix="jdps_delta_stage_")
-    try:
-        writer = spark_df.write.mode("overwrite")
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(stage)
-        staged: list[str] = []
-        for root, _dirs, files in os.walk(stage):
-            for f in files:
-                if f.endswith(".parquet"):
-                    staged.append(
-                        os.path.relpath(os.path.join(root, f), stage)
-                    )
-        adds = []
-        for i, rel in enumerate(sorted(staged)):
-            part_dir = os.path.dirname(rel)
-            name = f"part-{i:05d}-{uuid.uuid4().hex}-v{version}.parquet"
-            rel_dst = os.path.join(part_dir, name) if part_dir else name
-            dst = os.path.join(table, rel_dst)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.move(os.path.join(stage, rel), dst)
-            add = {
-                "path": rel_dst,
-                "partitionValues": _partition_values_from_rel(rel_dst),
-                "size": os.path.getsize(dst),
-                "modificationTime": int(os.path.getmtime(dst) * 1000),
+    staged = stage_files(
+        spark_df,
+        table,
+        parts,
+        lambda i, part_dir: os.path.join(
+            part_dir, f"part-{i:05d}-{uuid.uuid4().hex}-v{version}.parquet"
+        ),
+    )
+    adds = [
+        {
+            "add": {
+                "path": f.path,
+                "partitionValues": f.partition,
+                "size": f.size,
+                "modificationTime": int(
+                    os.path.getmtime(os.path.join(table, f.path)) * 1000
+                ),
                 "dataChange": data_change,
+                "stats": _stats_json(f.footer),
             }
-            stats = _file_stats(dst)
-            if stats is not None:
-                add["stats"] = stats
-            adds.append({"add": add})
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        }
+        for f in staged
+    ]
 
     actions: list[dict] = []
     if version == 0:
         actions.append(
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
         )
-        actions.append(
-            {
-                "metaData": {
-                    "id": uuid.uuid4().hex,
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": spark_df.schema.json(),
-                    "partitionColumns": parts,
-                    "configuration": config,
-                }
-            }
-        )
+        actions.append(_metadata_action(spark_df.schema, parts, config))
     elif mode == "overwrite":
         assert prev_state is not None
         for pth in sorted(prev_state.active):
@@ -714,17 +632,7 @@ def write_delta(
         # schema evolution: the commit re-emits metaData with the
         # widened schema; files from earlier commits read the new
         # trailing columns as null (parquet missing-column semantics)
-        actions.append(
-            {
-                "metaData": {
-                    "id": uuid.uuid4().hex,
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": evolved.json(),
-                    "partitionColumns": parts,
-                    "configuration": config,
-                }
-            }
-        )
+        actions.append(_metadata_action(evolved, parts, config))
     if remove_paths:
         active_now = prev_state.active if prev_state is not None else {}
         unknown = sorted(set(remove_paths) - set(active_now))
@@ -750,16 +658,13 @@ def write_delta(
     # or raises ConcurrentWriteConflict (overwrites, schema changes,
     # and rewrites of files the winner touched do NOT commute).
     while True:
-        tmp = _log_path(table, version) + f".{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as fh:
-            for a in actions:
-                fh.write(json.dumps(a) + "\n")
         try:
-            os.link(tmp, _log_path(table, version))
-            os.unlink(tmp)
+            claim(
+                _log_path(table, version),
+                lambda fh: fh.writelines(json.dumps(a) + "\n" for a in actions),
+            )
             break
         except FileExistsError:
-            os.unlink(tmp)
             new_state = _replay(table, version)
             if txn is not None and int(txn[1]) <= new_state.txns.get(
                 txn[0], -1
@@ -795,10 +700,8 @@ def write_delta(
             # was validated against the old one and must not commit
             # (Delta's MetadataChangedException discipline)
             try:
-                drift = _evolve_schema(
-                    StructType.fromJson(json.loads(new_state.schema_string)),
-                    spark_df.schema,
-                    False,
+                drift = evolve_schema(
+                    _schema(new_state), spark_df.schema, False
                 )
             except ValueError as exc:
                 raise ConcurrentWriteConflict(
@@ -850,28 +753,14 @@ def read_delta(
                 f"delta-lite: version {v} not in {sorted(known)}"
             )
     state = _replay(table, v)
-    schema = StructType.fromJson(json.loads(state.schema_string))
     active = state.active
     if skip:
         active = {
             p: a for p, a in active.items() if _file_may_match(a, skip)
         }
     if not active:
-        return spark.createDataFrame([], schema)
-    paths = [os.path.join(table, p) for p in sorted(active)]
-    reader = spark.read.schema(schema)
-    if state.partition_columns:
-        reader = reader.option("basePath", table)
-    return reader.parquet(*paths)
-
-
-def _rel_from_uri(uri: str, table: str) -> str:
-    """Map ``input_file_name()``'s URI back to the add-action relative
-    path (file:// scheme + percent-encoding stripped)."""
-    from urllib.parse import unquote, urlparse
-
-    p = unquote(urlparse(uri).path)
-    return os.path.relpath(p, os.path.abspath(table))
+        return spark.createDataFrame([], _schema(state))
+    return _read_files(spark, table, state, sorted(active))
 
 
 def merge_delta(
@@ -906,47 +795,24 @@ def merge_delta(
     re-delivery: an already-committed (appId, version) is recognized
     from the high-water mark BEFORE any join work and skipped.
     Returns the committed version."""
-    from pyspark.sql import functions as F
-
     v = latest_version(table)
     state = _replay(table, v)
     if txn is not None and int(txn[1]) <= state.txns.get(txn[0], -1):
         return v  # idempotent re-delivery: skip before any join work
-    schema = StructType.fromJson(json.loads(state.schema_string))
-    cols = schema.fieldNames()
-    if sorted(source.columns) != sorted(cols):
-        raise ValueError(
-            f"delta-lite: merge source columns {sorted(source.columns)} "
-            f"!= table columns {sorted(cols)}"
-        )
-    missing = [k for k in on if k not in cols]
-    if missing:
-        raise ValueError(f"delta-lite: merge keys not in table: {missing}")
-    target = read_delta(spark, table, version=v)
-    keys = source.select(*on)
-    touched = [
-        _rel_from_uri(r["_f"], table)
-        for r in target.withColumn("_f", F.input_file_name())
-        .join(keys, on, "left_semi")
-        .select("_f")
-        .distinct()
-        .collect()
-    ]
-    if touched:
-        reader = spark.read.schema(schema)
-        if state.partition_columns:
-            reader = reader.option("basePath", table)
-        kept = reader.parquet(
-            *[os.path.join(table, p) for p in sorted(touched)]
-        ).join(keys, on, "left_anti")
-        new_data = kept.select(*cols).unionByName(source.select(*cols))
-    else:
-        new_data = source.select(*cols)
+    touched, new_data = merge_rewrite(
+        table,
+        read_delta(spark, table, version=v),
+        source,
+        on,
+        _schema(state).fieldNames(),
+        _record_counts(state),
+        functools.partial(_read_files, spark, table, state),
+    )
     return write_delta(
         new_data,
         table,
         mode="append",
-        remove_paths=touched,
+        remove_paths=sorted(touched),
         txn=txn,
         read_version=v,
     )
@@ -968,47 +834,20 @@ def delete_delta(
     date range touches only that range's files. Files whose every row
     matches are dropped without a rewrite (remove-only). Returns the
     committed version."""
-    from pyspark.sql import functions as F
-
     v = latest_version(table)
     state = _replay(table, v)
-    schema = StructType.fromJson(json.loads(state.schema_string))
-    cols = schema.fieldNames()
-    candidates = read_delta(spark, table, version=v, skip=skip)
-    touched_rows = (
-        candidates.withColumn("_f", F.input_file_name())
-        .filter(F.expr(predicate))
-        .groupBy("_f")
-        .count()
-        .collect()
+    touched, survivors = delete_rewrite(
+        table,
+        read_delta(spark, table, version=v, skip=skip),
+        predicate,
+        _schema(state).fieldNames(),
+        _record_counts(state),
+        functools.partial(_read_files, spark, table, state),
     )
-    touched = {
-        _rel_from_uri(r["_f"], table): r["count"] for r in touched_rows
-    }
     if not touched:
         return v  # nothing matches: no commit (idempotent no-op)
-    sizes = {
-        p: json.loads(state.active[p]["stats"]).get("numRecords")
-        for p in touched
-        if state.active[p].get("stats")
-    }
-    # files fully covered by the delete need no rewrite — remove only
-    drop_whole = {p for p, n in sizes.items() if n == touched[p]}
-    rewrite = sorted(set(touched) - drop_whole)
-    if rewrite:
-        reader = spark.read.schema(schema)
-        if state.partition_columns:
-            reader = reader.option("basePath", table)
-        # survivors = rows the predicate does NOT positively match:
-        # a NULL predicate keeps the row (SQL DELETE semantics) — a
-        # bare ~expr would drop NULL rows from the rewrite silently
-        survivors = reader.parquet(
-            *[os.path.join(table, p) for p in rewrite]
-        ).filter(
-            ~F.coalesce(F.expr(predicate), F.lit(False))
-        ).select(*cols)
-    else:
-        survivors = spark.createDataFrame([], schema)
+    if survivors is None:  # every touched file matched in full
+        survivors = spark.createDataFrame([], _schema(state))
     return write_delta(
         survivors,
         table,
@@ -1036,34 +875,25 @@ def update_delta(
     partition column of a partitioned table is supported — rewritten
     rows land in their new partition dirs. No-match updates commit
     nothing. Returns the committed version."""
-    from pyspark.sql import functions as F
-
     v = latest_version(table)
     state = _replay(table, v)
-    schema = StructType.fromJson(json.loads(state.schema_string))
+    schema = _schema(state)
     cols = schema.fieldNames()
     unknown_cols = sorted(set(set_exprs) - set(cols))
     if unknown_cols:
         raise ValueError(
             f"delta-lite: update targets unknown columns {unknown_cols}"
         )
-    candidates = read_delta(spark, table, version=v, skip=skip)
     touched = sorted(
-        {
-            _rel_from_uri(r["_f"], table)
-            for r in candidates.withColumn("_f", F.input_file_name())
-            .filter(F.expr(predicate))
-            .select("_f")
-            .distinct()
-            .collect()
-        }
+        touched_files(
+            table,
+            read_delta(spark, table, version=v, skip=skip),
+            lambda d: d.filter(F.expr(predicate)),
+        )
     )
     if not touched:
         return v
-    reader = spark.read.schema(schema)
-    if state.partition_columns:
-        reader = reader.option("basePath", table)
-    rows = reader.parquet(*[os.path.join(table, p) for p in touched])
+    rows = _read_files(spark, table, state, touched)
     hit = F.coalesce(F.expr(predicate), F.lit(False))
     rewritten = rows.select(
         *[
@@ -1108,8 +938,6 @@ def optimize_delta(
     ``skip`` effective on EITHER column (multi-dimensional data
     skipping, the reason Z-order exists). Returns the committed
     version."""
-    from pyspark.sql import functions as F
-
     v = latest_version(table)
     state = _replay(table, v)
     if not state.active:
@@ -1194,7 +1022,6 @@ def read_delta_changes(
             "(cleaned up past a checkpoint?) — cannot diff"
         )
     state = _replay(table, v_hi)
-    schema = StructType.fromJson(json.loads(state.schema_string))
     per_version: list[tuple[int, list[str]]] = []
     for v in want:
         adds: list[str] = []
@@ -1213,22 +1040,16 @@ def read_delta_changes(
                 if "add" in a and a["add"].get("dataChange", True):
                     adds.append(a["add"]["path"])
         per_version.append((v, adds))
-    from pyspark.sql import functions as F
-
-    parts: list[DataFrame] = []
-    for v, adds in per_version:
-        if not adds:
-            continue
-        reader = spark.read.schema(schema)
-        if state.partition_columns:
-            reader = reader.option("basePath", table)
-        parts.append(
-            reader.parquet(*[os.path.join(table, p) for p in sorted(adds)])
-            .withColumn("_commit_version", F.lit(v).cast("long"))
+    parts = [
+        _read_files(spark, table, state, sorted(adds)).withColumn(
+            "_commit_version", F.lit(v).cast("long")
         )
+        for v, adds in per_version
+        if adds
+    ]
     if not parts:
         return spark.createDataFrame(
-            [], schema.add("_commit_version", "long")
+            [], _schema(state).add("_commit_version", "long")
         )
     out = parts[0]
     for p in parts[1:]:

@@ -40,10 +40,14 @@ precedent as the Delta-lite layer:
 
 Execution split mirrors the real thing (and Delta-lite): data files
 are written by a DISTRIBUTED Spark job; manifests and metadata are
-driver-side and metadata-sized. Commits claim
-``v{N}.metadata.json`` with an exclusive create (``O_CREAT|O_EXCL``)
-so two concurrent committers can never overwrite each other's
-metadata: blind appends retry against the winner's metadata,
+driver-side and metadata-sized. Staging, footer bounds, range
+pruning, the copy-on-write DELETE/MERGE scan and the commit claim are
+the shared core in ``table_files.py``; this module owns the metadata
+tree, partition transforms and conflict rules. Commits claim
+``v{N}.metadata.json`` with an exclusive atomic create (link(2) of a
+complete file) so two concurrent committers can never overwrite each
+other's metadata and a reader never sees a torn one: blind appends
+retry against the winner's metadata,
 overwrites and rewrites raise :class:`ConcurrentCommitError`
 (rewrites additionally pin the snapshot version they read — a commit
 landing during the rewrite job forces a loud recompute, the same
@@ -60,6 +64,7 @@ truth.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -71,6 +76,16 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from jhu_data_parser_spark.sources.table_files import (
+    claim,
+    delete_rewrite,
+    evolve_schema,
+    footer_stats,
+    merge_rewrite,
+    range_may_match,
+    stage_files,
+)
 
 _ADDED, _EXISTING, _DELETED = 1, 0, 2
 
@@ -348,6 +363,10 @@ def _spec_info(meta: dict) -> dict | None:
     }
 
 
+def _spec_key(spec: dict | None) -> tuple:
+    return (spec or {}).get("transform"), (spec or {}).get("source")
+
+
 def _transform_expr(spec: dict, spark_type: T.DataType) -> Column:
     """The partition transform as a Spark column expression over the
     SOURCE column — JVM-side for everything but ``bucket`` (whose
@@ -537,6 +556,39 @@ def _bound_decode(raw: bytes, ice_type: str):
     return struct.unpack(fmt, raw)[0]
 
 
+def _field(name: str, avro_type, field_id: int) -> dict:
+    return {"name": name, "type": avro_type, "field-id": field_id}
+
+
+def _optional(name: str, avro_type, field_id: int) -> dict:
+    return {
+        "name": name,
+        "type": ["null", avro_type],
+        "default": None,
+        "field-id": field_id,
+    }
+
+
+def _bounds_field(name: str, field_id: int) -> dict:
+    """``lower_bounds`` / ``upper_bounds``: an optional map<int, bytes>
+    (an Avro array of key/value records, spec field ids ``field_id``
+    to ``field_id + 2``)."""
+    kv = {
+        "type": "record",
+        "name": f"k{field_id + 1}_v{field_id + 2}",
+        "fields": [
+            _field("key", "int", field_id + 1),
+            _field("value", "bytes", field_id + 2),
+        ],
+    }
+    return {
+        "name": name,
+        "field-id": field_id,
+        "default": None,
+        "type": ["null", {"type": "array", "logicalType": "map", "items": kv}],
+    }
+
+
 def _manifest_entry_schema(part_field: tuple[str, str] | None) -> dict:
     """Avro schema for ``manifest_entry`` (spec: Manifests) with a
     typed partition struct. Field ids ride as ``field-id`` attributes
@@ -545,120 +597,28 @@ def _manifest_entry_schema(part_field: tuple[str, str] | None) -> dict:
     part_fields = []
     if part_field is not None:
         name, ice_type = part_field
-        part_fields.append(
-            {
-                "name": name,
-                "type": ["null", _avro_primitive(ice_type)],
-                "default": None,
-                "field-id": 1000,
-            }
-        )
+        part_fields.append(_optional(name, _avro_primitive(ice_type), 1000))
+    partition = {"type": "record", "name": "r102", "fields": part_fields}
+    data_file = {
+        "type": "record",
+        "name": "r2",
+        "fields": [
+            _field("file_path", "string", 100),
+            _field("file_format", "string", 101),
+            {"name": "partition", "field-id": 102, "type": partition},
+            _field("record_count", "long", 103),
+            _field("file_size_in_bytes", "long", 104),
+            _bounds_field("lower_bounds", 125),
+            _bounds_field("upper_bounds", 128),
+        ],
+    }
     return {
         "type": "record",
         "name": "manifest_entry",
         "fields": [
-            {"name": "status", "type": "int", "field-id": 0},
-            {
-                "name": "snapshot_id",
-                "type": ["null", "long"],
-                "default": None,
-                "field-id": 1,
-            },
-            {
-                "name": "data_file",
-                "field-id": 2,
-                "type": {
-                    "type": "record",
-                    "name": "r2",
-                    "fields": [
-                        {
-                            "name": "file_path",
-                            "type": "string",
-                            "field-id": 100,
-                        },
-                        {
-                            "name": "file_format",
-                            "type": "string",
-                            "field-id": 101,
-                        },
-                        {
-                            "name": "partition",
-                            "field-id": 102,
-                            "type": {
-                                "type": "record",
-                                "name": "r102",
-                                "fields": part_fields,
-                            },
-                        },
-                        {
-                            "name": "record_count",
-                            "type": "long",
-                            "field-id": 103,
-                        },
-                        {
-                            "name": "file_size_in_bytes",
-                            "type": "long",
-                            "field-id": 104,
-                        },
-                        {
-                            "name": "lower_bounds",
-                            "field-id": 125,
-                            "default": None,
-                            "type": [
-                                "null",
-                                {
-                                    "type": "array",
-                                    "logicalType": "map",
-                                    "items": {
-                                        "type": "record",
-                                        "name": "k126_v127",
-                                        "fields": [
-                                            {
-                                                "name": "key",
-                                                "type": "int",
-                                                "field-id": 126,
-                                            },
-                                            {
-                                                "name": "value",
-                                                "type": "bytes",
-                                                "field-id": 127,
-                                            },
-                                        ],
-                                    },
-                                },
-                            ],
-                        },
-                        {
-                            "name": "upper_bounds",
-                            "field-id": 128,
-                            "default": None,
-                            "type": [
-                                "null",
-                                {
-                                    "type": "array",
-                                    "logicalType": "map",
-                                    "items": {
-                                        "type": "record",
-                                        "name": "k129_v130",
-                                        "fields": [
-                                            {
-                                                "name": "key",
-                                                "type": "int",
-                                                "field-id": 129,
-                                            },
-                                            {
-                                                "name": "value",
-                                                "type": "bytes",
-                                                "field-id": 130,
-                                            },
-                                        ],
-                                    },
-                                },
-                            ],
-                        },
-                    ],
-                },
-            },
+            _field("status", "int", 0),
+            _optional("snapshot_id", "long", 1),
+            {"name": "data_file", "field-id": 2, "type": data_file},
         ],
     }
 
@@ -667,33 +627,13 @@ _MANIFEST_FILE_SCHEMA = {
     "type": "record",
     "name": "manifest_file",
     "fields": [
-        {"name": "manifest_path", "type": "string", "field-id": 500},
-        {"name": "manifest_length", "type": "long", "field-id": 501},
-        {"name": "partition_spec_id", "type": "int", "field-id": 502},
-        {
-            "name": "added_snapshot_id",
-            "type": ["null", "long"],
-            "default": None,
-            "field-id": 503,
-        },
-        {
-            "name": "added_data_files_count",
-            "type": ["null", "int"],
-            "default": None,
-            "field-id": 504,
-        },
-        {
-            "name": "existing_data_files_count",
-            "type": ["null", "int"],
-            "default": None,
-            "field-id": 505,
-        },
-        {
-            "name": "deleted_data_files_count",
-            "type": ["null", "int"],
-            "default": None,
-            "field-id": 506,
-        },
+        _field("manifest_path", "string", 500),
+        _field("manifest_length", "long", 501),
+        _field("partition_spec_id", "int", 502),
+        _optional("added_snapshot_id", "long", 503),
+        _optional("added_data_files_count", "int", 504),
+        _optional("existing_data_files_count", "int", 505),
+        _optional("deleted_data_files_count", "int", 506),
     ],
 }
 
@@ -729,20 +669,17 @@ def _load_metadata(table: str, version: int | None = None) -> dict:
 
 
 def _commit_metadata(table: str, meta: dict, version: int) -> None:
-    """Claim ``v{version}.metadata.json`` with an EXCLUSIVE create —
-    two committers computing the same version cannot overwrite each
-    other (one gets ``FileExistsError``, the caller arbitrates).
+    """Claim ``v{version}.metadata.json`` with an EXCLUSIVE atomic
+    create — two committers computing the same version cannot
+    overwrite each other (one gets ``FileExistsError``, the caller
+    arbitrates), and the file only ever appears complete.
     The version hint then advances best-effort-monotonically; it is
     advisory (HadoopCatalog convention) — the metadata chain is the
     truth."""
-    path = os.path.join(_meta_dir(table), f"v{version}.metadata.json")
-    fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-    try:
-        with os.fdopen(fd, "w") as fh:
-            json.dump(meta, fh)
-    except BaseException:
-        os.unlink(path)
-        raise
+    claim(
+        os.path.join(_meta_dir(table), f"v{version}.metadata.json"),
+        lambda fh: json.dump(meta, fh),
+    )
     try:
         cur = _hint_version(table)
     except (FileNotFoundError, ValueError):
@@ -769,25 +706,36 @@ def _write_avro_records(path: str, schema: dict, records: list) -> None:
     write_container(path, json.dumps(schema), records)
 
 
+def _snapshot(meta: dict, snapshot_id: int) -> dict:
+    snaps = meta.get("snapshots", [])
+    for s in snaps:
+        if s["snapshot-id"] == snapshot_id:
+            return s
+    known = [s["snapshot-id"] for s in snaps]
+    raise ValueError(f"iceberg-lite: snapshot {snapshot_id} not in {known}")
+
+
 def _snapshot_entries(table: str, meta: dict, snapshot_id: int) -> list[dict]:
     """All manifest entries reachable from the snapshot's manifest
     list, statuses preserved (driver-side, metadata-sized — the same
     split as real Iceberg planning)."""
-    snap = next(
-        (s for s in meta.get("snapshots", []) if s["snapshot-id"] == snapshot_id),
-        None,
-    )
-    if snap is None:
-        known = [s["snapshot-id"] for s in meta.get("snapshots", [])]
-        raise ValueError(
-            f"iceberg-lite: snapshot {snapshot_id} not in {known}"
-        )
+    snap = _snapshot(meta, snapshot_id)
     entries: list[dict] = []
     for mf in _read_avro_records(os.path.join(table, snap["manifest-list"])):
         entries.extend(
             _read_avro_records(os.path.join(table, mf["manifest_path"]))
         )
     return entries
+
+
+def _write_manifest_list(table: str, snapshot_id: int, manifests: list) -> str:
+    list_rel = os.path.join(
+        "metadata", f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro"
+    )
+    _write_avro_records(
+        os.path.join(table, list_rel), _MANIFEST_FILE_SCHEMA, manifests
+    )
+    return list_rel
 
 
 def _stage_data_files(
@@ -797,75 +745,59 @@ def _stage_data_files(
     spec: dict | None,
     snapshot_id: int,
 ) -> list[dict]:
-    """Distributed parquet write of the DataFrame, files moved into
-    ``data/`` with fresh names, one ADDED manifest entry per
-    non-empty file — partition values computed through the committed
-    TRANSFORM (staged under a throwaway ``__pt`` Hive layout so the
-    walk sees per-partition dirs while the data files keep every
-    source column, Iceberg semantics) and per-column bounds
-    aggregated from the parquet footers (no second data pass)."""
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    data_dir = os.path.join(table, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    stage = tempfile.mkdtemp(prefix="jdps_ice_stage_")
+    """Stage the rows as data files under ``data/`` (one distributed
+    write), one ADDED manifest entry per file: the partition value
+    comes through the committed TRANSFORM (staged under a throwaway
+    ``__pt`` Hive layout, so the dir names the value while the file
+    keeps every source column, Iceberg semantics) and per-column
+    bounds from the parquet footer, keyed by the spec's field ids and
+    binary-encoded per Appendix D (numeric columns only)."""
     if spec is not None:
-        src_spark_t = _spark_type(spec["source-type"])
-        writer = (
-            spark_df.withColumn("__pt", _transform_expr(spec, src_spark_t))
-            .write.mode("overwrite")
-            .partitionBy("__pt")
+        spark_df = spark_df.withColumn(
+            "__pt", _transform_expr(spec, _spark_type(spec["source-type"]))
         )
-    else:
-        writer = spark_df.write.mode("overwrite")
-    writer.parquet(stage)
+    staged = stage_files(
+        spark_df,
+        table,
+        ["__pt"] if spec is not None else [],
+        lambda i, _dir: os.path.join("data", f"{uuid.uuid4().hex}-{i:05d}.parquet"),
+    )
+    by_name = {f["name"]: (f["id"], f["type"]) for f in ice_schema["fields"]}
+
+    def encode(name, v):
+        f = by_name.get(name)
+        return v if f is not None and _bound_encode(v, f[1]) is not None else None
+
+    def bounds(values: dict) -> list | None:
+        return [
+            {"key": by_name[n][0], "value": _bound_encode(v, by_name[n][1])}
+            for n, v in sorted(values.items())
+        ] or None
 
     entries = []
-    idx = 0
-    for root, _dirs, files in os.walk(stage):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            src = os.path.join(root, f)
-            part_val = None
-            if spec is not None:
-                comp = os.path.relpath(root, stage)
-                raw = comp.split("=", 1)[1]
-                if raw == "__HIVE_DEFAULT_PARTITION__":
-                    part_val = None
-                else:
-                    part_val = _partition_value(raw, spec["part-type"])
-            md = pq.ParquetFile(src).metadata
-            if md.num_rows == 0:
-                continue  # empty task outputs never reach a manifest
-            name = f"{uuid.uuid4().hex}-{idx:05d}.parquet"
-            idx += 1
-            dst = os.path.join(data_dir, name)
-            lowers, uppers = _footer_bounds(md, ice_schema)
-            shutil.move(src, dst)
-            entries.append(
-                {
-                    "status": _ADDED,
-                    "snapshot_id": snapshot_id,
-                    "data_file": {
-                        "file_path": os.path.join("data", name),
-                        "file_format": "PARQUET",
-                        "partition": (
-                            {spec["name"]: part_val}
-                            if spec is not None
-                            else {}
-                        ),
-                        "record_count": md.num_rows,
-                        "file_size_in_bytes": os.path.getsize(dst),
-                        "lower_bounds": lowers,
-                        "upper_bounds": uppers,
-                    },
-                }
+    for f in staged:
+        lowers, uppers, _nulls = footer_stats(f.footer, encode)
+        partition = {}
+        if spec is not None:
+            raw = f.partition["__pt"]
+            partition[spec["name"]] = (
+                None if raw is None else _partition_value(raw, spec["part-type"])
             )
-    shutil.rmtree(stage, ignore_errors=True)
+        entries.append(
+            {
+                "status": _ADDED,
+                "snapshot_id": snapshot_id,
+                "data_file": {
+                    "file_path": f.path,
+                    "file_format": "PARQUET",
+                    "partition": partition,
+                    "record_count": f.footer.num_rows,
+                    "file_size_in_bytes": f.size,
+                    "lower_bounds": bounds(lowers),
+                    "upper_bounds": bounds(uppers),
+                },
+            }
+        )
     return entries
 
 
@@ -951,8 +883,7 @@ def write_iceberg(
             claimed = _parse_partition_by(
                 partition_by, _current_ice_schema(prev_meta)
             )
-            if spec is None or claimed["transform"] != spec["transform"] \
-                    or claimed["source"] != spec["source"]:
+            if _spec_key(claimed) != _spec_key(spec):
                 raise ValueError(
                     "iceberg-lite: table is partitioned by "
                     f"{(spec or {}).get('transform')}"
@@ -967,19 +898,7 @@ def write_iceberg(
             ]
         )
         if incoming != committed_spark:
-            from jhu_data_parser_spark.sources.delta_lite import (
-                _evolve_schema,
-            )
-
-            try:
-                widened = _evolve_schema(
-                    committed_spark, incoming, merge_schema
-                )
-            except ValueError as exc:
-                msg = str(exc)
-                if msg.startswith("delta-lite: "):
-                    msg = msg[len("delta-lite: ") :]
-                raise ValueError(f"iceberg-lite: {msg}") from exc
+            widened = evolve_schema(committed_spark, incoming, merge_schema)
             if widened is not None:
                 if mode != "append":
                     raise ValueError(
@@ -1027,23 +946,13 @@ def write_iceberg(
         if mode == "append" and prev_meta is not None:
             cur = prev_meta.get("current-snapshot-id", -1)
             if cur != -1:
-                snap = next(
-                    s
-                    for s in prev_meta["snapshots"]
-                    if s["snapshot-id"] == cur
-                )
+                snap = _snapshot(prev_meta, cur)
                 manifests.extend(
                     _read_avro_records(
                         os.path.join(table, snap["manifest-list"])
                     )
                 )
-
-        list_rel = os.path.join(
-            "metadata", f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro"
-        )
-        _write_avro_records(
-            os.path.join(table, list_rel), _MANIFEST_FILE_SCHEMA, manifests
-        )
+        list_rel = _write_manifest_list(table, snapshot_id, manifests)
 
         snapshots = list(prev_meta["snapshots"]) if prev_meta else []
         snapshots.append(
@@ -1117,10 +1026,7 @@ def write_iceberg(
                     f"iceberg-lite: version {version} at {table} "
                     "changed the schema concurrently with this append"
                 )
-            w_spec = _spec_info(winner)
-            if (w_spec or {}).get("transform") != (spec or {}).get(
-                "transform"
-            ) or (w_spec or {}).get("source") != (spec or {}).get("source"):
+            if _spec_key(_spec_info(winner)) != _spec_key(spec):
                 raise ConcurrentCommitError(
                     f"iceberg-lite: version {version} at {table} "
                     "changed the partition spec concurrently"
@@ -1132,52 +1038,9 @@ def write_iceberg(
                 e["snapshot_id"] = snapshot_id
 
 
-def _footer_bounds(md, ice_schema: dict):
-    """Per-column lower/upper bounds for a manifest entry, aggregated
-    from the parquet FOOTER row-group statistics (metadata-only; no
-    second data pass — the Delta-lite stats discipline, keyed by the
-    spec's field ids and binary-encoded per Appendix D). Numeric
-    columns only; a column missing stats in any row group gets no
-    bounds (a possibly-inexact bound must never prune a file)."""
-    by_name = {f["name"]: (f["id"], f["type"]) for f in ice_schema["fields"]}
-    mins: dict = {}
-    maxs: dict = {}
-    skip: set = set()
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if name not in by_name or name in skip:
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                skip.add(name)
-                continue
-            lo, hi = st.min, st.max
-            if _bound_encode(lo, by_name[name][1]) is None:
-                skip.add(name)
-                continue
-            mins[name] = lo if name not in mins else min(mins[name], lo)
-            maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-    lowers = [
-        {"key": by_name[n][0], "value": _bound_encode(v, by_name[n][1])}
-        for n, v in sorted(mins.items())
-        if n not in skip
-    ]
-    uppers = [
-        {"key": by_name[n][0], "value": _bound_encode(v, by_name[n][1])}
-        for n, v in sorted(maxs.items())
-        if n not in skip
-    ]
-    return (lowers or None), (uppers or None)
-
-
 def _partition_value(raw: str, ice_type: str):
-    """Typed partition value from the staged Hive dir component."""
-    from urllib.parse import unquote
-
-    raw = unquote(raw)
+    """Typed partition value from the (unescaped) staged Hive dir
+    component."""
     if ice_type == "long" or ice_type == "int":
         return int(raw)
     if ice_type == "double" or ice_type == "float":
@@ -1202,19 +1065,10 @@ def _entry_may_match(entry: dict, conjuncts: list, ice_schema: dict) -> bool:
         fid, ice_type = by_name[col]
         lo = _bound_decode(lowers.get(fid), ice_type)
         hi = _bound_decode(uppers.get(fid), ice_type)
-        if lo is None or hi is None:
-            continue
-        if op in (">", ">="):
-            if (hi < value) or (op == ">" and hi == value):
-                return False
-        elif op in ("<", "<="):
-            if (lo > value) or (op == "<" and lo == value):
-                return False
-        elif op in ("=", "=="):
-            if value < lo or value > hi:
-                return False
-        else:
-            raise ValueError(f"iceberg-lite: unsupported op {op!r}")
+        if lo is not None and hi is not None and not range_may_match(
+            lo, hi, op, value
+        ):
+            return False
     return True
 
 
@@ -1278,15 +1132,8 @@ def read_iceberg(
     if snapshot_id is not None:
         # time travel reads with the schema of WHEN: the snapshot's
         # recorded schema-id, not the (possibly evolved) current one
-        snap = next(
-            (
-                s
-                for s in meta.get("snapshots", [])
-                if s["snapshot-id"] == snapshot_id
-            ),
-            None,
-        )
-        if snap is not None and "schema-id" in snap:
+        snap = _snapshot(meta, snapshot_id)
+        if "schema-id" in snap:
             ice_schema = next(
                 (
                     s
@@ -1322,19 +1169,26 @@ def read_iceberg(
             e, bounds_filter, ice_schema
         ):
             continue
-        files.append(os.path.join(table, e["data_file"]["file_path"]))
+        files.append(e["data_file"]["file_path"])
     if not files:
         return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*sorted(files))
+    return _read_files(spark, table, schema, sorted(files))
 
 
-def _rel_from_uri(uri: str, table: str) -> str:
-    p = uri
-    if p.startswith("file:"):
-        p = p[len("file:") :]
-        while p.startswith("//"):
-            p = p[1:]
-    return os.path.relpath(p, os.path.abspath(table))
+def _read_files(
+    spark: SparkSession, table: str, schema: T.StructType, rels: list[str]
+) -> DataFrame:
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(table, p) for p in rels]
+    )
+
+
+def _record_counts(table: str, meta: dict) -> dict[str, int]:
+    return {
+        e["data_file"]["file_path"]: e["data_file"]["record_count"]
+        for e in _snapshot_entries(table, meta, meta["current-snapshot-id"])
+        if e["status"] != _DELETED
+    }
 
 
 def _rewrite_commit(
@@ -1369,8 +1223,7 @@ def _rewrite_commit(
     manifests = []
     if new_entries:
         manifests.append(_write_manifest(table, new_entries, spec))
-    cur = meta["current-snapshot-id"]
-    snap = next(s for s in meta["snapshots"] if s["snapshot-id"] == cur)
+    snap = _snapshot(meta, meta["current-snapshot-id"])
     removed = 0
     for mf in _read_avro_records(os.path.join(table, snap["manifest-list"])):
         m_entries = _read_avro_records(
@@ -1390,13 +1243,7 @@ def _rewrite_commit(
             for e in kept:
                 e["status"] = _EXISTING
             manifests.append(_write_manifest(table, kept, spec))
-
-    list_rel = os.path.join(
-        "metadata", f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro"
-    )
-    _write_avro_records(
-        os.path.join(table, list_rel), _MANIFEST_FILE_SCHEMA, manifests
-    )
+    list_rel = _write_manifest_list(table, snapshot_id, manifests)
     new_meta = dict(meta)
     new_meta["last-updated-ms"] = int(time.time() * 1000)
     new_meta["current-snapshot-id"] = snapshot_id
@@ -1447,52 +1294,24 @@ def delete_iceberg(
     Returns the new snapshot id (or the current one on no-op)."""
     read_version = _hint_version(table)
     meta = _load_metadata(table, read_version)
-    ice_schema = _current_ice_schema(meta)
-    schema = _schema_from_iceberg(ice_schema)
-    candidates = read_iceberg(
-        spark,
+    schema = _schema_from_iceberg(_current_ice_schema(meta))
+    touched, survivors = delete_rewrite(
         table,
-        partition_filter=partition_filter,
-        bounds_filter=bounds_filter,
+        read_iceberg(
+            spark,
+            table,
+            partition_filter=partition_filter,
+            bounds_filter=bounds_filter,
+        ),
+        predicate,
+        schema.fieldNames(),
+        _record_counts(table, meta),
+        functools.partial(_read_files, spark, table, schema),
     )
-    touched_rows = (
-        candidates.withColumn("_f", F.input_file_name())
-        .filter(F.expr(predicate))
-        .groupBy("_f")
-        .count()
-        .collect()
-    )
-    touched = {
-        _rel_from_uri(r["_f"], table): r["count"] for r in touched_rows
-    }
     if not touched:
         return meta["current-snapshot-id"]
-    counts = {
-        e["data_file"]["file_path"]: e["data_file"]["record_count"]
-        for e in _snapshot_entries(
-            table, meta, meta["current-snapshot-id"]
-        )
-        if e["status"] != _DELETED
-    }
-    rewrite = sorted(
-        p for p, n in touched.items() if counts.get(p) != n
-    )
-    survivors = None
-    if rewrite:
-        survivors = (
-            spark.read.schema(schema)
-            .parquet(*[os.path.join(table, p) for p in rewrite])
-            .filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-            .select(*schema.fieldNames())
-        )
     return _rewrite_commit(
-        spark,
-        table,
-        read_version,
-        meta,
-        set(touched),
-        survivors,
-        "delete",
+        spark, table, read_version, meta, set(touched), survivors, "delete"
     )
 
 
@@ -1514,38 +1333,18 @@ def merge_iceberg(
     Delta's multiple-matches error). Returns the new snapshot id."""
     read_version = _hint_version(table)
     meta = _load_metadata(table, read_version)
-    ice_schema = _current_ice_schema(meta)
-    schema = _schema_from_iceberg(ice_schema)
-    cols = schema.fieldNames()
-    if sorted(source.columns) != sorted(cols):
-        raise ValueError(
-            f"iceberg-lite: merge source columns {sorted(source.columns)} "
-            f"!= table columns {sorted(cols)}"
-        )
-    missing = [k for k in on if k not in cols]
-    if missing:
-        raise ValueError(f"iceberg-lite: merge keys not in table: {missing}")
-    target = read_iceberg(spark, table)
-    keys = source.select(*on)
-    touched = {
-        _rel_from_uri(r["_f"], table)
-        for r in target.withColumn("_f", F.input_file_name())
-        .join(keys, on, "left_semi")
-        .select("_f")
-        .distinct()
-        .collect()
-    }
-    if touched:
-        kept = (
-            spark.read.schema(schema)
-            .parquet(*[os.path.join(table, p) for p in sorted(touched)])
-            .join(keys, on, "left_anti")
-        )
-        new_data = kept.select(*cols).unionByName(source.select(*cols))
-    else:
-        new_data = source.select(*cols)
+    schema = _schema_from_iceberg(_current_ice_schema(meta))
+    touched, new_data = merge_rewrite(
+        table,
+        read_iceberg(spark, table),
+        source,
+        on,
+        schema.fieldNames(),
+        _record_counts(table, meta),
+        functools.partial(_read_files, spark, table, schema),
+    )
     return _rewrite_commit(
-        spark, table, read_version, meta, touched, new_data, "overwrite"
+        spark, table, read_version, meta, set(touched), new_data, "overwrite"
     )
 
 

@@ -555,3 +555,42 @@ def test_properties_survive_commits_and_expiration(spark):
         assert left == {"2"}
         # …but the high-water property survived expiration
         assert table_properties(t)["jdps-batch-high-water"] == "2"
+
+
+def test_metadata_claim_never_exposes_a_torn_file(spark, monkeypatch):
+    """``v{N}.metadata.json`` appears only complete: while the payload
+    is being written the claimed name does not exist yet (a losing
+    blind append reads the winner's file directly, so it must never
+    see a partial one), and a failed write leaves neither the file
+    nor a temp file behind."""
+    from jhu_data_parser_spark.sources import iceberg_lite as il
+
+    df = spark.range(5).select("id")
+    with tempfile.TemporaryDirectory() as t:
+        write_iceberg(df, t, "overwrite")  # v1
+        target = os.path.join(t, "metadata", "v2.metadata.json")
+        seen = {}
+        real_dump = il.json.dump
+
+        def torn_dump(obj, fh, *a, **kw):
+            fh.write('{"format-version": 1, ')
+            fh.flush()
+            seen["visible_while_writing"] = os.path.exists(target)
+            raise OSError("disk full")
+
+        monkeypatch.setattr(il.json, "dump", torn_dump)
+        with pytest.raises(OSError, match="disk full"):
+            write_iceberg(df.withColumn("id", F.col("id") + 10), t, "append")
+        monkeypatch.setattr(il.json, "dump", real_dump)
+        assert seen == {"visible_while_writing": False}
+        assert not os.path.exists(target)
+        assert not [
+            f for f in os.listdir(os.path.join(t, "metadata"))
+            if f.endswith(".tmp")
+        ]
+        assert sorted(r.id for r in read_iceberg(spark, t).collect()) == list(
+            range(5)
+        )
+        write_iceberg(df.withColumn("id", F.col("id") + 10), t, "append")
+        assert os.path.exists(target)
+        assert read_iceberg(spark, t).count() == 10

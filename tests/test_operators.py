@@ -110,27 +110,6 @@ def test_minhash_finds_planted_near_dups(spark):
     assert not any(3 in p for p in pairs)
 
 
-def test_minhash_native_expression_path(spark):
-    """The UDF-free native-expression signature path (for environments
-    without Arrow) must find the same planted near-duplicates."""
-    from jhu_data_parser_spark.operators.dedup import near_dup_pairs_minhash
-
-    base = "the quick brown fox jumps over the lazy dog again and again " * 5
-    docs = [
-        (1, base),
-        (2, base.replace("lazy", "sleepy")),
-        (3, "completely different content about distributed query engines " * 5),
-        (4, base),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    pairs = {
-        (r["id_a"], r["id_b"])
-        for r in near_dup_pairs_minhash(df, threshold=0.5, use_arrow_udf=False).collect()
-    }
-    assert (1, 4) in pairs and (1, 2) in pairs
-    assert not any(3 in p for p in pairs)
-
-
 def test_connected_components_chains_and_islands(spark):
     """(1,2),(2,3) chain into one component labeled 1; disjoint pairs
     stay separate; a 3-hop chain needs multiple propagation rounds."""

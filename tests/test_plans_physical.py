@@ -105,14 +105,16 @@ def test_dynamic_partition_pruning_on_partitioned_fact(spark, tmp_path):
     assert "dynamicpruningexpression" in plan.lower()
 
 
-def test_graph_hop_join_prunes_edge_partitions(spark):
-    """The graph-ANN hop join must prune the src-keyed edge layout:
-    knn_graph_index writes partitionBy(src_pt = pmod(src, B)), the
-    beam frontier joins equi on (src_pt, src), and broadcast-reuse DPP
-    rewrites the edge scan's PartitionFilters from the frontier — at
-    100 TB each hop reads O(beam) file groups of an n·m-row edge
-    table, not the whole table (r12 verdict item 4)."""
+def test_graph_hop_join_prunes_edge_partitions(spark, monkeypatch):
+    """The graph-ANN hop fetch must prune the src-keyed edge layout:
+    knn_graph_index writes partitionBy(src_pt = pmod(src, B)), and
+    _fetch_adjacency filters the partition column with the frontier's
+    buckets (known driver-side), so the edge scan carries a static
+    planning-time PartitionFilters entry — at 100 TB each hop reads
+    O(beam) file groups of an n·m-row edge table, not the whole table
+    (r12 verdict item 4)."""
     import os
+    import re
 
     from pyspark.sql import functions as F
 
@@ -131,16 +133,27 @@ def test_graph_hop_join_prunes_edge_partitions(spark):
     )
     # the layout on disk IS the src-keyed one the docstring promises
     assert any(d.startswith("src_pt8=") for d in os.listdir(path))
-    edges = spark.read.parquet(path)
-    frontier = e.filter(F.col("vec_id").isin([3, 7])).select(
-        F.col("vec_id").alias("src")
-    )
-    hop = sim._edges_hop(edges, frontier)
-    hop.write.format("noop").mode("overwrite").save()
-    plan = hop._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruningexpression" in plan.lower()
-    pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert pf and "src_pt8" in pf[0]
+    edges = sim.read_graph_index(spark, path)
+    scans = []
+    real_id_filter = sim._id_filter
+
+    def spy(df, col, ids):
+        scans.append(df)
+        return real_id_filter(df, col, ids)
+
+    monkeypatch.setattr(sim, "_id_filter", spy)
+    adj = sim._fetch_adjacency(edges, [3, 13])  # buckets 3 and 5
+    assert len(scans) == 1
+    plan = scans[0]._jdf.queryExecution().executedPlan().toString()
+    pf = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert pf and "src_pt8" in pf[0] and "IN (3,5)" in pf[0]
+    want: dict = {}
+    for r in edges.filter(F.col("src").isin(3, 13)).collect():
+        want.setdefault(r["src"], []).append(r["dst"])
+    assert {k: sorted(v) for k, v in adj.items()} == {
+        k: sorted(v) for k, v in want.items()
+    }
+    assert adj
 
 
 def test_asof_join_is_one_shuffle(spark):
