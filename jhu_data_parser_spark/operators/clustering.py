@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+
+from jhu_data_parser_spark.session import local_frame
 __all__ = [
     "KM_SCALE",
     "quantize_vectors",
@@ -216,10 +218,10 @@ def kmeans_fit(
         if len(dprobe) <= local_bound:
             spark = points.sparkSession
             if len(dprobe) == 0:
-                empty_a = spark.createDataFrame(
-                    [], "id long, cluster long, dist_sq long"
+                empty_a = local_frame(
+                    spark, [], "id long, cluster long, dist_sq long"
                 )
-                empty_c = spark.createDataFrame([], "cid long, c array<bigint>")
+                empty_c = local_frame(spark, [], "cid long, c array<bigint>")
                 return empty_a, empty_c
             seeds = points.orderBy("id").limit(k).select("q").toPandas()
             S = np.array(
@@ -250,7 +252,8 @@ def kmeans_fit(
                             )
                             newC[cid] = svec // wsum
                     C = newC
-            cents = spark.createDataFrame(
+            cents = local_frame(
+                spark,
                 [(int(cid), [int(v) for v in c]) for cid, c in enumerate(C)],
                 "cid long, c array<bigint>",
             )
@@ -276,10 +279,10 @@ def kmeans_fit(
         if len(probe) <= local_bound:
             spark = points.sparkSession
             if len(probe) == 0:
-                empty_a = spark.createDataFrame(
-                    [], "id long, cluster long, dist_sq long"
+                empty_a = local_frame(
+                    spark, [], "id long, cluster long, dist_sq long"
                 )
-                empty_c = spark.createDataFrame([], "cid long, c array<bigint>")
+                empty_c = local_frame(spark, [], "cid long, c array<bigint>")
                 return empty_a, empty_c
             ids = probe["id"].to_numpy()
             X = np.array(
@@ -287,7 +290,8 @@ def kmeans_fit(
                 dtype=np.int64,
             ).reshape(len(probe), -1)
             _ids, C, _a, _best = _lloyd_local(ids, X, k, iterations)
-            cents = spark.createDataFrame(
+            cents = local_frame(
+                spark,
                 [(int(cid), [int(v) for v in c]) for cid, c in enumerate(C)],
                 "cid long, c array<bigint>",
             )
@@ -433,8 +437,8 @@ def kmeans_fit_multi(
                         (int(g), int(cid), [int(v) for v in c])
                         for cid, c in enumerate(C)
                     )
-                return spark.createDataFrame(
-                    rows, f"{group_col} int, cid long, c array<bigint>"
+                return local_frame(
+                    spark, rows, f"{group_col} int, cid long, c array<bigint>"
                 )
         if len(probe) <= local_bound and len(probe) > 0:
             spark = points.sparkSession
@@ -451,8 +455,8 @@ def kmeans_fit_multi(
                     (int(g), int(cid), [int(v) for v in c])
                     for cid, c in enumerate(C)
                 )
-            return spark.createDataFrame(
-                rows, f"{group_col} int, cid long, c array<bigint>"
+            return local_frame(
+                spark, rows, f"{group_col} int, cid long, c array<bigint>"
             )
     w = Window.partitionBy(group_col).orderBy("id")
     centroids = (

@@ -25,6 +25,7 @@ from pyspark.sql.functions import pandas_udf
 
 from jhu_data_parser_spark import cache
 from jhu_data_parser_spark.operators.text import fingerprint
+from jhu_data_parser_spark.session import local_frame
 
 __all__ = [
     "ensure_parallelism",
@@ -1238,7 +1239,7 @@ def _cc_local(spark, pdf, id_dtype) -> DataFrame:
     schema = StructType(
         [StructField("id", id_dtype, True), StructField("component", id_dtype, True)]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def connected_components(

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from jhu_data_parser_spark import cache
+from jhu_data_parser_spark.session import local_frame
 
 __all__ = [
     "dot",
@@ -1045,8 +1046,8 @@ def ivfpq_multi_shortlist(
             f"CAST(code{sp} + 1 AS INT))"
         )
 
-    pairs_df = spark.createDataFrame(
-        probe_pairs, "query_id long, cell long"
+    pairs_df = local_frame(
+        spark, probe_pairs, "query_id long, cell long"
     )
     index = spark.read.parquet(path).filter(
         F.col("cell").isin([int(c) for c in cells_union])
@@ -1160,7 +1161,8 @@ def topk_ivfpq_indexed_multi(
             (qid, vid, rank, cell, adc, ed)
             for rank, (ed, vid, cell, adc) in enumerate(scored[:k], start=1)
         ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         f"query_id long, {id_col} long, rank int, cell long, "
         "adc_dist long, exact_dist long",
@@ -1738,7 +1740,7 @@ def _id_filter(df: DataFrame, col: str, ids: list):
     sub-job), a broadcast semi-join above the threshold."""
     if len(ids) <= _FETCH_INLIST_MAX:
         return df.filter(F.expr(f"{col} IN ({','.join(map(str, ids))})"))
-    ids_df = df.sparkSession.createDataFrame([(i,) for i in ids], f"{col} long")
+    ids_df = local_frame(df.sparkSession, [(i,) for i in ids], f"{col} long")
     return df.join(F.broadcast(ids_df), col)
 
 
@@ -1965,4 +1967,4 @@ def graph_beam_search(
     beams = _beam_loop_local(
         corpus_qz, edges, {0: qvec}, {0: seed_ids}, beam, hops, depth
     )
-    return spark.createDataFrame(beams[0], "id long, d2 long")
+    return local_frame(spark, beams[0], "id long, d2 long")

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from jhu_data_parser_spark import cache
+from jhu_data_parser_spark.session import local_frame
 
 __all__ = [
     "tokens",
@@ -410,7 +411,8 @@ def bpe_train_merges(
     if local_vocab_bound:
         probe = words.limit(local_vocab_bound + 1).toPandas()
         if len(probe) <= local_vocab_bound:
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 _bpe_train_local(
                     list(zip(probe["w"].tolist(), probe["wc"].tolist())),
                     num_merges,
@@ -453,7 +455,8 @@ def bpe_train_merges(
         )
         if (rank + 1) % 4 == 0:
             syms = syms.localCheckpoint(eager=False)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges, "merge_rank int, left string, right string, merged string, pair_count bigint"
     )
 
@@ -1186,7 +1189,8 @@ def wordpiece_train_merges(
     if local_vocab_bound:
         probe = words.limit(local_vocab_bound + 1).toPandas()
         if len(probe) <= local_vocab_bound:
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 _wp_train_local(
                     list(zip(probe["w"].tolist(), probe["wc"].tolist())),
                     num_merges,
@@ -1257,7 +1261,7 @@ def wordpiece_train_merges(
         )
         if (rank + 1) % 4 == 0:
             syms = syms.localCheckpoint(eager=False)
-    return spark.createDataFrame(merges, _WP_SCHEMA)
+    return local_frame(spark, merges, _WP_SCHEMA)
 
 
 def wordpiece_vocab(

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from jhu_data_parser_spark.functions.exprs import DEC_SUM_SQL, dec_sum, scaled_long
 from jhu_data_parser_spark.plans.catalog import query
+from jhu_data_parser_spark.session import local_frame
 from jhu_data_parser_spark.sources.tables import load_table, register_views
 
 
@@ -388,7 +389,8 @@ def join_null_safe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.nullif("o_orderstatus", F.lit("O")).alias("s")
     )
-    m = spark.createDataFrame(
+    m = local_frame(
+        spark,
         [("F", "final"), ("P", "partial"), (None, "open")], "s string, label string"
     )
     # Explicit broadcast: the 3-row local mapping arrives without

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from jhu_data_parser_spark.plans.catalog import query
 from jhu_data_parser_spark.plans.clustering import _kmeans_ctes
+from jhu_data_parser_spark.session import local_frame
 from jhu_data_parser_spark.sources.tables import load_table
 
 _IP_CELLS = 8
@@ -469,7 +470,7 @@ def text_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         em_iters=_UNI_ITERS,
         word_len_cap=_UNI_CAP,
     )
-    return spark.createDataFrame(rows, "piece string, cnt bigint, nll_fp bigint")
+    return local_frame(spark, rows, "piece string, cnt bigint, nll_fp bigint")
 
 
 @query("text_unigram_encode", oracle=_unigram_encode_oracle())

@@ -65,6 +65,7 @@ from jhu_data_parser_spark.plans.pipeline4 import (
 from jhu_data_parser_spark.plans.pipeline6 import _hexpoly_sql
 from jhu_data_parser_spark.plans.pipeline8 import _BOILER_LINES_SPARK
 from jhu_data_parser_spark.operators.text import SHINGLE8_TOKS_SQL
+from jhu_data_parser_spark.session import local_frame
 from jhu_data_parser_spark.sources.tables import load_table
 
 # Every 10th document is a URL mirror of its decade head: the raw URLs
@@ -730,7 +731,8 @@ def text_quality_train_lr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     _, stats = lr_train_quality(d, steps=_LR_STEPS)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 s["step"],

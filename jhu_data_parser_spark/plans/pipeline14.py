@@ -19,6 +19,7 @@ from jhu_data_parser_spark import cache
 from jhu_data_parser_spark.operators import similarity as sim
 from jhu_data_parser_spark.plans.catalog import query
 from jhu_data_parser_spark.plans.llm import _query_vec
+from jhu_data_parser_spark.session import local_frame
 from jhu_data_parser_spark.sources.tables import load_table
 
 _BIN_SHORTLIST = 16
@@ -230,7 +231,7 @@ def layout_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("y"),
     )
-    layouts = spark.createDataFrame([("zorder",), ("lexico",)], "layout string")
+    layouts = local_frame(spark, [("zorder",), ("lexico",)], "layout string")
     keyed = pts.crossJoin(F.broadcast(layouts)).withColumn(
         "sort_key",
         F.when(
@@ -260,8 +261,8 @@ def layout_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("y").alias("min_y"),
         F.max("y").alias("max_y"),
     )
-    boxes = spark.createDataFrame(
-        _Z_BOXES, "box_id int, x0 long, x1 long, y0 long, y1 long"
+    boxes = local_frame(
+        spark, _Z_BOXES, "box_id int, x0 long, x1 long, y0 long, y1 long"
     )
     pruned = (
         stats.crossJoin(F.broadcast(boxes))
@@ -2015,7 +2016,7 @@ def sim_hamming_radius_mih(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sig_hi",
         F.explode(chunks("sig_lo", "sig_hi")).alias("ch"),
     ).select("vec_id", "sig_lo", "sig_hi", "ch.chunk_no", "ch.chunk_val")
-    probes = spark.createDataFrame(q_chunks, "chunk_no int, chunk_val long")
+    probes = local_frame(spark, q_chunks, "chunk_no int, chunk_val long")
     cand = (
         index.join(F.broadcast(probes), ["chunk_no", "chunk_val"])
         .select("vec_id", "sig_lo", "sig_hi")

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from jhu_data_parser_spark.operators import similarity as sim
 from jhu_data_parser_spark.plans.catalog import query
+from jhu_data_parser_spark.session import local_frame
 from jhu_data_parser_spark.sources.tables import load_table
 
 # Parameters tuned by a measured sweep (numpy replica, ROUND_NOTES r12):
@@ -532,8 +533,8 @@ def sim_graph_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         _GM_K,
         f"graph index {index}",
     )
-    return spark.createDataFrame(
-        ranked, "query_id long, vec_id long, rank int"
+    return local_frame(
+        spark, ranked, "query_id long, vec_id long, rank int"
     )
 
 

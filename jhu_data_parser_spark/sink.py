@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+
+from jhu_data_parser_spark.session import local_frame
 __all__ = [
     "record_key",
     "write_partitioned_json",
@@ -106,7 +108,8 @@ def write_partitioned_json_report(
         (part, n_files, n_bytes, metrics["n_records"], metrics["n_null_type"])
         for part, (n_files, n_bytes) in sorted(per_part.items())
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "type string, n_files bigint, n_bytes bigint, "
         "n_records_total bigint, n_null_type_total bigint",
@@ -242,7 +245,8 @@ def compact_partitions(
     df = spark.read.format(fmt).load(lake_dir)
     compacted = df.repartition(max(len(report), 1), F.col(partition_col))
     overwrite_partitions(compacted, lake_dir, [partition_col], fmt=fmt)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         report,
         f"{partition_col} string, n_files_before bigint, n_bytes bigint, "
         "n_files_target bigint",

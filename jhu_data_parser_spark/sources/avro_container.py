@@ -966,6 +966,8 @@ def read_avro(spark, path: str, spark_schema: str, split_bytes: int = 128 << 20)
 
     from pyspark.sql import functions as F  # noqa: N812
 
+    from jhu_data_parser_spark.session import local_frame
+
     import re
 
     # split on TOP-LEVEL commas only: "p decimal(12,2)" is one field
@@ -973,8 +975,8 @@ def read_avro(spark, path: str, spark_schema: str, split_bytes: int = 128 << 20)
     names = [c.strip().split()[0].strip("`") for c in parts]
 
     splits = plan_avro_splits(path, split_bytes)
-    sdf = spark.createDataFrame(
-        splits, "path string, start long, end long"
+    sdf = local_frame(
+        spark, splits, "path string, start long, end long"
     ).repartition(len(splits))
 
     def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:

@@ -70,6 +70,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from jhu_data_parser_spark.session import local_frame
 from jhu_data_parser_spark.sources.table_files import (
     claim,
     delete_rewrite,
@@ -470,6 +471,7 @@ def write_delta(
     merge_schema: bool = False,
     constraints: dict[str, str] | None = None,
     read_version: int | None = None,
+    _read_state: _Snapshot | None = None,
 ) -> int:
     """Commit the DataFrame to the Delta-lite table; returns the new
     version (or the current one when an idempotent txn is skipped).
@@ -511,6 +513,10 @@ def write_delta(
     (Delta's read-snapshot conflict check; the link(2) claim below
     only arbitrates the narrower same-version race).
 
+    ``_read_state`` is the snapshot at ``read_version`` that a rewrite
+    caller has already replayed; it stands in for the replay of the
+    current version when no commit has landed since.
+
     Every ``_CHECKPOINT_INTERVAL`` versions the commit also writes the
     checkpoint parquet + ``_last_checkpoint`` pointer, bounding every
     later replay to the log tail."""
@@ -531,7 +537,11 @@ def write_delta(
     prev_state: _Snapshot | None = None
     evolved: StructType | None = None
     if current is not None:
-        prev_state = _replay(table, current)
+        prev_state = (
+            _read_state
+            if _read_state is not None and current == read_version
+            else _replay(table, current)
+        )
         evolved = evolve_schema(
             _schema(prev_state), spark_df.schema, merge_schema
         )
@@ -752,14 +762,23 @@ def read_delta(
             raise ValueError(
                 f"delta-lite: version {v} not in {sorted(known)}"
             )
-    state = _replay(table, v)
+    return _scan(spark, table, _replay(table, v), skip)
+
+
+def _scan(
+    spark: SparkSession,
+    table: str,
+    state: _Snapshot,
+    skip: list[tuple] | None = None,
+) -> DataFrame:
+    """:func:`read_delta` of an already-replayed snapshot."""
     active = state.active
     if skip:
         active = {
             p: a for p, a in active.items() if _file_may_match(a, skip)
         }
     if not active:
-        return spark.createDataFrame([], _schema(state))
+        return local_frame(spark, [], _schema(state))
     return _read_files(spark, table, state, sorted(active))
 
 
@@ -801,7 +820,7 @@ def merge_delta(
         return v  # idempotent re-delivery: skip before any join work
     touched, new_data = merge_rewrite(
         table,
-        read_delta(spark, table, version=v),
+        _scan(spark, table, state),
         source,
         on,
         _schema(state).fieldNames(),
@@ -815,6 +834,7 @@ def merge_delta(
         remove_paths=sorted(touched),
         txn=txn,
         read_version=v,
+        _read_state=state,
     )
 
 
@@ -838,7 +858,7 @@ def delete_delta(
     state = _replay(table, v)
     touched, survivors = delete_rewrite(
         table,
-        read_delta(spark, table, version=v, skip=skip),
+        _scan(spark, table, state, skip),
         predicate,
         _schema(state).fieldNames(),
         _record_counts(state),
@@ -847,13 +867,14 @@ def delete_delta(
     if not touched:
         return v  # nothing matches: no commit (idempotent no-op)
     if survivors is None:  # every touched file matched in full
-        survivors = spark.createDataFrame([], _schema(state))
+        survivors = local_frame(spark, [], _schema(state))
     return write_delta(
         survivors,
         table,
         mode="append",
         remove_paths=sorted(touched),
         read_version=v,
+        _read_state=state,
     )
 
 
@@ -887,7 +908,7 @@ def update_delta(
     touched = sorted(
         touched_files(
             table,
-            read_delta(spark, table, version=v, skip=skip),
+            _scan(spark, table, state, skip),
             lambda d: d.filter(F.expr(predicate)),
         )
     )
@@ -912,6 +933,7 @@ def update_delta(
         mode="append",
         remove_paths=touched,
         read_version=v,
+        _read_state=state,
     )
 
 
@@ -942,7 +964,7 @@ def optimize_delta(
     state = _replay(table, v)
     if not state.active:
         return v
-    snap = read_delta(spark, table, version=v)
+    snap = _scan(spark, table, state)
     cols = snap.columns
     if zorder_by:
         if len(zorder_by) != 2:
@@ -988,6 +1010,7 @@ def optimize_delta(
         remove_paths=sorted(state.active),
         data_change=False,
         read_version=v,
+        _read_state=state,
     )
 
 
@@ -1048,8 +1071,8 @@ def read_delta_changes(
         if adds
     ]
     if not parts:
-        return spark.createDataFrame(
-            [], _schema(state).add("_commit_version", "long")
+        return local_frame(
+            spark, [], _schema(state).add("_commit_version", "long")
         )
     out = parts[0]
     for p in parts[1:]:

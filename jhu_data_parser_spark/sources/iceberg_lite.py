@@ -77,6 +77,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from jhu_data_parser_spark.session import local_frame
 from jhu_data_parser_spark.sources.table_files import (
     claim,
     delete_rewrite,
@@ -715,17 +716,22 @@ def _snapshot(meta: dict, snapshot_id: int) -> dict:
     raise ValueError(f"iceberg-lite: snapshot {snapshot_id} not in {known}")
 
 
-def _snapshot_entries(table: str, meta: dict, snapshot_id: int) -> list[dict]:
-    """All manifest entries reachable from the snapshot's manifest
-    list, statuses preserved (driver-side, metadata-sized — the same
-    split as real Iceberg planning)."""
+def _manifests(
+    table: str, meta: dict, snapshot_id: int
+) -> list[tuple[dict, list[dict]]]:
+    """The snapshot's manifest-list records, each with its manifest's
+    entries, statuses preserved (driver-side, metadata-sized — the same
+    split as real Iceberg planning). Each file is opened once."""
     snap = _snapshot(meta, snapshot_id)
-    entries: list[dict] = []
-    for mf in _read_avro_records(os.path.join(table, snap["manifest-list"])):
-        entries.extend(
-            _read_avro_records(os.path.join(table, mf["manifest_path"]))
-        )
-    return entries
+    return [
+        (mf, _read_avro_records(os.path.join(table, mf["manifest_path"])))
+        for mf in _read_avro_records(os.path.join(table, snap["manifest-list"]))
+    ]
+
+
+def _snapshot_entries(table: str, meta: dict, snapshot_id: int) -> list[dict]:
+    """All manifest entries reachable from the snapshot."""
+    return [e for _, es in _manifests(table, meta, snapshot_id) for e in es]
 
 
 def _write_manifest_list(table: str, snapshot_id: int, manifests: list) -> str:
@@ -1142,6 +1148,27 @@ def read_iceberg(
                 ),
                 ice_schema,
             )
+    return _scan(
+        spark,
+        table,
+        meta,
+        ice_schema,
+        _snapshot_entries(table, meta, sid),
+        partition_filter,
+        bounds_filter,
+    )
+
+
+def _scan(
+    spark: SparkSession,
+    table: str,
+    meta: dict,
+    ice_schema: dict,
+    entries: list[dict],
+    partition_filter: tuple | list | None = None,
+    bounds_filter: list | None = None,
+) -> DataFrame:
+    """:func:`read_iceberg` over already-loaded manifest entries."""
     schema = _schema_from_iceberg(ice_schema)
     spec = _spec_info(meta)
     part_conjuncts = None
@@ -1156,7 +1183,6 @@ def read_iceberg(
             ]
         else:
             part_conjuncts = list(partition_filter)
-    entries = _snapshot_entries(table, meta, sid)
     files = []
     for e in entries:
         if e["status"] == _DELETED:
@@ -1171,7 +1197,7 @@ def read_iceberg(
             continue
         files.append(e["data_file"]["file_path"])
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return _read_files(spark, table, schema, sorted(files))
 
 
@@ -1183,12 +1209,22 @@ def _read_files(
     )
 
 
-def _record_counts(table: str, meta: dict) -> dict[str, int]:
+def _record_counts(entries: list[dict]) -> dict[str, int]:
     return {
         e["data_file"]["file_path"]: e["data_file"]["record_count"]
-        for e in _snapshot_entries(table, meta, meta["current-snapshot-id"])
+        for e in entries
         if e["status"] != _DELETED
     }
+
+
+def _read_current(table: str) -> tuple[int, dict, dict, list]:
+    """What a row-level DML reads once: the current metadata version,
+    the metadata, its current Iceberg schema and the current
+    snapshot's manifests (see :func:`_manifests`)."""
+    read_version = _hint_version(table)
+    meta = _load_metadata(table, read_version)
+    manifests = _manifests(table, meta, meta["current-snapshot-id"])
+    return read_version, meta, _current_ice_schema(meta), manifests
 
 
 def _rewrite_commit(
@@ -1200,6 +1236,7 @@ def _rewrite_commit(
     new_df: DataFrame | None,
     operation: str,
     summary_props: dict | None = None,
+    manifests: list[tuple[dict, list[dict]]] | None = None,
 ) -> int:
     """Shared commit path for copy-on-write row-level DML
     (:func:`delete_iceberg` / :func:`merge_iceberg`): stage the
@@ -1211,7 +1248,8 @@ def _rewrite_commit(
     job makes the claim collide and raises
     :class:`ConcurrentCommitError` — a rewrite computed against a
     stale snapshot must never commit (read-snapshot
-    serializability, as in ``delta_lite``)."""
+    serializability, as in ``delta_lite``). ``manifests`` are the
+    current snapshot's, when the caller has already loaded them."""
     ice_schema = _current_ice_schema(meta)
     spec = _spec_info(meta)
     snapshot_id = int(time.time() * 1000) * 1000 + read_version + 1
@@ -1220,15 +1258,13 @@ def _rewrite_commit(
         if new_df is not None
         else []
     )
-    manifests = []
+    new_manifests = []
     if new_entries:
-        manifests.append(_write_manifest(table, new_entries, spec))
-    snap = _snapshot(meta, meta["current-snapshot-id"])
+        new_manifests.append(_write_manifest(table, new_entries, spec))
+    if manifests is None:
+        manifests = _manifests(table, meta, meta["current-snapshot-id"])
     removed = 0
-    for mf in _read_avro_records(os.path.join(table, snap["manifest-list"])):
-        m_entries = _read_avro_records(
-            os.path.join(table, mf["manifest_path"])
-        )
+    for mf, m_entries in manifests:
         live = [e for e in m_entries if e["status"] != _DELETED]
         kept = [
             e
@@ -1236,14 +1272,13 @@ def _rewrite_commit(
             if e["data_file"]["file_path"] not in touched
         ]
         if len(kept) == len(live):
-            manifests.append(mf)  # untouched manifest: reuse verbatim
+            new_manifests.append(mf)  # untouched manifest: reuse verbatim
             continue
         removed += len(live) - len(kept)
         if kept:
-            for e in kept:
-                e["status"] = _EXISTING
-            manifests.append(_write_manifest(table, kept, spec))
-    list_rel = _write_manifest_list(table, snapshot_id, manifests)
+            kept = [dict(e, status=_EXISTING) for e in kept]
+            new_manifests.append(_write_manifest(table, kept, spec))
+    list_rel = _write_manifest_list(table, snapshot_id, new_manifests)
     new_meta = dict(meta)
     new_meta["last-updated-ms"] = int(time.time() * 1000)
     new_meta["current-snapshot-id"] = snapshot_id
@@ -1292,26 +1327,30 @@ def delete_iceberg(
     only the affected manifests; at 100 TB the cost scales with the
     delete footprint, not the table. No-match deletes commit nothing.
     Returns the new snapshot id (or the current one on no-op)."""
-    read_version = _hint_version(table)
-    meta = _load_metadata(table, read_version)
-    schema = _schema_from_iceberg(_current_ice_schema(meta))
+    read_version, meta, ice_schema, manifests = _read_current(table)
+    entries = [e for _, es in manifests for e in es]
+    schema = _schema_from_iceberg(ice_schema)
     touched, survivors = delete_rewrite(
         table,
-        read_iceberg(
-            spark,
-            table,
-            partition_filter=partition_filter,
-            bounds_filter=bounds_filter,
+        _scan(
+            spark, table, meta, ice_schema, entries, partition_filter, bounds_filter
         ),
         predicate,
         schema.fieldNames(),
-        _record_counts(table, meta),
+        _record_counts(entries),
         functools.partial(_read_files, spark, table, schema),
     )
     if not touched:
         return meta["current-snapshot-id"]
     return _rewrite_commit(
-        spark, table, read_version, meta, set(touched), survivors, "delete"
+        spark,
+        table,
+        read_version,
+        meta,
+        set(touched),
+        survivors,
+        "delete",
+        manifests=manifests,
     )
 
 
@@ -1331,20 +1370,27 @@ def merge_iceberg(
     scale-safe shape shared with ``delta_lite.merge_delta``).
     ``source`` must be key-unique (the caller's contract, as in
     Delta's multiple-matches error). Returns the new snapshot id."""
-    read_version = _hint_version(table)
-    meta = _load_metadata(table, read_version)
-    schema = _schema_from_iceberg(_current_ice_schema(meta))
+    read_version, meta, ice_schema, manifests = _read_current(table)
+    entries = [e for _, es in manifests for e in es]
+    schema = _schema_from_iceberg(ice_schema)
     touched, new_data = merge_rewrite(
         table,
-        read_iceberg(spark, table),
+        _scan(spark, table, meta, ice_schema, entries),
         source,
         on,
         schema.fieldNames(),
-        _record_counts(table, meta),
+        _record_counts(entries),
         functools.partial(_read_files, spark, table, schema),
     )
     return _rewrite_commit(
-        spark, table, read_version, meta, set(touched), new_data, "overwrite"
+        spark,
+        table,
+        read_version,
+        meta,
+        set(touched),
+        new_data,
+        "overwrite",
+        manifests=manifests,
     )
 
 

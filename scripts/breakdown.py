@@ -6,10 +6,11 @@ build) vs first noop execution (codegen + compute) vs second execution
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from jhu_data_parser_spark import plans  # noqa: E402
 from jhu_data_parser_spark.session import get_spark  # noqa: E402

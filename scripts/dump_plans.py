@@ -10,7 +10,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from jhu_data_parser_spark import plans  # noqa: E402
 from jhu_data_parser_spark.session import get_spark  # noqa: E402
@@ -22,7 +23,7 @@ def main() -> None:
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
     spark = get_spark(app_name="jdps-dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    out_dir = os.environ.get("JDPS_PLANS_DIR", "/root/repo/plans/r15")
+    out_dir = os.environ.get("JDPS_PLANS_DIR", os.path.join(ROOT, "plans", "r15"))
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = plans.QUERIES[name](spark, sf_dir)

@@ -30,7 +30,7 @@ import sys
 import numpy as np
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tests.oracle_compare import TABLE_NAMES  # noqa: E402
 

@@ -11,9 +11,10 @@ Usage: python scripts/make_scale_layout.py [copies=10] [out=/tmp/jdps_sf1_full]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
