@@ -29,13 +29,22 @@ def entry(spark: SparkSession) -> DataFrame:
     return plans.QUERIES["join_revenue_by_nation"](spark, "/root/testdata/sf0.001")
 
 
+def _rotated(registry: dict) -> dict:
+    """``registry`` in the driver-window order: least recently checked
+    first, by the committed ``CORRECTNESS_r*.json`` artifacts
+    (``plans.rotation_order``)."""
+    order = plans.rotation_order(list(plans.QUERIES), plans.check_history())
+    return {n: registry[n] for n in order if n in registry}
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return plans.get_queries()
+    """One entry per implemented operator from SURVEY.md §2, in the
+    driver-window rotation order."""
+    return _rotated(plans.get_queries())
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB twins for every SQL-expressible query; non-SQL-expressible
     ops (nested array builds, LSH banding, pandas-UDF bucketing) are
     intentionally absent → driver's rows-only check."""
-    return plans.get_oracles()
+    return _rotated(plans.get_oracles())

@@ -1066,7 +1066,7 @@ def embed_media_stub(
     bigram histogram folded to ``dim`` buckets — a real, if crude,
     content feature) where production plugs a vision/audio encoder; the
     Arrow batch shape, output schema, and downstream compatibility with
-    ``topk_cosine*`` / ``rp_lsh_bucket`` / ``ivf_*`` are the real
+    ``topk_cosine*`` / ``rp_bucket_expr`` / ``ivf_*`` are the real
     contract (tested end-to-end).
 
     ``with_stats`` adds the pre-normalization integer facts —

@@ -1,21 +1,27 @@
 """Vector similarity search over embedding columns (SURVEY.md §2.12).
 
-Three tiers, all driver-collect-free:
-
 - :func:`cosine_to_query` / :func:`topk_cosine` — brute-force exact
   scoring against ONE query vector. Linear scan, pure column expressions
   (``zip_with`` dot product), top-k via ``orderBy().limit()`` which
   Catalyst rewrites to ``TakeOrderedAndProject`` (per-task heaps, no
   global sort). This is the correctness baseline and is genuinely the
   right plan at 100 TB for single-query scoring.
-- :func:`rp_lsh_bucket` — random-hyperplane LSH bucketing: deterministic
-  seeded planes, signature = sign-bit string of projections. Vectorized
-  pandas UDF (Arrow batches, one matmul per batch) because a K×D
-  matmul is where numpy beats per-element expressions by orders of
-  magnitude.
-- :func:`topk_cosine_lsh` — score only the query's bucket (plus
-  multiprobe neighbors): the scale path when there are many queries or
-  an index is reused.
+- :func:`topk_cosine_lsh` — score only the query's random-hyperplane
+  LSH bucket (plus multiprobe neighbours), bucketed by the
+  sequential-double column expression :func:`rp_bucket_expr`.
+- :func:`topk_cosine_ivf_indexed` — IVF: score only the probed cells of
+  a ``partitionBy(cell)`` index (:func:`ivf_build_index`).
+- IVF-PQ — one serving path for single, batch and streamed queries: a
+  single query is a batch of one. :func:`ivfpq_shortlist` is the
+  distributed half (probe choice, literal-map ADC lookup tables, one
+  cell-pruned index scan, a per-query ``row_number`` shortlist) and
+  :func:`ivfpq_serve` re-ranks the collected shortlist on the driver
+  (one id-pruned vector fetch, exact int64 L2, ``(d2, id)`` ties).
+  :func:`topk_ivfpq_indexed_multi` builds or loads the index and serves.
+- Binary sign signatures (:func:`binary_signature`) and the graph-ANN
+  build and beam search (:func:`knn_graph_banded`,
+  :func:`graph_beam_search`), whose driver-resident loop shares the
+  fetch, lookup and rank helpers with the IVF-PQ re-rank.
 """
 
 from __future__ import annotations
@@ -35,16 +41,17 @@ __all__ = [
     "cosine",
     "cosine_to_query",
     "topk_cosine",
-    "rp_lsh_bucket",
     "rp_bucket_expr",
     "topk_cosine_lsh",
     "topk_cosine_many",
     "ivf_fit_centroids",
     "ivf_assign",
-    "ivf_assign_native",
-    "topk_cosine_ivf",
     "ivf_build_index",
     "topk_cosine_ivf_indexed",
+    "ivfpq_build_index",
+    "ivfpq_shortlist",
+    "ivfpq_serve",
+    "topk_ivfpq_indexed_multi",
 ]
 
 
@@ -167,34 +174,6 @@ def _rp_planes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim)).astype(np.float64)
 
 
-def rp_lsh_bucket(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 16,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    bucket_col: str = "bucket",
-) -> DataFrame:
-    """Add a random-hyperplane LSH bucket id (0..2^n_planes-1) per vector.
-
-    One Arrow-batched pandas UDF: stacks the batch into an (N, D) matrix,
-    one matmul against the (P, D) plane matrix, sign bits → integer
-    bucket. At 100 TB this is the partition key for an ANN index: write
-    ``partitionBy(bucket)`` and each query probes O(1) partitions.
-    """
-    planes = _rp_planes(dim, n_planes, seed)
-
-    @pandas_udf("long")
-    def _bucket(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy())  # (N, D)
-        proj = mat @ planes.T  # (N, P)
-        bits = (proj > 0).astype(np.int64)
-        weights = (1 << np.arange(n_planes, dtype=np.int64))
-        return pd.Series(bits @ weights)
-
-    return df.withColumn(bucket_col, _bucket(F.col(vec_col)))
-
-
 def rp_bucket_expr(
     vec_col: Column | str, n_planes: int = 16, dim: int = 64, seed: int = 42
 ) -> Column:
@@ -202,11 +181,9 @@ def rp_bucket_expr(
     sequential left-to-right double dot product (``dot``) → sign bit.
 
     Numerically exact twin of re-evaluating the plane literals in SQL —
-    unlike the numpy matmul path (:func:`rp_lsh_bucket`), whose BLAS
-    accumulation order can flip sign for near-zero projections. Use
-    this form when bucket ids must be reproducible across engines (the
-    oracle-gated queries); use the matmul form for bulk index builds
-    where only within-engine determinism matters.
+    a numpy/BLAS matmul's accumulation order can flip the sign of a
+    near-zero projection, so bucket ids stay reproducible across
+    engines (the oracle-gated queries) only in this form.
 
     Built as one SQL string: the P x D plane matrix folds into the plan
     as ~P*D double literals, and doing that element-by-element through
@@ -260,27 +237,19 @@ def topk_cosine_lsh(
     seed: int = 42,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    exact_buckets: bool = True,
 ) -> DataFrame:
     """Approximate top-k: restrict the exact scorer to the query's LSH
     bucket plus all buckets within ``multiprobe_bits`` Hamming distance
     (multiprobe recovers recall lost at bucket boundaries). The bucket
     filter is a pushable IN-list predicate — at scale it becomes
-    partition pruning, reading a tiny fraction of the index.
-
-    ``exact_buckets=True`` buckets with the sequential-double expression
-    (:func:`rp_bucket_expr`) — cross-engine reproducible; ``False`` uses
-    the Arrow matmul path (:func:`rp_lsh_bucket`) for bulk throughput."""
+    partition pruning, reading a tiny fraction of the index. Buckets
+    come from the sequential-double expression (:func:`rp_bucket_expr`),
+    so they are cross-engine reproducible."""
     qb = _bucket_of(query_vec, n_planes, seed)
     probe = {qb}
     if multiprobe_bits >= 1:
         probe |= {qb ^ (1 << i) for i in range(n_planes)}
-    if exact_buckets:
-        bucketed = df.withColumn(
-            "bucket", rp_bucket_expr(vec_col, n_planes, dim, seed)
-        )
-    else:
-        bucketed = rp_lsh_bucket(df, dim, n_planes, seed, vec_col)
+    bucketed = df.withColumn("bucket", rp_bucket_expr(vec_col, n_planes, dim, seed))
     candidates = bucketed.filter(F.col("bucket").isin([int(b) for b in probe]))
     return topk_cosine(candidates, query_vec, k, vec_col, id_col).drop("bucket")
 
@@ -345,74 +314,6 @@ def ivf_assign(
         return pd.Series(np.argmax(mat @ cent.T, axis=1).astype(np.int32))
 
     return df.withColumn(cell_col, _cell(F.col(vec_col)))
-
-
-def ivf_assign_native(
-    df: DataFrame,
-    centroids: np.ndarray,
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
-) -> DataFrame:
-    """Cell assignment as a pure column expression — JVM-side argmax of
-    the dot product against the centroid literals (same broadcast-argmin
-    shape as ``operators/clustering``), no Python round-trip.
-
-    The query-path twin of :func:`ivf_assign`: for inline search the
-    K·D literal matrix folds into one expression; the pandas-UDF
-    variant stays the bulk index-BUILD path, where Arrow-batched numpy
-    matmuls over millions of rows beat interpreted HOFs.
-
-    One SQL string (see `_dot_sql`): the K x D centroid matrix folds in
-    as literals without K*D py4j round-trips."""
-    v = f"`{vec_col}`"
-    rows = ",".join(
-        "named_struct('c', " + _darr_sql(centroids[j]) + f", 'cid', {j})"
-        for j in range(len(centroids))
-    )
-    # max over struct(score, -cid): highest dot wins, ties to lowest cid.
-    expr = (
-        f"CAST(-(array_max(transform(array({rows}), ctr -> named_struct("
-        f"'score', aggregate(zip_with({v}, ctr.c, (a, b) -> CAST(a AS DOUBLE) * b),"
-        f" 0.0D, (s, x) -> s + x), 'ncid', -ctr.cid))).ncid) AS INT)"
-    )
-    return df.withColumn(cell_col, F.expr(expr))
-
-
-def topk_cosine_ivf(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    sample_size: int = 10_000,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    assign: str = "arrow",
-) -> DataFrame:
-    """IVF approximate top-k: score only the ``n_probe`` cells whose
-    centroids are closest to the query (FAISS-style inverted-file
-    search). The cell filter is a pushable IN-list — with a
-    ``partitionBy(cell)`` index layout it becomes partition pruning,
-    touching n_probe/K of the data.
-
-    ``assign`` picks the inline cell-assignment path for the
-    self-contained form: ``"arrow"`` (default) is one Arrow-batched
-    numpy matmul per batch — a K·D·N interpreted-HOF expression does
-    NOT codegen and scales linearly with corpus size, so the matmul is
-    the serving-path choice; ``"native"`` keeps the pure-JVM column
-    expression for contexts where no Python worker round-trip is wanted
-    (cross-engine replay / plan pinning). Both are valid IVF
-    assignments; with ``n_probe >= n_centroids`` the probe is
-    exhaustive and the result is exact under either."""
-    cent = ivf_fit_centroids(df, n_centroids, sample_size, seed=seed, vec_col=vec_col)
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = q / (np.linalg.norm(q) or 1.0)
-    probe = np.argsort(-(cent @ qn))[: min(n_probe, len(cent))]
-    assigner = ivf_assign if assign == "arrow" else ivf_assign_native
-    assigned = assigner(df, cent, vec_col)
-    candidates = assigned.filter(F.col("cell").isin([int(c) for c in probe]))
-    return topk_cosine(candidates, query_vec, k, vec_col, id_col).drop("cell")
 
 
 def ivf_build_index(
@@ -540,14 +441,15 @@ def topk_quantized(
 # cell vectors are stored as M sub-codes (2 bytes here instead of
 # 256 bytes of floats). Serving = prune to n_probe cells → ADC-score
 # the codes (one LUT lookup + add per subspace) → exact re-rank of the
-# shortlist against the full vectors. Both trained parts reuse the
+# shortlist against the full vectors, one path for single, batch and
+# streamed queries (ivfpq_shortlist, ivfpq_serve). Both trained parts reuse the
 # INTEGER-EXACT k-means (operators/clustering.py: lowest-id seeding,
 # int64 L2 argmin with lowest-cid tie-break, floor-mean updates), so a
 # DuckDB oracle replays the entire index build and every serving step
 # bit-for-bit — cells, codes, probe choice, shortlist boundary, rerank.
 #
-# No residual encoding (FAISS by_residual=false): codes quantize the
-# raw vector, not vector-minus-centroid. That keeps one PQ codebook
+# By default no residual encoding (FAISS by_residual=false): codes
+# quantize the raw vector, not vector-minus-centroid. That keeps one PQ codebook
 # shared across cells (residual PQ needs per-cell rotation to pay off)
 # and keeps the oracle a pure composition of the two verified fits.
 # ---------------------------------------------------------------------------
@@ -697,174 +599,6 @@ def _ivfpq_build(
     return path, coarse, books
 
 
-def topk_ivfpq_indexed(
-    df: DataFrame,
-    q_ints: list[int],
-    k: int = 10,
-    n_probe: int = 3,
-    shortlist: int = 50,
-    n_cells: int = 8,
-    coarse_iters: int = 2,
-    m: int = 4,
-    sub: int = 16,
-    pq_k: int = 16,
-    pq_iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    row_filter: Column | None = None,
-    cache_tag: str = "",
-    residual: bool = False,
-) -> DataFrame:
-    """IVF-PQ top-k serving against the pre-built index: prune to the
-    ``n_probe`` cells whose coarse centroids are integer-L2-nearest the
-    quantized query, ADC-score ONLY the probed cells' 2-byte codes
-    (literal LUT, one element_at + add per subspace — the scan reads
-    just (id, code*) thanks to column pruning), take the ADC shortlist,
-    and exact-re-rank those ``shortlist`` rows against the full vectors
-    via a broadcast join back into the base scan.
-
-    ``q_ints`` is the ROUND(x·1e6) quantized query (produce it Spark-
-    side via ``clustering.quantize_vectors`` — Python's round() is
-    banker's and would diverge on .5 ties). Per-query driver work is
-    O(n_cells·D + m·pq_k·sub) integer ops — probe choice and LUTs —
-    independent of corpus size. ``row_filter`` applies post-scan so one
-    index serves filtered views (e.g. excluding the query row).
-
-    ``residual=True`` serves the residual-encoded index: the ADC lookup
-    table is then PER PROBED CELL (distances of the cell-relative query
-    residual to the codebook — still O(n_probe·m·pq_k·sub) driver ints)
-    and the expression picks the cell's table with one map lookup."""
-    path, coarse, books = ivfpq_build_index(
-        df,
-        n_cells,
-        coarse_iters,
-        m,
-        sub,
-        pq_k,
-        pq_iters,
-        vec_col,
-        id_col,
-        cache_tag,
-        residual,
-    )
-    index = df.sparkSession.read.parquet(path)
-    return ivfpq_adc_rerank(
-        index,
-        df,
-        coarse,
-        books,
-        q_ints,
-        k=k,
-        n_probe=n_probe,
-        shortlist=shortlist,
-        sub=sub,
-        vec_col=vec_col,
-        id_col=id_col,
-        row_filter=row_filter,
-        residual=residual,
-    )
-
-
-def ivfpq_adc_rerank(
-    index: DataFrame,
-    df: DataFrame,
-    coarse: list,
-    books: list,
-    q_ints: list[int],
-    k: int = 10,
-    n_probe: int = 3,
-    shortlist: int = 50,
-    sub: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    row_filter: Column | None = None,
-    residual: bool = False,
-) -> DataFrame:
-    """The serving body of :func:`topk_ivfpq_indexed` against an
-    ALREADY-LOADED index frame ``(id, cell, code*)`` — shared by the
-    pre-built-index path and the streaming append path
-    (``streaming/jobs.run_ivfpq_index_append_stream``), where the index
-    is the union of the stored base segments and the per-batch appended
-    segments (the LSM-style serve)."""
-    m = len(books)
-
-    cell_d = sorted(
-        (sum((qi - ci) ** 2 for qi, ci in zip(q_ints, c)), cid)
-        for cid, c in enumerate(coarse)
-    )
-    probes = [cid for _d, cid in cell_d[: min(n_probe, len(cell_d))]]
-
-    def arr_lit(vals: list) -> str:
-        return "array(" + ",".join(str(v) + "L" for v in vals) + ")"
-
-    if residual:
-        # per-cell LUT: distances of the CELL-RELATIVE query residual
-        # to each codebook entry, for the probed cells only.
-        adc_terms = []
-        for sp in range(m):
-            entries = []
-            for cid in probes:
-                qr = [
-                    q_ints[i] - coarse[cid][i]
-                    for i in range(sp * sub, (sp + 1) * sub)
-                ]
-                lut_c = [
-                    sum((qr[i] - c[i]) ** 2 for i in range(sub))
-                    for c in books[sp]
-                ]
-                entries.append(f"{cid}, {arr_lit(lut_c)}")
-            adc_terms.append(
-                f"element_at(element_at(map({', '.join(entries)}), "
-                f"CAST(cell AS INT)), CAST(code{sp} + 1 AS INT))"
-            )
-    else:
-        adc_terms = [
-            "element_at("
-            + arr_lit(
-                [
-                    sum(
-                        (q_ints[sp * sub + i] - c[i]) ** 2
-                        for i in range(sub)
-                    )
-                    for c in books[sp]
-                ]
-            )
-            + f", CAST(code{sp} + 1 AS INT))"
-            for sp in range(m)
-        ]
-
-    if row_filter is not None:
-        index = index.filter(row_filter)
-    cand = index.filter(F.col("cell").isin(probes))
-    adc = cand.select(
-        "id",
-        F.col("cell").cast("long").alias("cell"),
-        sum(F.expr(t) for t in adc_terms).cast("long").alias("adc_dist"),
-    )
-    short = adc.orderBy("adc_dist", "id").limit(shortlist)
-
-    q_lit = "array(" + ",".join(str(int(v)) + "L" for v in q_ints) + ")"
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.expr(
-            f"aggregate(zip_with(transform({vec_col}, x -> "
-            f"CAST(ROUND(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT)), {q_lit}, "
-            "(a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        ).alias("exact_dist"),
-    )
-    rr = base.join(F.broadcast(short), "id")
-    return (
-        rr.orderBy("exact_dist", "id")
-        .limit(k)
-        .select(
-            F.col("id").alias(id_col),
-            "cell",
-            F.col("adc_dist").cast("long").alias("adc_dist"),
-            F.col("exact_dist").cast("long").alias("exact_dist"),
-        )
-    )
-
-
 def _ivfpq_quantize_np(mat):
     """ROUND-HALF-AWAY-FROM-ZERO int64 quantization of a float (N, D)
     matrix at 1e6 — exactly Spark's ROUND(x, 0) (numpy rint would be
@@ -927,134 +661,80 @@ def _ivfpq_encode_arrow(
     return df.select(F.col(id_col), F.col(vec_col)).mapInPandas(_map, schema)
 
 
-def ivfpq_multi_shortlist(
-    df: DataFrame,
+def ivfpq_shortlist(
+    index: DataFrame,
+    coarse: list,
+    books: list,
     queries: list,
     n_probe: int = 3,
     shortlist: int = 50,
-    n_cells: int = 8,
-    coarse_iters: int = 2,
-    m: int = 4,
-    sub: int = 16,
-    pq_k: int = 16,
-    pq_iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    cache_tag: str = "",
     residual: bool = False,
 ) -> DataFrame:
-    """The DISTRIBUTED half of batch IVF-PQ serving: build/load the
-    index and return the per-query ADC shortlist frame
-    ``(query_id, id, cell, adc_dist)`` — ONE cell-pruned index scan for
-    the whole batch, broadcast probe fan-out, literal-map LUTs, and a
-    WindowGroupLimit shortlist (each task keeps its partial top-n
-    before the single narrow exchange). Plan-pinned by
-    test_ivfpq_multi_single_scan_and_pruning; shared by
-    :func:`topk_ivfpq_indexed_multi`, which re-ranks the collected
-    shortlist driver-side.
+    """The DISTRIBUTED half of IVF-PQ serving: the per-query ADC
+    shortlist ``(query_id, id, cell, adc_dist)`` over an already-loaded
+    index frame ``(id, cell, code0..code{m-1})`` — the stored
+    :func:`ivfpq_build_index` layout, or a stream's base ∪ appended
+    segments. ``queries`` is a list of ``(query_id, q_ints)`` with q_ints
+    the ROUND(x·1e6) quantized vectors (produce them Spark-side via
+    ``clustering.quantize_vectors`` — Python's round() is banker's and
+    would diverge on .5 ties); one query is a batch of one.
 
-    Plan shape: the driver picks each query's ``n_probe`` cells
-    (O(Q·K·D) ints) and the scan prunes to the UNION of probed cells;
-    a broadcast join against the tiny (query_id, cell) probe table
-    fans each candidate row out to exactly the queries that probed its
-    cell; ADC reads each query's LUT from a literal map keyed by
-    query_id (flat PQ: the LUT is cell-independent); the per-query
-    shortlist is a ``row_number() <= n`` window — WindowGroupLimit, so
-    each task keeps only its partial top-n before the one narrow
-    exchange (the distributed part stays distributed: the probed cells
-    are a corpus-sized candidate set at 100 TB)."""
-    path, coarse, books = ivfpq_build_index(
-        df,
-        n_cells,
-        coarse_iters,
-        m,
-        sub,
-        pq_k,
-        pq_iters,
-        vec_col,
-        id_col,
-        cache_tag,
-        residual=residual,
-    )
+    The driver picks each query's ``n_probe`` integer-L2-nearest coarse
+    cells (ties to the lowest cid) and builds the ADC lookup tables as
+    literal maps: flat PQ keys them by ``query_id`` (the LUT is
+    cell-independent), residual PQ by ``query_id * len(coarse) + cell``
+    (distances of the CELL-RELATIVE query residual to the codebook) —
+    O(Q·n_probe·m·pq_k·sub) driver ints, corpus-independent. The index
+    scan prunes to the union of probed cells and reads only the code
+    columns; a broadcast join against the tiny (query_id, cell) probe
+    table fans each row out to the queries that probed its cell; the
+    shortlist is a ``row_number() <= shortlist`` window per query over
+    (adc_dist, id) — WindowGroupLimit, so each task keeps its partial
+    top-n before the one narrow exchange."""
     from pyspark.sql import Window
 
-    spark = df.sparkSession
-
-    def arr_lit(vals: list) -> str:
-        return "array(" + ",".join(str(int(v)) + "L" for v in vals) + ")"
-
-    probe_pairs = []
+    m, sub, n_cells = len(books), len(books[0][0]), len(coarse)
+    probes = {}
     for qid, q_ints in queries:
         cell_d = sorted(
             (sum((qi - ci) ** 2 for qi, ci in zip(q_ints, c)), cid)
             for cid, c in enumerate(coarse)
         )
-        probe_pairs += [
-            (int(qid), int(cid)) for _d, cid in cell_d[: min(n_probe, len(cell_d))]
-        ]
-    cells_union = sorted({cid for _qid, cid in probe_pairs})
+        probes[int(qid)] = [cid for _d, cid in cell_d[:n_probe]]
 
-    # Per-query ADC lookup tables as literal maps keyed by query_id —
-    # flat-PQ LUTs are cell-independent, so each subspace needs one
-    # Q-entry map of pq_k-long arrays (KBs for any realistic batch).
-    # Residual mode keys them by the probed (query_id, cell) pair
-    # instead (flat key qid·n_cells + cell): the LUT is the distance of
-    # the CELL-RELATIVE query residual to the codebook — still
-    # O(Q·n_probe·m·pq_k·sub) driver ints, corpus-independent.
-    probes_by_qid = {}
-    for qid, cid in probe_pairs:
-        probes_by_qid.setdefault(qid, []).append(cid)
+    def lut(q_ints: list, cid: int | None, sp: int) -> str:
+        off = [0] * sub if cid is None else coarse[cid][sp * sub : (sp + 1) * sub]
+        r = [q_ints[sp * sub + i] - off[i] for i in range(sub)]
+        dists = (sum((a - b) ** 2 for a, b in zip(r, c)) for c in books[sp])
+        return "array(" + ",".join(f"{d}L" for d in dists) + ")"
+
     adc_terms = []
     for sp in range(m):
         if residual:
             entries = ", ".join(
-                f"{int(qid) * n_cells + cid}L, "
-                + arr_lit(
-                    [
-                        sum(
-                            (q_ints[sp * sub + i]
-                             - coarse[cid][sp * sub + i]
-                             - c[i]) ** 2
-                            for i in range(sub)
-                        )
-                        for c in books[sp]
-                    ]
-                )
+                f"{int(qid) * n_cells + cid}L, {lut(q_ints, cid, sp)}"
                 for qid, q_ints in queries
-                for cid in probes_by_qid[int(qid)]
+                for cid in probes[int(qid)]
             )
-            adc_terms.append(
-                f"element_at(element_at(map({entries}), "
-                f"query_id * {n_cells} + cell), CAST(code{sp} + 1 AS INT))"
+            key = f"query_id * {n_cells} + cell"
+        else:
+            entries = ", ".join(
+                f"{int(qid)}L, {lut(q_ints, None, sp)}" for qid, q_ints in queries
             )
-            continue
-        entries = ", ".join(
-            f"{int(qid)}L, "
-            + arr_lit(
-                [
-                    sum(
-                        (q_ints[sp * sub + i] - c[i]) ** 2
-                        for i in range(sub)
-                    )
-                    for c in books[sp]
-                ]
-            )
-            for qid, q_ints in queries
-        )
+            key = "query_id"
         adc_terms.append(
-            f"element_at(element_at(map({entries}), query_id), "
-            f"CAST(code{sp} + 1 AS INT))"
+            f"element_at(element_at(map({entries}), {key}), CAST(code{sp} + 1 AS INT))"
         )
 
-    pairs_df = local_frame(
-        spark, probe_pairs, "query_id long, cell long"
+    pairs = [(qid, cid) for qid, cells in probes.items() for cid in cells]
+    pairs_df = local_frame(index.sparkSession, pairs, "query_id long, cell long")
+    cand = (
+        index.filter(F.col("cell").isin(sorted({cid for _q, cid in pairs})))
+        .select(
+            "id", F.col("cell").cast("long").alias("cell"), *[f"code{s}" for s in range(m)]
+        )
+        .join(F.broadcast(pairs_df), "cell")
     )
-    index = spark.read.parquet(path).filter(
-        F.col("cell").isin([int(c) for c in cells_union])
-    )
-    cand = index.select(
-        "id", F.col("cell").cast("long").alias("cell"), *[f"code{s}" for s in range(m)]
-    ).join(F.broadcast(pairs_df), "cell")
     adc = cand.select(
         "query_id",
         "id",
@@ -1066,6 +746,67 @@ def ivfpq_multi_shortlist(
         adc.withColumn("rn", F.row_number().over(ws))
         .filter(F.col("rn") <= shortlist)
         .drop("rn")
+    )
+
+
+def ivfpq_serve(
+    index: DataFrame,
+    df: DataFrame,
+    coarse: list,
+    books: list,
+    queries: list,
+    label: str,
+    k: int = 10,
+    n_probe: int = 3,
+    shortlist: int = 50,
+    residual: bool = False,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """IVF-PQ top-k: the :func:`ivfpq_shortlist` of ``index`` plus a
+    DRIVER-RESIDENT exact re-rank against the corpus ``df``. Returns
+    ``(query_id, <id_col>, rank, cell, adc_dist, exact_dist)`` as a
+    driver-built frame.
+
+    The shortlist is parameter-bounded (≤ Q·shortlist rows — exactly
+    what an ANN serving node holds), so it is collected and the
+    surviving ids' quantized vectors arrive by ONE bounded id-pruned
+    fetch (:func:`_fetch_id_vecs`), never a corpus scan. Quantization
+    stays Spark-side (the same ROUND(x·1e6) expression); the re-rank is
+    exact int64 squared-L2 with (exact_dist, id) ties (:func:`_rank`),
+    the arithmetic the oracle replays. A shortlisted id the corpus no
+    longer holds raises :class:`StaleIndexError` naming ``label``."""
+    srows = ivfpq_shortlist(
+        index, coarse, books, queries, n_probe, shortlist, residual
+    ).collect()
+    base_qz = df.select(
+        F.col(id_col).alias("id"),
+        F.expr(
+            f"transform({vec_col}, x -> "
+            "CAST(ROUND(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT))"
+        ).alias("q"),
+    )
+    vecs: dict = {}
+    _fetch_id_vecs(base_qz, {int(r["id"]) for r in srows}, vecs)
+    by_q: dict = {}
+    for r in srows:
+        by_q.setdefault(int(r["query_id"]), {})[int(r["id"])] = (
+            int(r["cell"]),
+            int(r["adc_dist"]),
+        )
+    qvecs = {int(qid): np.asarray(list(q), dtype=np.int64) for qid, q in queries}
+    out_rows = [
+        (qid, vid, rank, *by_q[qid][vid], d2)
+        for qid in sorted(by_q)
+        for rank, (vid, d2) in enumerate(
+            _rank(vecs, label, qvecs[qid], by_q[qid], k), start=1
+        )
+    ]
+    return local_frame(
+        df.sparkSession,
+        out_rows,
+        f"query_id long, {id_col} long, rank int, cell long, "
+        "adc_dist long, exact_dist long",
     )
 
 
@@ -1086,32 +827,14 @@ def topk_ivfpq_indexed_multi(
     cache_tag: str = "",
     residual: bool = False,
 ) -> DataFrame:
-    """Batch IVF-PQ top-k serving (r8 verdict item 2): the distributed
-    ADC shortlist (:func:`ivfpq_multi_shortlist` — one cell-pruned
-    index scan for the whole batch) plus a DRIVER-RESIDENT exact
-    re-rank, the serving posture the graph-ANN beam loop established.
-    ``queries`` is a list of ``(query_id, q_ints)`` with q_ints the
-    ROUND(x·1e6) quantized vectors.
-
-    The shortlist is parameter-bounded (≤ Q·shortlist rows — exactly
-    what an ANN serving node holds), so it is collected and the
-    surviving ids' quantized vectors fetched with ONE bounded
-    id-pruned job (:func:`_id_filter` — IN-list pushdown below 8192
-    ids, broadcast semi-join above) instead of broadcast-joining the
-    shortlist against a FULL base-table scan — at 100 TB that was a
-    corpus scan to fetch Q·shortlist vectors. Quantization still
-    happens Spark-side (the same ROUND(x·1e6) expression), the
-    re-rank is exact int64 numpy with (exact_dist, id) ties —
-    candidate sets and arithmetic identical to the former in-plan
-    formulation, which the oracle replays end to end. Every fetch
-    recomputes from the parquet inputs per invocation."""
+    """IVF-PQ top-k serving for a batch of ``(query_id, q_ints)``
+    queries (one query is a batch of one): build or load the
+    :func:`ivfpq_build_index` artifact over ``df`` and :func:`ivfpq_serve`
+    it — one cell-pruned index scan for the whole batch, then the
+    driver re-rank."""
     _require_integral_id(df, id_col, "topk_ivfpq_indexed_multi")
-    spark = df.sparkSession
-    short = ivfpq_multi_shortlist(
+    path, coarse, books = ivfpq_build_index(
         df,
-        queries,
-        n_probe,
-        shortlist,
         n_cells,
         coarse_iters,
         m,
@@ -1123,49 +846,19 @@ def topk_ivfpq_indexed_multi(
         cache_tag,
         residual,
     )
-
-    # Driver-resident exact re-rank over the collected shortlist: one
-    # bounded id-pruned vector fetch (quantized Spark-side so the
-    # HALF_UP rounding never leaves SQL), then int64 numpy squared-L2
-    # with (exact_dist, id) ties — bit-identical to the former in-plan
-    # zip_with/aggregate + row_number formulation.
-    import numpy as np
-
-    srows = short.collect()
-    base_qz = df.select(
-        F.col(id_col).alias("id"),
-        F.expr(
-            f"transform({vec_col}, x -> "
-            "CAST(ROUND(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT))"
-        ).alias("q"),
-    )
-    vecs: dict = {}
-    _fetch_id_vecs(base_qz, {int(r["id"]) for r in srows}, vecs)
-    qvs = {int(qid): np.asarray(list(q_ints), dtype=np.int64) for qid, q_ints in queries}
-    by_q: dict = {}
-    for r in srows:
-        by_q.setdefault(int(r["query_id"]), []).append(r)
-    index = f"IVF-PQ index cache_tag={cache_tag!r}"
-    out_rows = []
-    for qid in sorted(by_q):
-        rows = by_q[qid]
-        got = _lookup(vecs, [int(r["id"]) for r in rows], index)
-        scored = []
-        for r, v in zip(rows, got):
-            d = v - qvs[qid]
-            scored.append(
-                (int(d @ d), int(r["id"]), int(r["cell"]), int(r["adc_dist"]))
-            )
-        scored.sort()
-        out_rows += [
-            (qid, vid, rank, cell, adc, ed)
-            for rank, (ed, vid, cell, adc) in enumerate(scored[:k], start=1)
-        ]
-    return local_frame(
-        spark,
-        out_rows,
-        f"query_id long, {id_col} long, rank int, cell long, "
-        "adc_dist long, exact_dist long",
+    return ivfpq_serve(
+        df.sparkSession.read.parquet(path),
+        df,
+        coarse,
+        books,
+        queries,
+        f"IVF-PQ index cache_tag={cache_tag!r}",
+        k,
+        n_probe,
+        shortlist,
+        residual,
+        vec_col,
+        id_col,
     )
 
 
@@ -1213,7 +906,7 @@ def pq_balanced_perm(
 # metric (Hamming distance = XOR + popcount per word) is the fastest
 # scoring loop hardware can run. Recall comes from the exact re-rank
 # of the Hamming shortlist — the same refine discipline as PQ/ADC
-# (topk_ivfpq_indexed above). Everything is integer-exact and
+# (ivfpq_serve above). Everything is integer-exact and
 # engine-portable: packing is a sum of DISJOINT powers of two kept
 # under 2^32 (two half-words instead of one 64-bit word, because bit
 # 63 would need the sign bit and engines disagree on unsigned shifts),
@@ -1275,7 +968,7 @@ def embedding_moment_partials(
     column — the covariance analogue of the mergeable histogram
     sketch: each Arrow batch contributes ONE D×D integer Gram partial
     (a numpy int64 ``Xᵀ·X`` — the matmul is where Python pays for
-    itself, same rule as :func:`rp_lsh_bucket`), emitted as
+    itself), emitted as
     D(D+1)/2 + D + 1 narrow rows per BATCH (upper-triangle products,
     per-dim sums, a count row) — never per input row. Partials merge
     by ADDITION (one groupBy over (i, j)), so per-partition builds
@@ -1403,27 +1096,13 @@ def banded_posts(
     seed: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    exact_buckets: bool = True,
 ) -> DataFrame:
     """``(id, q, b0..b{bands-1})`` — the quantized unit vector and one
     bigint RP-LSH bucket code per band (seeds ``seed + band``; bigint so
-    stored posting rows read back with one type), in one pass.
-    ``exact_buckets=True`` buckets with the sequential-double column
-    expression (:func:`rp_bucket_expr`; cross-engine replayable, the
-    oracle-gated path); ``False`` with the Arrow matmul
-    (:func:`rp_lsh_bucket`; bulk builds, same rule as
-    :func:`topk_cosine_lsh`)."""
-    if exact_buckets:
-        codes = [
-            rp_bucket_expr(vec_col, n_planes, dim, seed + b)
-            for b in range(bands)
-        ]
-    else:
-        for b in range(bands):
-            corpus = rp_lsh_bucket(
-                corpus, dim, n_planes, seed + b, vec_col, f"b{b}"
-            )
-        codes = [F.col(f"b{b}") for b in range(bands)]
+    stored posting rows read back with one type), in one pass. Buckets
+    come from the sequential-double column expression
+    (:func:`rp_bucket_expr`), so the build replays in SQL."""
+    codes = [rp_bucket_expr(vec_col, n_planes, dim, seed + b) for b in range(bands)]
     return quantize_unit_vectors(
         corpus,
         id_col=id_col,
@@ -1565,7 +1244,6 @@ def knn_graph_banded(
     seed: int = 42,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    exact_buckets: bool = True,
 ) -> DataFrame:
     """Deterministic fixed-fanout kNN graph ``(src, dst)`` — the
     navigable-small-world index build (the industry-default graph-ANN
@@ -1592,18 +1270,9 @@ def knn_graph_banded(
     moves ≤ bands·m rows per src. Unlike sequential HNSW insertion
     (inherently serial, order-dependent), the banded build is order-
     independent — the Spark-native construction.
-
-    ``exact_buckets=True`` bands with the sequential-double column
-    expression (cross-engine replayable — the oracle-gated path);
-    ``False`` uses the Arrow matmul bucketing
-    (:func:`rp_lsh_bucket`) for bulk builds, where only within-engine
-    determinism matters — at 13+ planes × several bands the matmul is
-    the right tool (same rule as :func:`topk_cosine_lsh`).
     """
     _require_integral_id(corpus, id_col, "knn_graph_banded")
-    posts = banded_posts(
-        corpus, dim, n_planes, bands, seed, vec_col, id_col, exact_buckets
-    )
+    posts = banded_posts(corpus, dim, n_planes, bands, seed, vec_col, id_col)
     return banded_topm(
         posts.withColumn("is_src", F.lit(True)), bands, m
     ).select("src", "dst")
@@ -1650,7 +1319,6 @@ def knn_graph_index(
     seed: int = 42,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    exact_buckets: bool = True,
     cache_tag: str = "",
     src_buckets: int = 16,
 ) -> str:
@@ -1674,7 +1342,7 @@ def knn_graph_index(
 
     def build(path: str) -> str:
         edges = knn_graph_banded(
-            corpus, dim, m, n_planes, bands, seed, vec_col, id_col, exact_buckets
+            corpus, dim, m, n_planes, bands, seed, vec_col, id_col
         )
         if src_buckets > 0:
             # the bucket count rides IN the column name (src_pt16): the
@@ -1690,7 +1358,7 @@ def knn_graph_index(
         return path
 
     params = (
-        dim, m, n_planes, bands, seed, vec_col, id_col, exact_buckets, src_buckets
+        dim, m, n_planes, bands, seed, vec_col, id_col, src_buckets
     )
     return cache.get_or_build("knng_index", corpus, params, build, cache_tag)
 
@@ -1778,6 +1446,21 @@ def _lookup(acc: dict, ids, index: str) -> list:
             "different corpus; rebuild it or give this corpus its own "
             "cache_tag"
         ) from None
+
+
+def _rank(vecs: dict, index: str, qvec, cand_ids, beam: int) -> list:
+    """The ``beam`` candidates nearest ``qvec`` as ``[(id, d2), ...]``:
+    exact int64 squared-L2 over the vectors fetched into ``vecs``, ties
+    by id — the one ranking behind the graph beam loop and the IVF-PQ
+    re-rank."""
+    if not cand_ids:
+        return []
+    ids = np.fromiter(sorted(cand_ids), dtype=np.int64)
+    mat = np.stack(_lookup(vecs, ids.tolist(), index))
+    diff = mat - qvec
+    d2 = np.einsum("ij,ij->i", diff, diff)
+    order = np.lexsort((ids, d2))[:beam]
+    return [(int(ids[o]), int(d2[o])) for o in order]
 
 
 def _index_label(edges: DataFrame) -> str:
@@ -1879,25 +1562,15 @@ def _beam_loop_local(
     tie-breaks identical to the previous in-plan formulation (the
     oracle replays every hop). Returns ``{qid: [(id, d2), ...]}``
     sorted ascending."""
-    import numpy as np
-
     index = _index_label(edges)
     vecs: dict = {}
     _fetch_id_vecs(
         corpus_qz, set().union(*entries.values()) if entries else set(), vecs
     )
-
-    def rank(qid, cand_ids):
-        if not cand_ids:
-            return []
-        ids = np.fromiter(sorted(cand_ids), dtype=np.int64)
-        mat = np.stack(_lookup(vecs, ids.tolist(), index))
-        diff = mat - qvecs[qid]
-        d2 = np.einsum("ij,ij->i", diff, diff)
-        order = np.lexsort((ids, d2))[:beam]
-        return [(int(ids[o]), int(d2[o])) for o in order]
-
-    beams = {qid: rank(qid, set(entries.get(qid, ()))) for qid in qvecs}
+    beams = {
+        qid: _rank(vecs, index, qvecs[qid], set(entries.get(qid, ())), beam)
+        for qid in qvecs
+    }
     for _ in range(hops):
         cand = {qid: {i for i, _ in beams[qid]} for qid in beams}
         frontier = {qid: set(c) for qid, c in cand.items()}
@@ -1912,7 +1585,7 @@ def _beam_loop_local(
                 nxt[qid] = nf
             frontier = nxt
         _fetch_id_vecs(corpus_qz, set().union(*cand.values()), vecs)
-        beams = {qid: rank(qid, cand[qid]) for qid in beams}
+        beams = {qid: _rank(vecs, index, qvecs[qid], cand[qid], beam) for qid in beams}
     return beams
 
 

@@ -176,7 +176,8 @@ def _ivfpq_serve(
     """Shared serving body: build/cache the index over the corpus
     (query row excluded from fits AND storage, matching the oracle's
     ``WHERE vec_id <> 0``), quantize the query Spark-side (HALF_UP —
-    Python round() is banker's), and run the pruned-scan ADC + rerank."""
+    Python round() is banker's), and serve it as a batch of one: the
+    pruned-scan ADC shortlist + driver re-rank."""
     from jhu_data_parser_spark.operators import similarity as sim
     from jhu_data_parser_spark.operators.clustering import quantize_vectors
 
@@ -187,9 +188,9 @@ def _ivfpq_serve(
         .select("q")
         .first()["q"]
     ]
-    return sim.topk_ivfpq_indexed(
+    return sim.topk_ivfpq_indexed_multi(
         db,
-        q_ints,
+        [(0, q_ints)],
         k=_IP_TOPK,
         n_probe=n_probe,
         shortlist=shortlist,
@@ -201,7 +202,7 @@ def _ivfpq_serve(
         pq_iters=_IP_ITERS,
         cache_tag=cache_tag,
         residual=residual,
-    )
+    ).select("vec_id", "cell", "adc_dist", "exact_dist")
 
 
 @query("sim_cosine_topk_ivfpq", oracle=_ivfpq_oracle_sql())
@@ -214,8 +215,8 @@ def sim_cosine_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: the serving plan touches (a) n_probe/K of the index
     by partition PRUNING (plan-tested), reading only the 2-byte codes
     (column pruning — the floats aren't in the index), (b) exactly
-    ``shortlist`` full vectors via a broadcast join back into the base
-    scan. Per-query driver work is probe choice + LUTs — O(K·D + M·k·sub)
+    ``shortlist`` full vectors via one id-pruned fetch for the driver
+    re-rank. Per-query driver work is probe choice + LUTs — O(K·D + M·k·sub)
     integer ops, independent of corpus size. The index build is a
     once-per-corpus artifact (same registry lifecycle as the IVF
     index); repeated queries measure the probe, not the build."""
@@ -539,7 +540,7 @@ def sim_cosine_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFram
     serving plan is identical to sim_cosine_topk_ivfpq — pruned
     code-only scan, ADC shortlist, exact re-rank — except the ADC
     expression picks a per-cell lookup table (one literal-map lookup by
-    cell, still O(n_probe·m·k·sub) driver ints per query). The oracle
+    query and cell, still O(n_probe·m·k·sub) driver ints per query). The oracle
     replays the residual fits, the per-cell LUTs, and everything
     downstream bit-for-bit."""
     emb = load_table(spark, sf_dir, "embeddings")

@@ -754,7 +754,7 @@ def text_quality_train_lr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2): the single-query composed index (pipeline11) served at the REAL
 # request shape, a query batch. One pruned scan of the union of all
 # probed cells; per-query LUTs as literal maps keyed by query_id;
-# WindowGroupLimit shortlists; one broadcast re-rank join. The oracle
+# WindowGroupLimit shortlists; one driver re-rank. The oracle
 # replays both fits and the complete per-query pipeline (probe choice,
 # ADC, shortlist, exact rank) for every query in the batch.
 # --------------------------------------------------------------------------

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jhu_data_parser_spark import cache
+from jhu_data_parser_spark import cache, sink
 from jhu_data_parser_spark.operators import similarity as sim
 from jhu_data_parser_spark.plans.catalog import query
 from jhu_data_parser_spark.plans.llm import _query_vec
@@ -211,14 +211,6 @@ _ZORDER_ORACLE = f"""
     """
 
 
-def _z_interleave_col(x, y):
-    z = F.lit(0).cast("long")
-    for i in range(_Z_BITS):
-        z = z + F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        z = z + F.shiftleft(F.shiftright(y, i).bitwiseAND(F.lit(1)), 2 * i)
-    return z
-
-
 @query("layout_zorder_pruning", oracle=_ZORDER_ORACLE)
 def layout_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compare z-order vs lexicographic file clustering by the number
@@ -235,7 +227,8 @@ def layout_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = pts.crossJoin(F.broadcast(layouts)).withColumn(
         "sort_key",
         F.when(
-            F.col("layout") == "zorder", _z_interleave_col(F.col("x"), F.col("y"))
+            # y first: x bit i lands at bit 2i+1, y bit i at bit 2i
+            F.col("layout") == "zorder", sink.zorder_key("y", "x", bits=_Z_BITS)
         ).otherwise(F.col("x") * 64 + F.col("y")),
     )
     w = Window.partitionBy("layout").orderBy("sort_key", "o_orderkey")

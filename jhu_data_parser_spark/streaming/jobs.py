@@ -977,7 +977,6 @@ def _ivfpq_serve_union(spark: SparkSession, index: DataFrame, coarse, books, emb
     from jhu_data_parser_spark.plans.pipeline11 import (
         _IP_PROBE,
         _IP_SHORTLIST,
-        _IP_SUB,
         _IP_TOPK,
     )
 
@@ -987,17 +986,17 @@ def _ivfpq_serve_union(spark: SparkSession, index: DataFrame, coarse, books, emb
         .select("q")
         .first()["q"]
     ]
-    return sim.ivfpq_adc_rerank(
+    return sim.ivfpq_serve(
         index,
         emb.filter(F.col("vec_id") != 0),
         coarse,
         books,
-        q_ints,
+        [(0, q_ints)],
+        "the streamed IVF-PQ index",
         k=_IP_TOPK,
         n_probe=_IP_PROBE,
         shortlist=_IP_SHORTLIST,
-        sub=_IP_SUB,
-    )
+    ).select("vec_id", "cell", "adc_dist", "exact_dist")
 
 
 def run_ivfpq_index_append_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

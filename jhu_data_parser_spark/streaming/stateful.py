@@ -48,10 +48,6 @@ from jhu_data_parser_spark.streaming.jobs import (
 __all__ = [
     "sessionize_stateful",
     "run_sessionize_stateful",
-    "sessionize_tws",
-    "run_sessionize_tws",
-    "make_session_processor",
-    "has_tws_runtime",
     "run_builtin_session_windows",
 ]
 
@@ -341,170 +337,6 @@ def run_builtin_session_windows(
     )
     # Sentinel filter after the sink — see run_sessionize_stateful.
     return _run_to_memory(spark, agg, stage, table, "append").filter(
-        "user_id >= 0"
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithState variant (Spark 4 arbitrary stateful processing)
-# ---------------------------------------------------------------------------
-
-def has_tws_runtime() -> bool:
-    """``transformWithStateInPandas`` talks to the JVM state store over a
-    protobuf protocol; the container this engine is developed in ships
-    pyspark WITHOUT the ``google.protobuf`` wheel, so the operator is
-    gated — plumbing and state machine are real and unit-tested, the
-    end-to-end run activates wherever the dependency exists.
-
-    Environment blocker, re-verified r05 (the r04 verdict's ask):
-    ``import google.protobuf`` → ModuleNotFoundError; no copy is
-    bundled anywhere on sys.path or inside the pyspark wheel (only
-    JVM-side shaded jars); ``pip download protobuf`` produces nothing
-    (no network), and installs are out of scope for this environment.
-    Reproduce with ``python -c "import google.protobuf"`` — when that
-    starts passing, ``tests/test_streaming.py`` un-skips the e2e parity
-    test automatically via this gate."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def make_session_processor(gap_minutes: int = 30):
-    """Build the ``StatefulProcessor`` for gap-based sessionization —
-    the Spark-4 arbitrary-stateful API (typed value state + EXPLICIT
-    event-time timers), semantics identical to :func:`_session_fold_grouped` (per user).
-
-    Exposed as a factory so the state machine is testable without a
-    streaming runtime: tests drive ``init``/``handleInputRows``/
-    ``handleExpiredTimer`` against stub state/handle objects."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    gap_us = gap_minutes * 60 * _US
-
-    class _SessionProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._handle = handle
-            self._sess = handle.getValueState(
-                "sess", "start_us BIGINT, last_us BIGINT, n_events BIGINT"
-            )
-
-        def _emit(self, user_id: int, rows: list[tuple[int, int, int]]):
-            # One frame per group per batch — a 1-row frame per session
-            # is ~100 µs of construction each (same fix as the pandas sessionizer).
-            return pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(rows),
-                    "session_start": pd.to_datetime(
-                        [r[0] for r in rows], unit="us"
-                    ),
-                    "session_end": pd.to_datetime([r[1] for r in rows], unit="us"),
-                    "n_events": [r[2] for r in rows],
-                }
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            user_id = key[0]
-            ts_us = (
-                pd.concat([pdf["ts"] for pdf in rows])
-                .sort_values()
-                .astype("int64")
-                .floordiv(1000)
-                .to_list()
-            )
-            closed: list[tuple[int, int, int]] = []
-            if self._sess.exists():
-                start_us, last_us, n = self._sess.get()
-                # the pending timer for the previous horizon is stale now
-                self._handle.deleteTimer((last_us + gap_us) // 1000)
-            else:
-                start_us, last_us, n = ts_us[0], ts_us[0] - gap_us, 0
-            for t in ts_us:
-                if t - last_us >= gap_us and n > 0:
-                    closed.append((start_us, last_us, n))
-                    start_us, n = t, 0
-                elif n == 0:
-                    start_us = t
-                last_us = t
-                n += 1
-            self._sess.update((start_us, last_us, n))
-            self._handle.registerTimer((last_us + gap_us) // 1000)
-            if closed:
-                yield self._emit(user_id, closed)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            if not self._sess.exists():
-                return
-            start_us, last_us, n = self._sess.get()
-            # stale-timer guard: only the timer for the CURRENT horizon
-            # closes the session (deleteTimer covers the common path;
-            # this covers replays)
-            if expiredTimerInfo.getExpiryTimeInMs() != (last_us + gap_us) // 1000:
-                return
-            self._sess.clear()
-            yield self._emit(key[0], [(start_us, last_us, n)])
-
-        def close(self) -> None:
-            pass
-
-    return _SessionProcessor()
-
-
-def sessionize_tws(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Streaming sessionization via ``transformWithStateInPandas`` — the
-    Spark-4 arbitrary-stateful-processing API and the modern twin of
-    :func:`sessionize_stateful`.
-
-    Semantics are identical to the ``applyInPandasWithState`` operator
-    (30-min gap, close on gap or watermark timeout), but the state
-    surface is richer: named typed state slots instead of one tuple, and
-    EXPLICIT timers — the open session registers an event-time timer at
-    ``last + gap``; when the watermark passes it, ``handleExpiredTimer``
-    emits and clears. Both implementations must agree with the batch
-    lag/cumsum sessionization exactly.
-
-    Requires the protobuf runtime (:func:`has_tws_runtime`); raises
-    ImportError with a clear message otherwise.
-
-    Scale posture: same as the sibling — one hash exchange on user_id
-    per micro-batch, O(active users) state rows, timer eviction bounds
-    tail state without scanning."""
-    if not has_tws_runtime():
-        raise ImportError(
-            "transformWithStateInPandas needs the google.protobuf runtime, "
-            "which this environment does not ship; use sessionize_stateful "
-            "(applyInPandasWithState) instead"
-        )
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            make_session_processor(gap_minutes),
-            outputStructType=_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
-def run_sessionize_tws(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    gap_minutes: int = 30,
-) -> DataFrame:
-    """Run the transformWithState sessionizer to completion over the
-    events table (sentinel-flushed — see
-    :func:`_sentinel_events_stream`)."""
-    ev, stage = _sentinel_events_stream(spark, sf_dir)
-    sessions = sessionize_tws(ev, gap_minutes)
-    return _run_to_memory(spark, sessions, stage, table, "append").filter(
         "user_id >= 0"
     )
 

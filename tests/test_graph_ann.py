@@ -58,20 +58,6 @@ def test_knn_graph_fanout_and_determinism(spark):
     assert e1.filter(F.col("src") == F.col("dst")).count() == 0
 
 
-def test_matmul_and_expr_builds_agree_here(spark):
-    """The Arrow-matmul bucket path is the bulk-build variant of the
-    expression path; on this fixture (no near-zero projections at
-    these seeds) the resulting graphs must be identical."""
-    corpus = _corpus(spark)
-    a = sim.knn_graph_banded(
-        corpus, dim=64, m=4, n_planes=4, bands=2, exact_buckets=True
-    )
-    b = sim.knn_graph_banded(
-        corpus, dim=64, m=4, n_planes=4, bands=2, exact_buckets=False
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_beam_search_monotone_and_bounded(spark):
     """The final beam is ≤ beam rows, contains the best seed (the beam
     is monotone — candidates always include the previous beam), and

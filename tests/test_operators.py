@@ -223,31 +223,38 @@ def test_lsh_topk_recall(spark):
     assert len(exact & approx) >= 6
 
 
-def test_ivf_topk_recall_and_exhaustive_exactness(spark):
-    """IVF with n_probe == K must equal brute force exactly; with a
-    partial probe it must still recover the planted neighbors (the
-    cluster structure IVF exists to exploit)."""
+def test_ivf_topk_recall_and_exhaustive_exactness(spark, tmp_path):
+    """The indexed IVF serving path with n_probe == K must equal brute
+    force exactly; with a partial probe it must still recover the
+    planted neighbors (the cluster structure IVF exists to exploit)."""
     import numpy as np
 
-    from jhu_data_parser_spark.operators.similarity import topk_cosine, topk_cosine_ivf
+    from jhu_data_parser_spark.operators.similarity import (
+        topk_cosine,
+        topk_cosine_ivf_indexed,
+    )
 
     rng = np.random.RandomState(11)
     q = rng.standard_normal(64)
     planted = [q + 0.15 * rng.standard_normal(64) for _ in range(15)]
     noise = [rng.standard_normal(64) for _ in range(500)]
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(planted + noise)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    src = str(tmp_path / "corpus")
+    spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(
+        1
+    ).write.parquet(src)
+    df = spark.read.parquet(src)
 
     qv = [float(x) for x in q]
     exact = [r["vec_id"] for r in topk_cosine(df, qv, k=10).collect()]
     exhaustive = [
         r["vec_id"]
-        for r in topk_cosine_ivf(df, qv, k=10, n_centroids=8, n_probe=8).collect()
+        for r in topk_cosine_ivf_indexed(df, qv, k=10, n_centroids=8, n_probe=8).collect()
     ]
     assert exhaustive == exact  # full probe ⇒ identical to brute force
     partial = {
         r["vec_id"]
-        for r in topk_cosine_ivf(df, qv, k=10, n_centroids=8, n_probe=2).collect()
+        for r in topk_cosine_ivf_indexed(df, qv, k=10, n_centroids=8, n_probe=2).collect()
     }
     assert len(set(exact) & partial) >= 8  # planted cluster lands in few cells
 
@@ -2863,8 +2870,11 @@ def test_ivfpq_multi_driver_rerank_matches_inplan(spark):
             ).collect()
         )
         # reference: the old in-plan re-rank over the same shortlist
-        short = sim.ivfpq_multi_shortlist(
-            corpus, queries, cache_tag=tag, residual=residual
+        path, coarse, books = sim.ivfpq_build_index(
+            corpus, cache_tag=tag, residual=residual
+        )
+        short = sim.ivfpq_shortlist(
+            spark.read.parquet(path), coarse, books, queries, residual=residual
         )
         def arr_lit(vals):
             return "array(" + ",".join(str(int(v)) + "L" for v in vals) + ")"
@@ -3025,13 +3035,13 @@ def test_binary_signature_packing_and_recall(spark):
 
 
 def test_zorder_interleave_matches_python(spark):
-    """The bit-interleave column must equal the reference python
-    interleave for every (x, y) in the 6-bit grid corners + randoms."""
+    """The Morton key layout_zorder_pruning sorts by, ``zorder_key(y, x)``,
+    must equal the reference python interleave (x bit i at 2i+1, y bit i
+    at 2i — the oracle's layout) for every (x, y) in the 6-bit grid
+    corners + randoms."""
     import random
 
-    from pyspark.sql import functions as F
-
-    from jhu_data_parser_spark.plans.pipeline14 import _z_interleave_col
+    from jhu_data_parser_spark.sink import zorder_key
 
     def z_py(x: int, y: int) -> int:
         z = 0
@@ -3045,7 +3055,7 @@ def test_zorder_interleave_matches_python(spark):
         (rng.randrange(64), rng.randrange(64)) for _ in range(50)
     ]
     df = spark.createDataFrame(pts, "x long, y long")
-    got = df.select("x", "y", _z_interleave_col(F.col("x"), F.col("y")).alias("z")).collect()
+    got = df.select("x", "y", zorder_key("y", "x", bits=6).alias("z")).collect()
     for r in got:
         assert r["z"] == z_py(r["x"], r["y"]), (r["x"], r["y"])
 

@@ -409,7 +409,7 @@ def test_ivf_cell_layout_prunes_partitions(spark, tmp_path):
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     cent = sim.ivf_fit_centroids(emb, n_centroids=8, sample_size=10_000)
-    assigned = sim.ivf_assign_native(emb, cent)
+    assigned = sim.ivf_assign(emb, cent)
     out = str(tmp_path / "ivf_index")
     assigned.write.partitionBy("cell").parquet(out, mode="overwrite")
 
@@ -700,54 +700,6 @@ def test_hard_negatives_shortlist_shape(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_ivfpq_index_prunes_partitions_and_columns(spark):
-    """The composed IVF-PQ layout's two scale claims made physical:
-    (a) the probed-cell IN-list becomes partition PRUNING over the
-    partitionBy(cell) index (the scan lists only n_probe/K of the
-    directories), and (b) the index scan reads ONLY the 2-byte code
-    columns — the float vectors aren't in the index at all, so the ADC
-    stage never touches them."""
-    from pyspark.sql import functions as F
-
-    from jhu_data_parser_spark.operators import similarity as sim
-    from jhu_data_parser_spark.operators.clustering import quantize_vectors
-    from jhu_data_parser_spark.sources.tables import load_table
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    db = emb.filter(F.col("vec_id") != 0)
-    q_ints = [
-        int(v)
-        for v in quantize_vectors(emb.filter(F.col("vec_id") == 0))
-        .select("q")
-        .first()["q"]
-    ]
-    out = sim.topk_ivfpq_indexed(db, q_ints, k=10, n_probe=3, cache_tag="plan_test")
-    rows = out.collect()
-    assert len(rows) == 10
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [cell" in plan
-    # Column pruning: the index scan's ReadSchema carries codes only.
-    import re
-
-    read_schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-    idx_schemas = [s for s in read_schemas if "code0" in s]
-    assert idx_schemas and all("embedding" not in s for s in idx_schemas)
-    # And the pruned scan's numFiles counts only the probed cells.
-    path, coarse, _books = sim.ivfpq_build_index(db, cache_tag="plan_test")
-    index = spark.read.parquet(path)
-    cell_d = sorted(
-        (sum((qi - ci) ** 2 for qi, ci in zip(q_ints, c)), cid)
-        for cid, c in enumerate(coarse)
-    )
-    probes = {cid for _d, cid in cell_d[:3]}
-    probed_files = [
-        f
-        for f in index.inputFiles()
-        if any(f"/cell={c}/" in f for c in probes)
-    ]
-    assert 0 < len(probed_files) < len(index.inputFiles())
-
-
 def test_ivfpq_exhaustive_probe_degrades_to_exact(spark):
     """With n_probe == n_cells AND shortlist >= corpus, the composed
     index's re-rank arm returns exactly the exact integer-L2 top-k —
@@ -767,9 +719,9 @@ def test_ivfpq_exhaustive_probe_degrades_to_exact(spark):
         .select("q")
         .first()["q"]
     ]
-    approx = sim.topk_ivfpq_indexed(
+    approx = sim.topk_ivfpq_indexed_multi(
         db,
-        q_ints,
+        [(0, q_ints)],
         k=10,
         n_probe=8,
         shortlist=10_000,
@@ -794,54 +746,128 @@ def test_ivfpq_exhaustive_probe_degrades_to_exact(spark):
     assert got == want
 
 
-def test_ivfpq_multi_single_scan_and_pruning(spark):
-    """Batch IVF-PQ serving: the distributed ADC shortlist is ONE
-    pruned index scan shared by the whole query batch (not one per
-    query), pruned to the union of all probed cells and reading only
-    the code columns; the returned serve frame is a driver-computed
-    LocalRelation/ExistingRDD — NO corpus scan rides the re-rank (the
-    shortlist ids' vectors arrive via a bounded id-pruned fetch)."""
-    import re
+def _leaf_nodes(node) -> list:
+    """The leaves of an executed physical plan, looking through AQE's
+    wrapper and its query stages."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _leaf_nodes(node.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _leaf_nodes(node.plan())
+    kids = node.children()
+    if kids.size() == 0:
+        return [node]
+    return [leaf for i in range(kids.size()) for leaf in _leaf_nodes(kids.apply(i))]
 
-    from pyspark.sql import functions as F
 
-    from jhu_data_parser_spark import plans
-    from jhu_data_parser_spark.operators import similarity as sim
-    from jhu_data_parser_spark.operators.clustering import quantize_vectors
-    from jhu_data_parser_spark.plans.pipeline13 import _IPM_NQUERIES
-    from jhu_data_parser_spark.sources.tables import load_table
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= _IPM_NQUERIES)
-    queries = sorted(
-        (int(r["id"]), [int(v) for v in r["q"]])
-        for r in quantize_vectors(emb.filter(F.col("vec_id") < _IPM_NQUERIES))
-        .select("id", "q")
-        .collect()
-    )
-    short = sim.ivfpq_multi_shortlist(
-        corpus, queries, cache_tag="embeddings_ivfpq_multi"
-    )
-    short.collect()
-    plan = short._jdf.queryExecution().executedPlan().toString()
+def _ivfpq_index_scans(df) -> set:
+    """The distinct IVF-PQ index scans of ``df``'s executed plan, after
+    checking each is partition-pruned on ``cell`` and reads codes only —
+    no vectors, and no base-corpus scan at all."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [cell" in plan
     # AQE prints the same physical scan node in both the stage tree and
     # the final-plan section — dedupe scans by their attribute-id lists
     # (exprIds are unique per scan INSTANCE, shared across reprints).
     scans = set(re.findall(r"FileScan parquet \[([^\]]*)\]", plan))
     idx_scans = {s for s in scans if "code0" in s}
-    # exactly ONE index scan for the whole batch (codes only, no
-    # vectors) and NO base-corpus scan in the shortlist half
-    assert len(idx_scans) == 1
     assert all("embedding" not in s for s in idx_scans)
     assert not any("embedding" in s for s in scans)
+    return idx_scans
 
-    out = plans.QUERIES["sim_cosine_topk_ivfpq_multi"](spark, SF_SMOKE)
-    rows = out.collect()
-    assert len(rows) == 50  # 5 queries x top-10
-    serve_plan = out._jdf.queryExecution().executedPlan().toString()
-    # the serve result is driver-resident: no parquet scan at all
-    assert "FileScan parquet" not in serve_plan
+
+def test_ivfpq_index_prunes_partitions_and_columns(spark):
+    """The composed IVF-PQ layout's two scale claims made physical for a
+    single query: (a) the probed-cell IN-list becomes partition PRUNING
+    over the partitionBy(cell) index (the executed scan's numFiles
+    counts only the n_probe probed cells' files), and (b) the index scan
+    reads ONLY the code columns — the float vectors aren't in the index
+    at all, so the ADC stage never touches them."""
+    from pyspark.sql import functions as F
+
+    from jhu_data_parser_spark.operators import similarity as sim
+    from jhu_data_parser_spark.operators.clustering import quantize_vectors
+    from jhu_data_parser_spark.sources.tables import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    db = emb.filter(F.col("vec_id") != 0)
+    q_ints = [
+        int(v)
+        for v in quantize_vectors(emb.filter(F.col("vec_id") == 0))
+        .select("q")
+        .first()["q"]
+    ]
+    served = sim.topk_ivfpq_indexed_multi(
+        db, [(0, q_ints)], k=10, n_probe=3, cache_tag="plan_test"
+    )
+    assert len(served.collect()) == 10
+
+    path, coarse, books = sim.ivfpq_build_index(db, cache_tag="plan_test")
+    index = spark.read.parquet(path)
+    short = sim.ivfpq_shortlist(index, coarse, books, [(0, q_ints)], n_probe=3)
+    # collect, not count: the metrics belong to this frame's own execution
+    assert len(short.collect()) == 50
+    assert len(_ivfpq_index_scans(short)) == 1
+    cell_d = sorted(
+        (sum((qi - ci) ** 2 for qi, ci in zip(q_ints, c)), cid)
+        for cid, c in enumerate(coarse)
+    )
+    probed_files = [
+        f
+        for f in index.inputFiles()
+        if any(f"/cell={cid}/" in f for _d, cid in cell_d[:3])
+    ]
+    assert 0 < len(probed_files) < len(index.inputFiles())
+    scans = [
+        leaf
+        for leaf in _leaf_nodes(short._jdf.queryExecution().executedPlan())
+        if "code0" in leaf.toString()
+    ]
+    assert len(scans) == 1
+    assert scans[0].metrics().apply("numFiles").value() == len(probed_files)
+
+
+def test_ivfpq_multi_single_scan_and_pruning(spark):
+    """IVF-PQ batch serving: the distributed ADC shortlist is ONE
+    pruned index scan shared by the whole query batch (not one per
+    query), pruned to the union of all probed cells and reading only the
+    code columns. The returned serve frames (batch, single, streamed)
+    are driver-computed — NO corpus scan rides the re-rank (the
+    shortlist ids' vectors arrive via a bounded id-pruned fetch)."""
+    from pyspark.sql import functions as F
+
+    from jhu_data_parser_spark.operators import similarity as sim
+    from jhu_data_parser_spark.operators.clustering import quantize_vectors
+    from jhu_data_parser_spark.plans.pipeline13 import _IPM_NQUERIES
+    from jhu_data_parser_spark.sources.tables import load_table
+
+    def quantized(frame):
+        return sorted(
+            (int(r["id"]), [int(v) for v in r["q"]])
+            for r in quantize_vectors(frame).select("id", "q").collect()
+        )
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    corpus = emb.filter(F.col("vec_id") >= _IPM_NQUERIES)
+    queries = quantized(emb.filter(F.col("vec_id") < _IPM_NQUERIES))
+    path, coarse, books = sim.ivfpq_build_index(
+        corpus, cache_tag="embeddings_ivfpq_multi"
+    )
+    short = sim.ivfpq_shortlist(spark.read.parquet(path), coarse, books, queries)
+    short.collect()
+    # exactly ONE index scan for the whole batch
+    assert len(_ivfpq_index_scans(short)) == 1
+
+    # the serve results are driver-resident: no parquet scan at all
+    for name, n_rows in (
+        ("sim_cosine_topk_ivfpq_multi", 50),  # 5 queries x top-10
+        ("sim_cosine_topk_ivfpq", 10),
+        ("stream_ivfpq_index_append", 10),
+    ):
+        out = plans.QUERIES[name](spark, SF_SMOKE)
+        assert len(out.collect()) == n_rows, name
+        serve_plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan parquet" not in serve_plan, name
 
 
 def test_binary_topk_shape(spark):

@@ -12,9 +12,11 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import subprocess
 import sys
 
+import __spark_entry__
 from jhu_data_parser_spark import plans
 from jhu_data_parser_spark.plans import (
     _CHUNK,
@@ -77,15 +79,17 @@ def test_never_checked_names_lead_the_window():
 
 
 def test_current_round_window_is_first_time_checked():
-    """Against the real committed artifacts: the live registration
-    order must lead with ≥45 names that have never had a driver row
-    (while any remain) — the r04 verdict's done-criterion for r05."""
+    """Against the real committed artifacts: the live driver order
+    (``__spark_entry__.queries()``) must lead with ≥45 names that have
+    never had a driver row (while any remain) — the r04 verdict's
+    done-criterion for r05."""
     prior: set[str] = set()
     for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
         with open(path) as fh:
             prior |= set(json.load(fh))
     never = set(NAMES) - prior
-    window = set(NAMES[:_DRIVER_WINDOW]) - {_PRIORITY_WINDOW[0]}
+    live = list(__spark_entry__.queries())
+    window = set(live[:_DRIVER_WINDOW]) - {_PRIORITY_WINDOW[0]}
     expected_fresh = min(len(never), _CHUNK) - 4  # tolerate a few driver extras
     assert len(window & never) >= min(expected_fresh, 45), (
         f"{len(window & never)} first-time names in window, "
@@ -94,16 +98,45 @@ def test_current_round_window_is_first_time_checked():
 
 
 def test_live_registration_order_matches_pure_schedule():
-    """A fresh interpreter's catalog order must equal
-    rotation_order(names, check_history()) — the registration hook has
-    no other ordering logic."""
+    """A fresh interpreter's driver order (``__spark_entry__.queries()``,
+    and ``oracle_sql()`` as its subsequence) must equal
+    rotation_order(names, check_history()) — the boundary has no other
+    ordering logic."""
     code = (
         "import sys; sys.path.insert(0, %r); "
-        "from jhu_data_parser_spark import plans; "
-        "print('\\n'.join(list(plans.QUERIES)[:10]))"
+        "import __spark_entry__ as e; "
+        "print('\\n'.join(list(e.queries()))); print('--'); "
+        "print('\\n'.join(list(e.oracle_sql())))"
     ) % ROOT
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    assert out.stdout.split() == rotation_order(NAMES, check_history())[:10]
+    names, oracles = out.stdout.split("--")
+    want = rotation_order(NAMES, check_history())
+    assert names.split() == want
+    assert oracles.split() == [n for n in want if n in plans.ORACLES]
+
+
+def test_catalog_order_ignores_repo_artifacts(tmp_path):
+    """``plans.QUERIES`` keeps module registration order whatever
+    ``CORRECTNESS_r*.json`` artifacts sit next to the package: a copy
+    of the package beside an artifact that marks the first 60 names as
+    just checked imports in the same order as this one."""
+    shutil.copytree(
+        os.path.join(ROOT, "jhu_data_parser_spark"),
+        tmp_path / "jhu_data_parser_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    with open(tmp_path / "CORRECTNESS_r99.json", "w") as fh:
+        json.dump({n: {} for n in NAMES[:60]}, fh)
+    code = (
+        "import sys; sys.path.insert(0, %r); "
+        "from jhu_data_parser_spark import plans; "
+        "print('\\n'.join(plans.QUERIES))"
+    ) % str(tmp_path)
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == NAMES

@@ -238,123 +238,6 @@ def test_stream_json_sink_partitioned(spark, sf_dir, tmp_path):
     assert {"event_id", "ts", "user_id", "value", "props"} <= set(rec)
 
 
-class _StubValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def clear(self):
-        self._v = None
-
-
-class _StubHandle:
-    def __init__(self):
-        self.state = _StubValueState()
-        self.timers = set()
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.state
-
-    def registerTimer(self, ts_ms):
-        self.timers.add(ts_ms)
-
-    def deleteTimer(self, ts_ms):
-        self.timers.discard(ts_ms)
-
-
-class _StubExpiredTimer:
-    def __init__(self, ts_ms):
-        self._t = ts_ms
-
-    def getExpiryTimeInMs(self):
-        return self._t
-
-
-def test_tws_session_processor_state_machine():
-    """Drive the transformWithState session processor's state machine
-    directly (no streaming runtime needed — the container lacks the
-    protobuf wheel the e2e API requires): per-batch folding, cross-batch
-    session continuation, timer re-registration, stale-timer rejection,
-    and timeout flush must all match the applyInPandasWithState twin's
-    semantics."""
-    import pandas as pd
-
-    from jhu_data_parser_spark.streaming.stateful import make_session_processor
-
-    proc = make_session_processor(gap_minutes=30)
-    h = _StubHandle()
-    proc.init(h)
-    M = 60_000_000  # one minute in µs
-
-    def batch(*minutes):
-        return iter(
-            [pd.DataFrame({"ts": [pd.Timestamp(m * M, unit="us") for m in minutes]})]
-        )
-
-    # batch 1: events at t=0,5min -> one open session, no emission yet
-    out = list(proc.handleInputRows((7,), batch(0, 5), None))
-    assert out == []
-    assert h.state.get() == (0, 5 * M, 2)
-    assert h.timers == {(5 * M + 30 * M) // 1000}
-
-    # batch 2: t=10min continues; t=90min opens a new session -> first closes
-    out = list(proc.handleInputRows((7,), batch(10, 90), None))
-    assert len(out) == 1
-    emitted = out[0].iloc[0]
-    assert emitted["user_id"] == 7 and emitted["n_events"] == 3
-    assert emitted["session_end"] == pd.Timestamp(10 * M, unit="us")
-    assert h.state.get() == (90 * M, 90 * M, 1)
-    # old timer replaced by the new horizon
-    assert h.timers == {(90 * M + 30 * M) // 1000}
-
-    # stale timer (for the already-superseded horizon) must NOT flush
-    stale = list(
-        proc.handleExpiredTimer((7,), None, _StubExpiredTimer((40 * M) // 1000))
-    )
-    assert stale == [] and h.state.exists()
-
-    # the current-horizon timer flushes and clears
-    flushed = list(
-        proc.handleExpiredTimer((7,), None, _StubExpiredTimer((120 * M) // 1000))
-    )
-    assert len(flushed) == 1
-    assert flushed[0].iloc[0]["n_events"] == 1
-    assert not h.state.exists()
-
-
-def test_tws_sessionize_end_to_end(spark):
-    """Full transformWithStateInPandas run — only where the protobuf
-    runtime exists; must agree with the applyInPandasWithState twin."""
-    import pytest as _pytest
-
-    from jhu_data_parser_spark.streaming.stateful import (
-        has_tws_runtime,
-        run_sessionize_stateful,
-        run_sessionize_tws,
-    )
-
-    if not has_tws_runtime():
-        _pytest.skip("google.protobuf runtime not available in this container")
-    sf = "/root/testdata/sf0.001"
-    tws = {
-        tuple(r)
-        for r in run_sessionize_tws(spark, sf, "tws_e2e").collect()
-    }
-    aips = {
-        tuple(r)
-        for r in run_sessionize_stateful(spark, sf, "aips_e2e").collect()
-    }
-    assert tws == aips
-
-
 def test_kmv_stream_state_merges_across_microbatches(spark, sf_dir, tmp_path):
     """The streaming KMV sketch must produce the exact batch bottom-k
     when a day's events arrive split across THREE micro-batches — the
