@@ -671,49 +671,36 @@ def decode_image_meta(payload: bytes) -> tuple[str, int, int] | None:
     return None
 
 
-def dhash64_bmp(payload: bytes, grid_w: int = 9, grid_h: int = 8) -> int:
-    """64-bit difference hash (dHash, Krawetz) over GENUINELY decoded BMP
-    pixels: decode the byte stream, nearest-neighbor-sample a
-    ``grid_h x (grid_w)`` grayscale grid (floor index maps — the same
-    convention as :func:`resize_bmp_nearest`), and set bit ``y*8+x`` iff
-    ``gray[y][x] > gray[y][x+1]``. Integer arithmetic throughout
-    (channel mean via ``// 3``), so the hash is bit-exact and
-    SQL-replayable. Returned as a signed two's-complement int64."""
-    import numpy as np
-
-    px = decode_bmp_pixels(payload).astype(np.int64)  # (h, w, 3) top-down
-    h, w = px.shape[:2]
-    yi = (np.arange(grid_h, dtype=np.int64) * h) // grid_h
-    xi = (np.arange(grid_w, dtype=np.int64) * w) // grid_w
-    gray = px[yi][:, xi].sum(axis=2) // 3  # (grid_h, grid_w)
-    bits = (gray[:, :-1] > gray[:, 1:]).astype(np.uint64).flatten()  # row-major
-    ph = int((bits << np.arange(bits.size, dtype=np.uint64)).sum(dtype=np.uint64))
-    return ph - (1 << 64) if ph >= (1 << 63) else ph
-
-
-def dhash64_pixels(px, grid_w: int = 9, grid_h: int = 8) -> int:
-    """64-bit difference hash over an already-decoded (h, w, 3) pixel
-    array — the format-independent tail of :func:`dhash64_bmp`: floor
-    index maps, integer channel mean (``// 3``), bit ``y*8+x`` iff
-    ``gray[y][x] > gray[y][x+1]``; signed two's-complement int64."""
+def dhash64_pixels(px) -> int:
+    """64-bit difference hash (dHash, Krawetz) over a decoded (h, w, 3)
+    pixel array: nearest-neighbor-sample an 8 x 9 grayscale grid (floor
+    index maps — the same convention as :func:`resize_bmp_nearest`) and
+    set bit ``y*8+x`` iff ``gray[y][x] > gray[y][x+1]``. Integer
+    arithmetic throughout (channel mean via ``// 3``), so the hash is
+    bit-exact and SQL-replayable. Returned as a signed two's-complement
+    int64; channel order is irrelevant to the grayscale sum, so BMP
+    (BGR) and PNG (RGB) hashes of identical pixel content agree."""
     import numpy as np
 
     px = px.astype(np.int64)
     h, w = px.shape[:2]
-    yi = (np.arange(grid_h, dtype=np.int64) * h) // grid_h
-    xi = (np.arange(grid_w, dtype=np.int64) * w) // grid_w
-    gray = px[yi][:, xi].sum(axis=2) // 3  # (grid_h, grid_w)
+    yi = (np.arange(8, dtype=np.int64) * h) // 8
+    xi = (np.arange(9, dtype=np.int64) * w) // 9
+    gray = px[yi][:, xi].sum(axis=2) // 3  # (8, 9)
     bits = (gray[:, :-1] > gray[:, 1:]).astype(np.uint64).flatten()  # row-major
     ph = int((bits << np.arange(bits.size, dtype=np.uint64)).sum(dtype=np.uint64))
     return ph - (1 << 64) if ph >= (1 << 63) else ph
 
 
-def dhash64_png(payload: bytes, grid_w: int = 9, grid_h: int = 8) -> int:
-    """dHash over GENUINELY decoded PNG pixels (chunk walk, inflate,
-    unfilter — :func:`decode_png_pixels`), same grid/bit convention as
-    :func:`dhash64_bmp`; channel order is irrelevant to the grayscale
-    sum, so BMP(BGR)/PNG(RGB) hashes of identical pixel content agree."""
-    return dhash64_pixels(decode_png_pixels(payload), grid_w, grid_h)
+def dhash64_bmp(payload: bytes) -> int:
+    """:func:`dhash64_pixels` over GENUINELY decoded BMP pixels."""
+    return dhash64_pixels(decode_bmp_pixels(payload))
+
+
+def dhash64_png(payload: bytes) -> int:
+    """:func:`dhash64_pixels` over GENUINELY decoded PNG pixels (chunk
+    walk, inflate, unfilter — :func:`decode_png_pixels`)."""
+    return dhash64_pixels(decode_png_pixels(payload))
 
 
 # ---------------------------------------------------------------------------

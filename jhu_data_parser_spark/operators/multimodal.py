@@ -1,759 +1,82 @@
 """Multimodal column plumbing (SURVEY.md §2.12).
 
-Images/audio/video are opaque ``binary`` columns plus typed metadata
-structs. The Spark-side plumbing — schema, Arrow batch shape,
-``mapInPandas`` signature, partition sizing — is real and tested. The
-decode step is REAL for BMP, PPM, WAV, GIF and PNG (vendored
-pure-python parsers in ``functions/codecs.py`` — PNG through zlib
-inflate + scanline unfiltering); formats needing external codec
-libraries (JPEG/MP4 — not in this container) fall back to a documented
-deterministic fake, or ``NotImplementedError`` in strict mode.
+Images, audio and video are opaque ``binary`` columns that
+Arrow-batched Python stages turn into typed rows. Every media operator
+here is one of two shapes over a ``(doc_id, media)`` frame:
 
-At 100 TB: binary payloads dominate partition size — Arrow batches of
-multi-MB blobs blow Python-worker memory if partitions are sized for
-scalar rows. :func:`repartition_for_payload` right-sizes partitions from
-sampled payload sizes before any Python stage; metadata extraction
-projects the binary column away as early as possible.
+- :func:`_synthesize` builds one payload per ``doc_id`` (the corpus
+  generators; in production this column comes from
+  ``spark.read.format('binaryFile')``);
+- :func:`_decode` turns each payload into zero, one or many typed rows.
+
+Every decode is real: BMP, PPM, PNG, GIF, baseline/progressive/4:2:0
+JPEG, WAV and raw-video MP4 are parsed by the vendored pure-Python
+codecs in ``functions/codecs.py``. Payload content is derived from the
+id by integer arithmetic, so the SQL oracles replay every decoded value
+without seeing a byte. Decode stages emit narrow typed rows; the binary
+column never leaves them.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import struct
+import zlib
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jhu_data_parser_spark.functions import codecs
+
 __all__ = [
-    "attach_binary",
-    "attach_image",
-    "attach_image_bucketed",
-    "perceptual_dhash",
-    "attach_audio",
-    "attach_video",
-    "attach_png",
-    "attach_jpeg",
-    "attach_jpeg_color",
-    "attach_jpeg_progressive",
-    "attach_mp4_raw",
-    "extract_mp4_meta",
-    "extract_jpeg_pixels_meta",
-    "extract_jpeg_color_meta",
-    "attach_image_mixed",
-    "attach_png_bucketed",
-    "extract_png_meta_quarantine",
-    "perceptual_dhash_png",
-    "extract_png_pixels_meta",
-    "resize_png_roundtrip",
-    "extract_video_meta",
-    "frame_sample_gif",
     "MEDIA_META_SCHEMA",
     "AUDIO_META_SCHEMA",
+    "attach_binary",
+    "attach_image",
+    "attach_image_mixed",
+    "attach_image_bucketed",
+    "attach_png",
+    "attach_png_tagged",
+    "attach_png_bucketed",
+    "attach_jpeg",
+    "attach_jpeg_color",
+    "attach_jpeg_420",
+    "attach_jpeg_progressive",
+    "attach_video",
+    "attach_mp4_raw",
+    "attach_mp4_mirrored",
+    "attach_audio",
+    "attach_wav_mirrored",
     "extract_media_meta",
+    "perceptual_dhash",
+    "resize_image_real",
+    "resize_stub",
+    "extract_png_pixels_meta",
+    "extract_png_meta_quarantine",
+    "perceptual_dhash_png",
+    "resize_png_roundtrip",
+    "strip_metadata_report",
+    "extract_jpeg_pixels_meta",
+    "extract_jpeg_color_meta",
+    "extract_video_meta",
+    "frame_sample_gif",
+    "extract_mp4_meta",
+    "extract_mp4_frame_sums",
+    "mp4_frame_signature",
     "extract_audio_meta",
     "extract_audio_frames",
-    "frame_sample_stub",
-    "resize_stub",
-    "resize_image_real",
+    "wav_content_fingerprint",
+    "wav_downsample_fingerprint",
     "embed_media_stub",
-    "repartition_for_payload",
 ]
 
-# Typed metadata contract for decoded media.
+# Typed metadata contract for decoded images.
 MEDIA_META_SCHEMA = (
     "doc_id bigint, media_type string, n_bytes bigint, width int, height int, "
     "n_frames int, sample_rate int"
 )
-
-
-def _spread_ids(df: DataFrame, id_col: str) -> DataFrame:
-    """CPU-parallelism guard for the synthesize stages: the id
-    projection inherits the FILE layout's split count, and a
-    single-row-group corpus means ONE task runs the whole Python codec
-    serially regardless of cores (measured r7: 17 s for 5000 color
-    JPEGs at sf0.1 on one task). Repartition the (tiny) id column
-    round-robin when the layout under-splits; at scale inputs have
-    ≥ cores files and this is a no-op — the same guard as
-    :func:`jhu_data_parser_spark.operators.dedup.ensure_parallelism`,
-    which it reuses."""
-    from jhu_data_parser_spark.operators.dedup import ensure_parallelism
-
-    return ensure_parallelism(df.select(id_col))
-
-
-def attach_binary(df: DataFrame, text_col: str = "text", media_col: str = "media") -> DataFrame:
-    """Synthesize an opaque binary payload column (UTF-8 bytes of the text
-    in tests; in production this is the raw image/audio bytes read via
-    ``spark.read.format('binaryFile')``)."""
-    return df.withColumn(media_col, F.encode(F.col(text_col), "UTF-8"))
-
-
-def attach_image(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Synthesize REAL image payloads (valid BMP / binary-P6 PPM bytes,
-    alternating by id parity) with dimensions derived from the id:
-    ``width = id % 64 + 16``, ``height = id % 48 + 16``. Downstream
-    decode then genuinely parses these headers — the dims travel through
-    the byte stream, not through a side channel. In production this
-    column comes from ``spark.read.format('binaryFile')`` instead."""
-    from jhu_data_parser_spark.functions.codecs import encode_bmp, encode_ppm
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 64 + 16, did % 48 + 16
-                enc = encode_bmp if did % 2 == 0 else encode_ppm
-                payloads.append(enc(w, h, seed=did))
-            yield pd.DataFrame({"doc_id": pdf[id_col].astype("int64"), media_col: payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(
-        _map, f"doc_id bigint, {media_col} binary"
-    )
-
-
-def attach_audio(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Synthesize REAL audio payloads (valid RIFF/WAVE PCM16 mono bytes)
-    with properties derived from the id: ``n_samples = id % 192 + 64``,
-    ``sample_rate ∈ {8000, 16000, 44100}`` by ``id % 3``, and sample
-    values from the integer recurrence in ``codecs._wav_samples``.
-    Downstream decode genuinely parses the RIFF chunk list and the PCM
-    bytes — every decoded property travels through the byte stream. In
-    production this column comes from ``spark.read.format('binaryFile')``."""
-    from jhu_data_parser_spark.functions.codecs import encode_wav
-
-    rates = (8000, 16000, 44100)
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                payloads.append(
-                    encode_wav(did % 192 + 64, rates[did % 3], seed=did)
-                )
-            yield pd.DataFrame({"doc_id": pdf[id_col].astype("int64"), media_col: payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(
-        _map, f"doc_id bigint, {media_col} binary"
-    )
-
-
-def attach_video(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Synthesize REAL multi-frame video payloads (valid animated GIF89a
-    bytes) with properties derived from the id: ``width = id % 32 + 8``,
-    ``height = id % 24 + 8``, ``n_frames = id % 7 + 1``. Downstream
-    decode genuinely walks the GIF block list — the frame count travels
-    through the byte stream (sub-block traversal, not length math)."""
-    from jhu_data_parser_spark.functions.codecs import encode_gif
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                payloads.append(
-                    encode_gif(did % 32 + 8, did % 24 + 8, did % 7 + 1, seed=did)
-                )
-            yield pd.DataFrame({"doc_id": pdf[id_col].astype("int64"), media_col: payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(
-        _map, f"doc_id bigint, {media_col} binary"
-    )
-
-
-def attach_png(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Synthesize REAL PNG payloads (valid 8-bit RGB, Sub-filtered
-    scanlines, stored-deflate IDAT) with dimensions derived from the
-    id: ``width = id % 64 + 16``, ``height = id % 48 + 16``, pixel
-    bytes from the LCG fill seeded by the id. Downstream decode
-    genuinely inflates and unfilters — pixel values travel through the
-    compressed byte stream, not a side channel. In production this
-    column comes from ``spark.read.format('binaryFile')``."""
-    from jhu_data_parser_spark.functions.codecs import encode_png
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_png(int(did) % 64 + 16, int(did) % 48 + 16, seed=int(did))
-                for did in pdf[id_col]
-            ]
-            yield pd.DataFrame({"doc_id": pdf[id_col].astype("int64"), media_col: payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(
-        _map, f"doc_id bigint, {media_col} binary"
-    )
-
-
-def attach_png_tagged(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Synthesize PNGs carrying tEXt metadata (Author = user-{id%97},
-    Software) between IHDR and IDAT — the corpus for the privacy
-    metadata-strip pass. Pixel stream identical to :func:`attach_png`,
-    so post-strip size/content replay from the same id arithmetic."""
-    from jhu_data_parser_spark.functions.codecs import encode_png_tagged
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_png_tagged(
-                    int(did) % 64 + 16,
-                    int(did) % 48 + 16,
-                    seed=int(did),
-                    author_id=int(did) % 97,
-                )
-                for did in pdf[id_col]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].astype("int64"), media_col: payloads}
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(
-        _map, f"doc_id bigint, {media_col} binary"
-    )
-
-
-def strip_metadata_report(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Strip every ancillary PNG chunk (CRC-checked walk) and prove the
-    cleaned stream still decodes by summing the first scanline THROUGH
-    inflate+unfilter. Arrow-batched ``mapInPandas``; one pass, no
-    shuffle."""
-    from jhu_data_parser_spark.functions.codecs import (
-        decode_png_pixels,
-        strip_png_ancillary,
-    )
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nrem, brem, clen, r0, kws = [], [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[media_col]):
-                clean, n, b, kw = strip_png_ancillary(bytes(payload))
-                px = decode_png_pixels(clean)
-                ids.append(int(did))
-                nrem.append(n)
-                brem.append(b)
-                clen.append(len(clean))
-                r0.append(int(px[0].sum()))
-                kws.append(kw)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_removed": pd.Series(nrem, dtype="int64"),
-                    "bytes_removed": pd.Series(brem, dtype="int64"),
-                    "clean_bytes": pd.Series(clen, dtype="int64"),
-                    "row0_sum": pd.Series(r0, dtype="int64"),
-                    "keywords": kws,
-                }
-            )
-
-    return df.mapInPandas(
-        _map,
-        "doc_id bigint, n_removed bigint, bytes_removed bigint,"
-        " clean_bytes bigint, row0_sum bigint, keywords string",
-    )
-
-
-def extract_png_pixels_meta(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Decode PNG payloads with ``mapInPandas`` THROUGH the pixel data:
-    CRC-checked chunk walk, zlib inflate, per-row unfiltering
-    (``codecs.decode_png_pixels``), emitting dims, the exact payload
-    size, and the decoded first-scanline byte sum — a value that only
-    comes out right if the Sub filter was genuinely undone."""
-    from jhu_data_parser_spark.functions.codecs import decode_png_pixels
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, widths, heights, n_bytes, row0 = [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[media_col]):
-                payload = bytes(payload)
-                px = decode_png_pixels(payload)
-                ids.append(int(did))
-                heights.append(px.shape[0])
-                widths.append(px.shape[1])
-                n_bytes.append(len(payload))
-                row0.append(int(px[0].sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "media_type": "png",
-                    "width": widths,
-                    "height": heights,
-                    "n_bytes": n_bytes,
-                    "row0_sum": row0,
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        _map,
-        "doc_id bigint, media_type string, width int, height int, "
-        "n_bytes bigint, row0_sum bigint",
-    )
-
-
-def attach_jpeg(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Synthesize REAL baseline JPEG payloads (valid JFIF: Annex K
-    Huffman tables, DQT/SOF0/DHT/SOS marker stream, stuffed entropy
-    data) with dims derived from the id: ``width = (id % 8 + 2) * 8``,
-    ``height = (id % 6 + 2) * 8``. Content is one constant value per
-    8x8 block (raster-ordered LCG bytes seeded by the id) with an
-    all-ones quantization table, which makes the LOSSY pipeline
-    mathematically exact: DC-only blocks quantized at 1 survive
-    DCT -> Huffman -> IDCT bit-for-bit, so SQL oracles can replay the
-    decoded pixels. The codec itself is general — nothing about the
-    encoder or decoder is special-cased to this content."""
-    import numpy as np
-
-    from jhu_data_parser_spark.functions.codecs import (
-        _fill_bytes,
-        encode_jpeg_gray,
-    )
-
-    def _payload(did: int) -> bytes:
-        w = (did % 8 + 2) * 8
-        h = (did % 6 + 2) * 8
-        vals = np.frombuffer(
-            _fill_bytes((w // 8) * (h // 8), seed=did), dtype=np.uint8
-        ).reshape(h // 8, w // 8)
-        px = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-        return encode_jpeg_gray(px)
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_payload(int(did)) for did in pdf[id_col]]
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].astype("int64"), media_col: payloads}
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(
-        _map, f"doc_id bigint, {media_col} binary"
-    )
-
-
-def extract_jpeg_pixels_meta(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Decode JPEG payloads with ``mapInPandas`` THROUGH the entropy
-    stream: marker walk, canonical-Huffman decode, dequantize,
-    de-zigzag, IDCT (``codecs.decode_jpeg_gray``), emitting dims, the
-    decoded first-row byte sum, and the full decoded pixel sum — values
-    that only come out right if Huffman + IDCT genuinely ran."""
-    from jhu_data_parser_spark.functions.codecs import decode_jpeg_gray
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, widths, heights, row0, total = [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[media_col]):
-                px = decode_jpeg_gray(bytes(payload))
-                ids.append(int(did))
-                heights.append(px.shape[0])
-                widths.append(px.shape[1])
-                row0.append(int(px[0].astype("int64").sum()))
-                total.append(int(px.astype("int64").sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "media_type": "jpeg",
-                    "width": widths,
-                    "height": heights,
-                    "row0_sum": row0,
-                    "pix_sum": total,
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        _map,
-        "doc_id bigint, media_type string, width int, height int, "
-        "row0_sum bigint, pix_sum bigint",
-    )
-
-
-def attach_jpeg_color(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Synthesize REAL baseline COLOR JPEG payloads (3-component YCbCr
-    4:4:4, interleaved MCUs, luminance + Annex K chrominance Huffman
-    tables): same dims/flat-block scheme as :func:`attach_jpeg`, with
-    each block an ACHROMATIC RGB color (R=G=B=LCG byte) — the YCbCr
-    conversion is exact for gray content, so the lossy color pipeline
-    roundtrips bit-for-bit and stays oracle-replayable while the codec
-    exercises the full interleaved 3-predictor entropy path."""
-    import numpy as np
-
-    from jhu_data_parser_spark.functions.codecs import (
-        _fill_bytes,
-        encode_jpeg_rgb,
-    )
-
-    def _payload(did: int) -> bytes:
-        w = (did % 8 + 2) * 8
-        h = (did % 6 + 2) * 8
-        vals = np.frombuffer(
-            _fill_bytes((w // 8) * (h // 8), seed=did), dtype=np.uint8
-        ).reshape(h // 8, w // 8)
-        gray = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-        return encode_jpeg_rgb(np.stack([gray, gray, gray], axis=2))
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_payload(int(did)) for did in pdf[id_col]]
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].astype("int64"), media_col: payloads}
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(
-        _map, f"doc_id bigint, {media_col} binary"
-    )
-
-
-def attach_jpeg_420(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Synthesize REAL baseline COLOR JPEG payloads with 4:2:0 chroma
-    subsampling (Y 2×2, Cb/Cr 1×1 — the sampling layout real-world
-    JPEGs overwhelmingly use): dims are whole MCUs
-    (w = (doc_id % 4 + 1)·16, h = (doc_id % 3 + 1)·16) and each 16×16
-    MCU is a flat ACHROMATIC color (R=G=B=LCG byte), so the chroma
-    planes are exactly 128 at any downsample and the lossy subsampled
-    pipeline roundtrips bit-for-bit — oracle-replayable while the
-    stream exercises the full 4-Y-blocks-per-MCU interleaved walk."""
-    import numpy as np
-
-    from jhu_data_parser_spark.functions.codecs import (
-        _fill_bytes,
-        encode_jpeg_rgb_420,
-    )
-
-    def _payload(did: int) -> bytes:
-        w = (did % 4 + 1) * 16
-        h = (did % 3 + 1) * 16
-        vals = np.frombuffer(
-            _fill_bytes((w // 16) * (h // 16), seed=did), dtype=np.uint8
-        ).reshape(h // 16, w // 16)
-        gray = np.repeat(np.repeat(vals, 16, axis=0), 16, axis=1)
-        return encode_jpeg_rgb_420(np.stack([gray, gray, gray], axis=2))
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_payload(int(did)) for did in pdf[id_col]]
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].astype("int64"), media_col: payloads}
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(
-        _map, f"doc_id bigint, {media_col} binary"
-    )
-
-
-def extract_jpeg_color_meta(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Decode COLOR JPEG payloads through the interleaved entropy
-    stream (``codecs.decode_jpeg_pixels``): emits dims, component
-    count, the decoded first-row sum over ALL channels, and the full
-    RGB pixel sum — values that require the 3-predictor Huffman walk,
-    both chroma tables, IDCT, and the YCbCr→RGB conversion to all be
-    right."""
-    from jhu_data_parser_spark.functions.codecs import (
-        decode_jpeg_meta,
-        decode_jpeg_pixels,
-    )
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, widths, heights, ncomps, row0, total = [], [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[media_col]):
-                payload = bytes(payload)
-                px = decode_jpeg_pixels(payload)
-                _w, _h, nc = decode_jpeg_meta(payload)
-                ids.append(int(did))
-                heights.append(px.shape[0])
-                widths.append(px.shape[1])
-                ncomps.append(int(nc))
-                row0.append(int(px[0].astype("int64").sum()))
-                total.append(int(px.astype("int64").sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "media_type": "jpeg",
-                    "width": widths,
-                    "height": heights,
-                    "n_components": ncomps,
-                    "row0_sum": row0,
-                    "pix_sum": total,
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        _map,
-        "doc_id bigint, media_type string, width int, height int, "
-        "n_components int, row0_sum bigint, pix_sum bigint",
-    )
-
-
-def attach_image_mixed(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Synthesize a MIXED-format image corpus — BMP / binary-P6 PPM /
-    PNG by ``id % 3``, dims ``(id % 64 + 16, id % 48 + 16)``, LCG fill
-    seeded by the id — the realistic ingest shape where the format is
-    only discoverable by sniffing each payload's magic bytes.
-    Downstream ``extract_media_meta`` must DISPATCH on the sniffed
-    format and genuinely parse all three."""
-    from jhu_data_parser_spark.functions.codecs import (
-        encode_bmp,
-        encode_png,
-        encode_ppm,
-    )
-
-    encoders = (encode_bmp, encode_ppm, encode_png)
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                payloads.append(
-                    encoders[did % 3](did % 64 + 16, did % 48 + 16, seed=did)
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].astype("int64"), media_col: payloads}
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(
-        _map, f"doc_id bigint, {media_col} binary"
-    )
-
-
-def attach_png_bucketed(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-    seed_mod: int = 23,
-    perturb_odd: bool = False,
-) -> DataFrame:
-    """Synthesize PNG payloads whose CONTENT (dims + pixels) is keyed by
-    ``id % seed_mod`` — the planted-duplicate corpus for
-    content-addressed image dedup on the PNG path (the BMP twin is
-    :func:`attach_image_bucketed`). With ``perturb_odd``, odd ids get a
-    +128 perturbation of the pixel the 9×8 dHash grid samples at its
-    center (gx=4, gy=4, channel 0) BEFORE encoding, so the perturbation
-    rides through the Sub filter + zlib stream and only resurfaces via
-    genuine decode."""
-    import numpy as np
-
-    from jhu_data_parser_spark.functions.codecs import _fill_bytes, encode_png_pixels
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                s = did % seed_mod
-                w, h = s % 64 + 16, s % 48 + 16
-                arr = np.frombuffer(
-                    _fill_bytes(w * h * 3, s), dtype=np.uint8
-                ).reshape(h, w, 3).copy()
-                if perturb_odd and did % 2 == 1:
-                    sx, sy = (4 * w) // 9, (4 * h) // 8
-                    arr[sy, sx, 0] = (int(arr[sy, sx, 0]) + 128) % 256
-                payloads.append(encode_png_pixels(arr))
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].astype("int64"), media_col: payloads}
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(
-        _map, f"doc_id bigint, {media_col} binary"
-    )
-
-
-def perceptual_dhash_png(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Per-image 64-bit dHash from genuinely decoded PNG pixels (chunk
-    walk + inflate + unfilter; codecs.dhash64_png). Arrow-batched
-    mapInPandas, no shuffle; only the 8-byte hash travels downstream."""
-    from jhu_data_parser_spark.functions.codecs import dhash64_png
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "phash": [dhash64_png(bytes(b)) for b in pdf[media_col]],
-                }
-            )
-
-    return df.mapInPandas(_map, "doc_id bigint, phash bigint")
-
-
-def extract_png_meta_quarantine(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Decode-with-quarantine: the bad-record routing every at-scale
-    ingest needs. Each payload is decoded through the full PNG path;
-    payloads that fail (truncation, CRC corruption, garbage) are NOT
-    allowed to kill the job — they come back as ``status='error'`` rows
-    with NULL dims, while good rows carry real decoded metadata. One
-    pass, no driver round-trip, quarantine is just a downstream
-    filter."""
-    import struct as _struct
-    import zlib
-
-    from jhu_data_parser_spark.functions.codecs import decode_png_pixels
-
-    # Only codec-shaped failures are quarantinable; anything else
-    # (memory, interrupts, bugs) still fails the task loudly.
-    _CODEC_ERRORS = (ValueError, zlib.error, _struct.error)
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, status, widths, heights = [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[media_col]):
-                ids.append(int(did))
-                try:
-                    px = decode_png_pixels(bytes(payload))
-                    status.append("ok")
-                    heights.append(px.shape[0])
-                    widths.append(px.shape[1])
-                except _CODEC_ERRORS:
-                    status.append("error")
-                    heights.append(None)
-                    widths.append(None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "status": status,
-                    "width": pd.array(widths, dtype="Int32"),
-                    "height": pd.array(heights, dtype="Int32"),
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        _map, "doc_id bigint, status string, width int, height int"
-    )
-
-
-def resize_png_roundtrip(
-    df: DataFrame,
-    scale_den: int = 2,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-) -> DataFrame:
-    """REAL PNG resize with a roundtrip proof: decode (inflate +
-    unfilter) → nearest-neighbor resample → re-ENCODE a valid
-    Sub-filtered PNG → decode the re-encoded bytes AGAIN, emitting the
-    second decode's dims, exact byte size, and first-scanline sum. The
-    emitted values pass through two full codec cycles, so a hash match
-    certifies decode, resample, re-encode and re-decode together."""
-    from jhu_data_parser_spark.functions.codecs import (
-        decode_png_meta,
-        decode_png_pixels,
-        resize_png_nearest,
-    )
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, widths, heights, n_bytes, row0 = [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[media_col]):
-                w, h, _, _ = decode_png_meta(bytes(payload))
-                out = resize_png_nearest(
-                    bytes(payload), max(w // scale_den, 1), max(h // scale_den, 1)
-                )
-                px = decode_png_pixels(out)
-                ids.append(int(did))
-                heights.append(px.shape[0])
-                widths.append(px.shape[1])
-                n_bytes.append(len(out))
-                row0.append(int(px[0].sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "media_type": "png",
-                    "width": widths,
-                    "height": heights,
-                    "n_bytes": n_bytes,
-                    "row0_sum": row0,
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        _map,
-        "doc_id bigint, media_type string, width int, height int, "
-        "n_bytes bigint, row0_sum bigint",
-    )
-
-
-def extract_video_meta(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Decode GIF video metadata with ``mapInPandas``: screen dims from
-    the logical screen descriptor, frame count from a full block walk
-    (``codecs.decode_gif``). Early projection drops the binary column."""
-    from jhu_data_parser_spark.functions.codecs import decode_gif
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [decode_gif(bytes(p)) for p in pdf[media_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "media_type": "gif",
-                    "width": [m[0] for m in metas],
-                    "height": [m[1] for m in metas],
-                    "n_frames": [m[2] for m in metas],
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        _map, "doc_id bigint, media_type string, width int, height int, n_frames int"
-    )
-
-
-def frame_sample_gif(
-    df: DataFrame,
-    every_nth: int = 2,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-) -> DataFrame:
-    """REAL video frame sampling: parse the GIF's actual frame count,
-    emit one row per sampled frame (0, n, 2n, …) — the 1→N mapInPandas
-    expansion with the N coming from genuine container parsing (compare
-    :func:`frame_sample_stub`, which fakes N from payload length)."""
-    from jhu_data_parser_spark.functions.codecs import decode_gif
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_frames, out_w, out_h = [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[media_col]):
-                w, h, n_frames = decode_gif(bytes(payload))
-                for f in range(0, n_frames, every_nth):
-                    out_ids.append(int(did))
-                    out_frames.append(f)
-                    out_w.append(w)
-                    out_h.append(h)
-            yield pd.DataFrame(
-                {"doc_id": out_ids, "frame_no": out_frames, "width": out_w, "height": out_h}
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        _map, "doc_id bigint, frame_no int, width int, height int"
-    )
-
 
 # Typed metadata contract for decoded audio. duration_us is integer
 # microseconds (floor) so it is exactly recomputable; abs_amplitude_sum
@@ -764,680 +87,279 @@ AUDIO_META_SCHEMA = (
     "bit_depth int, n_samples bigint, duration_us bigint, abs_amplitude_sum bigint"
 )
 
+_RATES = (8000, 16000, 44100)
 
-def extract_audio_meta(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Decode WAV metadata + a waveform aggregate with ``mapInPandas``.
 
-    The RIFF container and PCM samples are parsed FOR REAL by the
-    vendored ``codecs.decode_wav`` (chunk walk, fmt validation, int16
-    LE sample decode). Per row we emit the format properties and
-    Σ|sample| (int64 — numpy abs of int16 -32768 would overflow, so the
-    samples are widened first). Projection drops the binary column as
-    soon as the batch is decoded, same early-projection posture as
-    :func:`extract_media_meta`.
-    """
-    import numpy as np
+def _synthesize(df: DataFrame, payload: Callable[[int], bytes]) -> DataFrame:
+    """``(doc_id bigint, media binary)`` with ``payload(doc_id)`` as
+    each row's media.
 
-    from jhu_data_parser_spark.functions.codecs import decode_wav
+    The id projection inherits the file layout's split count, and a
+    single-row-group corpus means ONE task runs the whole Python codec
+    serially whatever the cores (measured r7: 17 s for 5000 colour
+    JPEGs at sf0.1 on one task). :func:`dedup.ensure_parallelism`
+    repartitions the tiny id column round-robin when the layout
+    under-splits; at scale the input has >= cores files and it is a
+    no-op."""
+    from jhu_data_parser_spark.operators.dedup import ensure_parallelism
 
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = {k: [] for k in (
-                "media_type", "sample_rate", "n_channels", "bit_depth",
-                "n_samples", "duration_us", "abs_amplitude_sum",
-            )}
-            for payload in pdf[media_col]:
-                rate, channels, bits, samples = decode_wav(bytes(payload))
-                n = len(samples) // channels
-                rows["media_type"].append("wav")
-                rows["sample_rate"].append(rate)
-                rows["n_channels"].append(channels)
-                rows["bit_depth"].append(bits)
-                rows["n_samples"].append(n)
-                rows["duration_us"].append(n * 1_000_000 // rate)
-                rows["abs_amplitude_sum"].append(
-                    int(np.abs(samples.astype(np.int64)).sum())
-                )
-            yield pd.DataFrame({"doc_id": pdf[id_col].astype("int64"), **rows})
+            ids = pdf["doc_id"].astype("int64")
+            yield pd.DataFrame({"doc_id": ids, "media": [payload(int(d)) for d in ids]})
 
-    return df.select(id_col, media_col).mapInPandas(_map, AUDIO_META_SCHEMA)
-
-
-def extract_audio_frames(
-    df: DataFrame,
-    n_frames: int = 4,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-) -> DataFrame:
-    """Per-FRAME waveform features from genuinely-parsed PCM: split each
-    clip into ``n_frames`` balanced frames (frame of sample i =
-    ``n_frames*i // n``) and emit per frame the sample count, Σ|sample|
-    (abs energy) and the zero-crossing count (strict sign flips between
-    ADJACENT samples of the same frame) — the framing step every audio
-    feature-extraction pipeline (VAD, energy gating, silence trimming)
-    runs before modeling.
-
-    All features are integer-exact, so the oracle can replay them from
-    id arithmetic without seeing a byte (the proof the parser really
-    read the PCM). Arrow-batched ``mapInPandas``; samples widen to int64
-    before products (int16·int16 overflows numpy int16)."""
-    import numpy as np
-
-    from jhu_data_parser_spark.functions.codecs import decode_wav
-
-    schema = (
-        "doc_id bigint, frame int, n_samples bigint, "
-        "abs_energy bigint, zero_crossings bigint"
-    )
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "frame", "n_samples", "abs_energy", "zero_crossings",
-            )}
-            for did, payload in zip(pdf[id_col], pdf[media_col]):
-                _rate, channels, _bits, samples = decode_wav(bytes(payload))
-                v = samples.astype(np.int64)[:: max(channels, 1)]
-                n = len(v)
-                fr = (n_frames * np.arange(n)) // max(n, 1)
-                flip = np.zeros(n, dtype=bool)
-                if n > 1:
-                    flip[1:] = (v[:-1] * v[1:] < 0) & (fr[:-1] == fr[1:])
-                for f in range(n_frames):
-                    m = fr == f
-                    if not m.any():
-                        continue
-                    out["doc_id"].append(int(did))
-                    out["frame"].append(f)
-                    out["n_samples"].append(int(m.sum()))
-                    out["abs_energy"].append(int(np.abs(v[m]).sum()))
-                    out["zero_crossings"].append(int(flip[m].sum()))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, media_col).mapInPandas(_map, schema)
-
-
-def repartition_for_payload(
-    df: DataFrame,
-    media_col: str = "media",
-    target_mb: int = 64,
-    sample_rows: int = 1_000,
-) -> DataFrame:
-    """Partition-size the frame for binary payloads: estimate average
-    payload bytes from a bounded sample, target ``target_mb`` of payload
-    per partition, repartition round-robin.
-
-    One bounded sample job — layout-time cost, not per-query. Total
-    payload bytes are extrapolated from the sample's avg payload and the
-    source file bytes (``inputFiles`` listing + parquet footer row
-    counts are not needed: on-disk file size is a cheap, good-enough
-    proxy for relative scale). No full ``df.count()`` and no
-    ``rdd.getNumPartitions()`` plan→RDD conversion (r01 verdict item 5).
-    (When reading real media via ``binaryFile`` the file source already
-    sizes splits by bytes; this helper covers payloads synthesized or
-    joined in mid-pipeline, where Spark only counts rows.)"""
-    stats = (
-        df.select(F.octet_length(media_col).alias("n"))
-        .limit(sample_rows)
-        .agg(F.count(F.lit(1)).alias("k"), F.sum("n").alias("b"))
-        .first()
-    )
-    k, sampled_bytes = stats["k"] or 0, stats["b"] or 0
-    if k == 0:
-        return df
-    avg = sampled_bytes / k
-    if k < sample_rows:
-        # Sample saw the whole frame — the sampled byte total IS the total.
-        total = float(sampled_bytes)
-    else:
-        # Extrapolate row count from on-disk footprint: bytes-on-disk /
-        # (bytes-on-disk of the sampled fraction). File sizes come from a
-        # filesystem listing of inputFiles() — no table scan. If the
-        # frame isn't file-backed (mid-pipeline synth), fall back to the
-        # conservative assumption that the sample underestimates by the
-        # parallelism factor.
-        import os
-
-        files = df.inputFiles()
-        disk_bytes = 0
-        for uri in files:
-            path = uri[len("file:") :] if uri.startswith("file:") else uri
-            try:
-                disk_bytes += os.path.getsize(path)
-            except OSError:
-                pass
-        if disk_bytes > 0:
-            # Payload-heavy tables: payload ≈ dominant share of file bytes.
-            total = float(disk_bytes)
-        else:
-            total = avg * k * df.sparkSession.sparkContext.defaultParallelism
-    n_parts = max(1, int(total / (target_mb * 1024 * 1024)) + 1)
-    min_parts = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(max(n_parts, min_parts))
-
-
-def extract_media_meta(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-    media_type: str = "image",
-    strict: bool = False,
-) -> DataFrame:
-    """Decode media metadata with ``mapInPandas`` (Arrow batches).
-
-    BMP, PPM and (since r05) PNG payloads are decoded FOR REAL —
-    width/height parsed from the byte stream by the vendored
-    pure-python codecs (``functions/codecs.py``); their ``media_type``
-    reflects the sniffed format. Other formats (JPEG/MP4 — no codec
-    libs in this container) fall back to the documented deterministic
-    fake, or raise in ``strict`` mode. Everything around the decode —
-    batch iteration, output schema, early projection of the heavy
-    binary column — is the production shape either way.
-    """
-    from jhu_data_parser_spark.functions.codecs import decode_image_meta
-
-    def _decode_one(payload: bytes) -> tuple[str, int, int, int, int]:
-        payload = bytes(payload)
-        real = decode_image_meta(payload)
-        if real is not None:
-            fmt, w, h = real
-            return fmt, w, h, 1, 0  # still image: 1 frame, no audio rate
-        if strict:
-            raise NotImplementedError(
-                f"no vendored codec for this payload (magic={payload[:4]!r}); "
-                "swap in PIL/ffmpeg for real decode of other formats"
-            )
-        # Deterministic fake for formats without a vendored codec:
-        # derive dimensions from the byte length so tests can assert
-        # exact values.
-        n = len(payload)
-        return media_type, (n % 1920) + 1, (n % 1080) + 1, (n % 30) + 1, 16000
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [_decode_one(p) for p in pdf[media_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "media_type": [m[0] for m in metas],
-                    "n_bytes": [len(p) for p in pdf[media_col]],
-                    "width": [m[1] for m in metas],
-                    "height": [m[2] for m in metas],
-                    "n_frames": [m[3] for m in metas],
-                    "sample_rate": [m[4] for m in metas],
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(_map, MEDIA_META_SCHEMA)
-
-
-def resize_image_real(
-    df: DataFrame,
-    scale_den: int = 2,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-) -> DataFrame:
-    """REAL image resize for BMP payloads: decode the pixel array,
-    nearest-neighbor resample (numpy index maps), re-encode a valid BMP
-    at ``dims // scale_den`` (``codecs.resize_bmp_nearest``). The
-    1→1 ``mapInPandas`` shape of :func:`resize_stub`, with an actual
-    resampler inside — pixel correctness pinned against a direct numpy
-    reference in pytest."""
-    from jhu_data_parser_spark.functions.codecs import decode_image_meta, resize_bmp_nearest
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_media, out_w, out_h = [], [], []
-            for payload in pdf[media_col]:
-                payload = bytes(payload)
-                meta = decode_image_meta(payload)
-                if meta is None or meta[0] != "bmp":
-                    raise ValueError("resize_image_real requires BMP payloads")
-                _, w, h = meta
-                nw, nh = max(w // scale_den, 1), max(h // scale_den, 1)
-                out_media.append(resize_bmp_nearest(payload, nw, nh))
-                out_w.append(nw)
-                out_h.append(nh)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "media": out_media,
-                    "width": out_w,
-                    "height": out_h,
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        _map, "doc_id bigint, media binary, width int, height int"
+    return ensure_parallelism(df.select("doc_id")).mapInPandas(
+        _map, "doc_id bigint, media binary"
     )
 
 
-def resize_stub(
-    df: DataFrame,
-    width: int = 224,
-    height: int = 224,
-    id_col: str = "doc_id",
-    media_col: str = "media",
+def _decode(
+    df: DataFrame, schema: str, rows: Callable[[int, bytes], Iterable[tuple]]
 ) -> DataFrame:
-    """Image-resize plumbing: media → resized media + recorded target
-    dims. The resample itself is stubbed (no PIL in this container) as a
-    deterministic byte re-sampling to a size proportional to the target
-    area; schema, batch shape, and the 1→1 mapInPandas contract are the
-    production shape (swap `_resize_one` for PIL's ``Image.resize``)."""
-
-    target_len = max(1, (width * height) // 1024)
-
-    def _resize_one(payload: bytes) -> bytes:
-        if not payload:
-            return b""
-        stride = max(1, len(payload) // target_len)
-        return bytes(payload[::stride][:target_len])
+    """Decode ``(doc_id, media)`` into rows of ``schema``, a DDL string
+    whose column types hold no commas: ``rows(doc_id, payload)`` yields
+    tuples in the column order of ``schema``, zero, one or many per
+    payload. A ``None`` comes back as NULL. Only the two input columns
+    enter the Arrow batches, and only the typed rows leave them."""
+    names = [col.split()[0] for col in schema.split(",")]
 
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "media": [_resize_one(p) for p in pdf[media_col]],
-                    "width": width,
-                    "height": height,
-                }
-            )
+            out = [
+                row
+                for did, payload in zip(pdf["doc_id"], pdf["media"])
+                for row in rows(int(did), bytes(payload))
+            ]
+            yield pd.DataFrame.from_records(out, columns=names)
 
-    return df.select(id_col, media_col).mapInPandas(
-        _map, "doc_id bigint, media binary, width int, height int"
-    )
+    return df.select("doc_id", "media").mapInPandas(_map, schema)
 
 
-def embed_media_stub(
-    df: DataFrame,
-    dim: int = 64,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-    vec_col: str = "embedding",
-    with_stats: bool = False,
-) -> DataFrame:
-    """Feature extraction: media → ``array<float>`` embedding, the
-    bridge from binary columns into the similarity/ANN operators.
-
-    The featurizer is a deterministic stand-in (L2-normalized byte
-    bigram histogram folded to ``dim`` buckets — a real, if crude,
-    content feature) where production plugs a vision/audio encoder; the
-    Arrow batch shape, output schema, and downstream compatibility with
-    ``topk_cosine*`` / ``rp_bucket_expr`` / ``ivf_*`` are the real
-    contract (tested end-to-end).
-
-    ``with_stats`` adds the pre-normalization integer facts —
-    ``top_bucket`` (argmax bucket, lowest index on ties) and
-    ``top_count`` — which are exactly replayable from the payload bytes
-    in SQL, giving the featurizer a cross-engine value-hash gate."""
-    import numpy as np
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vecs, tb, tc = [], [], []
-            for payload in pdf[media_col]:
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                if len(arr) >= 2:
-                    bigrams = (arr[:-1].astype(np.int64) * 256 + arr[1:]) % dim
-                    hist = np.bincount(bigrams, minlength=dim).astype(np.float64)
-                else:
-                    hist = np.ones(dim, dtype=np.float64)
-                norm = np.linalg.norm(hist) or 1.0
-                vecs.append((hist / norm).astype(np.float32).tolist())
-                tb.append(int(np.argmax(hist)))  # first max → lowest bucket
-                tc.append(int(hist.max()))
-            out = {"doc_id": pdf[id_col].astype("int64"), vec_col: vecs}
-            if with_stats:
-                out["top_bucket"] = pd.Series(tb, dtype="int32")
-                out["top_count"] = pd.Series(tc, dtype="int64")
-            yield pd.DataFrame(out)
-
-    schema = f"doc_id bigint, {vec_col} array<float>"
-    if with_stats:
-        schema += ", top_bucket int, top_count bigint"
-    return df.select(id_col, media_col).mapInPandas(_map, schema)
+def _flat_blocks(did: int, w: int, h: int, block: int) -> np.ndarray:
+    """(h, w) uint8 plane with one constant LCG byte (seeded by ``did``,
+    raster order) per ``block``×``block`` tile — the content that makes
+    the lossy JPEG pipelines exact: a flat tile is DC-only, and a DC
+    quantized at 1 survives DCT -> Huffman -> IDCT bit-for-bit."""
+    vals = np.frombuffer(
+        codecs._fill_bytes((w // block) * (h // block), seed=did), dtype=np.uint8
+    ).reshape(h // block, w // block)
+    return np.repeat(np.repeat(vals, block, axis=0), block, axis=1)
 
 
-def frame_sample_stub(
-    df: DataFrame,
-    every_nth: int = 10,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-) -> DataFrame:
-    """Video frame sampling plumbing: one output row per sampled frame,
-    frame payload stubbed as a deterministic byte slice. Demonstrates the
-    1→N mapInPandas expansion shape (row explosion happens Python-side in
-    Arrow batches, then Spark repartitions downstream)."""
+def _gray_rgb(gray: np.ndarray) -> np.ndarray:
+    return np.stack([gray, gray, gray], axis=2)
 
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_frames, out_payloads = [], [], []
-            for did, payload in zip(pdf[id_col], pdf[media_col]):
-                n_frames = (len(payload) % 30) + 1
-                for f in range(0, n_frames, every_nth):
-                    out_ids.append(did)
-                    out_frames.append(f)
-                    out_payloads.append(bytes(payload[f : f + 16]))
-            yield pd.DataFrame(
-                {"doc_id": out_ids, "frame_no": out_frames, "frame_bytes": out_payloads}
-            )
 
-    return df.select(id_col, media_col).mapInPandas(
-        _map, "doc_id bigint, frame_no int, frame_bytes binary"
+# --- synthesized corpora ---------------------------------------------------
+
+
+def attach_binary(df: DataFrame) -> DataFrame:
+    """Opaque binary payload column: the UTF-8 bytes of ``text``."""
+    return df.withColumn("media", F.encode(F.col("text"), "UTF-8"))
+
+
+def attach_image(df: DataFrame) -> DataFrame:
+    """BMP (even id) or binary-P6 PPM (odd id) payloads with
+    ``width = id % 64 + 16``, ``height = id % 48 + 16``: the dims travel
+    through the byte stream, not a side channel."""
+
+    def payload(did: int) -> bytes:
+        enc = codecs.encode_bmp if did % 2 == 0 else codecs.encode_ppm
+        return enc(did % 64 + 16, did % 48 + 16, seed=did)
+
+    return _synthesize(df, payload)
+
+
+def attach_image_mixed(df: DataFrame) -> DataFrame:
+    """A mixed-format corpus — BMP / PPM / PNG by ``id % 3``, dims as
+    :func:`attach_image` — where the format is only discoverable by
+    sniffing each payload's magic bytes."""
+    encoders = (codecs.encode_bmp, codecs.encode_ppm, codecs.encode_png)
+    return _synthesize(
+        df, lambda did: encoders[did % 3](did % 64 + 16, did % 48 + 16, seed=did)
     )
 
 
 def attach_image_bucketed(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-    seed_mod: int = 23,
-    perturb_odd: bool = False,
+    df: DataFrame, seed_mod: int = 23, perturb_odd: bool = False
 ) -> DataFrame:
-    """Synthesize BMP payloads whose CONTENT (dims + pixels) is keyed by
-    ``id % seed_mod`` rather than the id itself, so distinct documents
-    deliberately carry byte-identical images — the planted-duplicate
-    corpus for content-addressed image dedup. With ``perturb_odd``, odd
-    ids additionally get a +128 perturbation of the pixel the 9×8 dHash
-    grid samples at its center (gx=4, gy=4, channel 0) — planted NEAR
-    duplicates at small nonzero Hamming distance from their even twins.
-    In production this column comes from
-    ``spark.read.format('binaryFile')``."""
-    from jhu_data_parser_spark.functions.codecs import bmp_row_size, encode_bmp
+    """BMP payloads whose content (dims + pixels) is keyed by
+    ``id % seed_mod``, so distinct documents carry byte-identical images
+    — the planted-duplicate corpus for content-addressed image dedup.
+    With ``perturb_odd``, odd ids get +128 on the pixel the 9×8 dHash
+    grid samples at its centre (gx=4, gy=4, channel 0): planted NEAR
+    duplicates at small nonzero Hamming distance from their even twins."""
 
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                s = did % seed_mod
-                w, h = s % 64 + 16, s % 48 + 16
-                payload = encode_bmp(w, h, seed=s)
-                if perturb_odd and did % 2 == 1:
-                    sx, sy = (4 * w) // 9, (4 * h) // 8
-                    pidx = (h - 1 - sy) * bmp_row_size(w) + sx * 3
-                    buf = bytearray(payload)
-                    buf[54 + pidx] = (buf[54 + pidx] + 128) % 256
-                    payload = bytes(buf)
-                payloads.append(payload)
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].astype("int64"), media_col: payloads}
-            )
+    def payload(did: int) -> bytes:
+        s = did % seed_mod
+        w, h = s % 64 + 16, s % 48 + 16
+        out = codecs.encode_bmp(w, h, seed=s)
+        if not (perturb_odd and did % 2 == 1):
+            return out
+        sx, sy = (4 * w) // 9, (4 * h) // 8
+        pidx = 54 + (h - 1 - sy) * codecs.bmp_row_size(w) + sx * 3
+        buf = bytearray(out)
+        buf[pidx] = (buf[pidx] + 128) % 256
+        return bytes(buf)
 
-    return _spread_ids(df, id_col).mapInPandas(
-        _map, f"doc_id bigint, {media_col} binary"
+    return _synthesize(df, payload)
+
+
+def attach_png(df: DataFrame) -> DataFrame:
+    """8-bit RGB PNGs (Sub-filtered scanlines, stored-deflate IDAT),
+    dims as :func:`attach_image`, pixels from the LCG fill seeded by the
+    id: decode must genuinely inflate and unfilter."""
+    return _synthesize(
+        df, lambda did: codecs.encode_png(did % 64 + 16, did % 48 + 16, seed=did)
     )
 
 
-def perceptual_dhash(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Per-image 64-bit perceptual difference hash from genuinely decoded
-    pixel bytes (see codecs.dhash64_bmp). Arrow-batched mapInPandas —
-    embarrassingly parallel, no shuffle; the hash column (8 bytes/row)
-    is what downstream dedup shuffles, never the payloads."""
-    from jhu_data_parser_spark.functions.codecs import dhash64_bmp
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "phash": [dhash64_bmp(bytes(b)) for b in pdf[media_col]],
-                }
-            )
-
-    return df.mapInPandas(_map, "doc_id bigint, phash bigint")
-
-
-def attach_jpeg_progressive(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Synthesize REAL PROGRESSIVE (SOF2) JPEG payloads: the same
-    dims/flat-block/LCG scheme as :func:`attach_jpeg`, re-encoded as a
-    five-scan progressive stream (DC first + refine, two
-    spectral-selection AC bands, one AC successive-approximation
-    refinement — ``codecs._JPEG_PROG_SCANS``). A progressive stream
-    carries the identical quantized coefficients as the baseline one,
-    so the flat-block content roundtrips bit-for-bit and the SAME
-    arithmetic oracle replays the decoded pixels; the decoder, however,
-    must genuinely walk all five scans and accumulate coefficients
-    (point transforms, EOB runs, correction bits) to reproduce them."""
-    import numpy as np
-
-    from jhu_data_parser_spark.functions.codecs import (
-        _fill_bytes,
-        encode_jpeg_gray_progressive,
-    )
-
-    def _payload(did: int) -> bytes:
-        w = (did % 8 + 2) * 8
-        h = (did % 6 + 2) * 8
-        vals = np.frombuffer(
-            _fill_bytes((w // 8) * (h // 8), seed=did), dtype=np.uint8
-        ).reshape(h // 8, w // 8)
-        px = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-        return encode_jpeg_gray_progressive(px)
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_payload(int(did)) for did in pdf[id_col]]
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].astype("int64"), media_col: payloads}
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(
-        _map, f"doc_id bigint, {media_col} binary"
+def attach_png_tagged(df: DataFrame) -> DataFrame:
+    """PNGs carrying tEXt metadata (Author = user-{id%97}, Software)
+    between IHDR and IDAT — the corpus for the metadata-strip pass. The
+    pixel stream is :func:`attach_png`'s."""
+    return _synthesize(
+        df,
+        lambda did: codecs.encode_png_tagged(
+            did % 64 + 16, did % 48 + 16, seed=did, author_id=did % 97
+        ),
     )
 
 
-def attach_mp4_raw(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
+def attach_png_bucketed(
+    df: DataFrame, seed_mod: int = 23, perturb_odd: bool = False
 ) -> DataFrame:
-    """Synthesize REAL MP4 payloads (valid ISO BMFF: ftyp + mdat + moov
-    with full stsd/stts/stsc/stsz/stco sample tables, uncompressed
-    'raw ' RGB24 video samples at real mdat offsets) with properties
-    derived from the id: ``width = (id % 4 + 1) * 8``,
-    ``height = (id % 3 + 1) * 8``, ``n_frames = id % 5 + 2``; frame f
-    is the constant LCG byte ``_fill_bytes(n_frames, id)[f]`` across
-    all pixels/channels, so SQL oracles replay every decoded sum from
-    id arithmetic while the decoder genuinely walks the box tree and
-    sample tables to find the bytes."""
-    from jhu_data_parser_spark.functions.codecs import encode_mp4_raw
+    """The PNG twin of :func:`attach_image_bucketed`: the perturbation is
+    applied BEFORE encoding, so it rides through the Sub filter + zlib
+    stream and only resurfaces via genuine decode."""
 
-    def _payload(did: int) -> bytes:
-        w = (did % 4 + 1) * 8
-        h = (did % 3 + 1) * 8
-        nf = did % 5 + 2
-        return encode_mp4_raw(w, h, nf, seed=did)
+    def payload(did: int) -> bytes:
+        s = did % seed_mod
+        w, h = s % 64 + 16, s % 48 + 16
+        arr = np.frombuffer(codecs._fill_bytes(w * h * 3, s), dtype=np.uint8)
+        arr = arr.reshape(h, w, 3).copy()
+        if perturb_odd and did % 2 == 1:
+            sx, sy = (4 * w) // 9, (4 * h) // 8
+            arr[sy, sx, 0] = (int(arr[sy, sx, 0]) + 128) % 256
+        return codecs.encode_png_pixels(arr)
 
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_payload(int(did)) for did in pdf[id_col]]
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].astype("int64"), media_col: payloads}
-            )
+    return _synthesize(df, payload)
 
-    return _spread_ids(df, id_col).mapInPandas(
-        _map, f"doc_id bigint, {media_col} binary"
+
+def attach_jpeg(df: DataFrame) -> DataFrame:
+    """Baseline grayscale JPEGs (JFIF: Annex K Huffman tables,
+    DQT/SOF0/DHT/SOS, stuffed entropy data) with ``width = (id % 8 + 2)
+    * 8``, ``height = (id % 6 + 2) * 8`` and :func:`_flat_blocks`
+    content under an all-ones quantization table, so the lossy pipeline
+    is exact and SQL oracles replay the decoded pixels. Nothing in the
+    codec is special-cased to this content."""
+    return _synthesize(
+        df,
+        lambda did: codecs.encode_jpeg_gray(
+            _flat_blocks(did, (did % 8 + 2) * 8, (did % 6 + 2) * 8, 8)
+        ),
     )
 
 
-def extract_mp4_meta(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Decode MP4 payloads THROUGH the container (codecs.decode_mp4_raw:
-    box walk → video-track handler → sample description / size / offset
-    / timing tables → raw frame bytes), emitting dims, frame count,
-    duration, and decoded first-frame/all-frame pixel sums — values
-    that only come out right if the sample tables were genuinely
-    followed into mdat."""
-    from jhu_data_parser_spark.functions.codecs import decode_mp4_raw
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf[id_col], pdf[media_col]):
-                w, h, fps, frames = decode_mp4_raw(bytes(payload))
-                rows.append(
-                    (
-                        int(did),
-                        "mp4",
-                        w,
-                        h,
-                        int(frames.shape[0]),
-                        int(frames.shape[0]) * 1000 // fps,
-                        int(frames[0].astype("int64").sum()),
-                        int(frames.astype("int64").sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "media_type",
-                    "width",
-                    "height",
-                    "n_frames",
-                    "duration_ms",
-                    "frame0_sum",
-                    "pix_sum",
-                ],
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        _map,
-        "doc_id bigint, media_type string, width int, height int, "
-        "n_frames int, duration_ms bigint, frame0_sum bigint, pix_sum bigint",
+def attach_jpeg_color(df: DataFrame) -> DataFrame:
+    """Baseline colour JPEGs (YCbCr 4:4:4, interleaved MCUs, luminance +
+    chrominance Huffman tables) with :func:`attach_jpeg`'s dims and
+    blocks as ACHROMATIC colours (R=G=B): the YCbCr conversion is exact
+    for gray content, so the full 3-predictor path roundtrips."""
+    return _synthesize(
+        df,
+        lambda did: codecs.encode_jpeg_rgb(
+            _gray_rgb(_flat_blocks(did, (did % 8 + 2) * 8, (did % 6 + 2) * 8, 8))
+        ),
     )
 
 
-def extract_mp4_frame_sums(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Per-FRAME pixel sums through the real ISO BMFF walk — the frame
-    stream every scene-cut / frame-sampling pass consumes. One row per
-    (doc, frame index); integers only."""
-    from jhu_data_parser_spark.functions.codecs import decode_mp4_raw
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fs, sums, ws, hs = [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[media_col]):
-                w, h, _fps, frames = decode_mp4_raw(bytes(payload))
-                for f in range(frames.shape[0]):
-                    ids.append(int(did))
-                    fs.append(f)
-                    sums.append(int(frames[f].astype("int64").sum()))
-                    ws.append(w)
-                    hs.append(h)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "f": pd.Series(fs, dtype="int32"),
-                    "fsum": pd.Series(sums, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        _map, "doc_id bigint, f int, fsum bigint, width int, height int"
+def attach_jpeg_420(df: DataFrame) -> DataFrame:
+    """Colour JPEGs with 4:2:0 chroma subsampling (Y 2×2, Cb/Cr 1×1)
+    over whole MCUs, ``w = (id % 4 + 1)·16``, ``h = (id % 3 + 1)·16``,
+    one flat achromatic colour per 16×16 MCU: the chroma planes are
+    exactly 128 at any downsample, so the 4-Y-blocks-per-MCU walk
+    roundtrips bit-for-bit."""
+    return _synthesize(
+        df,
+        lambda did: codecs.encode_jpeg_rgb_420(
+            _gray_rgb(_flat_blocks(did, (did % 4 + 1) * 16, (did % 3 + 1) * 16, 16))
+        ),
     )
 
 
-def attach_mp4_mirrored(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """MP4 synthesis with PLANTED near-duplicate videos: every 10th
-    document carries a TRIMMED COPY of its decade head's video — same
-    seed (so identical frame content), one frame shorter (the trailing-
-    trim re-upload every video-dedup pipeline must catch; an exact
-    payload hash misses it). All other ids encode their own seed, as
-    :func:`attach_mp4_raw` does."""
-    from jhu_data_parser_spark.functions.codecs import encode_mp4_raw
-
-    def _payload(did: int) -> bytes:
-        uid = did - 9 if did % 10 == 9 else did
-        w = (uid % 4 + 1) * 8
-        h = (uid % 3 + 1) * 8
-        nf = uid % 5 + 2
-        if did % 10 == 9:
-            nf -= 1
-        return encode_mp4_raw(w, h, nf, seed=uid)
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_payload(int(did)) for did in pdf[id_col]]
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].astype("int64"), media_col: payloads}
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(
-        _map, f"doc_id bigint, {media_col} binary"
+def attach_jpeg_progressive(df: DataFrame) -> DataFrame:
+    """:func:`attach_jpeg`'s content as a five-scan PROGRESSIVE (SOF2)
+    stream (DC first + refine, two spectral-selection AC bands, one AC
+    successive-approximation refinement — ``codecs._JPEG_PROG_SCANS``).
+    The quantized coefficients are identical, so the same oracle replays
+    the pixels, but the decoder must walk all five scans to get them."""
+    return _synthesize(
+        df,
+        lambda did: codecs.encode_jpeg_gray_progressive(
+            _flat_blocks(did, (did % 8 + 2) * 8, (did % 6 + 2) * 8, 8)
+        ),
     )
 
 
-def mp4_frame_signature(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Per-frame content signature of raw-video MP4s: decode THROUGH
-    the container (box tree → sample tables → mdat offsets), then one
-    row per frame with the frame's content key. On this corpus frames
-    are constant-byte, so the key is the (verified-constant) byte value
-    — the decode genuinely checks every pixel equals it; production
-    frames would key on md5(frame_bytes), same plan shape. Output never
-    carries pixels: (doc_id, frame_no, width, height, fkey)."""
-    import numpy as np
-
-    from jhu_data_parser_spark.functions.codecs import decode_mp4_raw
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf[id_col], pdf[media_col]):
-                w, h, _fps, frames = decode_mp4_raw(bytes(payload))
-                for f in range(frames.shape[0]):
-                    fr = frames[f]
-                    b = int(fr[0, 0, 0])
-                    if not np.all(fr == b):
-                        raise ValueError(
-                            f"frame {f} of doc {did} is not constant — "
-                            "decode misread the sample tables"
-                        )
-                    rows.append((int(did), f, w, h, b))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_no", "width", "height", "fkey"]
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        _map, "doc_id bigint, frame_no int, width int, height int, fkey int"
+def attach_video(df: DataFrame) -> DataFrame:
+    """Animated GIF89a payloads with ``width = id % 32 + 8``,
+    ``height = id % 24 + 8``, ``n_frames = id % 7 + 1``: the frame count
+    travels through the block list."""
+    return _synthesize(
+        df,
+        lambda did: codecs.encode_gif(
+            did % 32 + 8, did % 24 + 8, did % 7 + 1, seed=did
+        ),
     )
 
 
-def attach_wav_mirrored(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """WAV synthesis with TWO planted duplicate kinds per decade: doc
-    ``uid+5`` is a byte-exact copy of its decade head ``uid``'s file,
-    and doc ``uid+9`` is a RE-ENCODED copy — identical PCM samples
-    wrapped in a byte-different container (an extra LIST/INFO metadata
-    chunk spliced before 'data', which a compliant RIFF parser must
-    skip). Raw-byte hashing catches only the first kind; decoding to
-    PCM catches both — the point of content-normalized dedup."""
-    import struct
+def _mp4_payload(uid: int, trim: int = 0) -> bytes:
+    return codecs.encode_mp4_raw(
+        (uid % 4 + 1) * 8, (uid % 3 + 1) * 8, uid % 5 + 2 - trim, seed=uid
+    )
 
-    from jhu_data_parser_spark.functions.codecs import encode_wav
 
-    rates = (8000, 16000, 44100)
+def attach_mp4_raw(df: DataFrame) -> DataFrame:
+    """ISO BMFF payloads (ftyp + mdat + moov with full
+    stsd/stts/stsc/stsz/stco tables, uncompressed 'raw ' RGB24 samples)
+    with ``width = (id % 4 + 1) * 8``, ``height = (id % 3 + 1) * 8``,
+    ``n_frames = id % 5 + 2``; frame f is the constant byte
+    ``_fill_bytes(n_frames, id)[f]``, so decode must follow the sample
+    tables into mdat to find it."""
+    return _synthesize(df, _mp4_payload)
 
-    def _payload(did: int) -> bytes:
+
+def attach_mp4_mirrored(df: DataFrame) -> DataFrame:
+    """:func:`attach_mp4_raw` with planted near-duplicate videos: every
+    id ending in 9 carries its decade head's video one frame shorter —
+    the trailing-trim re-upload an exact payload hash misses."""
+    return _synthesize(
+        df,
+        lambda did: _mp4_payload(did - 9, 1) if did % 10 == 9 else _mp4_payload(did),
+    )
+
+
+def attach_audio(df: DataFrame) -> DataFrame:
+    """RIFF/WAVE PCM16 mono payloads with ``n_samples = id % 192 + 64``,
+    ``sample_rate ∈ {8000, 16000, 44100}`` by ``id % 3`` and samples
+    from the recurrence in ``codecs._wav_samples``."""
+    return _synthesize(
+        df, lambda did: codecs.encode_wav(did % 192 + 64, _RATES[did % 3], seed=did)
+    )
+
+
+def attach_wav_mirrored(df: DataFrame) -> DataFrame:
+    """WAV corpus with two planted duplicate kinds per decade: doc
+    ``uid+5`` is a byte-exact copy of its head ``uid``, and doc
+    ``uid+9`` a RE-ENCODED copy — identical PCM with an extra LIST/INFO
+    chunk spliced before 'data', which a compliant RIFF parser skips.
+    Raw-byte hashing catches only the first kind; decoding catches both."""
+
+    def payload(did: int) -> bytes:
         r = did % 10
         uid = did - 5 if r == 5 else (did - 9 if r == 9 else did)
-        base = encode_wav(uid % 192 + 64, rates[uid % 3], seed=uid)
+        base = codecs.encode_wav(uid % 192 + 64, _RATES[uid % 3], seed=uid)
         if r != 9:
             return base
         info = b"INFO" + struct.pack("<I", did % 2**32) + b"jdps"
@@ -1445,82 +367,381 @@ def attach_wav_mirrored(
         riff_size = struct.unpack_from("<I", base, 4)[0] + len(chunk)
         return b"RIFF" + struct.pack("<I", riff_size) + base[8:36] + chunk + base[36:]
 
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_payload(int(did)) for did in pdf[id_col]]
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].astype("int64"), media_col: payloads}
-            )
+    return _synthesize(df, payload)
 
-    return _spread_ids(df, id_col).mapInPandas(
-        _map, f"doc_id bigint, {media_col} binary"
+
+# --- images ----------------------------------------------------------------
+
+
+def extract_media_meta(df: DataFrame, strict: bool = False) -> DataFrame:
+    """:data:`MEDIA_META_SCHEMA` per payload. BMP, PPM, PNG and JPEG are
+    decoded for real (``codecs.decode_image_meta``) and ``media_type``
+    is the sniffed format. A payload no vendored codec recognises raises
+    ``NotImplementedError`` in ``strict`` mode; otherwise it gets
+    ``media_type = 'image'`` and dims derived from its byte length."""
+
+    def rows(did: int, p: bytes):
+        real = codecs.decode_image_meta(p)
+        if real is not None:
+            return [(did, real[0], len(p), real[1], real[2], 1, 0)]
+        if strict:
+            raise NotImplementedError(
+                f"no vendored codec for this payload (magic={p[:4]!r})"
+            )
+        n = len(p)
+        return [(did, "image", n, n % 1920 + 1, n % 1080 + 1, n % 30 + 1, 16000)]
+
+    return _decode(df, MEDIA_META_SCHEMA, rows)
+
+
+def perceptual_dhash(df: DataFrame) -> DataFrame:
+    """64-bit dHash of each BMP's decoded pixels (codecs.dhash64_bmp):
+    only the 8-byte hash travels to the downstream dedup shuffle."""
+    return _decode(
+        df, "doc_id bigint, phash bigint", lambda did, p: [(did, codecs.dhash64_bmp(p))]
     )
 
 
-def wav_content_fingerprint(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Decode each WAV through the RIFF chunk walk and emit an exact
-    integer fingerprint of the DECODED waveform:
-    ``fp = Σ (i+1)·s_i`` over the int16 samples (position-weighted so
-    permutations don't collide; bounded well inside int64). The
-    payload's raw md5 rides along for the byte-vs-content comparison.
-    Output is narrow — payload bytes never leave the decode stage."""
-    import numpy as np
+def resize_image_real(df: DataFrame, scale_den: int = 2) -> DataFrame:
+    """Nearest-neighbour BMP resize to ``dims // scale_den``: decode the
+    pixel array, resample, re-encode a valid BMP
+    (``codecs.resize_bmp_nearest``)."""
 
-    from jhu_data_parser_spark.functions.codecs import decode_wav
+    def rows(did: int, p: bytes):
+        meta = codecs.decode_image_meta(p)
+        if meta is None or meta[0] != "bmp":
+            raise ValueError("resize_image_real requires BMP payloads")
+        nw, nh = max(meta[1] // scale_den, 1), max(meta[2] // scale_den, 1)
+        return [(did, codecs.resize_bmp_nearest(p, nw, nh), nw, nh)]
 
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    return _decode(df, "doc_id bigint, media binary, width int, height int", rows)
 
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf[id_col], pdf[media_col]):
-                b = bytes(payload)
-                rate, _ch, _depth, samples = decode_wav(b)
-                s = samples.astype(np.int64)
-                fp = int(((np.arange(len(s)) + 1) * s).sum())
-                rows.append(
-                    (int(did), rate, len(s), fp, hashlib.md5(b).hexdigest())
+
+def resize_stub(df: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
+    """1→1 resize shape for payloads with no decoder: a deterministic
+    byte re-sampling to a length proportional to the target area, with
+    the target dims recorded."""
+    target_len = max(1, (width * height) // 1024)
+
+    def rows(did: int, p: bytes):
+        stride = max(1, len(p) // target_len)
+        return [(did, p[::stride][:target_len], width, height)]
+
+    return _decode(df, "doc_id bigint, media binary, width int, height int", rows)
+
+
+# --- PNG -------------------------------------------------------------------
+
+
+_PNG_META = (
+    "doc_id bigint, media_type string, width int, height int, "
+    "n_bytes bigint, row0_sum bigint"
+)
+
+
+def extract_png_pixels_meta(df: DataFrame) -> DataFrame:
+    """Decode each PNG THROUGH its pixel data (CRC-checked chunk walk,
+    inflate, per-row unfiltering) into dims, byte size and the decoded
+    first-scanline sum — right only if the Sub filter was undone."""
+
+    def rows(did: int, p: bytes):
+        px = codecs.decode_png_pixels(p)
+        return [(did, "png", px.shape[1], px.shape[0], len(p), int(px[0].sum()))]
+
+    return _decode(df, _PNG_META, rows)
+
+
+def extract_png_meta_quarantine(df: DataFrame) -> DataFrame:
+    """Decode with quarantine: a payload the PNG path rejects
+    (truncation, CRC corruption, garbage) comes back as
+    ``status='error'`` with NULL dims instead of failing the job. Only
+    codec-shaped failures are quarantined; anything else still fails
+    the task."""
+
+    def rows(did: int, p: bytes):
+        try:
+            px = codecs.decode_png_pixels(p)
+        except (ValueError, zlib.error, struct.error):
+            return [(did, "error", None, None)]
+        return [(did, "ok", px.shape[1], px.shape[0])]
+
+    return _decode(df, "doc_id bigint, status string, width int, height int", rows)
+
+
+def perceptual_dhash_png(df: DataFrame) -> DataFrame:
+    """:func:`perceptual_dhash` over decoded PNG pixels
+    (codecs.dhash64_png)."""
+    return _decode(
+        df, "doc_id bigint, phash bigint", lambda did, p: [(did, codecs.dhash64_png(p))]
+    )
+
+
+def resize_png_roundtrip(df: DataFrame, scale_den: int = 2) -> DataFrame:
+    """PNG resize with a roundtrip proof: decode → nearest-neighbour
+    resample → re-encode → decode AGAIN, emitting the second decode's
+    dims, byte size and first-scanline sum (two full codec cycles)."""
+
+    def rows(did: int, p: bytes):
+        w, h, _, _ = codecs.decode_png_meta(p)
+        nw, nh = max(w // scale_den, 1), max(h // scale_den, 1)
+        out = codecs.resize_png_nearest(p, nw, nh)
+        px = codecs.decode_png_pixels(out)
+        return [(did, "png", px.shape[1], px.shape[0], len(out), int(px[0].sum()))]
+
+    return _decode(df, _PNG_META, rows)
+
+
+def strip_metadata_report(df: DataFrame) -> DataFrame:
+    """Strip every ancillary PNG chunk (CRC-checked walk) and prove the
+    cleaned stream still decodes by summing its first scanline."""
+
+    def rows(did: int, p: bytes):
+        clean, n, b, kw = codecs.strip_png_ancillary(p)
+        row0 = int(codecs.decode_png_pixels(clean)[0].sum())
+        return [(did, n, b, len(clean), row0, kw)]
+
+    return _decode(
+        df,
+        "doc_id bigint, n_removed bigint, bytes_removed bigint,"
+        " clean_bytes bigint, row0_sum bigint, keywords string",
+        rows,
+    )
+
+
+# --- JPEG ------------------------------------------------------------------
+
+
+def extract_jpeg_pixels_meta(df: DataFrame) -> DataFrame:
+    """Decode grayscale JPEGs THROUGH the entropy stream (marker walk,
+    canonical Huffman, dequantize, de-zigzag, IDCT —
+    ``codecs.decode_jpeg_gray``) into dims, first-row and full pixel
+    sums."""
+
+    def rows(did: int, p: bytes):
+        px = codecs.decode_jpeg_gray(p).astype("int64")
+        h, w = px.shape
+        return [(did, "jpeg", w, h, int(px[0].sum()), int(px.sum()))]
+
+    return _decode(
+        df,
+        "doc_id bigint, media_type string, width int, height int, "
+        "row0_sum bigint, pix_sum bigint",
+        rows,
+    )
+
+
+def extract_jpeg_color_meta(df: DataFrame) -> DataFrame:
+    """Decode colour JPEGs through the interleaved entropy stream
+    (``codecs.decode_jpeg_pixels``) into dims, component count, and the
+    first-row and full RGB sums — right only if the 3-predictor Huffman
+    walk, both chroma tables, IDCT and YCbCr→RGB all are."""
+
+    def rows(did: int, p: bytes):
+        px = codecs.decode_jpeg_pixels(p).astype("int64")
+        nc = int(codecs.decode_jpeg_meta(p)[2])
+        return [
+            (did, "jpeg", px.shape[1], px.shape[0], nc, int(px[0].sum()), int(px.sum()))
+        ]
+
+    return _decode(
+        df,
+        "doc_id bigint, media_type string, width int, height int, "
+        "n_components int, row0_sum bigint, pix_sum bigint",
+        rows,
+    )
+
+
+# --- video -----------------------------------------------------------------
+
+
+def extract_video_meta(df: DataFrame) -> DataFrame:
+    """GIF screen dims from the logical screen descriptor and the frame
+    count from a full block walk (``codecs.decode_gif``)."""
+    return _decode(
+        df,
+        "doc_id bigint, media_type string, width int, height int, n_frames int",
+        lambda did, p: [(did, "gif", *codecs.decode_gif(p))],
+    )
+
+
+def frame_sample_gif(df: DataFrame, every_nth: int = 2) -> DataFrame:
+    """One row per sampled frame (0, n, 2n, …) of each GIF: the 1→N
+    expansion, with N from genuine container parsing."""
+
+    def rows(did: int, p: bytes):
+        w, h, n_frames = codecs.decode_gif(p)
+        return [(did, f, w, h) for f in range(0, n_frames, every_nth)]
+
+    return _decode(df, "doc_id bigint, frame_no int, width int, height int", rows)
+
+
+def extract_mp4_meta(df: DataFrame) -> DataFrame:
+    """Decode MP4s THROUGH the container (box walk → video-track handler
+    → sample description / size / offset / timing tables → raw frame
+    bytes) into dims, frame count, duration, and first-frame/all-frame
+    pixel sums."""
+
+    def rows(did: int, p: bytes):
+        w, h, fps, frames = codecs.decode_mp4_raw(p)
+        n, px = frames.shape[0], frames.astype("int64")
+        return [(did, "mp4", w, h, n, n * 1000 // fps, int(px[0].sum()), int(px.sum()))]
+
+    return _decode(
+        df,
+        "doc_id bigint, media_type string, width int, height int, "
+        "n_frames int, duration_ms bigint, frame0_sum bigint, pix_sum bigint",
+        rows,
+    )
+
+
+def extract_mp4_frame_sums(df: DataFrame) -> DataFrame:
+    """One row per (doc, frame index) with the frame's decoded pixel
+    sum — the frame stream a scene-cut pass consumes."""
+
+    def rows(did: int, p: bytes):
+        w, h, _fps, frames = codecs.decode_mp4_raw(p)
+        return [
+            (did, f, int(fr.astype("int64").sum()), w, h)
+            for f, fr in enumerate(frames)
+        ]
+
+    return _decode(df, "doc_id bigint, f int, fsum bigint, width int, height int", rows)
+
+
+def mp4_frame_signature(df: DataFrame) -> DataFrame:
+    """One row per decoded MP4 frame with its content key. Frames here
+    are constant-byte, so the key is that byte, and every pixel is
+    checked to equal it; production frames would key on
+    md5(frame_bytes), same plan shape."""
+
+    def rows(did: int, p: bytes):
+        w, h, _fps, frames = codecs.decode_mp4_raw(p)
+        out = []
+        for f, fr in enumerate(frames):
+            b = int(fr[0, 0, 0])
+            if not np.all(fr == b):
+                raise ValueError(
+                    f"frame {f} of doc {did} is not constant — "
+                    "decode misread the sample tables"
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "sample_rate", "n_samples", "pcm_fp", "raw_md5"],
-            )
+            out.append((did, f, w, h, b))
+        return out
 
-    return df.select(id_col, media_col).mapInPandas(
-        _map,
-        "doc_id bigint, sample_rate int, n_samples int, pcm_fp bigint, "
-        "raw_md5 string",
+    return _decode(
+        df, "doc_id bigint, frame_no int, width int, height int, fkey int", rows
     )
 
 
-def wav_downsample_fingerprint(
-    df: DataFrame, factor: int = 2, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Decode → decimate-by-``factor`` (keep samples 0, factor, 2·factor
-    … — the integer-exact skeleton of a resampler; a production
-    pipeline would low-pass first, same plan shape) → fingerprint the
-    DOWNSAMPLED waveform with the position-weighted integer sum. The
-    audio twin of the image resize battery: payloads stay inside the
-    Arrow-batched decode stage, the output is narrow."""
-    import numpy as np
+# --- audio -----------------------------------------------------------------
 
-    from jhu_data_parser_spark.functions.codecs import decode_wav
 
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf[id_col], pdf[media_col]):
-                rate, _ch, _depth, samples = decode_wav(bytes(payload))
-                ds = samples[::factor].astype(np.int64)
-                fp = int(((np.arange(len(ds)) + 1) * ds).sum())
-                rows.append((int(did), rate // factor, len(ds), fp))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "out_rate", "out_samples", "ds_fp"],
-            )
+def extract_audio_meta(df: DataFrame) -> DataFrame:
+    """:data:`AUDIO_META_SCHEMA` per WAV: the RIFF chunk walk, fmt
+    validation and int16 LE sample decode are real
+    (``codecs.decode_wav``). Samples widen to int64 before ``abs``
+    (abs of int16 -32768 overflows)."""
 
-    return df.select(id_col, media_col).mapInPandas(
-        _map, "doc_id bigint, out_rate int, out_samples int, ds_fp bigint"
+    def rows(did: int, p: bytes):
+        rate, channels, bits, samples = codecs.decode_wav(p)
+        n = len(samples) // channels
+        amp = int(np.abs(samples.astype(np.int64)).sum())
+        return [(did, "wav", rate, channels, bits, n, n * 1_000_000 // rate, amp)]
+
+    return _decode(df, AUDIO_META_SCHEMA, rows)
+
+
+def extract_audio_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
+    """Per-FRAME waveform features: split each clip into ``n_frames``
+    balanced frames (frame of sample i = ``n_frames*i // n``) and emit
+    per frame the sample count, Σ|sample| and the zero-crossing count
+    (strict sign flips between ADJACENT samples of the same frame) —
+    the framing step VAD, energy gating and silence trimming run before
+    modelling. All features are integer-exact."""
+
+    def rows(did: int, p: bytes):
+        _rate, channels, _bits, samples = codecs.decode_wav(p)
+        v = samples.astype(np.int64)[:: max(channels, 1)]
+        n = len(v)
+        fr = (n_frames * np.arange(n)) // max(n, 1)
+        flip = np.zeros(n, dtype=bool)
+        if n > 1:
+            flip[1:] = (v[:-1] * v[1:] < 0) & (fr[:-1] == fr[1:])
+        return [
+            (did, f, int(m.sum()), int(np.abs(v[m]).sum()), int(flip[m].sum()))
+            for f, m in ((f, fr == f) for f in range(n_frames))
+            if m.any()
+        ]
+
+    return _decode(
+        df,
+        "doc_id bigint, frame int, n_samples bigint, "
+        "abs_energy bigint, zero_crossings bigint",
+        rows,
+    )
+
+
+def _pcm_fp(samples) -> int:
+    s = samples.astype(np.int64)
+    return int(((np.arange(len(s)) + 1) * s).sum())
+
+
+def wav_content_fingerprint(df: DataFrame) -> DataFrame:
+    """An exact integer fingerprint of each DECODED waveform,
+    ``Σ (i+1)·s_i`` over the int16 samples (position-weighted so
+    permutations don't collide), beside the payload's raw md5 for the
+    byte-vs-content comparison."""
+    import hashlib
+
+    def rows(did: int, p: bytes):
+        rate, _ch, _depth, samples = codecs.decode_wav(p)
+        return [(did, rate, len(samples), _pcm_fp(samples), hashlib.md5(p).hexdigest())]
+
+    return _decode(
+        df,
+        "doc_id bigint, sample_rate int, n_samples int, pcm_fp bigint, raw_md5 string",
+        rows,
+    )
+
+
+def wav_downsample_fingerprint(df: DataFrame, factor: int = 2) -> DataFrame:
+    """Decode → decimate by ``factor`` (keep samples 0, factor, 2·factor
+    … — the integer-exact skeleton of a resampler) → the
+    :func:`wav_content_fingerprint` sum of the DOWNSAMPLED waveform."""
+
+    def rows(did: int, p: bytes):
+        rate, _ch, _depth, samples = codecs.decode_wav(p)
+        ds = samples[::factor]
+        return [(did, rate // factor, len(ds), _pcm_fp(ds))]
+
+    return _decode(
+        df, "doc_id bigint, out_rate int, out_samples int, ds_fp bigint", rows
+    )
+
+
+# --- features --------------------------------------------------------------
+
+
+def embed_media_stub(df: DataFrame, dim: int = 64) -> DataFrame:
+    """Media → ``array<float>`` embedding, the bridge from binary columns
+    into the similarity/ANN operators. The featurizer is a deterministic
+    stand-in (L2-normalized byte-bigram histogram folded to ``dim``
+    buckets) where production plugs a vision/audio encoder. Beside it go
+    the pre-normalization integer facts ``top_bucket`` (argmax, lowest
+    index on ties) and ``top_count``, which SQL replays exactly from the
+    payload bytes."""
+
+    def rows(did: int, p: bytes):
+        arr = np.frombuffer(p, dtype=np.uint8)
+        if len(arr) >= 2:
+            bigrams = (arr[:-1].astype(np.int64) * 256 + arr[1:]) % dim
+            hist = np.bincount(bigrams, minlength=dim).astype(np.float64)
+        else:
+            hist = np.ones(dim, dtype=np.float64)
+        vec = (hist / (np.linalg.norm(hist) or 1.0)).astype(np.float32).tolist()
+        return [(did, vec, int(np.argmax(hist)), int(hist.max()))]
+
+    return _decode(
+        df,
+        "doc_id bigint, embedding array<float>, top_bucket int, top_count bigint",
+        rows,
     )

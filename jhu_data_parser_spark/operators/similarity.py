@@ -847,7 +847,7 @@ def topk_ivfpq_indexed_multi(
         residual,
     )
     return ivfpq_serve(
-        df.sparkSession.read.parquet(path),
+        read_ivfpq_index(df.sparkSession, path, m),
         df,
         coarse,
         books,
@@ -1376,6 +1376,15 @@ def read_graph_index(spark, path: str) -> DataFrame:
     )
     schema = "src long, dst long" + (f", {pt} int" if pt else "")
     return spark.read.schema(schema).parquet(path)
+
+
+def read_ivfpq_index(spark, path: str, m: int) -> DataFrame:
+    """The code table at an :func:`ivfpq_build_index` path with ``m``
+    subspaces: ``id`` and ``code0..code{m-1}`` bigint plus the ``cell``
+    partition column, declared rather than inferred for the same reason
+    as :func:`read_graph_index`."""
+    codes = "".join(f", code{s} bigint" for s in range(m))
+    return spark.read.schema(f"id bigint{codes}, cell int").parquet(path)
 
 
 # ---------------------------------------------------------------------------

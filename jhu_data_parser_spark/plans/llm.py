@@ -1213,7 +1213,7 @@ def multimodal_embed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jhu_data_parser_spark.operators.multimodal import attach_binary, embed_media_stub
 
     d = attach_binary(load_table(spark, sf_dir, "documents"))
-    emb = embed_media_stub(d, dim=64, with_stats=True)
+    emb = embed_media_stub(d, dim=64)
     return emb.select(
         "doc_id",
         F.size("embedding").alias("dim"),

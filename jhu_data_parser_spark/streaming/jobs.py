@@ -967,7 +967,9 @@ def _ivfpq_append_segments(spark: SparkSession, sf_dir: str):
     def as_long(df: DataFrame) -> DataFrame:
         return df.select(*[F.col(c).cast("long").alias(c) for c in cols])
 
-    index = as_long(spark.read.parquet(path)).unionByName(as_long(appended))
+    index = as_long(sim.read_ivfpq_index(spark, path, _IP_M)).unionByName(
+        as_long(appended)
+    )
     return index, coarse, books, emb
 
 
@@ -1016,10 +1018,12 @@ def run_ivfpq_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract: serve(compacted) ≡ serve(base ∪ appends) ≡ batch-encoded
     union — the shared oracle gates all three. The segment-count drop
     is pinned in pytest."""
+    from jhu_data_parser_spark.operators import similarity as sim
+
     index, coarse, books, emb = _ivfpq_append_segments(spark, sf_dir)
     compact_dir = cache.scratch_dir("sink")
     index.write.mode("overwrite").partitionBy("cell").parquet(compact_dir)
-    compacted = spark.read.parquet(compact_dir).select(
+    compacted = sim.read_ivfpq_index(spark, compact_dir, len(books)).select(
         *[F.col(c).cast("long").alias(c) for c in index.columns]
     )
     return _ivfpq_serve_union(spark, compacted, coarse, books, emb)

@@ -454,7 +454,6 @@ def test_multimodal_plumbing(spark):
     from jhu_data_parser_spark.operators.multimodal import (
         attach_binary,
         extract_media_meta,
-        frame_sample_stub,
     )
 
     df = spark.createDataFrame([(1, "hello world"), (2, "x" * 100)], "doc_id long, text string")
@@ -468,9 +467,29 @@ def test_multimodal_plumbing(spark):
     with pytest.raises(Exception):
         extract_media_meta(media, strict=True).collect()
 
-    frames = frame_sample_stub(media).collect()
-    assert all(len(r["frame_bytes"]) <= 16 for r in frames)
-    assert {r["doc_id"] for r in frames} == {1, 2}
+
+def test_decode_mapper_edges(spark):
+    """The shared decode mapper: a batch in which every payload yields
+    nothing is a typed empty frame, a None in an int column comes back
+    NULL, and a 1→N ``rows`` gives N rows per input."""
+    from jhu_data_parser_spark.operators.multimodal import _decode
+
+    df = spark.createDataFrame(
+        [(1, b"ab"), (2, b"cde")], "doc_id long, media binary"
+    ).coalesce(1)
+    schema = "doc_id bigint, tag string, n int"
+
+    empty = _decode(df, schema, lambda did, p: [])
+    assert empty.schema.simpleString() == "struct<doc_id:bigint,tag:string,n:int>"
+    assert empty.collect() == []
+
+    nulls = _decode(df, schema, lambda did, p: [(did, "x", None if did == 1 else len(p))])
+    assert sorted(map(tuple, nulls.collect())) == [(1, "x", None), (2, "x", 3)]
+
+    fan = _decode(df, schema, lambda did, p: [(did, chr(c), i) for i, c in enumerate(p)])
+    assert sorted(map(tuple, fan.collect())) == [
+        (1, "a", 0), (1, "b", 1), (2, "c", 0), (2, "d", 1), (2, "e", 2)
+    ]
 
 
 def test_multimodal_to_ann_pipeline(spark):
@@ -503,17 +522,6 @@ def test_multimodal_to_ann_pipeline(spark):
     )
     top = topk_cosine_many(corpus, queries, k=1).first()
     assert top["vec_id"] == 2  # the near-dup payload is the nearest neighbor
-
-
-def test_payload_repartition_sizing(spark):
-    from jhu_data_parser_spark.operators.multimodal import repartition_for_payload
-
-    big = spark.createDataFrame(
-        [(i, bytearray(512 * 1024)) for i in range(100)], "doc_id long, media binary"
-    ).coalesce(1)
-    sized = repartition_for_payload(big, target_mb=4)
-    # 100 × 0.5 MB at 4 MB targets ⇒ >10 partitions despite 1 input part
-    assert sized.rdd.getNumPartitions() >= 10
 
 
 def test_codecs_bmp_ppm_roundtrip():
